@@ -702,6 +702,16 @@ def test_semantic_dedup_recall_on_planted_near_identicals(spark, emb):
     assert recall >= 0.9, recall
 
 
+def test_ivf_centroids_independent_of_partitioning(spark, emb):
+    """The training sample is taken in id order, so the same rows split
+    one way or eight ways train the same centroids."""
+    from var_elasticnet_bigdata_spark.operators.similarity import ivf_centroids
+
+    one = ivf_centroids(emb.coalesce(1), nlist=16, sample_rows=200)
+    eight = ivf_centroids(emb.repartition(8), nlist=16, sample_rows=200)
+    np.testing.assert_array_equal(one, eight)
+
+
 def test_cluster_profile_matches_assignment(spark, emb):
     from var_elasticnet_bigdata_spark.operators.similarity import (
         cluster_profile,

@@ -87,7 +87,7 @@ def test_kn3_probabilities_sum_below_one(spark):
     )
     from var_elasticnet_bigdata_spark.sources import load_table
 
-    docs = load_table(spark, SF, "documents").limit(50)
+    docs = load_table(spark, SF, "documents").orderBy("doc_id").limit(50)
     rows = kn_trigram_perplexity(docs).collect()
     assert rows
     for r in rows:
@@ -109,7 +109,7 @@ def test_kn_ngram_order3_equals_trigram_operator(spark):
         [(1, "a b c a b c"), (2, "a b d a b"), (3, "x y")],
         "doc_id long, text string",
     )
-    for docs in (micro, load_table(spark, SF, "documents").limit(60)):
+    for docs in (micro, load_table(spark, SF, "documents").orderBy("doc_id").limit(60)):
         a = sorted(
             (r["doc_id"], r["n_trigrams"], r["perplexity"])
             for r in kn_trigram_perplexity(docs, discount=0.75).collect()

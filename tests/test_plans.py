@@ -15,6 +15,7 @@ from var_elasticnet_bigdata_spark.plans import (
     read_schema_columns,
     wholestage_codegen_spans,
 )
+from var_elasticnet_bigdata_spark.plans.inspect import scan_ancestors
 from var_elasticnet_bigdata_spark.sources import load_table
 
 from .conftest import SF_ORACLE
@@ -35,6 +36,58 @@ def test_column_pruning(spark):
     flagship = Q.flagship_quarterly_revenue_growth(spark, SF_ORACLE)
     # orders has 6 columns; flagship needs o_orderdate + o_totalprice
     assert_scan_pruned(flagship, table_cols=6, max_read_cols=2)
+
+
+def _first_exchange(ancestors: list[str]) -> str | None:
+    return next((a for a in ancestors if a.startswith("Exchange")), None)
+
+
+def test_corpus_scan_floor_keeps_pushdown(spark):
+    """A single-split documents scan is hash-spread on doc_id to the
+    shuffle-partition count, and the floor sits above the filter and
+    the projection: both still reach the parquet scan."""
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = (
+        load_table(spark, SF_ORACLE, "documents")
+        .filter(F.col("lang") == "en")
+        .select("doc_id", "text")
+    )
+    (anc,) = scan_ancestors(df, "documents.parquet")
+    assert _first_exchange(anc) == f"Exchange hashpartitioning(doc_id, {n})", anc
+    assert any("lang" in f for f in pushed_filters(df)), pushed_filters(df)
+    # documents has 5 columns; the scan reads doc_id, text and lang
+    assert_scan_pruned(df, table_cols=5, max_read_cols=3)
+
+
+def test_corpus_scan_floor_is_noop_on_split_scans(spark, tmp_path):
+    """The 100 TB case: a documents directory whose part files each
+    scan as their own split (``openCostInBytes`` at the split size, as
+    when files exceed it) arrives with >= shuffle.partitions splits
+    and gets no exchange at all."""
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    spark.read.parquet(f"{SF_ORACLE}/documents.parquet").repartition(n).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    spark.conf.set("spark.sql.files.openCostInBytes", "128m")
+    try:
+        df = load_table(spark, str(tmp_path), "documents")
+        assert df.rdd.getNumPartitions() >= n
+        scans = scan_ancestors(df, "documents.parquet")
+    finally:
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert scans and not any(_first_exchange(a) for a in scans), scans
+
+
+def test_union_branches_keep_the_floor(spark, monkeypatch):
+    """Every documents scan of dedup_substring, including the planted
+    branch of its Union, sits under the doc_id floor."""
+    monkeypatch.setenv("SPARK_GRAFT_NO_STAGED_CACHE", "1")
+    spark.catalog.clearCache()
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    scans = scan_ancestors(Q.dedup_substring(spark, SF_ORACLE), "documents.parquet")
+    assert len(scans) >= 2, scans
+    for anc in scans:
+        assert _first_exchange(anc) == f"Exchange hashpartitioning(doc_id, {n})", anc
 
 
 def test_dim_join_broadcasts(spark):

@@ -112,7 +112,7 @@ def test_stream_stateful_user_totals(spark):
 
 
 def test_multimodal_schema_roundtrip(spark):
-    docs = load_table(spark, SF_SMALL, "documents").limit(50)
+    docs = load_table(spark, SF_SMALL, "documents").orderBy("doc_id").limit(50)
     with_bin = attach_payloads(docs)
     assert dict(with_bin.dtypes)["payload"] == "binary"
     # survives a shuffle intact
@@ -124,7 +124,7 @@ def test_multimodal_schema_roundtrip(spark):
 
 
 def test_multimodal_feature_extraction(spark):
-    docs = load_table(spark, SF_SMALL, "documents").limit(30)
+    docs = load_table(spark, SF_SMALL, "documents").orderBy("doc_id").limit(30)
     feats = extract_features(attach_payloads(docs)).toPandas()
     assert len(feats) == 30
     arr = np.array(feats.features.tolist())
@@ -140,7 +140,7 @@ def test_multimodal_feature_extraction(spark):
 
 
 def test_multimodal_frame_sampling(spark):
-    docs = load_table(spark, SF_SMALL, "documents").limit(20)
+    docs = load_table(spark, SF_SMALL, "documents").orderBy("doc_id").limit(20)
     frames = sample_frames(attach_payloads(docs), frame_bytes=16, stride=2,
                            max_frames=4).toPandas()
     assert (frames.groupby("doc_id").frame_idx.max() <= 3).all()
@@ -253,7 +253,7 @@ def test_multimodal_features_feed_similarity_pipeline(spark):
         cosine_near_dup_pairs,
     )
 
-    docs = load_table(spark, SF_SMALL, "documents").limit(40)
+    docs = load_table(spark, SF_SMALL, "documents").orderBy("doc_id").limit(40)
     with_payloads = attach_payloads(docs)
     # plant one exact duplicate payload pair with fresh ids
     a = with_payloads.filter(F.col("doc_id") == 0).select(

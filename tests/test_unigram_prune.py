@@ -97,7 +97,7 @@ def test_prune_matches_naive_brute_force(spark):
     )
     from var_elasticnet_bigdata_spark.sources import load_table
 
-    docs = load_table(spark, SF, "documents").limit(40)
+    docs = load_table(spark, SF, "documents").orderBy("doc_id").limit(40)
     got = {
         r["piece"]: int(r["c"])
         for r in unigram_lm_prune_train(docs, rounds=2).collect()
@@ -126,7 +126,7 @@ def test_pruned_inventory_strictly_shrinks(spark):
     )
     from var_elasticnet_bigdata_spark.sources import load_table
 
-    docs = load_table(spark, SF, "documents").limit(40)
+    docs = load_table(spark, SF, "documents").orderBy("doc_id").limit(40)
     base = {
         r["piece"]: int(r["c"])
         for r in unigram_lm_train(docs, rounds=2).collect()
@@ -160,7 +160,7 @@ def test_encode_stats_match_per_doc_brute(spark):
     from var_elasticnet_bigdata_spark.sources import load_table
     from pyspark.sql import functions as F
 
-    docs = load_table(spark, SF, "documents").limit(40)
+    docs = load_table(spark, SF, "documents").orderBy("doc_id").limit(40)
     got = {
         r["doc_id"]: (r["n_words"], r["n_pieces"], r["chars_per_piece"])
         for r in unigram_encode_stats(docs, rounds=2).collect()

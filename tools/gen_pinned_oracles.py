@@ -9,8 +9,8 @@ pipeline from its public spec — spherical k-means on the bounded
 sample (numpy PCG64 seed, 20 Lloyd rounds), nprobe assignment,
 candidate rerank with the (cosine desc, id asc) tie order — WITHOUT
 importing any engine module, reads the parquet directly via pyarrow
-(file order, the same order Spark's single-partition limit+collect
-yields), and pins the expected output per data fingerprint
+(sorted by vec_id, the order of the engine's ``orderBy(vec_id)``
+bounded sample), and pins the expected output per data fingerprint
 (row count, Σ vec_id, content checksum — the checksum is matched with
 an absolute tolerance in SQL so parallel-aggregation float drift
 cannot flip it). The emitted JSON is consumed by ``queries.py`` at
@@ -41,7 +41,7 @@ NLIST, NPROBE, K, ITERS, SAMPLE_ROWS = 16, 8, 1, 20, 100_000
 
 
 def expected_ivf_top1(path: str) -> list[tuple[int, int, int, float]]:
-    t = pq.read_table(path)  # file order == Spark's collect order here
+    t = pq.read_table(path).sort_by("vec_id")  # the sample's id order
     ids = np.asarray(t["vec_id"].to_numpy(), dtype=np.int64)
     M = np.array(
         [np.asarray(v.as_py(), dtype=np.float64) for v in t["embedding"]]

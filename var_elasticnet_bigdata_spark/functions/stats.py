@@ -257,7 +257,7 @@ def adf_table(
     )
     vc, dc, sc, kk = value_col, date_col, series_col, k
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         x = pdf.sort_values(dc)[vc].to_numpy(dtype=float)
         try:
             r = adf_test(x, k=kk)
@@ -312,7 +312,7 @@ def ljung_box_table(
     )
     vc, dc, sc = value_col, date_col, series_col
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         x = pdf.sort_values(dc)[vc].to_numpy(dtype=float)
         r = ljung_box(x, lags=lags, fitdf=fitdf)
         return pd.DataFrame(

@@ -70,13 +70,8 @@ def curate_corpus(
     # normalization inside every marker/shingle term, which blows the
     # codegen tree up ~20× and dominates cold wall-clock (9.6 s vs
     # 1.8 s warm at sf0.1 — compile, not compute)
-    from ..plans.spread import spread_to_cores
-
     staged = (
-        # the score chain (normalize/split/lang/quality/shingles) is
-        # the pipeline's expensive narrow pass — floor its parallelism
-        spread_to_cores(docs, "doc_id")
-        .withColumn("__norm", normalized_text())
+        docs.withColumn("__norm", normalized_text())
         .withColumn("__words", F.split(F.col("__norm"), " "))
         .withColumn("__uw", F.array_distinct("__words"))
     )
@@ -194,13 +189,8 @@ def training_pipeline(
     from .split import stratified_sample
 
     rates = sample_rates or {"en": 0.8, "de": 0.8}
-    from ..plans.spread import spread_to_cores
-
     staged = (
-        # the score chain (normalize/split/lang/quality/shingles) is
-        # the pipeline's expensive narrow pass — floor its parallelism
-        spread_to_cores(docs, "doc_id")
-        .withColumn("__norm", normalized_text())
+        docs.withColumn("__norm", normalized_text())
         .withColumn("__words", F.split(F.col("__norm"), " "))
     )
     scored = staged.select(
@@ -289,13 +279,8 @@ def clean_corpus(
     """
     from .text import line_dedup
 
-    from ..plans.spread import spread_to_cores
-
     staged = (
-        # the score chain (normalize/split/lang/quality/shingles) is
-        # the pipeline's expensive narrow pass — floor its parallelism
-        spread_to_cores(docs, "doc_id")
-        .withColumn("__norm", normalized_text())
+        docs.withColumn("__norm", normalized_text())
         .withColumn("__words", F.split(F.col("__norm"), " "))
     )
     scored = staged.select(
@@ -375,15 +360,8 @@ def quality_top_fraction(
     """
     if not 0.0 < frac <= 1.0:
         raise ValueError(f"frac must be in (0, 1], got {frac}")
-    from ..plans.spread import spread_to_cores
-
     staged = (
-        # the score chain (normalize/split/lang/quality/shingles) is
-        # the pipeline's expensive narrow pass — floor its parallelism
-        # (keyed on the CALLER'S id column — ADVICE r12: hardcoding
-        # doc_id broke any frame using a different id)
-        spread_to_cores(docs, id_col)
-        .withColumn("__norm", normalized_text())
+        docs.withColumn("__norm", normalized_text())
         .withColumn("__words", F.split(F.col("__norm"), " "))
     )
     scored = staged.select(

@@ -79,23 +79,12 @@ def with_shingle_hashes(
     n: int = 3,
     out_col: str = "__sh",
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Stage the shingle pipeline so each expensive step runs ONCE
     per row (normalize → split → n-gram → md5): inline composition
     re-evaluates the normalization per reference, which doubles scan
     CPU — measured 2× on the sf0.1 bench."""
-    from ..plans.spread import spread_to_cores
-
     words = F.split(normalized_text(text_col), " ")
-    # floor the expensive normalize/split/md5 chain's parallelism at
-    # the core count (single-file scans otherwise serialize it); the
-    # consumers shuffle on band/bucket keys right after, so the added
-    # exchange replaces no narrow pipeline at scale (conditional no-op
-    # on multi-split scans). Keyed on the EXPLICIT id column (ADVICE
-    # r12: the positional first column could be the text itself —
-    # expensive hash, null/empty skew).
-    df = spread_to_cores(df, id_col)
     df = df.withColumn("__words", words)
     return df.withColumn(
         out_col, F.expr(shingle_hashes_from_words("__words", n))
@@ -231,18 +220,12 @@ def positional_shingle_hashes(
     `exploded_shingle_hashes` plan-shape contract — a lambda-free
     child gets the whole shingle pipeline re-inlined into a
     scan-level inferred filter)."""
-    from ..plans.spread import spread_to_cores
-
     sh = (
         f"transform(sequence(1, greatest(size(__words)-{n}+1, 1)),"
         f" i -> cast(conv(substring(md5(concat_ws(' ', slice(__words, i, {n}))),1,{POS_SHINGLE_HEX}),16,10) as bigint))"
     )
     return (
-        # the normalize/split/md5 chain is the expensive narrow pass
-        # of the whole substring family — floor its parallelism at
-        # the core count (single-file scans otherwise serialize it)
-        spread_to_cores(df, id_col)
-        .withColumn("__words", F.split(normalized_text(text_col), " "))
+        df.withColumn("__words", F.split(normalized_text(text_col), " "))
         .select(
             F.col(id_col),
             F.posexplode(F.expr(sh)).alias("__p0", out_col),
@@ -1004,7 +987,7 @@ def minhash_signatures(
         f"array_min(transform(__sh, h -> (({MINHASH_A[i]}L * h + {MINHASH_B[i]}L) % {MINHASH_P}L)))"
         for i in range(num_hashes)
     )
-    return with_shingle_hashes(df, n, text_col=text_col, id_col=id_col).select(
+    return with_shingle_hashes(df, n, text_col=text_col).select(
         F.col(id_col), F.expr(f"array({sig_terms})").alias("sig")
     )
 
@@ -1601,7 +1584,7 @@ def jaccard_pairs(
     ``candidates`` (from LSH) only those pairs are verified — the
     scale path; without, brute-force all pairs (oracle path, small sf
     only)."""
-    sh = with_shingle_hashes(df, n, text_col=text_col, id_col=id_col).select(
+    sh = with_shingle_hashes(df, n, text_col=text_col).select(
         F.col(id_col), F.col("__sh").alias("sh")
     )
     if candidates is not None:
@@ -1648,7 +1631,7 @@ def simhash(
         f"(v, b) -> CASE WHEN v >= 0 THEN shiftleft(cast(1 as bigint), b) ELSE cast(0 as bigint) END), "
         f"cast(0 as bigint), (acc, x) -> acc + x)"
     )
-    return with_shingle_hashes(df, n, text_col=text_col, id_col=id_col).select(
+    return with_shingle_hashes(df, n, text_col=text_col).select(
         F.col(id_col), F.expr(assemble).alias("simhash")
     )
 
@@ -1960,7 +1943,7 @@ def incremental_near_dup(
     # store side; recompute wins).
     sigged = swap_cache(
         "dedup.incremental_sigs",
-        with_shingle_hashes(batch, n, text_col=text_col, id_col=id_col).select(
+        with_shingle_hashes(batch, n, text_col=text_col).select(
             F.col(id_col),
             F.expr(_sig_expr(num_hashes)).alias("sig"),
             F.col("__sh").alias("sh"),
@@ -2115,7 +2098,7 @@ def incremental_near_dup_bucketed(
 
     sigged = swap_cache(
         "dedup.incremental_bucketed_sigs",
-        with_shingle_hashes(batch, n, text_col=text_col, id_col=id_col).select(
+        with_shingle_hashes(batch, n, text_col=text_col).select(
             F.col(id_col),
             F.expr(_sig_expr(num_hashes)).alias("sig"),
             F.col("__sh").alias("sh"),

@@ -557,20 +557,6 @@ def _phash_luma(doc_id: int, x: np.ndarray, y: np.ndarray) -> np.ndarray:
     return out.astype(np.uint8)
 
 
-def _spread_for_decode(df: DataFrame, id_col: str) -> DataFrame:
-    """Spread the id frame over the session's core count before a
-    synth/decode Arrow pass: the codec passes are CPU-bound Python
-    work, and a single-file input otherwise serializes the whole
-    corpus decode on one task (guide §2.5's unsplittable-input fix —
-    repartition right after the read). Payloads are derived per-row
-    from the id, so placement cannot change a byte. Thin alias of the
-    shared ``plans.spread.spread_to_cores`` (ADVICE r12: this was a
-    duplicated copy of the same helper)."""
-    from ..plans.spread import spread_to_cores
-
-    return spread_to_cores(df, id_col)
-
-
 def synth_gray_bmp_payloads(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -599,9 +585,7 @@ def synth_gray_bmp_payloads(
     schema = StructType(
         [StructField(id_col, LongType()), StructField("payload", BinaryType())]
     )
-    return _spread_for_decode(df.select(id_col), id_col).mapInPandas(
-        run, schema
-    )
+    return df.select(id_col).mapInPandas(run, schema)
 
 
 def dhash_from_rgb(rgb: np.ndarray, hash_w: int = 9, hash_h: int = 8) -> int:
@@ -842,9 +826,7 @@ def synth_wav_payloads(
     schema = StructType(
         [StructField(id_col, LongType()), StructField("payload", BinaryType())]
     )
-    return _spread_for_decode(df.select(id_col), id_col).mapInPandas(
-        run, schema
-    )
+    return df.select(id_col).mapInPandas(run, schema)
 
 
 def audio_fingerprint(
@@ -2128,9 +2110,7 @@ def synth_avi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     schema = StructType(
         [StructField(id_col, LongType()), StructField("payload", BinaryType())]
     )
-    return _spread_for_decode(df.select(id_col), id_col).mapInPandas(
-        run, schema
-    )
+    return df.select(id_col).mapInPandas(run, schema)
 
 
 def video_frame_dhash(
@@ -2325,9 +2305,7 @@ def synth_still_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     schema = StructType(
         [StructField(id_col, LongType()), StructField("payload", BinaryType())]
     )
-    return _spread_for_decode(df.select(id_col), id_col).mapInPandas(
-        run, schema
-    )
+    return df.select(id_col).mapInPandas(run, schema)
 
 
 def duck_still_dhash_cte(

@@ -308,8 +308,13 @@ def ivf_centroids(
     """Train IVF centroids: spherical k-means on a bounded sample
     (the standard IVF train recipe — the index is trained on a
     sample, then the assignment pass is distributed). Deterministic
-    under ``seed``. Returns (nlist, d) unit-norm centroids."""
-    sample = df.select(id_col, vec_col).limit(sample_rows).collect()
+    under ``seed`` and independent of partitioning: the sample is the
+    ``sample_rows`` lowest ids in id order, so the positional seed
+    draw picks the same rows however the frame is split. Returns
+    (nlist, d) unit-norm centroids."""
+    sample = (
+        df.select(id_col, vec_col).orderBy(id_col).limit(sample_rows).collect()
+    )
     _, M = _normalized_matrix(sample, id_col, vec_col)
     n = len(M)
     rng = np.random.default_rng(seed)
@@ -335,21 +340,8 @@ def _normalized_vectors(
     by 1.0). Multi-pass operators build this projection ONCE and
     stage it (``swap_cache``) so training/encode/audit passes reuse
     one normalize instead of re-deriving it per pass — same doubles
-    either way, fewer corpus scans (guide §1.2/§5).
-
-    Parallelism floor (r13): the single-file embeddings scan arrives
-    as ONE partition, so every narrow chain built on this projection
-    — normalize → assign → residual → PQ encode before a bucketed
-    append, the seed-centroid explode, the batch side of the semantic
-    store — serialized on one task (profiled: 1.4-1.8 s single-task
-    map stages inside ann_ivfpq_postings / ann_ivfpq_refine /
-    dedup_semantic_incremental at sf0.1). ``spread_to_cores`` floors
-    it at the core count, conditionally: no exchange is added when
-    the scan already carries ≥ cores splits (the 100 TB case) or the
-    input is not scan-level lineage (guide §2.5)."""
-    from ..plans.spread import spread_to_cores
-
-    v = spread_to_cores(df.select(id_col, vec_col), id_col).select(
+    either way, fewer corpus scans (guide §1.2/§5)."""
+    v = df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
     )
     sq = F.aggregate("__v", F.lit(0.0), lambda a, x: a + x * x)
@@ -1402,16 +1394,12 @@ def incremental_semantic_dedup_bucketed(
     recover_orphaned_compaction(spark, vecs_t)
     exists = spark.catalog.tableExists(vecs_t) and not fresh
 
-    from ..plans.spread import spread_to_cores
-
-    # same parallelism floor as _normalized_vectors (single-file
-    # batch scans otherwise serialize the normalize/assign chain on
-    # one task), and EAGER staging: the first consumers fan out as
-    # concurrent jobs (the batch_cells broadcast build, the in-batch
-    # pass, the hot-cell gate), each of which would recompute the
-    # full lazily-persisted lineage (profiled: 1.0 s single-task
-    # broadcast build at sf0.1)
-    v = spread_to_cores(batch.select(id_col, vec_col), id_col).select(
+    # EAGER staging: the first consumers fan out as concurrent jobs
+    # (the batch_cells broadcast build, the in-batch pass, the
+    # hot-cell gate), each of which would recompute the full
+    # lazily-persisted lineage (profiled: 1.0 s single-task broadcast
+    # build at sf0.1)
+    v = batch.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
     )
     sq = F.aggregate("__v", F.lit(0.0), lambda a, x: a + x * x)

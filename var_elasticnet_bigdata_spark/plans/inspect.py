@@ -72,37 +72,63 @@ def assert_scan_pruned(
         )
 
 
-def scan_ancestry(df: DataFrame, table_pattern: str) -> list[str]:
-    """Plan-node descriptions on the path from the first scan whose
-    line matches ``table_pattern`` (regex) UP to the plan root,
-    nearest-first. Lets tests assert shuffle-elimination precisely:
-    "no Exchange between the bucketed store scan and its join" rather
-    than "no Exchange anywhere" (the other join side legitimately
-    shuffles)."""
-    text = df._jdf.queryExecution().executedPlan().toString()
-    lines = text.splitlines()
+def _plan_children(node) -> list:
+    """A physical node's children, looking through AQE wrappers, query
+    stages and cached relations so a walk sees the whole plan."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [node.executedPlan()]
+    if name.endswith("QueryStage"):
+        return [node.plan()]
+    if name == "InMemoryTableScan":
+        return [node.relation().cachedPlan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
 
-    def marker(line: str) -> int:
-        m = re.search(r"[+:]- ", line)
-        return m.start() if m else -1  # -1 = root depth
 
-    target = None
-    for i, ln in enumerate(lines):
-        if re.search(table_pattern, ln):
-            target = i
-            break
-    if target is None:
-        raise AssertionError(
-            f"no plan line matches {table_pattern!r}:\n{text}"
-        )
-    out: list[str] = []
-    depth = marker(lines[target])
-    for i in range(target - 1, -1, -1):
-        d = marker(lines[i])
-        if d < depth:
-            body = lines[i][d + 3 :] if d >= 0 else lines[i]
-            out.append(body.strip())
-            depth = d
-            if d == -1:
-                break
+def _node_label(node) -> str:
+    """``nodeName``; a hash-partitioned exchange also names its keys
+    and partition count: ``Exchange hashpartitioning(doc_id, 8)``."""
+    name = node.nodeName()
+    if name == "Exchange":
+        p = node.outputPartitioning()
+        if p.getClass().getSimpleName() == "HashPartitioning":
+            exprs = p.expressions()
+            keys = ", ".join(exprs.apply(i).sql() for i in range(exprs.size()))
+            return f"{name} hashpartitioning({keys}, {p.numPartitions()})"
+    return name
+
+
+def scan_ancestors(df: DataFrame, table_pattern: str) -> list[list[str]]:
+    """For every FileScan whose root path (a parquet file, or a catalog
+    table's directory) matches ``table_pattern`` (regex), the labels
+    (``_node_label``) of its ancestors, nearest first. Walks the plan
+    tree itself — no plan-string parsing — so it sees every Union
+    branch and every cached subtree. Lets tests assert
+    shuffle-elimination precisely: "no Exchange between the bucketed
+    store scan and its join" rather than "no Exchange anywhere" (the
+    other join side legitimately shuffles)."""
+    out: list[list[str]] = []
+
+    def walk(node, path: list[str]) -> None:
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            roots = node.relation().location().rootPaths()
+            if any(
+                re.search(table_pattern, roots.apply(i).toString())
+                for i in range(roots.size())
+            ):
+                out.append(path[::-1])
+        label = _node_label(node)
+        for child in _plan_children(node):
+            walk(child, path + [label])
+
+    walk(df._jdf.queryExecution().executedPlan(), [])
     return out
+
+
+def scan_ancestry(df: DataFrame, table_pattern: str) -> list[str]:
+    """``scan_ancestors`` of the first matching scan (plan pre-order)."""
+    found = scan_ancestors(df, table_pattern)
+    if not found:
+        raise AssertionError(f"no scan matches {table_pattern!r}")
+    return found[0]

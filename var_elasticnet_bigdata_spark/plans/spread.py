@@ -1,90 +1,39 @@
-"""Scan-parallelism floor for expensive narrow passes.
+"""Scan-parallelism floor for the corpus tables.
 
 A single small parquet file scans as ONE input partition (the split
 floor is ``spark.sql.files.openCostInBytes``, and a file with one row
 group cannot split anyway), so every CPU-heavy narrow chain built on
 it — codec synth/decode Arrow passes, HOF-dense shingle/tokenize
 projections — serializes on one task no matter how many cores the
-session has. ``spread_to_cores`` hash-repartitions such a frame up to
-the session's core count WHEN (and only when) it carries fewer
-partitions: the guide's unsplittable-input fix (§2.5), applied as a
-conditional so the 100 TB case — scans arriving with thousands of
-splits — adds NO exchange. Keys are the frame's stable id column(s):
-deterministic under task retry (unlike round-robin over a
-non-deterministic input, SPARK-38388), and placement cannot change
-any per-row derived value.
+session has. ``spread_to_cores`` hash-repartitions such a scan up to
+``spark.sql.shuffle.partitions`` WHEN (and only when) it carries
+fewer partitions: the guide's unsplittable-input fix (§2.5), applied
+once at the source (``sources.tables.load_table``) so the 100 TB
+case — scans arriving with thousands of splits — adds NO exchange.
 
-Probe discipline (ADVICE r12): the partition count is probed via
-``df.rdd`` ONLY for shuffle-free lineage. Under AQE, ``.rdd``
-materializes the final physical plan, which EXECUTES any upstream
-shuffle stages — so probing an arbitrary frame could silently run
-part of the query at DataFrame-construction time and re-run it at
-action time. The optimized logical plan is checked against an
-allowlist of narrow nodes first; frames with wide lineage (joins,
-aggregates, windows, repartitions…) are returned unchanged — their
-partitioning already comes from a shuffle sized by
-``spark.sql.shuffle.partitions``/AQE, so the floor has nothing to
-add there anyway.
+The target is the shuffle-partition count, not the core count: the
+floor's ``hashpartitioning(key, n)`` then already satisfies every
+downstream join or aggregate on the same key, so no re-shuffle
+follows it and plan shapes do not depend on the session's cores.
+Keys are the table's id column: deterministic under task retry
+(unlike round-robin over a non-deterministic input, SPARK-38388), and
+placement cannot change any per-row derived value.
+
+The partition count is probed via ``df.rdd``. Under AQE that
+materializes the final physical plan, which would EXECUTE any
+upstream shuffle stage — so callers pass a bare file scan only.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-# Logical nodes that cannot introduce a shuffle: leaf relations and
-# narrow per-row transforms. Anything NOT on this list (Join,
-# Aggregate, Window, Sort, Repartition*, Deduplicate, Limit, Union…)
-# makes the probe skip — conservative: unknown shapes never gain an
-# exchange, and never risk eager execution.
-_NARROW_NODES = frozenset(
-    {
-        "Project",
-        "Filter",
-        "Generate",
-        "SubqueryAlias",
-        "Relation",
-        "LogicalRDD",
-        "LocalRelation",
-        "InMemoryRelation",
-        "MapInPandas",
-        "MapInArrow",
-        "PythonMapInArrow",
-        "Sample",
-        "View",
-    }
-)
-
-_NODE_RE = re.compile(r"^[\s:+\-]*'?([A-Za-z][A-Za-z0-9]*)")
-
-
-def _narrow_scan_lineage(df: DataFrame) -> bool:
-    """True when every node of the optimized logical plan is on the
-    narrow allowlist — the only shape whose partition count ``.rdd``
-    can probe without executing query stages under AQE."""
-    try:
-        txt = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
-        return False
-    for line in txt.splitlines():
-        m = _NODE_RE.match(line)
-        if m is None or not m.group(1):
-            continue
-        if m.group(1) not in _NARROW_NODES:
-            return False
-    return True
 
 
 def spread_to_cores(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Repartition ``df`` to the session's default parallelism on
-    ``key_cols`` if it is a narrow scan-level frame currently holding
-    fewer partitions; no-op (and no added exchange) otherwise."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if not _narrow_scan_lineage(df):
-        return df
+    """Repartition the scan ``df`` to ``spark.sql.shuffle.partitions``
+    on ``key_cols`` if it holds fewer partitions; otherwise return
+    ``df`` itself (no added exchange)."""
+    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, *[F.col(c) for c in key_cols])
+        return df.repartition(target, *key_cols)
     return df

@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.spread import spread_to_cores
+
 TABLES = [
     "region",
     "nation",
@@ -31,6 +33,10 @@ TABLES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# corpus tables whose scans feed CPU-heavy narrow passes, and the id
+# column their parallelism floor hashes on
+FLOOR_KEYS = {"documents": "doc_id", "embeddings": "vec_id"}
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Pure `spark.read.parquet` — projection and
@@ -40,7 +46,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` is stored as TIMESTAMP(NANOS); with
     ``spark.sql.legacy.parquet.nanosAsLong`` it scans as long
     nanoseconds and is converted to a microsecond TIMESTAMP_NTZ here
-    (floor-truncation — the same ns→µs semantics DuckDB applies)."""
+    (floor-truncation — the same ns→µs semantics DuckDB applies).
+
+    A ``documents``/``embeddings`` scan with fewer partitions than
+    ``spark.sql.shuffle.partitions`` (a single small file is one) is
+    hash-repartitioned to that count on its id column
+    (``plans.spread.spread_to_cores``): the one parallelism floor every
+    corpus operator inherits. Filters and projections still push
+    below the exchange into the scan; a scan that already arrives
+    with enough splits is returned as is."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
@@ -52,6 +66,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "timestamp_ntz"
             ),
         )
+    if name in FLOOR_KEYS:
+        df = spread_to_cores(df, FLOOR_KEYS[name])
     return df
 
 
