@@ -4,6 +4,8 @@ exchange-free store reads, and the streaming loop's stream ≡ batch
 equivalence."""
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -164,7 +166,7 @@ def test_stream_fingerprint_dedup_matches_batch_chain(spark, tmp_path, clean_sto
         incremental_fingerprint_dedup_bucketed,
     )
     from var_elasticnet_bigdata_spark.streaming.dedup import (
-        stream_fingerprint_dedup_against_store,
+        stream_against_store,
     )
 
     rows1 = [(0, BASE), (1, NEAR), (2, FAR1)]
@@ -185,13 +187,17 @@ def test_stream_fingerprint_dedup_matches_batch_chain(spark, tmp_path, clean_sto
     spark.sql("DROP TABLE IF EXISTS sfp__fpb")
     spark.sql("DROP TABLE IF EXISTS bfp__fpb")
     try:
-        q = stream_fingerprint_dedup_against_store(
+        q = stream_against_store(
             stream,
-            "sfp",
+            partial(
+                incremental_fingerprint_dedup_bucketed,
+                store_name="sfp",
+                buckets=4,
+                path=str(tmp_path / "store"),
+            ),
             checkpoint_dir=str(tmp_path / "ckpt"),
             out_path=str(tmp_path / "out"),
-            buckets=4,
-            store_path=str(tmp_path / "store"),
+            tables=["sfp__fpb"],
             compact_every=2,
         )
         q.awaitTermination(180)
@@ -234,8 +240,11 @@ def test_stream_multimodal_ingest_end_to_end(spark, tmp_path, clean_store):
         encode_bmp,
         image_dhash,
     )
+    from var_elasticnet_bigdata_spark.operators.dedup import (
+        incremental_fingerprint_dedup_bucketed,
+    )
     from var_elasticnet_bigdata_spark.streaming.dedup import (
-        stream_fingerprint_dedup_against_store,
+        stream_against_store,
     )
 
     rng = np.random.default_rng(21)
@@ -269,13 +278,17 @@ def test_stream_multimodal_ingest_end_to_end(spark, tmp_path, clean_store):
     spark.sql("DROP TABLE IF EXISTS smm__fpb")
     try:
         hashed = image_dhash(stream).withColumnRenamed("dhash", "fp")
-        q = stream_fingerprint_dedup_against_store(
+        q = stream_against_store(
             hashed,
-            "smm",
+            partial(
+                incremental_fingerprint_dedup_bucketed,
+                store_name="smm",
+                buckets=4,
+                path=str(tmp_path / "store"),
+            ),
             checkpoint_dir=str(tmp_path / "ckpt"),
             out_path=str(tmp_path / "out"),
-            buckets=4,
-            store_path=str(tmp_path / "store"),
+            tables=["smm__fpb"],
         )
         q.awaitTermination(180)
         got = sorted(

@@ -3,6 +3,8 @@ multimodal plumbing tests."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -309,8 +311,11 @@ def test_stream_near_dup_against_store_matches_incremental_chain(spark, tmp_path
     from var_elasticnet_bigdata_spark.operators.dedup import (
         incremental_near_dup,
     )
+    from var_elasticnet_bigdata_spark.operators.dedup import (
+        incremental_near_dup_bucketed,
+    )
     from var_elasticnet_bigdata_spark.streaming.dedup import (
-        stream_near_dup_against_store,
+        stream_against_store,
     )
 
     base = [
@@ -341,14 +346,18 @@ def test_stream_near_dup_against_store_matches_incremental_chain(spark, tmp_path
     spark.sql("DROP TABLE IF EXISTS sstore__bands")
     spark.sql("DROP TABLE IF EXISTS sstore__sigs")
     try:
-        q = stream_near_dup_against_store(
+        q = stream_against_store(
             stream,
-            "sstore",
+            partial(
+                incremental_near_dup_bucketed,
+                store_name="sstore",
+                threshold=0.5,
+                buckets=4,
+                path=str(tmp_path / "store"),
+            ),
             checkpoint_dir=str(tmp_path / "ckpt"),
             out_path=str(tmp_path / "out"),
-            threshold=0.5,
-            buckets=4,
-            store_path=str(tmp_path / "store"),
+            tables=["sstore__sigs", "sstore__bands"],
             compact_every=2,  # fires after the final micro-batch (r7)
         )
         q.awaitTermination(180)
@@ -384,8 +393,11 @@ def test_stream_exact_dedup_against_store_with_compaction(spark, tmp_path):
     from var_elasticnet_bigdata_spark.sources.compaction import (
         data_file_count,
     )
+    from var_elasticnet_bigdata_spark.operators.dedup import (
+        incremental_exact_dedup_bucketed,
+    )
     from var_elasticnet_bigdata_spark.streaming.dedup import (
-        stream_exact_dedup_against_store,
+        stream_against_store,
     )
 
     rows = [
@@ -407,13 +419,17 @@ def test_stream_exact_dedup_against_store_with_compaction(spark, tmp_path):
     )
     spark.sql("DROP TABLE IF EXISTS estore__keys")
     try:
-        q = stream_exact_dedup_against_store(
+        q = stream_against_store(
             stream,
-            "estore",
+            partial(
+                incremental_exact_dedup_bucketed,
+                store_name="estore",
+                buckets=4,
+                path=str(tmp_path / "store"),
+            ),
             checkpoint_dir=str(tmp_path / "ckpt"),
             out_path=str(tmp_path / "out"),
-            buckets=4,
-            store_path=str(tmp_path / "store"),
+            tables=["estore__keys"],
             compact_every=2,  # fires after the 2nd micro-batch
         )
         q.awaitTermination(180)
@@ -447,10 +463,11 @@ def test_stream_semantic_dedup_against_store_matches_one_shot(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from var_elasticnet_bigdata_spark.operators.similarity import (
+        incremental_semantic_dedup_bucketed,
         semantic_dedup,
     )
     from var_elasticnet_bigdata_spark.streaming.dedup import (
-        stream_semantic_dedup_against_store,
+        stream_against_store,
     )
 
     rng = np.random.default_rng(7)
@@ -476,15 +493,19 @@ def test_stream_semantic_dedup_against_store_matches_one_shot(spark, tmp_path):
     )
     spark.sql("DROP TABLE IF EXISTS ssem__vecs")
     try:
-        q = stream_semantic_dedup_against_store(
+        q = stream_against_store(
             stream,
-            "ssem",
-            C,
+            partial(
+                incremental_semantic_dedup_bucketed,
+                store_name="ssem",
+                centroids=C,
+                eps=0.9,
+                buckets=4,
+                path=str(tmp_path / "store"),
+            ),
             checkpoint_dir=str(tmp_path / "ckpt"),
             out_path=str(tmp_path / "out"),
-            eps=0.9,
-            buckets=4,
-            store_path=str(tmp_path / "store"),
+            tables=["ssem__vecs"],
             compact_every=2,  # fires after the final micro-batch (r7)
         )
         q.awaitTermination(180)
@@ -602,7 +623,7 @@ def test_stream_substring_dedup_against_store_matches_batch_chain(spark, tmp_pat
         incremental_substring_dedup_bucketed,
     )
     from var_elasticnet_bigdata_spark.streaming.dedup import (
-        stream_substring_dedup_against_store,
+        stream_against_store,
     )
 
     shared = " ".join(f"shr{i}word{i % 7}" for i in range(25))
@@ -631,15 +652,19 @@ def test_stream_substring_dedup_against_store_matches_batch_chain(spark, tmp_pat
     spark.sql("DROP TABLE IF EXISTS ssubst__psh")
     spark.sql("DROP TABLE IF EXISTS bsubst__psh")
     try:
-        q = stream_substring_dedup_against_store(
+        q = stream_against_store(
             stream,
-            "ssubst",
+            partial(
+                incremental_substring_dedup_bucketed,
+                store_name="ssubst",
+                width=8,
+                min_run_tokens=20,
+                buckets=4,
+                path=str(tmp_path / "store"),
+            ),
             checkpoint_dir=str(tmp_path / "ckpt"),
             out_path=str(tmp_path / "out"),
-            width=8,
-            min_run_tokens=20,
-            buckets=4,
-            store_path=str(tmp_path / "store"),
+            tables=["ssubst__psh"],
             compact_every=2,  # fires after the final micro-batch
         )
         q.awaitTermination(180)

@@ -5,6 +5,8 @@ streaming loop's stream ≡ batch equivalence."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -127,7 +129,7 @@ def test_video_stream_equals_batch(spark, tmp_path, clean_store):
         incremental_video_dedup_bucketed,
     )
     from var_elasticnet_bigdata_spark.streaming.dedup import (
-        stream_video_dedup_against_store,
+        stream_against_store,
     )
 
     import time as _time
@@ -159,15 +161,19 @@ def test_video_stream_equals_batch(spark, tmp_path, clean_store):
         str(src / "f2")
     )
     try:
-        q = stream_video_dedup_against_store(
+        q = stream_against_store(
             spark.readStream.schema("doc_id long, frame_idx int, dhash long")
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/*"),
-            "vfsq",
+            partial(
+                incremental_video_dedup_bucketed,
+                store_name="vfsq",
+                buckets=4,
+                path=str(tmp_path / "st"),
+            ),
             checkpoint_dir=str(tmp_path / "ckpt"),
             out_path=str(tmp_path / "out"),
-            buckets=4,
-            store_path=str(tmp_path / "st"),
+            tables=["vfsq__vfpb"],
             compact_every=2,
         )
         q.awaitTermination(180)

@@ -15,15 +15,21 @@ scale Spark job-setup jitter dominates and a ratio gate just flaps.
 Both sides being 3-run medians (bench.py) is what lets the gate sit at
 1.3× rather than the 1.5× single-run noise demanded. New queries
 (absent from the baseline) are listed, never failed. Update the
-baseline deliberately after intentional plan changes:
+baseline deliberately after intentional plan changes, and whenever a
+round is accepted, from a warmed bench of the accepted commit on the
+gating host:
     python tools/check_bench.py --rebase /tmp/bench.json
+The baseline's ``source`` records the commit, sf, cpus and date of
+that run (``SPARK_GRAFT_CPUS`` as bench.py's session read it).
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import re
+import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -69,6 +75,19 @@ def load_bench(path: str) -> dict:
     return max(candidates, key=lambda d: len(d.get("queries", {})))
 
 
+def run_source(path: str, bench: dict) -> str:
+    """Where a rebased baseline came from: file, commit, sf, cpus, date."""
+    commit = subprocess.run(
+        ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
+        capture_output=True, text=True,
+    ).stdout.strip() or "unknown"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return (
+        f"{os.path.basename(path)}: commit {commit}, sf {bench.get('sf')}, "
+        f"{cpus} cpus, {datetime.date.today().isoformat()}"
+    )
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     rebase = "--rebase" in sys.argv
@@ -84,7 +103,11 @@ def main() -> int:
     bench = load_bench(path)
     if rebase:
         json.dump(
-            {"source": path, "sf": bench.get("sf"), "queries": bench["queries"]},
+            {
+                "source": run_source(path, bench),
+                "sf": bench.get("sf"),
+                "queries": bench["queries"],
+            },
             open(BASELINE, "w"),
             indent=1,
         )

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.cachereg import swap_cache
-from ..sources.compaction import recover_orphaned_compaction
+from ..sources.store import BucketedStore
 
 # fixed MinHash permutation coefficients (numpy default_rng(777))
 MINHASH_P = 2147483647  # 2^31 − 1
@@ -640,24 +640,14 @@ def incremental_substring_dedup_bucketed(
     scan) and applied to BOTH match arms — boilerplate runs stay the
     MinHash pass's job and the join stays linear as history grows.
 
-    Crash contract (same as the sibling stores):
-    `recover_orphaned_compaction` heals a mid-compaction crash before
-    the exists-probe; ``on_survivors`` fires before the store append
-    (at-least-once — a replayed batch re-matches its own history and
-    re-drops; duplicate match rows from a replayed append are
-    deduplicated before run counting so island lengths stay exact).
-
-    ``fresh=True`` starts a NEW store lineage on this batch: a
-    leftover table from an earlier run is ignored as history and the
-    store write overwrites it in place — one metastore op instead of
-    the caller's DROP TABLE + re-CREATE pair (VERDICT r8 item 5: the
-    gated query's create/drop-per-run churn dominated its timing
-    noise and forced a slack baseline pin).
+    Crash contract, ``on_survivors`` and ``fresh``: `sources/store.py`.
+    Duplicate match rows from a replayed append are deduplicated
+    before run counting, so island lengths stay exact.
     """
-    spark = batch.sparkSession
-    psh_t = f"{store_name}__psh"
-    recover_orphaned_compaction(spark, psh_t)
-    exists = spark.catalog.tableExists(psh_t) and not fresh
+    store = BucketedStore(
+        batch.sparkSession, store_name, {"psh": "s"}, buckets=buckets,
+        path=path, fresh=fresh,
+    )
 
     ps = swap_cache(
         "dedup.incremental_substring_psh",
@@ -678,9 +668,9 @@ def incremental_substring_dedup_bucketed(
     # whose true distinct-doc count sits in (max/2, max] got gated out
     # only on replay and the replayed batch could KEEP docs it
     # originally dropped (ADVICE r8 #1, medium).
-    if exists:
-        store = spark.table(psh_t)
-        probed = store.join(
+    if store.exists:
+        psh = store.table("psh")
+        probed = psh.join(
             F.broadcast(ps.select("s").distinct()), "s", "left_semi"
         ).select("s", id_col)
         seen = ps.select("s", id_col).unionByName(probed)
@@ -720,8 +710,8 @@ def incremental_substring_dedup_bucketed(
             (F.col("pb") - F.col("pa")).alias("diag"),
         )
     )
-    if exists:
-        part_s = store.join(keep, "s", "left_semi").select(
+    if store.exists:
+        part_s = psh.join(keep, "s", "left_semi").select(
             F.col(id_col).alias("doc_a"), F.col("pos").alias("pa"), "s"
         )
         m_store = (
@@ -744,28 +734,13 @@ def incremental_substring_dedup_bucketed(
         .groupBy("doc_a", "doc_b", "diag", "__g")
         .agg(F.count(F.lit(1)).alias("__run"))
     )
-    drops = (
-        runs.filter(F.col("__run") + F.lit(width - 1) >= min_run_tokens)
-        .select(F.col("doc_b").alias(id_col))
-        .distinct()
-        .localCheckpoint(eager=True)
+    dropped = runs.filter(
+        F.col("__run") + F.lit(width - 1) >= min_run_tokens
+    ).select(F.col("doc_b").alias(id_col))
+    return store.commit(
+        batch, dropped, id_col, on_survivors,
+        lambda drops: {"psh": ps.select("s", id_col, "pos")},
     )
-    survivors = batch.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        on_survivors(survivors)
-
-    from ..sources.bucketing import write_bucketed
-
-    write_bucketed(
-        ps.select("s", id_col, "pos"),
-        psh_t,
-        "s",
-        buckets=buckets,
-        sort_cols="s",
-        path=None if path is None else f"{path}/{psh_t}",
-        mode="append" if exists else "overwrite",
-    )
-    return survivors
 
 
 def duck_incremental_substring_sql(
@@ -1110,13 +1085,7 @@ def hamming_near_dup_pairs(
     against the corpus. Band extraction is an arithmetic shift + mask,
     identical on signed int64 in Spark and DuckDB (the mask discards
     the sign-fill bits on both engines)."""
-    if bits % bands != 0:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= bands={bands}: the pigeonhole "
-            "guarantee needs more bands than tolerated bit flips"
-        )
+    _check_bands(bits, bands, max_hamming)
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
     banded = hashed.select(
@@ -1332,6 +1301,42 @@ def still_from_video_pairs(
     )
 
 
+def _check_bands(bits: int, bands: int, max_hamming: int | None = None) -> None:
+    if bits % bands != 0:
+        raise ValueError(f"bits={bits} not divisible by bands={bands}")
+    if max_hamming is not None and max_hamming >= bands:
+        raise ValueError(
+            f"max_hamming={max_hamming} >= bands={bands}: the pigeonhole "
+            "guarantee needs more bands than tolerated bit flips"
+        )
+
+
+def _band_keys(hash_col: str, bits: int, bands: int) -> Column:
+    """One row per band of a ``bits``-bit fingerprint: the composite
+    int64 key ``band_idx << band_bits | band_val`` (band_val <
+    2^band_bits, so the key is a single uniform join column)."""
+    band_bits = bits // bands
+    mask = (1 << band_bits) - 1
+    return F.explode(
+        F.expr(
+            f"transform(sequence(0, {bands - 1}),"
+            f" b -> (cast(b as bigint) << {band_bits})"
+            f" | (shiftright({hash_col}, b * {band_bits}) & {mask}))"
+        )
+    ).alias("bk")
+
+
+def _cool_bands(gate_rows: DataFrame, max_ids_per_bucket: int) -> DataFrame:
+    """Band keys holding at most ``max_ids_per_bucket`` distinct
+    identities (``fid``) — the hot-bucket gate."""
+    return (
+        gate_rows.groupBy("bk")
+        .agg(F.countDistinct("fid").alias("__nd"))
+        .filter(F.col("__nd") <= max_ids_per_bucket)
+        .select("bk")
+    )
+
+
 def stills_against_video_store(
     stills: DataFrame,
     store_name: str,
@@ -1359,31 +1364,20 @@ def stills_against_video_store(
     Hamming verify emits ``(still_id, video_id, frame_idx,
     hamming)`` distinct. Lookup cost ∝ stills × bands + probed
     store rows — independent of total store size."""
-    if bits % bands != 0:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    spark = stills.sparkSession
-    vfpb = f"{store_name}__vfpb"
-    recover_orphaned_compaction(spark, vfpb)
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
+    _check_bands(bits, bands)
+    store = BucketedStore(stills.sparkSession, store_name, {"vfpb": "bk"})
     sb = swap_cache(
         "dedup.stills_vs_store_bands",
         stills.select(
             F.col(still_id_col).alias("__sid"),
             F.col(hash_col).alias("__sh"),
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {bands - 1}),"
-                    f" b -> (cast(b as bigint) << {band_bits})"
-                    f" | (shiftright({hash_col}, b * {band_bits}) & {mask}))"
-                )
-            ).alias("bk"),
+            _band_keys(hash_col, bits, bands),
         ),
     )
     bks = sb.select("bk").distinct()
     hits = swap_cache(
         "dedup.stills_vs_store_hits",
-        spark.table(vfpb).join(F.broadcast(bks), "bk"),
+        store.table("vfpb").join(F.broadcast(bks), "bk"),
     )
     gate_rows = sb.select(
         "bk", F.concat(F.lit("s:"), F.col("__sid")).alias("fid")
@@ -1395,12 +1389,7 @@ def stills_against_video_store(
             ),
         )
     )
-    ok_bk = (
-        gate_rows.groupBy("bk")
-        .agg(F.countDistinct("fid").alias("__nd"))
-        .filter(F.col("__nd") <= max_ids_per_bucket)
-        .select("bk")
-    )
+    ok_bk = _cool_bands(gate_rows, max_ids_per_bucket)
     return (
         sb.join(ok_bk, "bk")
         .join(hits, "bk")
@@ -1457,59 +1446,37 @@ def incremental_video_dedup_bucketed(
 
     Input is the FRAME fingerprint table (`video_frame_dhash` output),
     not payloads — hashing stays the caller's narrow pass. Crash
-    contract identical to the sibling stores: compaction recovery
-    before the exists-probe, drops pinned by eager localCheckpoint
-    BEFORE the append, ``on_survivors`` (receives the surviving
-    frame rows) fires before the append — sink-first, at-least-once;
-    a replayed batch re-matches the store per-frame and re-drops.
-    Returns the surviving frame rows (all frames of surviving docs)."""
-    if bits % bands != 0:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= bands={bands}: the pigeonhole "
-            "guarantee needs more bands than tolerated bit flips"
-        )
-    spark = frames.sparkSession
-    vfpb_t = f"{store_name}__vfpb"
-    recover_orphaned_compaction(spark, vfpb_t)
-    exists = spark.catalog.tableExists(vfpb_t) and not fresh
-
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
+    contract, ``on_survivors`` and ``fresh``: `sources/store.py`
+    (``on_survivors`` receives the surviving frame rows; a replayed
+    batch re-matches the store per-frame and re-drops). Returns the
+    surviving frame rows (all frames of surviving docs)."""
+    _check_bands(bits, bands, max_hamming)
+    store = BucketedStore(
+        frames.sparkSession, store_name, {"vfpb": "bk"}, buckets=buckets,
+        path=path, fresh=fresh,
+    )
     banded = swap_cache(
         "dedup.incremental_vfp_bands",
         frames.select(
             F.col(id_col),
             F.col(frame_col),
             F.col(hash_col).alias("h"),
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {bands - 1}),"
-                    f" b -> (cast(b as bigint) << {band_bits})"
-                    f" | (shiftright({hash_col}, b * {band_bits}) & {mask}))"
-                )
-            ).alias("bk"),
+            _band_keys(hash_col, bits, bands),
         ),
     )
     batch_bks = banded.select("bk").distinct()
     fident = F.concat_ws(":", F.col(id_col), F.col(frame_col))
     gate_rows = banded.select("bk", fident.alias("fid"))
     store_hits = None
-    if exists:
+    if store.exists:
         store_hits = swap_cache(
             "dedup.incremental_vfp_store_hits",
-            spark.table(vfpb_t).join(F.broadcast(batch_bks), "bk"),
+            store.table("vfpb").join(F.broadcast(batch_bks), "bk"),
         )
         gate_rows = gate_rows.unionByName(
             store_hits.select("bk", fident.alias("fid"))
         )
-    ok_bk = (
-        gate_rows.groupBy("bk")
-        .agg(F.countDistinct("fid").alias("__nd"))
-        .filter(F.col("__nd") <= max_ids_per_bucket)
-        .select("bk")
-    )
+    ok_bk = _cool_bands(gate_rows, max_ids_per_bucket)
     a = banded.select(
         "bk", F.col(id_col).alias("doc_a"), F.col(frame_col).alias("fa"),
         F.col("h").alias("h_a"),
@@ -1540,7 +1507,7 @@ def incremental_video_dedup_bucketed(
         .filter(F.expr(ham))
     )
     dropped = in_batch
-    if exists:
+    if store.exists:
         vs_store = rollup(
             store_hits.select(
                 "bk", F.col(id_col).alias("doc_a"),
@@ -1551,25 +1518,14 @@ def incremental_video_dedup_bucketed(
             .filter(F.expr(ham))
         )
         dropped = dropped.unionByName(vs_store)
-    drops = dropped.distinct().localCheckpoint(eager=True)
-    survivors = frames.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        on_survivors(survivors)
-
-    from ..sources.bucketing import write_bucketed
-
-    write_bucketed(
-        banded.join(drops, id_col, "left_anti").select(
-            "bk", id_col, frame_col, "h"
-        ),
-        vfpb_t,
-        "bk",
-        buckets=buckets,
-        sort_cols="bk",
-        path=None if path is None else f"{path}/{vfpb_t}",
-        mode="append" if exists else "overwrite",
+    return store.commit(
+        frames, dropped, id_col, on_survivors,
+        lambda drops: {
+            "vfpb": banded.join(drops, id_col, "left_anti").select(
+                "bk", id_col, frame_col, "h"
+            )
+        },
     )
-    return survivors
 
 
 def jaccard_pairs(
@@ -2065,36 +2021,16 @@ def incremental_near_dup_bucketed(
     action, so the survivors are computed exactly once and the
     returned frame re-reads nothing from the batch lineage.
 
-    ``on_survivors``, if given, is called with the survivors frame
-    AFTER the drop set is pinned but BEFORE anything is appended to
-    the store — the hook is where a caller must commit survivors to
-    its own downstream sink (see ``streaming.dedup``). Ordering is
-    the crash-safety contract: a caller that sinks AFTER this call
-    returns has a window where the store already holds the batch's
-    rows but the sink does not; a replay of that batch would then
-    self-match the store (Jaccard 1.0) and silently drop the
-    documents from the sink forever. With the hook, a crash anywhere
-    after the sink write degrades to at-least-once (duplicate sink
-    rows on replay), never to loss.
-
-    Crash-recovery invariant for the store itself: sigs are appended
-    BEFORE bands. A crash between the two leaves orphan signature
-    rows with no band rows — inert (candidates are generated from
-    the bands table, so orphans never match anything) and healed on
-    replay (the batch re-runs, finds no band rows to self-match,
-    re-appends; duplicate sig/band rows only fan out candidate pairs,
-    which the verify stage's ``distinct`` collapses). The existence
-    probe therefore keys on the LAST-written table (bands): bands
-    present implies sigs present.
+    Crash contract and ``on_survivors``: `sources/store.py`. Sigs are
+    written BEFORE bands, so orphan sig rows from a crash between the
+    two are inert (candidates come from bands) and a replay re-appends
+    past them; duplicate sig/band rows only fan out candidate pairs,
+    which the verify stage's ``distinct`` collapses.
     """
-    spark = batch.sparkSession
-    bands_t = f"{store_name}__bands"
-    sigs_t = f"{store_name}__sigs"
-    # heal a mid-compaction crash BEFORE the exists-probe (see
-    # incremental_exact_dedup_bucketed for the loss scenario)
-    recover_orphaned_compaction(spark, sigs_t)
-    recover_orphaned_compaction(spark, bands_t)
-    exists = spark.catalog.tableExists(bands_t)
+    store = BucketedStore(
+        batch.sparkSession, store_name, {"sigs": id_col, "bands": "bk"},
+        buckets=buckets, path=path,
+    )
 
     sigged = swap_cache(
         "dedup.incremental_bucketed_sigs",
@@ -2141,65 +2077,35 @@ def incremental_near_dup_bucketed(
         F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")
     )
     dropped = _verify(in_batch.distinct(), a_batch)
-    if exists:
+    if store.exists:
         # store side of BOTH joins is bucketed on the join key: the
         # band join clusters on bk, the shingle lookup on id — no
         # store-side Exchange (scan_ancestry-asserted in tests)
         vs_store = (
-            spark.table(bands_t)
+            store.table("bands")
             .select(F.col(id_col).alias("id_a"), "bk")
             .join(new_bands.select(F.col(id_col).alias("id_b"), "bk"), "bk")
             .select("id_a", "id_b")
             .distinct()
         )
-        a_store = spark.table(sigs_t).select(
+        a_store = store.table("sigs").select(
             F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")
         )
         dropped = dropped.unionByName(_verify(vs_store, a_store))
-    # drops must be pinned BEFORE the append below: the plan reads the
-    # store tables, and the append adds this batch's survivors to them
-    # — a lazy re-evaluation after the write would match survivors
-    # against themselves and drop everything. localCheckpoint(eager)
-    # severs the table lineage at pre-append state; the frame is just
-    # the dropped ids, so the materialization is small.
-    drops = (
-        dropped.select(F.col("id_b").alias(id_col))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    surv_rows = sigged.join(drops, id_col, "left_anti")
-    survivors = batch.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        # sink-before-store: see docstring crash-safety contract
-        on_survivors(survivors)
 
-    from ..sources.bucketing import write_bucketed
+    def rows(drops: DataFrame) -> dict[str, DataFrame]:
+        surv_rows = sigged.join(drops, id_col, "left_anti")
+        return {
+            "sigs": surv_rows.select(id_col, "sig", "sh"),
+            "bands": surv_rows.select(
+                id_col, F.explode(F.expr(bk)).alias("bk")
+            ).select("bk", id_col),
+        }
 
-    mode = "append" if exists else "overwrite"
-    # sigs BEFORE bands (recovery invariant in the docstring): bands
-    # rows are the candidate source, so they must never exist without
-    # their verify-side sig rows
-    write_bucketed(
-        surv_rows.select(id_col, "sig", "sh"),
-        sigs_t,
-        id_col,
-        buckets=buckets,
-        sort_cols=id_col,
-        path=None if path is None else f"{path}/{sigs_t}",
-        mode=mode,
+    return store.commit(
+        batch, dropped.select(F.col("id_b").alias(id_col)), id_col,
+        on_survivors, rows,
     )
-    write_bucketed(
-        surv_rows.select(id_col, F.explode(F.expr(bk)).alias("bk")).select(
-            "bk", id_col
-        ),
-        bands_t,
-        "bk",
-        buckets=buckets,
-        sort_cols="bk",
-        path=None if path is None else f"{path}/{bands_t}",
-        mode=mode,
-    )
-    return survivors
 
 
 def _sig_expr(num_hashes: int) -> str:
@@ -2239,20 +2145,12 @@ def incremental_exact_dedup_bucketed(
     `exact_dedup` over store ∪ batch when batch ids exceed store ids
     (the append-only case; pinned in tests).
 
-    ``on_survivors`` fires after the drop set is pinned and BEFORE
-    the store append — same crash-safety contract as the near-dup
-    store (sink first ⇒ at-least-once, never loss; a replayed batch
-    self-matches the store and drops, so the survivor set stays
-    correct).
+    Crash contract and ``on_survivors``: `sources/store.py`.
     """
-    spark = batch.sparkSession
-    keys_t = f"{store_name}__keys"
-    # heal a mid-compaction crash BEFORE the exists-probe (ADVICE r6):
-    # otherwise this probe sees no keys table, overwrites the store
-    # with only this batch, and the orphaned staging table holding the
-    # full history is dropped by the next compaction.
-    recover_orphaned_compaction(spark, keys_t)
-    exists = spark.catalog.tableExists(keys_t)
+    store = BucketedStore(
+        batch.sparkSession, store_name, {"keys": "ck"}, buckets=buckets,
+        path=path,
+    )
 
     keyed = swap_cache(
         "dedup.incremental_exact_keys",
@@ -2264,36 +2162,17 @@ def incremental_exact_dedup_bucketed(
         .filter(F.col(id_col) != F.col("__min_id"))
         .select(id_col)
     )
-    if exists:
-        vs_store = (
-            keyed.join(
-                spark.table(keys_t).select("ck"),
-                "ck",
-            ).select(id_col)
+    dropped = dup_in_batch
+    if store.exists:
+        dropped = dropped.unionByName(
+            keyed.join(store.table("keys").select("ck"), "ck").select(id_col)
         )
-        dropped = dup_in_batch.unionByName(vs_store)
-    else:
-        dropped = dup_in_batch
-    # pinned BEFORE the append: the survivors/anti-join plan reads the
-    # store table and the append adds this batch's keys to it — lazy
-    # re-evaluation after the write would self-match and drop all
-    drops = dropped.distinct().localCheckpoint(eager=True)
-    survivors = batch.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        on_survivors(survivors)
-
-    from ..sources.bucketing import write_bucketed
-
-    write_bucketed(
-        keyed.join(drops, id_col, "left_anti").select("ck", id_col),
-        keys_t,
-        "ck",
-        buckets=buckets,
-        sort_cols="ck",
-        path=None if path is None else f"{path}/{keys_t}",
-        mode="append" if exists else "overwrite",
+    return store.commit(
+        batch, dropped, id_col, on_survivors,
+        lambda drops: {
+            "keys": keyed.join(drops, id_col, "left_anti").select("ck", id_col)
+        },
     )
-    return survivors
 
 
 def incremental_fingerprint_dedup_bucketed(
@@ -2345,56 +2224,34 @@ def incremental_fingerprint_dedup_bucketed(
     and the gate is what bounds in-bucket pair expansion as history
     grows.
 
-    Crash contract (same as the sibling stores):
-    `recover_orphaned_compaction` heals a mid-compaction crash before
-    the exists-probe; drops pin via eager localCheckpoint BEFORE the
-    append (a lazy re-evaluation after the write would self-match the
-    batch and drop everything); ``on_survivors`` fires before the
-    append (sink-first ⇒ at-least-once, never loss — a replayed
-    batch re-matches the store and re-drops). ``fresh=True`` starts a
-    new store lineage in place (one metastore op, the VERDICT-r8
-    noise discipline)."""
-    if bits % bands != 0:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= bands={bands}: the pigeonhole "
-            "guarantee needs more bands than tolerated bit flips"
-        )
-    spark = batch.sparkSession
-    fpb_t = f"{store_name}__fpb"
-    recover_orphaned_compaction(spark, fpb_t)
-    exists = spark.catalog.tableExists(fpb_t) and not fresh
-
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
+    Crash contract, ``on_survivors`` and ``fresh``: `sources/store.py`
+    (a replayed batch re-matches the store and re-drops)."""
+    _check_bands(bits, bands, max_hamming)
+    store = BucketedStore(
+        batch.sparkSession, store_name, {"fpb": "bk"}, buckets=buckets,
+        path=path, fresh=fresh,
+    )
     banded = swap_cache(
         "dedup.incremental_fp_bands",
         batch.select(
             F.col(id_col),
             F.col(hash_col).alias("h"),
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {bands - 1}),"
-                    f" b -> (cast(b as bigint) << {band_bits})"
-                    f" | (shiftright({hash_col}, b * {band_bits}) & {mask}))"
-                )
-            ).alias("bk"),
+            _band_keys(hash_col, bits, bands),
         ),
     )
     batch_bks = banded.select("bk").distinct()
-    gate_rows = banded.select("bk", F.col(id_col).alias("id"))
+    gate_rows = banded.select("bk", F.col(id_col).alias("fid"))
     store_hits = None
-    if exists:
+    if store.exists:
         # ONE bucket-pruned store scan (broadcast semi on the batch's
         # bk set — no store-side Exchange) feeds both the gate count
         # and the match arm
         store_hits = swap_cache(
             "dedup.incremental_fp_store_hits",
-            spark.table(fpb_t).join(F.broadcast(batch_bks), "bk"),
+            store.table("fpb").join(F.broadcast(batch_bks), "bk"),
         )
         gate_rows = gate_rows.unionByName(
-            store_hits.select("bk", F.col(id_col).alias("id"))
+            store_hits.select("bk", F.col(id_col).alias("fid"))
         )
     # upper bound ONLY: a >=2 floor would be a no-op for pair
     # formation (singleton buckets join to nothing) but it BREAKS the
@@ -2402,12 +2259,7 @@ def incremental_fingerprint_dedup_bucketed(
     # its own stored row under the SAME id, so the union-distinct
     # count is 1 and the floor would gate out exactly the self-match
     # that makes replay re-drop (regression-tested)
-    ok_bk = (
-        gate_rows.groupBy("bk")
-        .agg(F.countDistinct("id").alias("__nd"))
-        .filter(F.col("__nd") <= max_ids_per_bucket)
-        .select("bk")
-    )
+    ok_bk = _cool_bands(gate_rows, max_ids_per_bucket)
     a = banded.select(
         F.col("bk"), F.col(id_col).alias("id_a"), F.col("h").alias("h_a")
     )
@@ -2423,7 +2275,7 @@ def incremental_fingerprint_dedup_bucketed(
         .select("id_b")
     )
     dropped = in_batch
-    if exists:
+    if store.exists:
         vs_store = (
             store_hits.select(
                 F.col("bk"), F.col(id_col).alias("id_a"),
@@ -2435,24 +2287,12 @@ def incremental_fingerprint_dedup_bucketed(
             .select("id_b")
         )
         dropped = dropped.unionByName(vs_store)
-    drops = (
-        dropped.select(F.col("id_b").alias(id_col))
-        .distinct()
-        .localCheckpoint(eager=True)
+    return store.commit(
+        batch, dropped.select(F.col("id_b").alias(id_col)), id_col,
+        on_survivors,
+        lambda drops: {
+            "fpb": banded.join(drops, id_col, "left_anti").select(
+                "bk", id_col, "h"
+            )
+        },
     )
-    survivors = batch.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        on_survivors(survivors)
-
-    from ..sources.bucketing import write_bucketed
-
-    write_bucketed(
-        banded.join(drops, id_col, "left_anti").select("bk", id_col, "h"),
-        fpb_t,
-        "bk",
-        buckets=buckets,
-        sort_cols="bk",
-        path=None if path is None else f"{path}/{fpb_t}",
-        mode="append" if exists else "overwrite",
-    )
-    return survivors

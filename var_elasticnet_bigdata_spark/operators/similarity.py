@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.cachereg import swap_cache
+from ..sources.store import BucketedStore
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -1375,24 +1376,12 @@ def incremental_semantic_dedup_bucketed(
     ``centroids`` must be FIXED across batches (train once up front
     — `kmeans_train` or `seed_centroids` on a reference corpus).
 
-    ``on_survivors`` fires after the drop set is pinned and BEFORE
-    the store append — the same sink-before-store crash contract as
-    the other incremental stores (replay duplicates the sink,
-    self-matches the store, never loses a document).
+    Crash contract, ``on_survivors`` and ``fresh``: `sources/store.py`.
     """
-    spark = batch.sparkSession
-    vecs_t = f"{store_name}__vecs"
-    # heal a mid-compaction crash BEFORE the exists-probe (see
-    # dedup.incremental_exact_dedup_bucketed for the loss scenario)
-    from ..sources.compaction import recover_orphaned_compaction
-
-    # ``fresh=True`` rebuilds the store in place (overwrite on the
-    # first batch) — the noise-discipline contract of the other
-    # incremental stores (VERDICT r8 item 5): callers that re-create
-    # their store per run reuse ONE table+path instead of paying a
-    # DROP TABLE + mkdtemp round per invocation.
-    recover_orphaned_compaction(spark, vecs_t)
-    exists = spark.catalog.tableExists(vecs_t) and not fresh
+    store = BucketedStore(
+        batch.sparkSession, store_name, {"vecs": "cell"}, buckets=buckets,
+        path=path, fresh=fresh,
+    )
 
     # EAGER staging: the first consumers fan out as concurrent jobs
     # (the batch_cells broadcast build, the in-batch pass, the
@@ -1429,7 +1418,7 @@ def incremental_semantic_dedup_bucketed(
         .select(id_col)
     )
     dropped = in_batch
-    if exists:
+    if store.exists:
         # the SAME loud cell-budget contract as `semantic_dedup`
         # (VERDICT r6 item 5), now on the GROWING side: the store×
         # batch candidate join does store_cell × batch_cell work per
@@ -1446,7 +1435,7 @@ def incremental_semantic_dedup_bucketed(
         # the count aggregates only the probed cells' rows.
         batch_cells = staged.select("cell").distinct()
         hot = (
-            spark.table(vecs_t)
+            store.table("vecs")
             .join(F.broadcast(batch_cells), "cell", "left_semi")
             .groupBy("cell")
             .agg(F.count("*").alias("cnt"))
@@ -1458,8 +1447,8 @@ def incremental_semantic_dedup_bucketed(
             detail = ", ".join(f"cell {r['cell']}: {r['cnt']}" for r in hot)
             raise ValueError(
                 f"incremental_semantic_dedup_bucketed: seen-set store "
-                f"{vecs_t} has batch-probed cells above max_cell_rows="
-                f"{max_cell_rows} ({detail}); retrain centroids with a "
+                f"{store.table_name('vecs')} has batch-probed cells above "
+                f"max_cell_rows={max_cell_rows} ({detail}); retrain centroids with a "
                 f"larger nlist (kmeans_train) and rebuild the store"
             )
         dot = F.round(
@@ -1471,7 +1460,7 @@ def incremental_semantic_dedup_bucketed(
             6,
         )
         vs_store = (
-            spark.table(vecs_t)
+            store.table("vecs")
             .select("cell", F.col("e").alias("e_a"))
             .join(
                 staged.select(
@@ -1483,23 +1472,11 @@ def incremental_semantic_dedup_bucketed(
             .select(F.col("__id_b").alias(id_col))
         )
         dropped = dropped.unionByName(vs_store)
-    drops = dropped.distinct().localCheckpoint(eager=True)
-    survivors = batch.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        on_survivors(survivors)
-
-    from ..sources.bucketing import write_bucketed
-
-    write_bucketed(
-        staged.select("cell", id_col, "e"),
-        vecs_t,
-        "cell",
-        buckets=buckets,
-        sort_cols="cell",
-        path=None if path is None else f"{path}/{vecs_t}",
-        mode="append" if exists else "overwrite",
+    # seen-set: every batch row appends, dropped or kept
+    return store.commit(
+        batch, dropped, id_col, on_survivors,
+        lambda drops: {"vecs": staged.select("cell", id_col, "e")},
     )
-    return survivors
 
 
 def pq_seed_codebook(
@@ -2097,8 +2074,9 @@ def ivfpq_postings_append(
     (normalize → assign → residual → `pq_encode` with constant-folded
     artifacts — one narrow JVM pass), so postings written across ANY
     batch split are bit-identical to a one-shot encode of the union:
-    append order cannot change a single code. Same crash contract as
-    the dedup stores: compaction recovery before the exists-probe.
+    append order cannot change a single code. Crash contract and
+    ``fresh``: `sources/store.py` (both store tables heal before the
+    probe).
 
     EXACTLY-ONCE replay contract (r11, VERDICT r10 item 1): when the
     caller keys batches with ``batch_id``, a committed-batch ledger
@@ -2125,28 +2103,25 @@ def ivfpq_postings_append(
     crash-window double append.
 
     Returns True if the batch was applied, False on a ledger no-op."""
-    from ..sources.bucketing import write_bucketed
-    from ..sources.compaction import recover_orphaned_compaction
-
     spark = batch.sparkSession
-    t = f"{store_name}__pq"
-    ledger = f"{store_name}__pq_ledger"
-    recover_orphaned_compaction(spark, t)
-    exists = spark.catalog.tableExists(t) and not fresh
-    if fresh and spark.catalog.tableExists(ledger):
+    store = BucketedStore(
+        spark, store_name,
+        {"pq": "cell", "vec": "cell"} if store_vectors else {"pq": "cell"},
+        buckets=buckets, path=path, fresh=fresh,
+    )
+    ledger = store.table_name("pq_ledger")
+    if fresh and store.has("pq_ledger"):
         spark.sql(f"DROP TABLE {ledger}")
-    if fresh and not store_vectors and spark.catalog.tableExists(
-        f"{store_name}__vec"
-    ):
+    if fresh and not store_vectors and store.has("vec"):
         # a fresh rebuild without vectors must not leave a stale
         # sidecar for the refine path to serve from
-        spark.sql(f"DROP TABLE {store_name}__vec")
+        spark.sql(f"DROP TABLE {store.table_name('vec')}")
     if batch_id is not None and not fresh:
         # ledger probe: the committed-batch set is model-sized (one
         # string per applied batch) — a driver-side membership check,
         # cheaper than any scan of the postings themselves
-        if spark.catalog.tableExists(ledger) and (
-            spark.table(ledger)
+        if store.has("pq_ledger") and (
+            store.table("pq_ledger")
             .filter(F.col("batch_id") == F.lit(batch_id))
             .limit(1)
             .count()
@@ -2180,36 +2155,20 @@ def ivfpq_postings_append(
         codebook=np.asarray(codebook, dtype=np.float64),
         extra_cols=("cell",),
     )
-    write_bucketed(
-        coded.select("cell", F.col(id_col), "codes"),
-        t,
-        "cell",
-        buckets=buckets,
-        sort_cols="cell",
-        path=None if path is None else f"{path}/{t}",
-        mode="append" if exists else "overwrite",
-    )
+    rows = {"pq": coded.select("cell", F.col(id_col), "codes")}
     if store_vectors:
-        vt = f"{store_name}__vec"
-        vec_exists = spark.catalog.tableExists(vt) and not fresh
-        write_bucketed(
-            resid.select("cell", F.col(id_col), F.col("e")),
-            vt,
-            "cell",
-            buckets=buckets,
-            sort_cols="cell",
-            path=None if path is None else f"{path}/{vt}",
-            mode="append" if vec_exists else "overwrite",
-        )
+        rows["vec"] = resid.select("cell", F.col(id_col), F.col("e"))
+    store.write(rows)
     if batch_id is not None:
         # commit point: ledger row lands only after the sink write
         # succeeded (sink-first ⇒ at-least-once, never loss)
+        ledger_exists = store.has("pq_ledger")
         lw = (
             spark.createDataFrame([(batch_id,)], "batch_id string")
             .write.format("parquet")
-            .mode("append" if spark.catalog.tableExists(ledger) else "overwrite")
+            .mode("append" if ledger_exists else "overwrite")
         )
-        if path is not None and not spark.catalog.tableExists(ledger):
+        if path is not None and not ledger_exists:
             lw = lw.option("path", f"{path}/{ledger}")
         lw.saveAsTable(ledger)
     return True

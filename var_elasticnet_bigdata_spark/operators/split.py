@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.cachereg import swap_cache
+from ..sources.store import BucketedStore
 
 
 def split_thresholds(fractions: dict[str, float]) -> list[tuple[str, str]]:
@@ -170,25 +171,19 @@ def contamination_store_write(
     and re-shuffled for every crawl batch that needs checking.
     ``mode='append'`` adds a new benchmark's shingles (duplicates
     across appends are fine — hits are counted via semi-join
-    EXISTS semantics, see ``contamination_vs_store``)."""
+    EXISTS semantics, see ``contamination_vs_store``). Crash
+    contract: `sources/store.py`."""
     from .dedup import exploded_shingle_hashes
-
-    from ..sources.bucketing import write_bucketed
 
     sh = (
         exploded_shingle_hashes(train_df, n=n, text_col=text_col, out_col="s")
         .select("s")
         .distinct()
     )
-    write_bucketed(
-        sh,
-        f"{store_name}__shingles",
-        "s",
-        buckets=buckets,
-        sort_cols="s",
-        path=None if path is None else f"{path}/{store_name}__shingles",
-        mode=mode,
-    )
+    BucketedStore(
+        train_df.sparkSession, store_name, {"shingles": "s"},
+        buckets=buckets, path=path, fresh=mode != "append",
+    ).write({"shingles": sh})
 
 
 def contamination_vs_store(

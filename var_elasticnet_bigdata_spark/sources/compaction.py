@@ -112,10 +112,10 @@ def recover_orphaned_compaction(spark: SparkSession, table: str) -> bool:
     orphaned staging table (the entire accepted history) sits
     alongside a live target and the next compaction drops it as a
     pre-swap leftover — silent, permanent loss of every prior key.
-    The incremental store operators therefore call this helper at the
-    top of their exists-probe, so a replayed micro-batch after a
-    mid-compaction crash sees the recovered history instead of an
-    empty store.
+    `sources.store.BucketedStore` therefore calls this helper for
+    each store table when it opens, before its exists-probe, so a
+    replayed micro-batch after a mid-compaction crash sees the
+    recovered history instead of an empty store.
 
     Returns True iff a recovery rename happened. Cheap when healthy:
     one catalog probe.

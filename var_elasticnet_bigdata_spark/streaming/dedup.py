@@ -17,10 +17,13 @@ tests/test_streaming_multimodal.py.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import content_key
+from ..sources.compaction import compact_bucketed
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,416 +87,64 @@ def stream_scored(docs: DataFrame) -> DataFrame:
     )
 
 
-def stream_near_dup_against_store(
+def stream_against_store(
     docs: DataFrame,
-    store_name: str,
+    dedup: Callable[..., DataFrame],
     checkpoint_dir: str,
     out_path: str,
-    threshold: float = 0.5,
-    buckets: int = 32,
-    store_path: str | None = None,
+    tables: list[str],
     compact_every: int | None = None,
     trigger_available_now: bool = True,
 ):
-    """Continuous near-dup curation against the PERSISTED bucketed
-    signature store — the full production crawl loop as one streaming
-    query: each micro-batch of new documents is deduplicated against
-    the accepted corpus's store (`operators/dedup.
-    incremental_near_dup_bucketed`: band join + shingle verify, both
-    exchange-free on the store side) and against itself; survivors
-    append to BOTH the parquet corpus at ``out_path`` and the store
-    tables, so the next micro-batch sees them.
+    """Continuous dedup of a document (or frame) stream against a
+    PERSISTED incremental store — the production crawl loop as one
+    streaming query. ``dedup`` is a store operator with its arguments
+    bound (``functools.partial(incremental_near_dup_bucketed,
+    store_name=..., buckets=..., path=...)``); each non-empty
+    micro-batch runs ``dedup(batch_df, on_survivors=...)``, which
+    appends the survivors to the parquet corpus at ``out_path`` and
+    then the batch's rows to the store, so the next micro-batch sees
+    them.
 
-    Near-dup dedup needs the candidate join against all accepted
-    history, which Structured Streaming's keyed state cannot express
-    — `foreachBatch` is the sanctioned escape hatch for exactly this
-    write-a-batch-against-external-state shape (the store tables ARE
-    the state, bounded by the accepted corpus, not the stream). Exact
-    dedup stays in `stream_exact_dedup`'s watermarked state store;
-    this operator is its heavyweight sibling.
+    Candidate joins against all accepted history cannot be expressed
+    with Structured Streaming's keyed state; `foreachBatch` is the
+    escape hatch for this write-a-batch-against-external-state shape
+    (the store tables ARE the state, bounded by the accepted corpus,
+    not the stream). Exact dedup within a horizon stays in
+    `stream_exact_dedup`'s watermarked state store.
 
     Restart semantics: `foreachBatch` replays the last uncommitted
-    micro-batch after a crash, so every write in the batch function
-    is at-least-once. Write ORDER is what decides whether replay
-    duplicates or LOSES data: survivors are committed to the parquet
-    corpus at ``out_path`` FIRST (via the operator's ``on_survivors``
-    hook, which fires before any store append). A crash after the
-    corpus write but before/inside the store appends replays the
-    batch against a store that does not yet (fully) hold it — the
-    same survivors re-emerge and re-append, so the corpus gains
-    duplicate rows (true at-least-once) but never loses a document.
-    A crash after both writes but before the checkpoint commit
-    replays against a store that already holds the survivors; they
-    self-match (Jaccard 1.0) and drop, so neither corpus nor store
-    duplicates further. Were the order reversed (store first), that
-    same replay would drop documents that never reached the corpus —
-    permanent loss. Exactly-once needs an idempotent sink (MERGE on
-    doc_id) — out of scope for the parquet fixture sink; downstream
-    readers dedup corpus rows by doc_id if replay duplicates matter.
+    micro-batch after a crash. The operator sinks survivors before
+    any store append (`sources/store.py`), so a replay duplicates
+    corpus rows at worst and never loses a document. Exactly-once
+    needs an idempotent sink (MERGE on the id) — out of scope for the
+    parquet sink; readers dedup corpus rows by id if it matters.
 
-    ``compact_every``: every N batches BOTH store tables (sigs, then
-    bands — same order as the appends, so the bands-present ⟹
-    sigs-present recovery invariant survives a crash between the two
-    compactions) are rewritten in place
-    (`sources/compaction.compact_bucketed`) — same motivation as the
-    exact loop: append-only bucketed stores gain one file per task
-    per bucket per batch. A crash inside either compaction heals via
-    `recover_orphaned_compaction` at the next batch's exists-probe.
+    ``compact_every``: every N batches each of ``tables`` (full store
+    table names, in append order, so a crash between two compactions
+    keeps the store's last-table-implies-earlier invariant) is
+    rewritten in place (`sources/compaction.compact_bucketed`).
+    Append-only bucketed stores gain one file per bucket per batch;
+    compaction runs inside `foreachBatch`, where the stream is the
+    tables' only writer, and keeps the bucket spec. A crash inside it
+    heals when the next batch opens the store.
 
     Returns the StreamingQuery; caller awaits termination.
     """
-    from ..operators.dedup import incremental_near_dup_bucketed
+
+    def sink(survivors: DataFrame) -> None:
+        survivors.write.mode("append").parquet(out_path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        incremental_near_dup_bucketed(
-            batch_df,
-            store_name,
-            threshold=threshold,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
+        dedup(batch_df, on_survivors=sink)
         if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            spark = batch_df.sparkSession
-            compact_bucketed(spark, f"{store_name}__sigs")
-            compact_bucketed(spark, f"{store_name}__bands")
+            for table in tables:
+                compact_bucketed(batch_df.sparkSession, table)
 
     writer = (
         docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_exact_dedup_against_store(
-    docs: DataFrame,
-    store_name: str,
-    checkpoint_dir: str,
-    out_path: str,
-    buckets: int = 32,
-    store_path: str | None = None,
-    compact_every: int | None = None,
-    trigger_available_now: bool = True,
-):
-    """Continuous EXACT dedup against the persisted content-key store
-    (`operators/dedup.incremental_exact_dedup_bucketed`) — the
-    lightweight sibling of `stream_near_dup_against_store` and the
-    most common production crawl loop (URL / normalized-content
-    keys): each micro-batch anti-joins the accepted corpus's key
-    table (exchange-free on the store side), survivors append to the
-    parquet corpus FIRST (the operator's ``on_survivors`` hook — same
-    sink-before-store crash contract: replay duplicates corpus rows,
-    never loses documents) and their keys append to the store so the
-    next batch sees them.
-
-    ``compact_every``: every N batches the key table is compacted
-    in place (`sources/compaction.compact_bucketed`) — append-only
-    bucketed stores gain one file per task per bucket per batch, so
-    a long-running ingest would otherwise degrade every subsequent
-    anti-join into a many-tiny-files scan. Compaction runs INSIDE
-    foreachBatch (the stream is the table's only writer, so the
-    quiesced-readers requirement holds by construction) and keeps
-    the bucket spec, so the exchange-free join shape survives.
-
-    Returns the StreamingQuery; caller awaits termination.
-    """
-    from ..operators.dedup import incremental_exact_dedup_bucketed
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        incremental_exact_dedup_bucketed(
-            batch_df,
-            store_name,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            compact_bucketed(spark, f"{store_name}__keys")
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_semantic_dedup_against_store(
-    docs: DataFrame,
-    store_name: str,
-    centroids,
-    checkpoint_dir: str,
-    out_path: str,
-    eps: float = 0.4,
-    buckets: int = 32,
-    store_path: str | None = None,
-    compact_every: int | None = None,
-    trigger_available_now: bool = True,
-):
-    """Continuous SemDeDup against the persisted per-cell vector
-    store (`similarity.incremental_semantic_dedup_bucketed`) — the
-    semantic member of the streaming crawl-loop trio (exact keys,
-    MinHash bands, semantic cells). ``centroids`` is the FIXED
-    trained matrix (train once up front — `kmeans_train`); survivors
-    commit to the parquet corpus FIRST via the operator's
-    ``on_survivors`` hook (sink-before-store: replay duplicates the
-    corpus, never loses a vector; note the store is a SEEN-SET, so a
-    replayed batch self-matches at cosine 1.0 and drops).
-
-    ``compact_every``: every N batches the vector store is compacted
-    in place (`sources/compaction.compact_bucketed`; crash inside it
-    heals via `recover_orphaned_compaction` at the next batch's
-    exists-probe) — same small-files motivation as the exact/near-dup
-    loops.
-
-    Returns the StreamingQuery; caller awaits termination.
-    """
-    from ..operators.similarity import incremental_semantic_dedup_bucketed
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        incremental_semantic_dedup_bucketed(
-            batch_df,
-            store_name,
-            centroids,
-            eps=eps,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            compact_bucketed(batch_df.sparkSession, f"{store_name}__vecs")
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_substring_dedup_against_store(
-    docs: DataFrame,
-    store_name: str,
-    checkpoint_dir: str,
-    out_path: str,
-    width: int = 8,
-    min_run_tokens: int = 20,
-    max_docs_per_shingle: int = 64,
-    buckets: int = 32,
-    store_path: str | None = None,
-    compact_every: int | None = None,
-    trigger_available_now: bool = True,
-):
-    """Continuous SUBSTRING dedup against the persisted positional-
-    shingle store (`operators/dedup.incremental_substring_dedup_
-    bucketed`) — the fourth streaming crawl loop (exact keys, MinHash
-    bands, semantic cells, positional shingles): each micro-batch is
-    checked for ≥``min_run_tokens``-token verbatim runs against ALL
-    accepted history (store side of the hash join exchange-free),
-    survivors commit to the parquet corpus FIRST via the operator's
-    ``on_survivors`` hook (sink-before-store: replay duplicates the
-    corpus, never loses a document; the store is a SEEN-SET and the
-    operator deduplicates replayed match rows before island counting,
-    so a replayed batch re-drops exactly its original drops).
-
-    ``compact_every``: every N batches the shingle store is compacted
-    in place (`sources/compaction.compact_bucketed`; crash inside it
-    heals via `recover_orphaned_compaction` at the next batch's
-    exists-probe) — the positional store grows fastest of the four
-    (one row per token position), so compaction matters most here.
-
-    Returns the StreamingQuery; caller awaits termination.
-    """
-    from ..operators.dedup import incremental_substring_dedup_bucketed
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        incremental_substring_dedup_bucketed(
-            batch_df,
-            store_name,
-            width=width,
-            min_run_tokens=min_run_tokens,
-            max_docs_per_shingle=max_docs_per_shingle,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            compact_bucketed(batch_df.sparkSession, f"{store_name}__psh")
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_fingerprint_dedup_against_store(
-    docs: DataFrame,
-    store_name: str,
-    checkpoint_dir: str,
-    out_path: str,
-    hash_col: str = "fp",
-    bits: int = 64,
-    bands: int = 4,
-    max_hamming: int = 3,
-    max_ids_per_bucket: int = 64,
-    buckets: int = 32,
-    store_path: str | None = None,
-    compact_every: int | None = None,
-    trigger_available_now: bool = True,
-):
-    """Continuous perceptual-FINGERPRINT dedup against the persisted
-    banded-fingerprint store (`operators/dedup.incremental_
-    fingerprint_dedup_bucketed`) — the FIFTH streaming crawl loop
-    (exact keys, MinHash bands, semantic cells, positional shingles,
-    banded fingerprints), the one a multimodal ingest runs after its
-    decode stage: ``docs`` carries a precomputed int64 fingerprint
-    column (`multimodal.image_dhash` / `audio_fingerprint` /
-    `dedup.simhash` — all narrow stages that compose onto the stream
-    unchanged); each micro-batch's fingerprints check within
-    ``max_hamming`` of ALL accepted survivors (store side of the band
-    join exchange-free), survivors commit to the parquet corpus FIRST
-    via ``on_survivors`` (sink-before-store: replay duplicates the
-    corpus, never loses a document; a replayed batch re-matches the
-    stored survivors and re-drops).
-
-    ``compact_every``: every N batches the fingerprint store is
-    compacted in place (the store grows ``bands`` rows per accepted
-    item — the slowest-growing of the five, but a crawl-scale ingest
-    still wants bounded file counts).
-
-    Returns the StreamingQuery; caller awaits termination.
-    """
-    from ..operators.dedup import incremental_fingerprint_dedup_bucketed
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        incremental_fingerprint_dedup_bucketed(
-            batch_df,
-            store_name,
-            hash_col=hash_col,
-            bits=bits,
-            bands=bands,
-            max_hamming=max_hamming,
-            max_ids_per_bucket=max_ids_per_bucket,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            compact_bucketed(batch_df.sparkSession, f"{store_name}__fpb")
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_video_dedup_against_store(
-    frames: DataFrame,
-    store_name: str,
-    checkpoint_dir: str,
-    out_path: str,
-    frame_col: str = "frame_idx",
-    hash_col: str = "dhash",
-    min_matching_frames: int = 2,
-    bits: int = 64,
-    bands: int = 4,
-    max_hamming: int = 3,
-    max_ids_per_bucket: int = 64,
-    buckets: int = 32,
-    store_path: str | None = None,
-    compact_every: int | None = None,
-    trigger_available_now: bool = True,
-):
-    """Continuous VIDEO dedup against the persisted banded store
-    (`operators/dedup.incremental_video_dedup_bucketed`) — the SIXTH
-    streaming crawl loop: ``frames`` carries per-video frame-sampled
-    fingerprints (`multimodal.video_frame_dhash` composes onto the
-    stream unchanged — payload bytes in, (id, frame_idx, dhash) rows
-    out); each micro-batch's videos check against ALL accepted
-    history under the ≥``min_matching_frames`` rule, surviving frame
-    rows commit to parquet FIRST (sink-before-store: replay
-    duplicates the sink, never loses a video; a replayed batch
-    re-matches its own stored frames per-frame and re-drops).
-
-    ``compact_every``: in-loop compaction of ``{store}__vfpb`` —
-    the store grows ``bands × frames_sampled`` rows per accepted
-    video, so crawl-scale ingests want bounded file counts.
-
-    Returns the StreamingQuery; caller awaits termination."""
-    from ..operators.dedup import incremental_video_dedup_bucketed
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        incremental_video_dedup_bucketed(
-            batch_df,
-            store_name,
-            frame_col=frame_col,
-            hash_col=hash_col,
-            min_matching_frames=min_matching_frames,
-            bits=bits,
-            bands=bands,
-            max_hamming=max_hamming,
-            max_ids_per_bucket=max_ids_per_bucket,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            compact_bucketed(batch_df.sparkSession, f"{store_name}__vfpb")
-
-    writer = (
-        frames.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
