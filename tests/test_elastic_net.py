@@ -10,14 +10,13 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from var_elasticnet_bigdata_spark.ml.elastic_net import (
-    EnetFit,
     blocked_fold_ids,
-    coordinate_descent,
+    cd_solve,
     cv_enet,
     enet_path,
+    enet_solve_exact,
     kkt_violation,
-    lambda_path,
-    standardize_problem,
+    standardize,
 )
 from var_elasticnet_bigdata_spark.ml.gram import Moments, compute_moments
 
@@ -39,18 +38,36 @@ def random_problem(seed: int, n=200, k=8, rho=0.4):
     return X, y
 
 
+def standardized(m: Moments, intercept: bool):
+    """(1/n)·X̃'X̃ and (1/n)·X̃'ỹ of the single-response problem."""
+    xtx_n, XTY_n, *_ = standardize(m, m.cols[:-1], ["y"], intercept)
+    return xtx_n, XTY_n[:, 0]
+
+
+def both_solvers(xtx_n, xty_n, alpha, lam):
+    """The solution at (α, λ) from coordinate descent at a tight
+    energy tolerance (diag·Δb² < 1e-24) and from the exact
+    active-set solver with the eigendecomposition the path uses."""
+    b_cd = cd_solve(
+        xtx_n, xty_n[:, None], np.array([alpha]), np.array([lam]), tol=1e-24
+    )[:, 0]
+    w, Q = np.linalg.eigh(xtx_n)
+    b_exact = enet_solve_exact(
+        xtx_n, xty_n, alpha, lam, eig=(Q, np.maximum(w, 0.0))
+    )
+    assert b_exact is not None
+    return {"cd": b_cd, "exact": b_exact}
+
+
 def test_ridge_closed_form_alpha0():
     X, y = random_problem(1)
     m = make_moments(X, y)
-    xc = m.cols[:-1]
     for intercept in (False, True):
-        prob = standardize_problem(m, xc, "y", intercept=intercept)
+        xtx_n, xty_n = standardized(m, intercept)
         for lam in (0.01, 0.1, 1.0):
-            b = coordinate_descent(prob, alpha=0.0, lam=lam)
-            want = np.linalg.solve(
-                prob.xtx_n + lam * np.eye(len(xc)), prob.xty_n
-            )
-            assert b == pytest.approx(want, rel=1e-7, abs=1e-9)
+            want = np.linalg.solve(xtx_n + lam * np.eye(len(xty_n)), xty_n)
+            for b in both_solvers(xtx_n, xty_n, 0.0, lam).values():
+                assert b == pytest.approx(want, rel=1e-7, abs=1e-9)
 
 
 def test_lasso_orthonormal_soft_threshold():
@@ -60,13 +77,12 @@ def test_lasso_orthonormal_soft_threshold():
     Q, _ = np.linalg.qr(rng.normal(size=(n, k)))
     X = Q * np.sqrt(n)  # unit variance columns, orthogonal
     y = rng.normal(size=n)
-    m = make_moments(X, y)
-    prob = standardize_problem(m, m.cols[:-1], "y", intercept=False)
-    lam = float(np.median(np.abs(prob.xty_n)))
-    b = coordinate_descent(prob, alpha=1.0, lam=lam)
-    want = np.sign(prob.xty_n) * np.maximum(np.abs(prob.xty_n) - lam, 0)
-    want = want / prob.xtx_n.diagonal()
-    assert b == pytest.approx(want, rel=1e-6, abs=1e-10)
+    xtx_n, xty_n = standardized(make_moments(X, y), intercept=False)
+    lam = float(np.median(np.abs(xty_n)))
+    want = np.sign(xty_n) * np.maximum(np.abs(xty_n) - lam, 0)
+    want = want / xtx_n.diagonal()
+    for b in both_solvers(xtx_n, xty_n, 1.0, lam).values():
+        assert b == pytest.approx(want, rel=1e-6, abs=1e-10)
 
 
 @settings(max_examples=20, deadline=None)
@@ -78,17 +94,35 @@ def test_lasso_orthonormal_soft_threshold():
 )
 def test_kkt_optimality_property(seed, alpha, lam_frac, intercept):
     X, y = random_problem(seed, n=120, k=6)
-    m = make_moments(X, y)
-    prob = standardize_problem(m, m.cols[:-1], "y", intercept=intercept)
-    lmax = lambda_path(prob, alpha)[0]
+    xtx_n, xty_n = standardized(make_moments(X, y), intercept)
+    lmax = float(np.max(np.abs(xty_n))) / max(alpha, 1e-3)
     lam = lmax * lam_frac
-    b = coordinate_descent(prob, alpha, lam)
-    assert kkt_violation(prob, b, alpha, lam) < 1e-7
+    for b in both_solvers(xtx_n, xty_n, alpha, lam).values():
+        assert kkt_violation(xtx_n, xty_n, b, alpha, lam) < 1e-7
+
+
+def test_lasso_path_finite_on_singular_design():
+    """α=1 on a design with more collinearity than rows support: the
+    standardized Gram's smallest eigenvalue is ~−1e-16, clamped to 0,
+    so with no ridge term (λ(1−α) = 0) the cached inverse would be
+    infinite. The path must stay finite and optimal at every λ."""
+    rng = np.random.default_rng(0)
+    n, k = 17, 8
+    X = rng.standard_normal((n, k))
+    X[:, 1:] = 0.95 * X[:, :-1] + 0.05 * X[:, 1:]
+    y = X[:, :2] @ [1, -0.5] + rng.standard_normal(n)
+    m = make_moments(X, y)
+    fit = enet_path(m, m.cols[:-1], ["y"], alpha=1.0, intercept=True, nlambda=30)["y"]
+    assert np.all(np.isfinite(fit.coefs)) and np.all(np.isfinite(fit.intercepts))
+    xtx_n, XTY_n, _, scale, *_ = standardize(m, m.cols[:-1], ["y"], True)
+    for i, lam in enumerate(fit.lambdas):
+        b = fit.coefs[:, i] * scale  # back to the standardized scale
+        assert kkt_violation(xtx_n, XTY_n[:, 0], b, 1.0, lam) <= 1e-9, i
 
 
 def test_path_warm_start_monotone_support():
     X, y = random_problem(3)
-    fit = enet_path(make_moments(X, y), [f"x{i}" for i in range(8)], "y", alpha=1.0)
+    fit = enet_path(make_moments(X, y), [f"x{i}" for i in range(8)], ["y"], alpha=1.0)["y"]
     # at lambda_max the model is empty; support grows roughly as λ shrinks
     assert np.all(fit.coefs[:, 0] == 0)
     assert np.count_nonzero(fit.coefs[:, -1]) >= np.count_nonzero(fit.coefs[:, 0])
@@ -96,7 +130,7 @@ def test_path_warm_start_monotone_support():
 
 def test_coef_interpolation():
     X, y = random_problem(4)
-    fit = enet_path(make_moments(X, y), [f"x{i}" for i in range(8)], "y", alpha=0.5)
+    fit = enet_path(make_moments(X, y), [f"x{i}" for i in range(8)], ["y"], alpha=0.5)["y"]
     mid = np.sqrt(fit.lambdas[10] * fit.lambdas[11])
     b, _ = fit.coef_at(mid)
     lo, _ = fit.coef_at(fit.lambdas[11])
@@ -112,9 +146,9 @@ def test_intercept_recovery():
     beta = np.array([1.0, -2.0, 0.0, 0.5])
     y = 7.0 + X @ beta + rng.normal(scale=0.01, size=300)
     fit = enet_path(
-        make_moments(X, y), [f"x{i}" for i in range(4)], "y",
+        make_moments(X, y), [f"x{i}" for i in range(4)], ["y"],
         alpha=0.5, intercept=True,
-    )
+    )["y"]
     b, a0 = fit.coef_at(fit.lambdas[-1])
     assert b == pytest.approx(beta, abs=0.02)
     assert a0 == pytest.approx(7.0, abs=0.1)
@@ -138,7 +172,9 @@ def test_cv_enet_selects_reasonable_lambda():
     for fo in np.unique(folds):
         idx = folds == fo
         fold_m[int(fo)] = make_moments(X[idx], y[idx])
-    fit = cv_enet(fold_m, [f"x{i}" for i in range(6)], "y", alpha=0.5)
+    fit = cv_enet(
+        fold_m, [f"x{i}" for i in range(6)], ["y"], alpha=0.5, truncate=False
+    )["y"]
     assert fit.lambda_min is not None
     assert fit.cv_mean is not None and np.all(np.isfinite(fit.cv_mean))
     # CV error at lambda_min beats the null-model error (y variance)
@@ -204,9 +240,9 @@ def test_kkt_support_enumeration_matches_solver():
         names = [f"x{i}" for i in range(k)] + ["y"]
         m = moments_from_numpy(np.column_stack([X, y]), names)
         fit = enet_path(
-            m, names[:-1], "y", alpha=alpha, lambdas=np.array([lam]),
+            m, names[:-1], ["y"], alpha=alpha, lambdas=np.array([lam]),
             intercept=False,
-        )
+        )["y"]
         b_solver = fit.coefs[:, 0]
         # enumeration on the standardized problem (uncentered scale,
         # matching intercept=False)

@@ -50,7 +50,7 @@ def test_k1_reduces_to_univariate_enet():
             m, xc, yc, alpha=alpha, standardize_response=False, nlambda=30,
             tol=1e-14,
         )
-        u = enet_path(m, xc, yc[0], alpha=alpha, lambdas=g.lambdas)
+        u = enet_path(m, xc, yc, alpha=alpha, lambdas=g.lambdas)[yc[0]]
         assert g.coefs[:, 0, :] == pytest.approx(u.coefs, abs=1e-8)
 
 

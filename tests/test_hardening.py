@@ -489,35 +489,53 @@ def test_cache_registry_is_per_session(spark):
 
 
 def test_all_package_persists_are_registry_bounded():
-    """Every .persist() in the package must go through the cachereg
-    registry (one live cache per session+slot) — the only exception
-    is queries._shared_frame, which memoizes deliberately per Spark
-    application (two call sites since r10: the initial persist and
-    the re-registration after an external clearCache stripped it —
-    both inside the one memoized slot, so the session bound is
-    unchanged). Guards against reintroducing the per-call persist
-    leak class (ADVICE r3/r4)."""
-    import inspect
+    """Every .persist() and .cache() in the package must go through
+    the cachereg registry (one live cache per session+slot), with no
+    exception: a hand-placed persist outside it is the per-call leak
+    class (ADVICE r3/r4), and a memo keyed outside the registry keeps
+    a stopped session's frames alive because only the registry sweeps
+    stopped sessions."""
     import pathlib
 
     import var_elasticnet_bigdata_spark as pkg
-    from var_elasticnet_bigdata_spark import queries as Q
 
     root = pathlib.Path(pkg.__file__).parent
     offenders = []
     for py in root.rglob("*.py"):
+        if py.relative_to(root).as_posix() == "plans/cachereg.py":
+            continue
         for i, line in enumerate(py.read_text().splitlines(), 1):
-            if ".persist()" in line and "cachereg" not in str(py):
+            if ".persist(" in line or ".cache()" in line:
                 offenders.append(f"{py.relative_to(root)}:{i}")
-    assert len(offenders) == 2 and all(
-        o.startswith("queries.py:") for o in offenders
-    ), offenders
-    # both sites must be inside the memoized shared-frame helper
-    src, start = inspect.getsourcelines(Q._shared_frame)
-    lines = {int(o.split(":")[1]) for o in offenders}
-    assert all(
-        start <= n < start + len(src) for n in lines
-    ), (offenders, start, len(src))
+    assert offenders == [], offenders
+
+
+def test_shared_frame_builds_once_and_repersists_after_clear(spark):
+    """A shared roll-up frame (queries._daily_events/_quarterly_pair)
+    is built once per (session, slot) and re-registered after a
+    clearCache, so the next action materializes it once. Rebuilding
+    it per call would re-read its parquet sources, one
+    schema-inference Spark job per read."""
+    from var_elasticnet_bigdata_spark.plans.cachereg import (
+        live_cache_count,
+        shared_frame,
+    )
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(30).selectExpr("id", "id * 5 AS v")
+
+    a = shared_frame(spark, "test.shared_frame", build)
+    a.count()
+    spark.catalog.clearCache()
+    assert not (a.storageLevel.useMemory or a.storageLevel.useDisk)
+    b = shared_frame(spark, "test.shared_frame", build)
+    assert b is a and len(builds) == 1
+    assert b.storageLevel.useMemory or b.storageLevel.useDisk
+    assert live_cache_count("test.shared_frame") == 1
+    spark.catalog.clearCache()
 
 
 def test_release_session_drops_live_slots(spark):

@@ -44,7 +44,7 @@ def test_cell_rmse_matches_manual_loop():
     n_o = 0
     for t in range(40, T - 2 + 1):
         m = moments_from_numpy(np.column_stack([X[:t], y[:t]]), names)
-        fit = enet_path(m, names[:-1], "y", alpha=0.5, lambdas=lams)
+        fit = enet_path(m, names[:-1], ["y"], alpha=0.5, lambdas=lams)["y"]
         pred = X[t : t + 2] @ fit.coefs + fit.intercepts
         rmses += np.sqrt(((pred - y[t : t + 2, None]) ** 2).mean(axis=0))
         n_o += 1

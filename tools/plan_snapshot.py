@@ -52,9 +52,10 @@ KEEP = re.compile(
     r"Window|WindowGroupLimit|Generate|Expand|Sort|TakeOrderedAndProject|"
     r"GlobalLimit|LocalLimit|FlatMapGroupsInPandas|MapInPandas|"
     r"FlatMapCoGroupsInPandas|ArrowEvalPython|BatchEvalPython|"
-    # InMemoryTableScan excluded: the memoized shared frames
-    # (_shared_frame) make its presence depend on clearCache timing
-    # relative to their registration, not on the query's structure
+    # InMemoryTableScan excluded: the staged shared frames
+    # (queries._daily_events, queries._quarterly_pair) make its
+    # presence depend on clearCache timing relative to their
+    # registration, not on the query's structure
     r"FileScan|Union|Intersect|Except)"
 )
 

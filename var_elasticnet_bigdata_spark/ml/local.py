@@ -4,16 +4,16 @@ These are the in-worker counterparts of ``fit_enet_var`` used inside
 ``applyInPandas`` workers by the rolling-origin harness: each origin's
 training slice is small (the estimation frontier is ~hundreds of rows
 × K series even when the raw data is 100 TB — it's post-aggregation),
-so the fit runs locally with the SAME pathwise coordinate-descent
-solver the distributed Gram path uses. One code path, two data
-sources (SURVEY §3.2 Plan B).
+so the fit runs locally with the SAME elastic-net path solver the
+distributed Gram path uses. One code path, two data sources (SURVEY
+§3.2 Plan B).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .elastic_net import EnetFit, cv_enet, enet_path
+from .elastic_net import EnetFit, blocked_fold_ids, cv_enet, enet_path
 from .gram import Moments
 
 
@@ -54,54 +54,33 @@ class LocalEnetVAR:
         self.p = p
         self.intercept = intercept
         self.y = y
-        alphas = (
-            np.full(K, alpha, dtype=float)
-            if np.isscalar(alpha)
-            else np.asarray(alpha, dtype=float)
-        )
-        lams = None
-        if lam is not None:
-            lams = (
-                np.full(K, lam, dtype=float)
-                if np.isscalar(lam)
-                else np.asarray(lam, dtype=float)
-            )
         # lag-embed: response rows p..T-1; Z column order = l1 block, l2 block…
         Z = np.column_stack([y[p - i : T - i] for i in range(1, p + 1)])
         Yp = y[p:]
         self.z_names = [f"{s}.l{i}" for i in range(1, p + 1) for s in series]
-        names = self.z_names + [f"__y_{s}" for s in series]
+        y_names = [f"__y_{s}" for s in series]
+        names = self.z_names + y_names
         data = np.column_stack([Z, Yp])
         keep = ~np.isnan(data).any(axis=1)
         data = data[keep]
         self.t_rows = len(data)
-        self.fits: dict[str, EnetFit] = {}
-        self.lambda_used: dict[str, float] = {}
-        if lams is None:
-            from .elastic_net import multi_cv_enet
-
-            foldid = np.arange(self.t_rows) // cv_block
-            fm = fold_moments_from_numpy(data, names, foldid)
-            y_names = [f"__y_{s}" for s in series]
-            fits = multi_cv_enet(
-                fm, self.z_names, y_names, alphas, intercept=intercept
+        if lam is None:
+            fm = fold_moments_from_numpy(
+                data, names, blocked_fold_ids(self.t_rows, cv_block)
             )
-            for s in series:
-                fit = fits[f"__y_{s}"]
-                self.fits[s] = fit
-                self.lambda_used[s] = float(
-                    fit.extras["lambda_1se"] if lambda_rule == "1se"
-                    else fit.lambda_min
-                )
+            fits = cv_enet(fm, self.z_names, y_names, alpha, intercept)
+            lams = [
+                f.extras["lambda_1se"] if lambda_rule == "1se" else f.lambda_min
+                for f in fits.values()
+            ]
         else:
-            m = moments_from_numpy(data, names)
-            for j, s in enumerate(series):
-                path = np.linspace(2 * lams[j], lams[j] / 2, 10)
-                self.fits[s] = enet_path(
-                    m, self.z_names, f"__y_{s}", alpha=float(alphas[j]),
-                    lambdas=path, intercept=intercept,
-                )
-                self.lambda_used[s] = float(lams[j])
+            lams = np.broadcast_to(np.asarray(lam, dtype=float), (K,))
+            fits = enet_path(
+                moments_from_numpy(data, names), self.z_names, y_names,
+                alpha, np.linspace(2 * lams, lams / 2, 10), intercept,
+            )
+        self.fits: dict[str, EnetFit] = dict(zip(series, fits.values()))
+        self.lambda_used = {s: float(v) for s, v in zip(series, lams)}
 
     def coef_matrix(self) -> np.ndarray:
         cols = []

@@ -60,7 +60,6 @@ def _cell_rmse(
     timeSlice): one warm-started λ-path fit per origin."""
     n = len(y)
     names = [f"x{i}" for i in range(X.shape[1])] + ["y"]
-    x_cols, y_col = names[:-1], "y"
     lambdas = np.asarray(sorted(lambdas, reverse=True), dtype=float)
     origins = range(init_window, n - horizon + 1)
     if len(origins) == 0:
@@ -82,9 +81,7 @@ def _cell_rmse(
         m = moments_from_numpy(
             np.column_stack([X[:t], y[:t]]), names
         )
-        fit = enet_path(
-            m, x_cols, y_col, alpha=alpha, lambdas=lambdas, intercept=intercept
-        )
+        fit = enet_path(m, names[:-1], ["y"], alpha, lambdas, intercept)["y"]
         Xt = X[t : t + horizon]
         yt = y[t : t + horizon]
         pred = Xt @ fit.coefs + fit.intercepts  # (horizon, nlambda)
@@ -278,7 +275,6 @@ def _tune_cells_distributed(
     from .gram import Moments
 
     k = len(z_cols)
-    K = len(series)
     cols = [*z_cols, *series]
     flat = embedded.select(
         F.col(date_col).alias("__d"),
@@ -360,6 +356,7 @@ def _tune_cells_distributed(
     lams = lambda_sorted
     nc = len(cols)
     x_names = [f"x{i}" for i in range(k)]
+    y_names = [f"y{j}" for j in range(len(series))]
     ic = intercept
 
     def run(batches):
@@ -378,15 +375,12 @@ def _tune_cells_distributed(
                 Xt = np.array(
                     [[s[f"c{i}"] for i in range(k)] for s in tests_]
                 )
-                for eq_j in range(K):
-                    names_ = x_names + ["y"]
-                    idx = list(range(k)) + [k + eq_j]
-                    sel = [0] + [1 + i for i in idx]
-                    mm = Moments(cols=names_, m=m[np.ix_(sel, sel)])
-                    fit = enet_path(
-                        mm, x_names, "y", alpha=float(row.alpha),
-                        lambdas=lams, intercept=ic,
-                    )
+                # every equation shares the lag design: one path call
+                fits = enet_path(
+                    Moments(cols=x_names + y_names, m=m), x_names, y_names,
+                    float(row.alpha), lams, ic,
+                )
+                for eq_j, fit in enumerate(fits.values()):
                     yt = np.array([s[f"c{k + eq_j}"] for s in tests_])
                     pred = Xt @ fit.coefs + fit.intercepts
                     rmse = np.sqrt(((pred - yt[:, None]) ** 2).mean(axis=0))
@@ -461,9 +455,9 @@ def ezlasso(
     names = [f"x{i}" for i in range(X.shape[1])] + ["y"]
     m = moments_from_numpy(np.column_stack([X, y]), names)
     fit = enet_path(
-        m, names[:-1], "y", alpha=alpha,
-        lambdas=np.linspace(2 * best_lam, best_lam / 2, 10), intercept=False,
-    )
+        m, names[:-1], ["y"], alpha,
+        np.linspace(2 * best_lam, best_lam / 2, 10), intercept=False,
+    )["y"]
     co, _ = fit.coef_at(best_lam)
     if rank_abs:
         # fix-mode: rank predictors by |coef| (no intercept row)

@@ -62,12 +62,6 @@ def heuristic_lag_bounds(k_series: int) -> tuple[int, int]:
     return int(math.floor(x)), int(math.ceil(x)) + 1
 
 
-def blocked_foldid(n_rows: int, block: int = 10) -> np.ndarray:
-    """The reference's shared contiguous folds (enetVAR.R:27-35):
-    blocks of 10 rows, identical across equations."""
-    return np.arange(n_rows) // block
-
-
 @dataclass
 class EnetVARModel:
     """Fitted multi-equation elastic-net VAR."""
@@ -179,7 +173,8 @@ def fit_enet_var(
     nlambda: int = 100,
 ) -> EnetVARModel:
     """Fit from a WIDE Spark DataFrame. One distributed moment pass
-    (per CV fold when λ is cross-validated); K driver-side path fits.
+    (per CV fold when λ is cross-validated); one driver-side path fit
+    over all K equations.
 
     Rows with any NULL among the model columns are dropped
     (na.omit, Main.R:196) — by embedding first and dropping
@@ -204,32 +199,18 @@ def fit_enet_var(
         frame = blocked_fold_column(vz.df.filter(cond), date_col, cv_block)
         fold_moments = compute_moments(frame, cols, fold_col="__fold")
         total = moments_total(fold_moments)
+        fits = cv_enet(fold_moments, z_cols, series, alphas, intercept, nlambda)
+        lambda_used = {s: float(fits[s].lambda_min) for s in series}
     else:
         # fixed-λ path needs no CV folds — skip the fold-assignment
         # window pass entirely
         total = compute_moments(vz.df.filter(cond), cols)
-        fold_moments = None
-
-    fits: dict[str, EnetFit] = {}
-    lambda_used: dict[str, float] = {}
-    if lams is not None:
-        for j, s in enumerate(series):
-            path = np.linspace(2 * lams[j], lams[j] / 2, 10)
-            fits[s] = enet_path(
-                total, z_cols, s, alpha=float(alphas[j]), lambdas=path,
-                intercept=intercept,
-            )
-            lambda_used[s] = float(lams[j])
-    else:
-        from .elastic_net import multi_cv_enet
-
-        multi = multi_cv_enet(
-            fold_moments, z_cols, series, alphas, intercept=intercept,
-            nlambda=nlambda,
+        # the reference's fixed-λ path seq(2λ, λ/2, len 10) per equation
+        fits = enet_path(
+            total, z_cols, series, alphas,
+            np.linspace(2 * lams, lams / 2, 10), intercept,
         )
-        for s in series:
-            fits[s] = multi[s]
-            lambda_used[s] = float(multi[s].lambda_min)
+        lambda_used = {s: float(lam_s) for s, lam_s in zip(series, lams)}
 
     # last p observation rows for recursive forecasting (tiny collect)
     tail = (

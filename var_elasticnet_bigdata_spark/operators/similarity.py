@@ -1779,13 +1779,6 @@ def sq8_minmax(
     )
 
 
-def _dlit(xs: list[float]) -> str:
-    """Constant double-array literal, repr round-trip (bit-exact)."""
-    return (
-        "array(" + ", ".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in xs) + ")"
-    )
-
-
 def sq8_encode(
     df: DataFrame,
     mn: list[float],

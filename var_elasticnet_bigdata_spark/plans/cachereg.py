@@ -123,6 +123,26 @@ def swap_cache(slot: str, df: DataFrame, eager: bool = False) -> DataFrame:
     return df
 
 
+def shared_frame(spark, slot: str, build) -> DataFrame:
+    """The frame staged in (``spark``, ``slot``), calling ``build()``
+    only while the slot is empty — the materialized-view pattern for a
+    small frame many queries derive from. A slot frame whose persist
+    registration a ``clearCache`` dropped goes through ``swap_cache``
+    again, so the next action materializes it once. Reusing the slot's
+    frame instead of re-building it matters: each rebuild re-reads its
+    parquet sources, and every read is one more schema-inference Spark
+    job."""
+    with _lock:
+        _sweep_stopped()
+        live = _live.get((id(spark), slot))
+    if live is None:
+        return swap_cache(slot, build())
+    level = live.storageLevel
+    # persisting a registered plan again only logs Spark's
+    # "Asked to cache already cached data" warning
+    return live if level.useMemory or level.useDisk else swap_cache(slot, live)
+
+
 def pin_frame(df: DataFrame) -> DataFrame:
     """Materialize a MODEL-SIZED frame and CUT its lineage
     (``localCheckpoint(eager=True)``).

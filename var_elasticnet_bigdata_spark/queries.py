@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators.asof import asof_join
+from .plans.cachereg import shared_frame
 from .sources import load_table
 
 
@@ -850,55 +851,15 @@ _DAILY_EVENTS_CTE = """
 """
 
 
-_SHARED_FRAME_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _shared_frame(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    """Memoize + persist the small shared roll-up frames (the
-    materialized-view pattern): a dozen queries derive from the daily
-    event series / quarterly pair, and re-running the upstream
-    aggregation per query dominates their wall-clock at bench scale.
-    Keyed per Spark application so test sessions don't cross-talk.
-
-    Re-persists on reuse (r10): bench.py/retime.py call
-    ``spark.catalog.clearCache()`` between timed runs, which drops
-    BOTH the cached blocks and the persist REGISTRATION of the
-    memoized DataFrame — after which every downstream action
-    recomputed the upstream agg from parquet. For the ML/selection
-    family (VERDICT r9 item 1) that meant ~10-30 small driver jobs
-    per query EACH paying a host-load-sensitive agg rebuild — an N×
-    amplifier of session noise (measured: ml_acf_selection 29 jobs,
-    0.4-0.5 s per rebuild at sf0.1). Re-registering the persist makes
-    the first action per timed run materialize the agg ONCE and every
-    later job a cache hit, which both speeds the family up and
-    de-amplifies host drift.
-
-    ``SPARK_GRAFT_NO_STAGED_CACHE=1`` (the plan-snapshot escape
-    hatch, same contract as plans/cachereg.py) disables persistence
-    entirely so locked signatures stay the CANONICAL UNCACHED plan
-    shapes — otherwise the re-persist would hide the shared subtree's
-    Exchange/Sort inside an InMemoryTableScan depending on clearCache
-    timing relative to the snapshot loop."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_NO_STAGED_CACHE"):
-        return build()
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _SHARED_FRAME_CACHE.get(key)
-    if df is None:
-        df = build().persist()
-        _SHARED_FRAME_CACHE[key] = df
-    else:
-        sl = df.storageLevel
-        if not (sl.useMemory or sl.useDisk):
-            df.persist()
-    return df
-
-
 def _daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared fixture frame: events rolled up to a daily long series
     table (series_id=event_type, obs_date=day, value=sum) — the
-    engine's canonical long layout over the driver's testdata."""
+    engine's canonical long layout over the driver's testdata.
+
+    Staged once per session and ``sf_dir`` in a cache-registry slot
+    (``shared_frame``): a dozen queries derive from the daily event
+    series / quarterly pair, and re-running the upstream aggregation
+    per query dominates their wall-clock at bench scale."""
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "events")
@@ -907,7 +868,7 @@ def _daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").cast("date").alias("obs_date"),
         ).agg(r6(F.sum("value")).alias("value"))
 
-    return _shared_frame(spark, sf_dir, "daily_events", build)
+    return shared_frame(spark, f"shared.daily_events:{sf_dir}", build)
 
 
 _CORR_SERIES = ["click", "error", "purchase", "signup", "view"]
@@ -1581,12 +1542,6 @@ def t2_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # training-data pipeline extensions: dedup, similarity, text analysis
 # --------------------------------------------------------------------------
-
-
-def _duck_norm() -> str:
-    from .operators.dedup import NORM_SQL_DUCK
-
-    return NORM_SQL_DUCK
 
 
 @query(
@@ -3472,8 +3427,8 @@ _QUARTERLY_PAIR_CTE = """
 
 
 def _quarterly_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-series quarterly wide frame from orders/lineitem
-    (memoized + persisted per session/sf — see ``_shared_frame``)."""
+    """Two-series quarterly wide frame from orders/lineitem, staged
+    like ``_daily_events``."""
 
     def build() -> DataFrame:
         o = (
@@ -3492,7 +3447,7 @@ def _quarterly_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return o.join(li, "obs_date", "inner").orderBy("obs_date")
 
-    return _shared_frame(spark, sf_dir, "quarterly_pair", build)
+    return shared_frame(spark, f"shared.quarterly_pair:{sf_dir}", build)
 
 
 @query("ml_enet_var_coefs", None)
@@ -3679,7 +3634,8 @@ def _enet_oracle_sql(alpha: float, lam: float, dp: int) -> str:
     by Cramer's rule (inactive rows replaced by identity, forcing
     b_j = 0), and selects the unique pattern passing both KKT
     checks. Reference: enetVAR.R:10-37 (.enetVAR → glmnet CD);
-    engine solver: ml/elastic_net.py:coordinate_descent."""
+    engine solver: ml/elastic_net.py:enet_path (exact active-set
+    solves, coordinate descent as the fallback)."""
     xs = ["rl1", "ql1", "rl2", "ql2"]
     zn = ["revenue.l1", "quantity.l1", "revenue.l2", "quantity.l2"]
     k = len(xs)
@@ -4397,9 +4353,8 @@ def ml_lasso_soft_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
     for lam in (0.0005, 0.005, 0.05, 0.5, 1.5):
         fit = enet_path(
-            m, ["x"], "revenue", alpha=1.0,
-            lambdas=__import__("numpy").array([lam]), intercept=True,
-        )
+            m, ["x"], ["revenue"], alpha=1.0, lambdas=[lam], intercept=True
+        )["revenue"]
         b, a0 = fit.coef_at(lam)
         rows.append((round(lam, 6), round(float(b[0]), 6), round(float(a0), 6)))
     return spark.createDataFrame(
@@ -4842,7 +4797,7 @@ def _tune_oracle_sql(dp: int = 6) -> str:
     (train rows 1..t), the standardized 2-feature problem comes from
     EXPANDING-WINDOW prefix moments (intercept=False ⇒ uncentered
     second-moment scaling, matching
-    elastic_net.standardize_problem); each (α, λ, equation, origin)
+    elastic_net.standardize); each (α, λ, equation, origin)
     cell is solved EXACTLY by enumerating the 3² sign patterns of
     the 2-feature KKT system (same trick as ``_enet_oracle_sql``);
     test rows t+1..t+horizon are scored with their ACTUAL lag
@@ -5232,7 +5187,8 @@ def ml_cv_lambda_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     fits on every (fold, λ) cell, the grouped fold-size-weighted CV
     mean, λ.min first-minimum selection, and the full-sample
     coefficients at λ.min. Engine: ONE distributed per-fold Gram
-    pass (compute_moments fold_col) → driver cv_enet per equation;
+    pass (compute_moments fold_col) → one driver cv_enet over both
+    equations, every path point fit (truncate=False);
     oracle: every stage replayed in SQL with exact 3² KKT
     sign-pattern solves per cell."""
     from pyspark.sql import functions as _F
@@ -5253,8 +5209,8 @@ def ml_cv_lambda_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame = blocked_fold_column(vz.df.filter(cond), "obs_date", 10)
     fm = compute_moments(frame, z_cols + series, fold_col="__fold")
     rows = []
-    for s in series:
-        fit = cv_enet(fm, z_cols, s, alpha=0.5, intercept=True)
+    fits = cv_enet(fm, z_cols, series, 0.5, intercept=True, truncate=False)
+    for s, fit in fits.items():
         b, a0 = fit.coef_at(fit.lambda_min)
         lam6 = round(float(fit.lambda_min), 6)
         rows.append((s, "intercept", round(float(a0), 6), lam6))
