@@ -464,6 +464,37 @@ def test_identical_rebuild_keeps_cache_live(spark):
     spark.catalog.clearCache()
 
 
+def test_refill_with_equal_frame_does_not_persist_again(spark, monkeypatch):
+    """Re-filling a slot with a rebuilt, semantically equal frame
+    reads the cached entry as it is: a second persist only makes
+    Spark log "Asked to cache already cached data"."""
+    from pyspark.sql import DataFrame
+
+    from var_elasticnet_bigdata_spark.plans.cachereg import swap_cache
+
+    spark.catalog.clearCache()
+
+    def build():
+        return spark.range(50).selectExpr("id", "id * 5 AS v")
+
+    first = swap_cache("test.refill_equal", build())
+    first.count()
+    persists = []
+    persist = DataFrame.persist
+
+    def counting_persist(self, *args, **kwargs):
+        persists.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "persist", counting_persist)
+    second = swap_cache("test.refill_equal", build())
+    second.count()
+    assert persists == []
+    assert second.storageLevel.useMemory or second.storageLevel.useDisk
+    assert first.storageLevel.useMemory or first.storageLevel.useDisk
+    spark.catalog.clearCache()
+
+
 def test_cache_registry_is_per_session(spark):
     """Two SparkSessions sharing one driver must not evict each
     other's live staged frame (VERDICT r4 concurrency nit): the

@@ -70,34 +70,14 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     warm = int(os.environ.get("SPARK_GRAFT_PROFILE_WARM", "1"))
 
+    from tools.retime import warmup_session
     from var_elasticnet_bigdata_spark import queries as Q
     from var_elasticnet_bigdata_spark.session import get_spark
 
     spark = get_spark("profile_query", extra_conf={"spark.ui.enabled": "true"})
     spark.sparkContext.setLogLevel("ERROR")
 
-    # bench-equivalent session warmups (copied contract: JVM codegen,
-    # Arrow worker pool, table page cache)
-    Q.flagship_quarterly_revenue_growth(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    spark.createDataFrame([(1,)], "x int").mapInPandas(
-        lambda it: it, "x int"
-    ).write.format("noop").mode("overwrite").save()
-    tiny = spark.createDataFrame([(1, 1.0)], "k int, v double")
-    tiny.groupBy("k").applyInPandas(
-        lambda pdf: pdf, "k int, v double"
-    ).write.format("noop").mode("overwrite").save()
-    from var_elasticnet_bigdata_spark.sources import load_table
-
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
-        load_table(spark, sf_dir, t).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    spark.catalog.clearCache()
+    warmup_session(spark, sf_dir)
 
     for name in names:
         fn = Q.QUERIES[name]

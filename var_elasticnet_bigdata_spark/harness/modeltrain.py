@@ -55,6 +55,7 @@ from pyspark.sql.types import (
 )
 
 from ..plans.cachereg import swap_cache
+from ..sources.tables import local_frame
 
 PRED_IND = (1, 2, 4, 8)  # recorded horizons for h=8 (enetVAR.R:437)
 
@@ -144,7 +145,8 @@ def _forecast_table(
     pred_ind = _pred_ind(h)
 
     if y is None:
-        origins = spark.createDataFrame(
+        origins = local_frame(
+            spark,
             [(int(i), dates[i]) for i in origin_rows],
             schema=f"origin_idx int, origin_date {'date' if not hasattr(dates[0], 'hour') else 'timestamp'}",
         )
@@ -169,8 +171,8 @@ def _forecast_table(
         return joined.groupBy("origin_idx").applyInPandas(run_origin, _FC_SCHEMA)
 
     bcy = spark.sparkContext.broadcast(y)
-    origins = spark.createDataFrame(
-        [(int(i),) for i in origin_rows], schema="origin_idx int"
+    origins = local_frame(
+        spark, [(int(i),) for i in origin_rows], schema="origin_idx int"
     ).repartitionByRange(len(origin_rows), "origin_idx")
 
     def run(batches):
@@ -266,7 +268,7 @@ def _rw_denominators(
     twice against the broadcast truth; out-of-sample cells coalesce
     to the reference's literal 0 padding."""
     cells = _rw_cells(origin_rows, pred_ind, h, rw_mode)
-    cdf = spark.createDataFrame(cells, "horizon int, target_idx int")
+    cdf = local_frame(spark, cells, "horizon int, target_idx int")
     tr = truth.select("target_idx", F.col("y_true").alias("y_tr"))
     yt = truth.select(
         (F.col("target_idx") + 1).alias("target_idx"),
@@ -371,7 +373,8 @@ def modeltrain(
         # NaN → None: a missing target must surface as SQL NULL like
         # the join-mode truth table, not a Double NaN that poisons
         # sum() while still being counted
-        truth = spark.createDataFrame(
+        truth = local_frame(
+            spark,
             [
                 (
                     int(i),
@@ -527,7 +530,7 @@ def ar1_rolling_relational(
     origins = d.filter((F.col("rn") >= ws) & (F.col("rn") <= n - 2)).select(
         F.col("rn").alias("origin_idx"), F.col("y").alias("y_o"), phi.alias("phi")
     )
-    hz = spark.createDataFrame([(int(p),) for p in pred_ind], "horizon int")
+    hz = local_frame(spark, [(int(p),) for p in pred_ind], "horizon int")
     fc = origins.join(F.broadcast(hz)).select(
         "origin_idx",
         "horizon",
@@ -548,7 +551,7 @@ def ar1_rolling_relational(
     # RW denominators over the reference's h*.ind windows: the cell
     # list is O(h·n_origins) driver-built ints, values stay relational
     cells = _rw_cells(origin_rows, pred_ind, h, rw_mode)
-    cdf = spark.createDataFrame(cells, "horizon int, target_idx int")
+    cdf = local_frame(spark, cells, "horizon int, target_idx int")
     tr = truth.select("target_idx", F.col("y_true").alias("y_tr"))
     yt = truth.select(
         (F.col("target_idx") + 1).alias("target_idx"),
@@ -677,7 +680,7 @@ def theils_u_ar1_relational(
         F.col("y").alias("y_o"),
         phi.alias("phi"),
     )
-    hz = spark.createDataFrame([(int(p),) for p in pred_ind], "horizon int")
+    hz = local_frame(spark, [(int(p),) for p in pred_ind], "horizon int")
     fc = origins.join(F.broadcast(hz)).select(
         "origin_idx",
         "horizon",

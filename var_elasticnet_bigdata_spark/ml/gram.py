@@ -167,7 +167,10 @@ def blocked_fold_column(
     ]
     date_type = frame.schema[date_col].dataType
     spark = frame.sparkSession
-    map_df = spark.createDataFrame(
+    from ..sources.tables import local_frame
+
+    map_df = local_frame(
+        spark,
         [(d, i // block) for i, d in enumerate(dates)],
         StructType(
             [

@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 
 from .elastic_net import enet_path
 from .local import moments_from_numpy
+from ..sources.tables import local_frame
 
 DEFAULT_ALPHA_GRID = np.round(np.arange(0.05, 0.951, 0.05), 2)  # 19 values
 DEFAULT_LAMBDA_GRID = 10 ** np.linspace(1, -4, 200)  # enetVAR.R:557
@@ -200,8 +201,8 @@ def rolling_origin_tune(
     # into spark.sql.shuffle.partitions tasks, spinning up a python
     # worker per partition for a handful of cells (measured 12 s of
     # pure worker startup at 32 partitions vs <1 s this way)
-    cells = spark.createDataFrame(
-        cell_rows, schema="cell_id int, eq int, alpha double"
+    cells = local_frame(
+        spark, cell_rows, schema="cell_id int, eq int, alpha double"
     ).repartitionByRange(len(cell_rows), "cell_id")
     out_schema = StructType(
         [
@@ -329,9 +330,7 @@ def _tune_cells_distributed(
             ).alias("tests_arr")
         )
     )
-    grid = spark.createDataFrame(
-        [(float(a),) for a in alpha_grid], "alpha double"
-    )
+    grid = local_frame(spark, [(float(a),) for a in alpha_grid], "alpha double")
     cells = (
         origins.join(tests, "rn")
         .crossJoin(F.broadcast(grid))

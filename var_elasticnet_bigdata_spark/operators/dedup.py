@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..plans.cachereg import swap_cache
 from ..sources.store import BucketedStore
+from ..sources.tables import local_frame
 
 # fixed MinHash permutation coefficients (numpy default_rng(777))
 MINHASH_P = 2147483647  # 2^31 − 1
@@ -1664,7 +1665,7 @@ def connected_components(
                 parent[hi] = lo
         pairs = [(int(x), int(find(x))) for x in parent]
         spark = nodes.sparkSession
-        labels = spark.createDataFrame(pairs or [], "id long, comp long")
+        labels = local_frame(spark, pairs or [], "id long, comp long")
         return F.broadcast(labels)
 
     # ONE probe job for the common case: near-dup edge sets are tiny

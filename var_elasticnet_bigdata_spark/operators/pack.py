@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.cachereg import swap_cache
+from ..sources.tables import local_frame
 
 
 def global_token_offsets(
@@ -69,7 +70,8 @@ def global_token_offsets(
     for pid in sorted(totals):
         prefix[pid] = acc
         acc += totals[pid] or 0
-    pref_df = intra.sparkSession.createDataFrame(
+    pref_df = local_frame(
+        intra.sparkSession,
         [(pid, off) for pid, off in prefix.items()], "__pid int, __pref long"
     )
     return (

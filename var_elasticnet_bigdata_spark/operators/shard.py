@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.cachereg import swap_cache
+from ..sources.tables import local_frame
 
 
 def global_rank(
@@ -66,7 +67,8 @@ def global_rank(
     for pid in sorted(counts):
         prefix[pid] = acc
         acc += counts[pid] or 0
-    pref_df = intra.sparkSession.createDataFrame(
+    pref_df = local_frame(
+        intra.sparkSession,
         [(pid, off) for pid, off in prefix.items()], "__pid int, __pref long"
     )
     return (

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..plans.cachereg import swap_cache
 from ..sources.store import BucketedStore
+from ..sources.tables import local_frame
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -2157,7 +2158,7 @@ def ivfpq_postings_append(
         # succeeded (sink-first ⇒ at-least-once, never loss)
         ledger_exists = store.has("pq_ledger")
         lw = (
-            spark.createDataFrame([(batch_id,)], "batch_id string")
+            local_frame(spark, [(batch_id,)], "batch_id string")
             .write.format("parquet")
             .mode("append" if ledger_exists else "overwrite")
         )
@@ -2211,7 +2212,7 @@ def ivfpq_postings_search(
         "ivfpq_postings_search",
     )
     cells = sorted({int(c) for row in probed for c in row})
-    cells_df = spark.createDataFrame([(c,) for c in cells], "cell int")
+    cells_df = local_frame(spark, [(c,) for c in cells], "cell int")
     # distinct on (cell, id, codes): a crash-window replay (ledger row
     # lost after a committed sink) re-appends bit-identical postings;
     # without this a double-appended neighbor occupies multiple
@@ -2303,7 +2304,7 @@ def ivfpq_postings_refine_search(
         "ivfpq_postings_refine_search",
     )
     cells = sorted({int(c) for row in probed for c in row})
-    cells_df = spark.createDataFrame([(c,) for c in cells], "cell int")
+    cells_df = local_frame(spark, [(c,) for c in cells], "cell int")
     coded = (
         read_bucketed(spark, f"{store_name}__pq")
         .join(F.broadcast(cells_df), "cell")
@@ -2331,7 +2332,7 @@ def ivfpq_postings_refine_search(
     surv_adc = {(int(r["qid"]), int(r[id_col])): float(r["adc"])
                 for r in survivors}
     surv_ids = sorted({int(r[id_col]) for r in survivors})
-    ids_df = spark.createDataFrame([(i,) for i in surv_ids], f"{id_col} long")
+    ids_df = local_frame(spark, [(i,) for i in surv_ids], f"{id_col} long")
     # sidecar fetch: bucket-pruned to probed cells, survivor ids
     # broadcast in; (cell, id) distinct absorbs a crash-window
     # double-appended vector batch
@@ -2374,7 +2375,8 @@ def ivfpq_postings_refine_search(
         ranked = sorted(by_q[qid], key=lambda t: (t[0], t[1]))[:topk]
         for rk, (dx, vid, adc) in enumerate(ranked, start=1):
             out.append((qid, rk, vid, dx, adc))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         f"qid long, rank int, {id_col} long, d_exact double, adc double",
     )
@@ -2693,7 +2695,8 @@ def pca_power_component(
     G = _distributed_gram(df, id_col, vec_col, mean_dp, gram_dp)
     u = _power_component(G, iters, out_dp)
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(p), float(u[p])) for p in range(len(u))],
         "pos int, loading double",
     )
@@ -2810,9 +2813,7 @@ def pca_top_components(
             )
             G = snap_half_away(G - (lam * u)[:, None] * u[None, :], gram_dp)
     spark = df.sparkSession
-    return spark.createDataFrame(
-        rows, "component int, pos int, loading double"
-    )
+    return local_frame(spark, rows, "component int, pos int, loading double")
 
 
 def remove_top_directions(
@@ -3027,7 +3028,7 @@ def ivfpq_recall_top1(
         | {int(r["exact_id"]) for r in pairs}
     )
     spark = df.sparkSession
-    wdf = spark.createDataFrame([(i,) for i in winner_ids], f"{id_col} long")
+    wdf = local_frame(spark, [(i,) for i in winner_ids], f"{id_col} long")
     wrows = guarded_collect(
         normed.join(F.broadcast(wdf), id_col),
         "ivfpq_recall_top1's winner vectors",
@@ -3057,7 +3058,8 @@ def ivfpq_recall_top1(
         )
         for r in sorted(pairs, key=lambda r: r["qid"])
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "qid long, ivfpq_id long, exact_id long, hit int,"
         " d_ivfpq double, d_exact double",

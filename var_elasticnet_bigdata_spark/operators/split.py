@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..plans.cachereg import swap_cache
 from ..sources.store import BucketedStore
+from ..sources.tables import local_frame
 
 
 def split_thresholds(fractions: dict[str, float]) -> list[tuple[str, str]]:
@@ -453,7 +454,8 @@ def mixture_sample(
         raise ValueError(f"weights must be positive: {weights}")
     tot = sum(weights.values())
     norm = {k: w / tot for k, w in weights.items()}
-    wdf = df.sparkSession.createDataFrame(
+    wdf = local_frame(
+        df.sparkSession,
         [(k, w) for k, w in sorted(norm.items())], f"{source_col} string, __wt double"
     )
     size = F.sum(size_col).cast("double") if size_col else F.count(F.lit(1)).cast("double")

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.cachereg import pin_frame, swap_cache
+from ..sources.tables import local_frame
 
 from .dedup import NORM_SQL_DUCK, NORM_SQL_SPARK, shingle_hashes
 
@@ -1732,9 +1733,7 @@ def train_quality_classifier(
             for j in range(d)
         ]
     spark = df.sparkSession
-    return spark.createDataFrame(
-        [(j, w[j]) for j in range(d)], "pos int, weight double"
-    )
+    return local_frame(spark, [(j, w[j]) for j in range(d)], "pos int, weight double")
 
 
 def duck_classifier_train_sql(

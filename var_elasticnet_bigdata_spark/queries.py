@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from .operators.asof import asof_join
 from .plans.cachereg import shared_frame
-from .sources import load_table
+from .sources import load_table, local_frame
 
 
 # --------------------------------------------------------------------------
@@ -3471,8 +3471,8 @@ def ml_enet_var_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, rn in enumerate(m.row_names)
         for j, eq in enumerate(m.series)
     ]
-    return spark.createDataFrame(
-        rows, "z_name string, equation string, coef double"
+    return local_frame(
+        spark, rows, "z_name string, equation string, coef double"
     ).orderBy("equation", "z_name")
 
 
@@ -3498,8 +3498,8 @@ def ml_ridge_var_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, rn in enumerate(m.row_names)
         for j, eq in enumerate(m.series)
     ]
-    return spark.createDataFrame(
-        rows, "z_name string, equation string, coef double"
+    return local_frame(
+        spark, rows, "z_name string, equation string, coef double"
     ).orderBy("equation", "z_name")
 
 
@@ -4270,8 +4270,8 @@ def stat_stationarity_round1(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for s in sorted(res.transforms)
     ]
-    return spark.createDataFrame(
-        rows, "series string, p1 double, transform string, flagged int"
+    return local_frame(
+        spark, rows, "series string, p1 double, transform string, flagged int"
     ).orderBy("series")
 
 
@@ -4298,8 +4298,8 @@ def ml_group_enet_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, zn in enumerate(x_cols)
         for j, yc in enumerate(y_cols)
     ]
-    return spark.createDataFrame(
-        rows, "z_name string, equation string, coef double"
+    return local_frame(
+        spark, rows, "z_name string, equation string, coef double"
     ).orderBy("equation", "z_name")
 
 
@@ -4357,8 +4357,8 @@ def ml_lasso_soft_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         )["revenue"]
         b, a0 = fit.coef_at(lam)
         rows.append((round(lam, 6), round(float(b[0]), 6), round(float(a0), 6)))
-    return spark.createDataFrame(
-        rows, "lam double, coef double, intercept double"
+    return local_frame(
+        spark, rows, "lam double, coef double, intercept double"
     ).orderBy("lam")
 
 
@@ -4402,8 +4402,8 @@ def ml_group_ridge_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, zn in enumerate(z_cols)
         for j, eq in enumerate(series)
     ]
-    return spark.createDataFrame(
-        rows, "z_name string, equation string, coef double"
+    return local_frame(
+        spark, rows, "z_name string, equation string, coef double"
     ).orderBy("equation", "z_name")
 
 
@@ -4536,8 +4536,8 @@ def ml_acf_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("pacf", pacf_var_selection(m, target, lag=4, maxnrvar=3)),
     ):
         rows.extend((method, i, s) for i, s in enumerate(sel))
-    return spark.createDataFrame(
-        rows, "method string, rank int, series string"
+    return local_frame(
+        spark, rows, "method string, rank int, series string"
     ).orderBy("method", "rank")
 
 
@@ -4596,7 +4596,7 @@ def ml_pacf_m17_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     for s in sorted(by):
         p = pacf_from_acf(np.array([by[s][k] for k in (1, 2, 3, 4)]))
         out.extend((s, k + 1, round(float(p[k]), 6)) for k in range(4))
-    return spark.createDataFrame(out, "series_id string, lag int, pacf double")
+    return local_frame(spark, out, "series_id string, lag int, pacf double")
 
 
 @query(
@@ -4649,7 +4649,7 @@ def ml_acf_m15_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = m.select(F.min("series_id")).collect()[0][0]
     sel = acf_var_selection(m, target, lag=4, maxnrvar=3)
     rows = [(i, s) for i, s in enumerate(sel)]
-    return spark.createDataFrame(rows, "rank int, series string").orderBy("rank")
+    return local_frame(spark, rows, "rank int, series string").orderBy("rank")
 
 
 @query("ml_tune_ridge", None)  # oracle generated below
@@ -4679,8 +4679,8 @@ def ml_tune_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         (str(eq), round(float(lam), 6), round(float(rm), 6))
         for eq, lam, rm in best[["equation", "lambda", "rmse"]].to_numpy()
     ]
-    return spark.createDataFrame(
-        rows, "equation string, lambda double, rmse double"
+    return local_frame(
+        spark, rows, "equation string, lambda double, rmse double"
     ).orderBy("equation")
 
 
@@ -4786,8 +4786,8 @@ def ml_tune_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["equation", "alpha", "lambda", "rmse"]
         ].to_numpy()
     ]
-    return spark.createDataFrame(
-        rows, "equation string, alpha double, lambda double, rmse double"
+    return local_frame(
+        spark, rows, "equation string, alpha double, lambda double, rmse double"
     ).orderBy("equation")
 
 
@@ -4942,8 +4942,8 @@ def ml_ezlasso_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(0, "click", 0.0, round(best_lam, 6))]
     for i, s in enumerate(sel[1:], start=1):
         rows.append((i, s, round(coefs[s], 6), round(best_lam, 6)))
-    return spark.createDataFrame(
-        rows, "rank int, series string, coef double, best_lambda double"
+    return local_frame(
+        spark, rows, "rank int, series string, coef double, best_lambda double"
     )
 
 
@@ -5056,8 +5056,8 @@ def ml_ezlasso_enet(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(0, "click", 0.0, round(best_lam, 6))]
     for i, s in enumerate(sel[1:], start=1):
         rows.append((i, s, round(coefs[s], 6), round(best_lam, 6)))
-    return spark.createDataFrame(
-        rows, "rank int, series string, coef double, best_lambda double"
+    return local_frame(
+        spark, rows, "rank int, series string, coef double, best_lambda double"
     ).orderBy("rank")
 
 
@@ -5218,8 +5218,8 @@ def ml_cv_lambda_min(spark: SparkSession, sf_dir: str) -> DataFrame:
             (s, zn, round(float(b[i]), 6), lam6)
             for i, zn in enumerate(z_cols)
         )
-    return spark.createDataFrame(
-        rows, "equation string, z_name string, coef double, lambda_min double"
+    return local_frame(
+        spark, rows, "equation string, z_name string, coef double, lambda_min double"
     ).orderBy("equation", "z_name")
 
 
@@ -5410,7 +5410,7 @@ def ml_sigma_ic(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("sigma_rq", round(float(S[0, 1]), 6)),
         ("sigma_rr", round(float(S[0, 0]), 6)),
     ]
-    return spark.createDataFrame(rows, "metric string, value double").orderBy(
+    return local_frame(spark, rows, "metric string, value double").orderBy(
         "metric"
     )
 
@@ -5561,8 +5561,8 @@ def ml_recursive_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         for h in range(4)
         for j, s in enumerate(m.series)
     ]
-    return spark.createDataFrame(
-        rows, "h int, series string, forecast double"
+    return local_frame(
+        spark, rows, "h int, series string, forecast double"
     ).orderBy("h", "series")
 
 
@@ -5668,8 +5668,8 @@ def ml_preselect(spark: SparkSession, sf_dir: str) -> DataFrame:
         (cand, round(float(scores[cand]), 6), 1 if sel[1] == cand else 0)
         for cand in ("purchase", "view")
     ]
-    return spark.createDataFrame(
-        rows, "series string, sc double, chosen int"
+    return local_frame(
+        spark, rows, "series string, sc double, chosen int"
     ).orderBy("series")
 
 
@@ -5838,8 +5838,8 @@ def ml_lag_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 round(float(out["IC_value"][1][nm]), dp),
             )
         )
-    return spark.createDataFrame(
-        rows, "criterion string, best_p int, ic_p1 double, ic_p2 double"
+    return local_frame(
+        spark, rows, "criterion string, best_p int, ic_p1 double, ic_p2 double"
     ).orderBy("criterion")
 
 
@@ -6023,8 +6023,8 @@ def ml_pacf_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j in range(3)
     ]
     rows += [("sel", i, s, 0.0) for i, s in enumerate(sel)]
-    return spark.createDataFrame(
-        rows, "kind string, k int, series string, value double"
+    return local_frame(
+        spark, rows, "kind string, k int, series string, value double"
     ).orderBy("kind", "k", "series")
 
 
@@ -6372,7 +6372,7 @@ def stat_cw_dm(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("dm_stat", round(float(dm["DMStat"]), 6)),
         ("dm_p", round(float(dm["p_value"]), 6)),
     ]
-    return spark.createDataFrame(rows, "metric string, value double").orderBy(
+    return local_frame(spark, rows, "metric string, value double").orderBy(
         "metric"
     )
 
@@ -6779,8 +6779,8 @@ def stat_hosking(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (name, int(r["lag"]), round(float(r["statistic"]), 6),
                  int(r["df"]), round(float(r["p_value"]), 6))
             )
-    return spark.createDataFrame(
-        rows, "test string, lag int, statistic double, df int, p_value double"
+    return local_frame(
+        spark, rows, "test string, lag int, statistic double, df int, p_value double"
     ).orderBy("test", "lag")
 
 
@@ -9144,7 +9144,8 @@ def text_bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     merges, _ = bpe_train(d, rounds=3, min_pair_count=1, keep_vocab=False)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, a, b, c) for i, (a, b, c) in enumerate(merges)],
         "merge_round int, a string, b string, c long",
     )

@@ -13,8 +13,10 @@ pruning rather than row filters; the API here is unchanged.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..plans.spread import spread_to_cores
 
@@ -69,6 +71,43 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in FLOOR_KEYS:
         df = spread_to_cores(df, FLOOR_KEYS[name])
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: str | StructType
+) -> DataFrame:
+    """A frame over driver-built ``rows``, planned as a ``LocalRelation``.
+
+    ``spark.createDataFrame(rows, schema)`` plans a ``LogicalRDD`` over
+    ``sc.parallelize`` plus a Python identity map, so EVERY execution
+    of the frame starts one Python task per default-parallelism slice
+    (twice under a trailing ``orderBy``: range-bound sampling, then
+    the shuffle map stage). Here each row is verified and converted
+    with the schema's own ``toInternal`` — exactly what
+    ``createDataFrame`` does, so dates are day numbers, timestamps
+    epoch microseconds and every value is the one it would store —
+    then handed over as a ``pyarrow.Table`` typed to the schema. Spark
+    turns that into a ``LocalRelation`` with real size statistics
+    (below ``spark.sql.execution.arrow.localRelationThreshold``), so
+    executing the frame runs no Python worker. ``schema`` is a DDL
+    string or a ``StructType``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier, _parse_datatype_string
+
+    struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    verify = _make_type_verifier(struct)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(struct.toInternal(row))
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*internal)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
