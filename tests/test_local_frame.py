@@ -74,6 +74,17 @@ def _mismatches(spark) -> list[str]:
                 leaves = _leaf_names(frame)
                 if leaves != ["LocalRelation"]:
                     bad.append(f"{tag}: optimized plan leaves {leaves}")
+        # driver-side order_by sorts as Spark's ASC does (NULL first,
+        # NaN last) and leaves no Sort in the plan
+        for keys in (("s",), ("i",), ("d",), ("dt", "l"), ("ts",)):
+            tag = f"{label}/order_by={keys}"
+            got = local_frame(spark, ROWS, schema, order_by=keys)
+            want = local_frame(spark, ROWS, schema).orderBy(*keys)
+            if _exact(got.collect()) != _exact(want.collect()):
+                bad.append(f"{tag}: order differs from orderBy")
+            root = got._jdf.queryExecution().optimizedPlan().nodeName()
+            if root != "LocalRelation":
+                bad.append(f"{tag}: optimized plan root {root}")
     return bad
 
 

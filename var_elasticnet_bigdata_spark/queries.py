@@ -3472,8 +3472,9 @@ def ml_enet_var_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j, eq in enumerate(m.series)
     ]
     return local_frame(
-        spark, rows, "z_name string, equation string, coef double"
-    ).orderBy("equation", "z_name")
+        spark, rows, "z_name string, equation string, coef double",
+        order_by=("equation", "z_name"),
+    )
 
 
 @query("ml_ridge_var_coefs", None)  # oracle generated below
@@ -3499,8 +3500,9 @@ def ml_ridge_var_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j, eq in enumerate(m.series)
     ]
     return local_frame(
-        spark, rows, "z_name string, equation string, coef double"
-    ).orderBy("equation", "z_name")
+        spark, rows, "z_name string, equation string, coef double",
+        order_by=("equation", "z_name"),
+    )
 
 
 def _det_sql(m: list[list[str]]) -> str:
@@ -4271,8 +4273,9 @@ def stat_stationarity_round1(spark: SparkSession, sf_dir: str) -> DataFrame:
         for s in sorted(res.transforms)
     ]
     return local_frame(
-        spark, rows, "series string, p1 double, transform string, flagged int"
-    ).orderBy("series")
+        spark, rows, "series string, p1 double, transform string, flagged int",
+        order_by=("series",),
+    )
 
 
 @query("ml_group_enet_coefs", None)  # oracle generated below
@@ -4299,8 +4302,9 @@ def ml_group_enet_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j, yc in enumerate(y_cols)
     ]
     return local_frame(
-        spark, rows, "z_name string, equation string, coef double"
-    ).orderBy("equation", "z_name")
+        spark, rows, "z_name string, equation string, coef double",
+        order_by=("equation", "z_name"),
+    )
 
 
 @query(
@@ -4358,8 +4362,8 @@ def ml_lasso_soft_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         b, a0 = fit.coef_at(lam)
         rows.append((round(lam, 6), round(float(b[0]), 6), round(float(a0), 6)))
     return local_frame(
-        spark, rows, "lam double, coef double, intercept double"
-    ).orderBy("lam")
+        spark, rows, "lam double, coef double, intercept double", order_by=("lam",)
+    )
 
 
 @query("ml_group_ridge_coefs", None)  # oracle registered near _QPAIR_SQL
@@ -4403,8 +4407,9 @@ def ml_group_ridge_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j, eq in enumerate(series)
     ]
     return local_frame(
-        spark, rows, "z_name string, equation string, coef double"
-    ).orderBy("equation", "z_name")
+        spark, rows, "z_name string, equation string, coef double",
+        order_by=("equation", "z_name"),
+    )
 
 
 @query(
@@ -4537,8 +4542,9 @@ def ml_acf_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         rows.extend((method, i, s) for i, s in enumerate(sel))
     return local_frame(
-        spark, rows, "method string, rank int, series string"
-    ).orderBy("method", "rank")
+        spark, rows, "method string, rank int, series string",
+        order_by=("method", "rank"),
+    )
 
 
 @query(
@@ -4649,7 +4655,7 @@ def ml_acf_m15_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = m.select(F.min("series_id")).collect()[0][0]
     sel = acf_var_selection(m, target, lag=4, maxnrvar=3)
     rows = [(i, s) for i, s in enumerate(sel)]
-    return local_frame(spark, rows, "rank int, series string").orderBy("rank")
+    return local_frame(spark, rows, "rank int, series string", order_by=("rank",))
 
 
 @query("ml_tune_ridge", None)  # oracle generated below
@@ -4680,8 +4686,9 @@ def ml_tune_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         for eq, lam, rm in best[["equation", "lambda", "rmse"]].to_numpy()
     ]
     return local_frame(
-        spark, rows, "equation string, lambda double, rmse double"
-    ).orderBy("equation")
+        spark, rows, "equation string, lambda double, rmse double",
+        order_by=("equation",),
+    )
 
 
 _TUNE_LAMBDA_GRID = tuple(10 ** __import__("numpy").linspace(0, -3, 10))
@@ -4787,8 +4794,9 @@ def ml_tune_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         ].to_numpy()
     ]
     return local_frame(
-        spark, rows, "equation string, alpha double, lambda double, rmse double"
-    ).orderBy("equation")
+        spark, rows, "equation string, alpha double, lambda double, rmse double",
+        order_by=("equation",),
+    )
 
 
 def _tune_oracle_sql(dp: int = 6) -> str:
@@ -5057,8 +5065,9 @@ def ml_ezlasso_enet(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, s in enumerate(sel[1:], start=1):
         rows.append((i, s, round(coefs[s], 6), round(best_lam, 6)))
     return local_frame(
-        spark, rows, "rank int, series string, coef double, best_lambda double"
-    ).orderBy("rank")
+        spark, rows, "rank int, series string, coef double, best_lambda double",
+        order_by=("rank",),
+    )
 
 
 def _register_ezlasso_enet_oracle(alpha: float = 0.5) -> None:
@@ -5219,8 +5228,9 @@ def ml_cv_lambda_min(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, zn in enumerate(z_cols)
         )
     return local_frame(
-        spark, rows, "equation string, z_name string, coef double, lambda_min double"
-    ).orderBy("equation", "z_name")
+        spark, rows, "equation string, z_name string, coef double, lambda_min double",
+        order_by=("equation", "z_name"),
+    )
 
 
 def _cv_lambda_min_oracle_sql(
@@ -5410,9 +5420,7 @@ def ml_sigma_ic(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("sigma_rq", round(float(S[0, 1]), 6)),
         ("sigma_rr", round(float(S[0, 0]), 6)),
     ]
-    return local_frame(spark, rows, "metric string, value double").orderBy(
-        "metric"
-    )
+    return local_frame(spark, rows, "metric string, value double", order_by=("metric",))
 
 
 def _sigma_ic_oracle_sql(lam: float = 0.05, dp: int = 6) -> str:
@@ -5562,8 +5570,8 @@ def ml_recursive_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j, s in enumerate(m.series)
     ]
     return local_frame(
-        spark, rows, "h int, series string, forecast double"
-    ).orderBy("h", "series")
+        spark, rows, "h int, series string, forecast double", order_by=("h", "series")
+    )
 
 
 def _recursive_forecast_oracle_sql(lam: float = 0.05, dp: int = 6) -> str:
@@ -5669,8 +5677,8 @@ def ml_preselect(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cand in ("purchase", "view")
     ]
     return local_frame(
-        spark, rows, "series string, sc double, chosen int"
-    ).orderBy("series")
+        spark, rows, "series string, sc double, chosen int", order_by=("series",)
+    )
 
 
 def _preselect_oracle_sql(
@@ -5839,8 +5847,9 @@ def ml_lag_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     return local_frame(
-        spark, rows, "criterion string, best_p int, ic_p1 double, ic_p2 double"
-    ).orderBy("criterion")
+        spark, rows, "criterion string, best_p int, ic_p1 double, ic_p2 double",
+        order_by=("criterion",),
+    )
 
 
 def _lag_select_oracle_sql(lam: float = 0.05, dp: int = 6) -> str:
@@ -6024,8 +6033,9 @@ def ml_pacf_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     rows += [("sel", i, s, 0.0) for i, s in enumerate(sel)]
     return local_frame(
-        spark, rows, "kind string, k int, series string, value double"
-    ).orderBy("kind", "k", "series")
+        spark, rows, "kind string, k int, series string, value double",
+        order_by=("kind", "k", "series"),
+    )
 
 
 def _pacf_blocked_oracle_sql(lag_max: int = 5, dp: int = 6) -> str:
@@ -6372,9 +6382,7 @@ def stat_cw_dm(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("dm_stat", round(float(dm["DMStat"]), 6)),
         ("dm_p", round(float(dm["p_value"]), 6)),
     ]
-    return local_frame(spark, rows, "metric string, value double").orderBy(
-        "metric"
-    )
+    return local_frame(spark, rows, "metric string, value double", order_by=("metric",))
 
 
 @query("ann_ivf_top1", None)  # pinned oracle registered below
@@ -6780,8 +6788,9 @@ def stat_hosking(spark: SparkSession, sf_dir: str) -> DataFrame:
                  int(r["df"]), round(float(r["p_value"]), 6))
             )
     return local_frame(
-        spark, rows, "test string, lag int, statistic double, df int, p_value double"
-    ).orderBy("test", "lag")
+        spark, rows, "test string, lag int, statistic double, df int, p_value double",
+        order_by=("test", "lag"),
+    )
 
 
 @query("text_chunking", None)  # oracle registered below

@@ -49,6 +49,12 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # workers import pyspark from $SPARK_HOME/python, not the zip
+        # whose directory every task re-reads (see worker_daemon.py)
+        .config(
+            "spark.python.daemon.module",
+            "var_elasticnet_bigdata_spark.worker_daemon",
+        )
         # events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
         # reader rejects; read as long and convert in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -13,7 +13,7 @@ pruning rather than row filters; the API here is unchanged.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -73,8 +73,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _asc(v) -> tuple:
+    """Sort key of one internal value under Spark's ``ASC``: NULL first,
+    NaN after every other double."""
+    if v is None:
+        return (0,)
+    if v != v:
+        return (2,)
+    return (1, v)
+
+
 def local_frame(
-    spark: SparkSession, rows: Iterable, schema: str | StructType
+    spark: SparkSession,
+    rows: Iterable,
+    schema: str | StructType,
+    order_by: Sequence[str] = (),
 ) -> DataFrame:
     """A frame over driver-built ``rows``, planned as a ``LocalRelation``.
 
@@ -90,7 +103,11 @@ def local_frame(
     turns that into a ``LocalRelation`` with real size statistics
     (below ``spark.sql.execution.arrow.localRelationThreshold``), so
     executing the frame runs no Python worker. ``schema`` is a DDL
-    string or a ``StructType``."""
+    string or a ``StructType``.
+
+    ``order_by`` names columns to sort the rows by on the driver,
+    ascending as ``orderBy`` would: a trailing ``orderBy`` on the frame
+    costs two Spark jobs per execution instead."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _make_type_verifier, _parse_datatype_string
@@ -101,6 +118,9 @@ def local_frame(
     for row in rows:
         verify(row)
         internal.append(struct.toInternal(row))
+    if order_by:
+        keys = [struct.names.index(c) for c in order_by]
+        internal.sort(key=lambda r: [_asc(r[i]) for i in keys])
     arrow_schema = to_arrow_schema(struct)
     columns = list(zip(*internal)) or [()] * len(arrow_schema)
     table = pa.Table.from_arrays(
