@@ -58,7 +58,7 @@ def test_group_ridge_closed_form():
     X, Y, _ = make_problem(seed=1, group_sparse=False)
     m, names = _moments(X, Y)
     xc, yc = names[:6], names[6:]
-    xtx_n, xty_n, *_ = _standardize_group(m, xc, yc, False, True, False)
+    xtx_n, xty_n, *_ = _standardize_group(m, xc, yc, False, False)
     lam = 0.3
     B = _block_cd(xtx_n, xty_n, alpha=0.0, lam=lam, tol=1e-14)
     want = np.linalg.solve(xtx_n + lam * np.eye(6), xty_n)
@@ -69,7 +69,7 @@ def test_group_kkt_conditions():
     X, Y, _ = make_problem(seed=2)
     m, names = _moments(X, Y)
     xc, yc = names[:6], names[6:]
-    xtx_n, xty_n, *_ = _standardize_group(m, xc, yc, False, True, True)
+    xtx_n, xty_n, *_ = _standardize_group(m, xc, yc, False, True)
     alpha, lam = 0.6, 0.15
     B = _block_cd(xtx_n, xty_n, alpha, lam, tol=1e-14)
     R = xty_n - xtx_n @ B
@@ -128,22 +128,26 @@ def test_local_group_var_recursive_predict():
 def test_spark_group_fit_matches_local(spark):
     import datetime as dt
 
-    import pandas as pd
-
     rng = np.random.default_rng(6)
     T = 120
     y = np.cumsum(rng.normal(size=(T, 2)), axis=0) * 0.05
-    pdf = pd.DataFrame(y, columns=["a", "b"])
-    pdf.insert(
-        0, "obs_date", [dt.date(2000, 1, 1) + dt.timedelta(days=i) for i in range(T)]
-    )
-    wide = spark.createDataFrame(pdf)
-    dist = fit_group_enet_var(wide, ["a", "b"], p=1, alpha=0.4)
-    local = LocalGroupEnetVAR(y, ["a", "b"], p=1, alpha=0.4)
-    assert dist.lambda_min == pytest.approx(local.fit.lambda_min, rel=1e-9)
-    Bd, _ = dist.coef_at(dist.lambda_min)
-    Bl, _ = local.fit.coef_at(local.fit.lambda_min)
-    assert Bd == pytest.approx(Bl, abs=1e-8)
+    ragged = y.copy()
+    ragged[:3, 1] = np.nan  # series b starts late: NULL in Spark, NaN in numpy
+    dates = [dt.date(2000, 1, 1) + dt.timedelta(days=i) for i in range(T)]
+    for mat in (y, ragged):
+        wide = spark.createDataFrame(
+            [
+                (d, *(None if np.isnan(v) else float(v) for v in row))
+                for d, row in zip(dates, mat)
+            ],
+            "obs_date date, a double, b double",
+        )
+        dist = fit_group_enet_var(wide, ["a", "b"], p=1, alpha=0.4)
+        local = LocalGroupEnetVAR(mat, ["a", "b"], p=1, alpha=0.4)
+        assert dist.lambda_min == pytest.approx(local.fit.lambda_min, rel=1e-9)
+        Bd, _ = dist.coef_at(dist.lambda_min)
+        Bl, _ = local.fit.coef_at(local.fit.lambda_min)
+        assert Bd == pytest.approx(Bl, abs=1e-8)
 
 
 def test_block_cd_fixed_converges_to_block_cd():

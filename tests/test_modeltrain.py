@@ -18,7 +18,8 @@ from var_elasticnet_bigdata_spark.harness.modeltrain import (
     modeltrain,
     theils_u_ar1,
 )
-from var_elasticnet_bigdata_spark.ml.local import LocalAR1, LocalEnetVAR
+from var_elasticnet_bigdata_spark.ml.local import LocalAR1
+from var_elasticnet_bigdata_spark.ml.var_model import fit_enet_var_local
 
 
 def make_wide(spark, y, names):
@@ -95,7 +96,7 @@ def test_enet_harness_matches_numpy_replication(spark):
     origins = list(range(ws, n - 1))
     err = np.zeros((4, len(origins)))
     for c, o in enumerate(origins):
-        m = LocalEnetVAR(y[: o + 1], ["a", "b"], p=1, alpha=0.4, lam=0.05)
+        m = fit_enet_var_local(y[: o + 1], ["a", "b"], p=1, alpha=0.4, lam=0.05)
         preds = m.predict(h)[:, 0]
         for r, p in enumerate([1, 2, 4, 8]):
             ti = o + p

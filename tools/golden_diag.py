@@ -54,10 +54,10 @@ def one_origin(args):
     at PRED_IND}, GDP-eq λ used)."""
     i, Y, lag, alpha, const = args[:5]
     rule = args[5] if len(args) > 5 else "min"
-    from var_elasticnet_bigdata_spark.ml.local import LocalEnetVAR
+    from var_elasticnet_bigdata_spark.ml.var_model import fit_enet_var_local
 
-    m = LocalEnetVAR(Y[: i + 1], [f"s{j}" for j in range(Y.shape[1])],
-                     p=lag, alpha=alpha, intercept=const, lambda_rule=rule)
+    m = fit_enet_var_local(Y[: i + 1], [f"s{j}" for j in range(Y.shape[1])],
+                           p=lag, alpha=alpha, intercept=const, lambda_rule=rule)
     base = dict(m.lambda_used)
     out = {}
     for c in SCALES:

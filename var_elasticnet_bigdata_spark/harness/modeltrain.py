@@ -312,8 +312,10 @@ def modeltrain(
     with_residuals: bool = False,
     distribute: str = "broadcast",
 ) -> ModeltrainResult:
-    """The OOS experiment (E1). ``method``: 'enet' (LocalEnetVAR) or
-    'ar1'. ``rw_mode``: 'fixed' | 'faithful' (quirk Q3).
+    """The OOS experiment (E1). ``method``: 'enet'
+    (``ml.var_model.fit_enet_var_local``), 'genet'
+    (``ml.group_enet.LocalGroupEnetVAR``) or 'ar1' (``ml.local.LocalAR1``).
+    ``rw_mode``: 'fixed' | 'faithful' (quirk Q3).
     ``step`` > 1 is an engine extension (the reference always steps
     by one origin): the MSFE numerator runs over the aligned target
     window while the RW/Theil denominators keep the reference's
@@ -323,7 +325,8 @@ def modeltrain(
     ``distribute``: 'broadcast' (origin fan-out over a broadcast
     matrix, one task per origin) | 'join' (range-join path for
     estimation frames too large to broadcast)."""
-    from ..ml.local import LocalAR1, LocalEnetVAR
+    from ..ml.local import LocalAR1
+    from ..ml.var_model import fit_enet_var_local
 
     dates = _dates(wide_df, date_col)
     # only the broadcast fan-out materializes the estimation matrix on
@@ -346,7 +349,7 @@ def modeltrain(
 
     if method == "enet":
         def fit_predict(mat: np.ndarray) -> np.ndarray:
-            m = LocalEnetVAR(mat, ser, p=p_, alpha=a_, lam=l_, intercept=c_)
+            m = fit_enet_var_local(mat, ser, p=p_, alpha=a_, lam=l_, intercept=c_)
             return m.predict(h)
     elif method == "genet":
         from ..ml.group_enet import LocalGroupEnetVAR

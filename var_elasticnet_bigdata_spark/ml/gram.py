@@ -24,6 +24,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..operators.lag_embed import VarZ, var_z
+
 
 @dataclass
 class Moments:
@@ -180,6 +182,27 @@ def blocked_fold_column(
         ),
     )
     return frame.join(F.broadcast(map_df), on=date_col, how="inner")
+
+
+def var_moments(
+    wide_df: DataFrame,
+    series: list[str],
+    p: int,
+    date_col: str = "obs_date",
+    cv_block: int | None = None,
+) -> tuple[VarZ, Moments | dict[int, Moments]]:
+    """The VAR design chain every Spark fit runs: select the series,
+    lag-embed at order p (``VAR.Z``), ``na.omit`` (``VarZ.complete``),
+    blocked CV folds when ``cv_block`` is given, then ONE
+    ``compute_moments`` pass over the lag columns and the responses
+    (response columns keep the series names). Returns the embedding
+    and the moments — per fold when ``cv_block`` is given."""
+    vz = var_z(wide_df.select(date_col, *series), series, p, date_col=date_col)
+    cols = [*vz.z_names, *series]
+    if cv_block is None:
+        return vz, compute_moments(vz.complete, cols)
+    frame = blocked_fold_column(vz.complete, date_col, cv_block)
+    return vz, compute_moments(frame, cols, fold_col="__fold")
 
 
 def moments_total(per_fold: dict[int, Moments]) -> Moments:

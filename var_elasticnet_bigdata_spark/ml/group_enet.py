@@ -31,7 +31,9 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from .gram import Moments, moments_total
+from .elastic_net import blocked_fold_ids, standardize
+from .gram import Moments, moments_total, var_moments
+from .local import fold_moments_from_numpy, recursive_forecast, var_design
 
 
 @dataclass
@@ -60,30 +62,20 @@ class GroupEnetFit:
         return B, a0
 
 
-def _standardize_group(moments: Moments, x_cols, y_cols, intercept, standardize,
+def _standardize_group(moments: Moments, x_cols, y_cols, intercept,
                        standardize_response):
-    n = moments.n
-    k, K = len(x_cols), len(y_cols)
-    sx = moments.sums(x_cols)
-    sy = moments.sums(y_cols)
-    Sxx = moments.cross(x_cols, x_cols)
-    Sxy = moments.cross(x_cols, y_cols)
-    Syy = moments.cross(y_cols, y_cols)
-    if intercept:
-        mx, my = sx / n, sy / n
-    else:
-        mx, my = np.zeros(k), np.zeros(K)
-    var_x = Sxx.diagonal() / n - mx**2
-    xscale = np.sqrt(np.maximum(var_x, 0.0)) if standardize else np.ones(k)
-    xscale = np.where(xscale <= 0, 1.0, xscale)
-    var_y = Syy.diagonal() / n - my**2
+    """``elastic_net.standardize`` plus glmnet's
+    ``standardize.response``: each response scaled to unit variance
+    (denominator n) in x̃'ỹ/n."""
+    xtx_n, xty_n, mx, xscale, my, yty_n = standardize(
+        moments, x_cols, y_cols, intercept
+    )
     yscale = (
-        np.sqrt(np.maximum(var_y, 0.0)) if standardize_response else np.ones(K)
+        np.sqrt(np.maximum(yty_n, 0.0)) if standardize_response
+        else np.ones(len(y_cols))
     )
     yscale = np.where(yscale <= 0, 1.0, yscale)
-    xtx_n = (Sxx / n - np.outer(mx, mx)) / np.outer(xscale, xscale)
-    xty_n = (Sxy / n - np.outer(mx, my)) / np.outer(xscale, yscale)
-    return xtx_n, xty_n, mx, my, xscale, yscale
+    return xtx_n, xty_n / yscale[None, :], mx, my, xscale, yscale
 
 
 def group_lambda_path(xty_n: np.ndarray, alpha: float, nlambda: int,
@@ -154,20 +146,17 @@ def group_enet_path(
     alpha: float = 0.4,
     lambdas: np.ndarray | None = None,
     intercept: bool = False,
-    standardize: bool = True,
     standardize_response: bool = True,
     nlambda: int = 100,
-    lambda_min_ratio: float | None = None,
     tol: float = 1e-7,
 ) -> GroupEnetFit:
     xtx_n, xty_n, mx, my, xscale, yscale = _standardize_group(
-        moments, x_cols, y_cols, intercept, standardize, standardize_response
+        moments, x_cols, y_cols, intercept, standardize_response
     )
     k, K = xty_n.shape
-    if lambda_min_ratio is None:
-        lambda_min_ratio = 1e-2 if moments.n < k else 1e-4
     if lambdas is None:
-        lambdas = group_lambda_path(xty_n, alpha, nlambda, lambda_min_ratio)
+        ratio = 1e-2 if moments.n < k else 1e-4
+        lambdas = group_lambda_path(xty_n, alpha, nlambda, ratio)
     lambdas = np.asarray(sorted(lambdas, reverse=True), dtype=float)
     coefs = np.zeros((k, K, len(lambdas)))
     intercepts = np.zeros((K, len(lambdas)))
@@ -253,24 +242,16 @@ class LocalGroupEnetVAR:
         intercept: bool = False,
         cv_block: int = 10,
     ) -> None:
-        from .local import fold_moments_from_numpy
-
-        T, K = y.shape
         self.series = list(series)
         self.p = p
         self.intercept = intercept
         self.y = y
-        Z = np.column_stack([y[p - i : T - i] for i in range(1, p + 1)])
-        Yp = y[p:]
-        self.z_names = [f"{s}.l{i}" for i in range(1, p + 1) for s in series]
-        y_names = [f"__y_{s}" for s in series]
-        data = np.column_stack([Z, Yp])
-        keep = ~np.isnan(data).any(axis=1)
-        data = data[keep]
-        foldid = np.arange(len(data)) // cv_block
-        fm = fold_moments_from_numpy(data, self.z_names + y_names, foldid)
+        data, self.z_names = var_design(y, series, p)
+        fm = fold_moments_from_numpy(
+            data, self.z_names + self.series, blocked_fold_ids(len(data), cv_block)
+        )
         self.fit = cv_group_enet(
-            fm, self.z_names, y_names, alpha=alpha, intercept=intercept
+            fm, self.z_names, self.series, alpha=alpha, intercept=intercept
         )
 
     def coef_matrix(self) -> np.ndarray:
@@ -280,17 +261,10 @@ class LocalGroupEnetVAR:
         return B
 
     def predict(self, n_ahead: int = 1) -> np.ndarray:
-        B = self.coef_matrix()
         hist = self.y[~np.isnan(self.y).any(axis=1)]
-        out = np.empty((n_ahead, len(self.series)))
-        for i in range(n_ahead):
-            z = hist[::-1][: self.p].ravel()
-            if self.intercept:
-                z = np.concatenate([[1.0], z])
-            yhat = z @ B
-            out[i] = yhat
-            hist = np.vstack([hist, yhat])
-        return out
+        return recursive_forecast(
+            self.coef_matrix(), hist, self.p, self.intercept, n_ahead
+        )
 
 
 def fit_group_enet_var(
@@ -304,20 +278,8 @@ def fit_group_enet_var(
 ):
     """Spark entry: distributed per-fold Gram pass → driver-side
     group coordinate descent (same shape as fit_enet_var)."""
-    from pyspark.sql import functions as F
-
-    from ..operators.lag_embed import lag_col_name, var_z
-    from .gram import blocked_fold_column, compute_moments
-
-    vz = var_z(wide_df.select(date_col, *series), series, p, date_col=date_col)
-    z_cols = [lag_col_name(s, i) for i in range(1, p + 1) for s in series]
-    cond = None
-    for c in [*z_cols, *series]:
-        pred = F.col(f"`{c}`").isNotNull()
-        cond = pred if cond is None else (cond & pred)
-    frame = blocked_fold_column(vz.df.filter(cond), date_col, cv_block)
-    fm = compute_moments(frame, z_cols + series, fold_col="__fold")
-    return cv_group_enet(fm, z_cols, series, alpha=alpha, intercept=intercept)
+    vz, fm = var_moments(wide_df, series, p, date_col, cv_block)
+    return cv_group_enet(fm, vz.z_names, series, alpha=alpha, intercept=intercept)
 
 
 def block_cd_fixed(
@@ -369,20 +331,10 @@ def fit_group_enet_var_fixed(
     B_orig, a0)`` on the original data scale. The CV λ.min flavor
     stays pinned in tests/test_group_enet.py (reference
     enetVAR.R:344-366)."""
-    from pyspark.sql import functions as F
-
-    from ..operators.lag_embed import lag_col_name, var_z
-    from .gram import compute_moments
-
-    vz = var_z(wide_df.select(date_col, *series), series, p, date_col=date_col)
-    z_cols = [lag_col_name(s, i) for i in range(1, p + 1) for s in series]
-    cond = None
-    for c in [*z_cols, *series]:
-        pred = F.col(f"`{c}`").isNotNull()
-        cond = pred if cond is None else (cond & pred)
-    fm = compute_moments(vz.df.filter(cond), z_cols + series)
+    vz, fm = var_moments(wide_df, series, p, date_col)
+    z_cols = vz.z_names
     xtx_n, xty_n, mx, my, xscale, yscale = _standardize_group(
-        fm, z_cols, series, intercept, True, True
+        fm, z_cols, series, intercept, True
     )
     B = block_cd_fixed(xtx_n, xty_n, alpha, lam, sweeps)
     Borig = B * yscale[None, :] / xscale[:, None]

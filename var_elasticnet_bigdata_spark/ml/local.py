@@ -1,20 +1,43 @@
-"""Driver/executor-local estimation on numpy arrays.
+"""The numpy twin of the Spark VAR design chain, for fits inside
+``applyInPandas`` workers (the rolling-origin harness) and on the
+driver: each origin's training slice is small (the estimation frontier
+is ~hundreds of rows × K series even when the raw data is 100 TB —
+it's post-aggregation), so the fit runs locally.
 
-These are the in-worker counterparts of ``fit_enet_var`` used inside
-``applyInPandas`` workers by the rolling-origin harness: each origin's
-training slice is small (the estimation frontier is ~hundreds of rows
-× K series even when the raw data is 100 TB — it's post-aggregation),
-so the fit runs locally with the SAME elastic-net path solver the
-distributed Gram path uses. One code path, two data sources (SURVEY
-§3.2 Plan B).
+- ``var_design``: lag embedding + ``na.omit`` on a (T, K) matrix, the
+  twin of ``gram.var_moments``' embed → ``VarZ.complete`` steps;
+- ``moments_from_numpy`` / ``fold_moments_from_numpy``: the twin of
+  ``compute_moments``;
+- ``recursive_forecast``: the one h-step VAR forecast loop.
+
+The elastic-net VAR fit on a matrix is
+``ml.var_model.fit_enet_var_local``, which returns the same
+``EnetVARModel`` as the Spark fit; the group fit is
+``ml.group_enet.LocalGroupEnetVAR``. One code path, two data sources
+(SURVEY §3.2 Plan B).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .elastic_net import EnetFit, blocked_fold_ids, cv_enet, enet_path
+from ..operators.lag_embed import lag_col_name
 from .gram import Moments
+
+
+def var_design(
+    y: np.ndarray, series: list[str], p: int
+) -> tuple[np.ndarray, list[str]]:
+    """Lag-embed a (T, K) matrix at order p (``VAR.Z``) and drop rows
+    with a NaN (``na.omit``, Main.R:196). Returns ``data`` = [Z, Y]
+    row-aligned and the lag column names ``z_names`` (all series at
+    lag 1, then lag 2, …); the response columns follow in ``series``
+    order."""
+    T = len(y)
+    Z = np.column_stack([y[p - i : T - i] for i in range(1, p + 1)])
+    data = np.column_stack([Z, y[p:]])
+    z_names = [lag_col_name(s, i) for i in range(1, p + 1) for s in series]
+    return data[~np.isnan(data).any(axis=1)], z_names
 
 
 def moments_from_numpy(X: np.ndarray, names: list[str]) -> Moments:
@@ -32,76 +55,22 @@ def fold_moments_from_numpy(
     return out
 
 
-class LocalEnetVAR:
-    """enetVAR on a numpy (T, K) matrix — reference enetVAR.R:52-76
-    semantics: shared lag design, per-equation elastic nets, fixed-λ
-    ``seq(2λ, λ/2, 10)`` path or blocked-fold CV with λ.min."""
-
-    def __init__(
-        self,
-        y: np.ndarray,
-        series: list[str],
-        p: int,
-        alpha: float | np.ndarray = 0.4,
-        lam: float | np.ndarray | None = None,
-        intercept: bool = False,
-        cv_block: int = 10,
-        lambda_rule: str = "min",
-    ) -> None:
-        T, K = y.shape
-        assert K == len(series)
-        self.series = list(series)
-        self.p = p
-        self.intercept = intercept
-        self.y = y
-        # lag-embed: response rows p..T-1; Z column order = l1 block, l2 block…
-        Z = np.column_stack([y[p - i : T - i] for i in range(1, p + 1)])
-        Yp = y[p:]
-        self.z_names = [f"{s}.l{i}" for i in range(1, p + 1) for s in series]
-        y_names = [f"__y_{s}" for s in series]
-        names = self.z_names + y_names
-        data = np.column_stack([Z, Yp])
-        keep = ~np.isnan(data).any(axis=1)
-        data = data[keep]
-        self.t_rows = len(data)
-        if lam is None:
-            fm = fold_moments_from_numpy(
-                data, names, blocked_fold_ids(self.t_rows, cv_block)
-            )
-            fits = cv_enet(fm, self.z_names, y_names, alpha, intercept)
-            lams = [
-                f.extras["lambda_1se"] if lambda_rule == "1se" else f.lambda_min
-                for f in fits.values()
-            ]
-        else:
-            lams = np.broadcast_to(np.asarray(lam, dtype=float), (K,))
-            fits = enet_path(
-                moments_from_numpy(data, names), self.z_names, y_names,
-                alpha, np.linspace(2 * lams, lams / 2, 10), intercept,
-            )
-        self.fits: dict[str, EnetFit] = dict(zip(series, fits.values()))
-        self.lambda_used = {s: float(v) for s, v in zip(series, lams)}
-
-    def coef_matrix(self) -> np.ndarray:
-        cols = []
-        for s in self.series:
-            b, a0 = self.fits[s].coef_at(self.lambda_used[s])
-            cols.append(np.concatenate([[a0], b]) if self.intercept else b)
-        return np.column_stack(cols)
-
-    def predict(self, n_ahead: int = 1) -> np.ndarray:
-        """Recursive h-step (enetVAR.R:128-154)."""
-        B = self.coef_matrix()
-        hist = self.y[~np.isnan(self.y).any(axis=1)]
-        out = np.empty((n_ahead, len(self.series)))
-        for i in range(n_ahead):
-            z = hist[::-1][: self.p].ravel()
-            if self.intercept:
-                z = np.concatenate([[1.0], z])
-            yhat = z @ B
-            out[i] = yhat
-            hist = np.vstack([hist, yhat])
-        return out
+def recursive_forecast(
+    B: np.ndarray, hist: np.ndarray, p: int, intercept: bool, n_ahead: int
+) -> np.ndarray:
+    """Recursive h-step VAR forecast (enetVAR.R:128-154): Z_ahead is
+    the last p rows of ``hist`` (oldest→newest) newest-first,
+    flattened series-major to match the ``<var>.l<i>`` row order of
+    ``B`` (after its intercept row when ``intercept``); each step's
+    forecast is appended and fed to the next."""
+    out = np.empty((n_ahead, B.shape[1]))
+    for i in range(n_ahead):
+        z = hist[::-1][:p].ravel()
+        if intercept:
+            z = np.concatenate([[1.0], z])
+        out[i] = z @ B
+        hist = np.vstack([hist, out[i]])
+    return out
 
 
 class LocalAR1:

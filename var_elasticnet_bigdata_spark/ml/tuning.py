@@ -144,7 +144,7 @@ def rolling_origin_tune(
     origin should anchor to ESTIMABLE rows, not raw rows. Callers
     with possible interior gaps who need the raw-row anchor must pass
     ``init_window`` explicitly from their own count."""
-    from ..operators.lag_embed import lag_col_name, var_z
+    from ..operators.lag_embed import var_z
     from pyspark.sql import functions as F
 
     alpha_grid = DEFAULT_ALPHA_GRID if alpha_grid is None else np.asarray(alpha_grid)
@@ -157,25 +157,21 @@ def rolling_origin_tune(
         raise ValueError("pass init_window or init_window_from_end")
 
     vz = var_z(wide_df.select(date_col, *series), series, lag, date_col=date_col)
-    z_cols = [lag_col_name(s, i) for i in range(1, lag + 1) for s in series]
-    cond = None
-    for c in [*z_cols, *series]:
-        pred = F.col(f"`{c}`").isNotNull()
-        cond = pred if cond is None else (cond & pred)
+    z_cols = vz.z_names
     if distribute == "join":
         if init_window is None:
             off, floor = init_window_from_end
-            n_emb = vz.df.filter(cond).count()
+            n_emb = vz.complete.count()
             init_window = max(n_emb + lag - off, floor)
         scores = _tune_cells_distributed(
-            spark, vz.df.filter(cond), z_cols, series, init_window,
+            spark, vz.complete, z_cols, series, init_window,
             horizon, alpha_grid, lambda_sorted, intercept, date_col,
         )
         return _best_from_scores(series, alpha_grid, lambda_sorted, scores)
     from ..plans.guards import guarded_topandas
 
     pdf = guarded_topandas(
-        vz.df.filter(cond)
+        vz.complete
         .orderBy(date_col)
         .select(*[F.col(f"`{c}`") for c in [*z_cols, *series]]),
         "rolling_origin_tune's embedded estimation frame",

@@ -45,9 +45,15 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from ..operators.lag_embed import VarZ, lag_col_name, var_z
-from .elastic_net import EnetFit, cv_enet, enet_path
-from .gram import Moments, blocked_fold_column, compute_moments, moments_total
+from ..operators.lag_embed import VarZ
+from .elastic_net import EnetFit, blocked_fold_ids, cv_enet, enet_path
+from .gram import Moments, moments_total, var_moments
+from .local import (
+    fold_moments_from_numpy,
+    moments_from_numpy,
+    recursive_forecast,
+    var_design,
+)
 
 
 def max_lag(t_rows: int, k_series: int) -> int:
@@ -82,34 +88,22 @@ class EnetVARModel:
     def row_names(self) -> list[str]:
         return (["intercept"] if self.intercept else []) + self.z_cols
 
-    def coef_matrix(self, lambdas: dict[str, float] | float | None = None) -> np.ndarray:
-        """B with rows ``row_names`` and one column per equation
-        (reference coef.enetVAR.enetVAR, enetVAR.R:89-114)."""
+    def coef_matrix(self) -> np.ndarray:
+        """B with rows ``row_names`` and one column per equation, at
+        ``lambda_used`` (reference coef.enetVAR.enetVAR,
+        enetVAR.R:89-114)."""
         cols = []
         for s in self.series:
-            lam = self.lambda_used[s]
-            if lambdas is not None:
-                lam = lambdas if isinstance(lambdas, (int, float)) else lambdas[s]
-            b, a0 = self.fits[s].coef_at(float(lam))
+            b, a0 = self.fits[s].coef_at(self.lambda_used[s])
             cols.append(np.concatenate([[a0], b]) if self.intercept else b)
         return np.column_stack(cols)
 
-    def predict(self, n_ahead: int = 1, lambdas=None) -> np.ndarray:
-        """Recursive h-step forecast (enetVAR.R:128-154): Z_ahead =
-        last p rows newest-first flattened series-major; each step's
-        forecast is appended and fed to the next."""
-        B = self.coef_matrix(lambdas)
-        hist = self.last_rows.copy()  # (≥p, K) oldest→newest
-        out = np.empty((n_ahead, len(self.series)))
-        for i in range(n_ahead):
-            lags = hist[::-1][: self.p]  # newest-first
-            z = lags.ravel()  # [l1 all series, l2 all series, ...]
-            if self.intercept:
-                z = np.concatenate([[1.0], z])
-            y_ahead = z @ B
-            out[i] = y_ahead
-            hist = np.vstack([hist, y_ahead])
-        return out
+    def predict(self, n_ahead: int = 1) -> np.ndarray:
+        """Recursive h-step forecast (enetVAR.R:128-154) from the last
+        p observation rows."""
+        return recursive_forecast(
+            self.coef_matrix(), self.last_rows, self.p, self.intercept, n_ahead
+        )
 
     # ---- moment-based residual covariance (no row data needed) ----
 
@@ -161,6 +155,54 @@ class EnetVARModel:
         }
 
 
+def _fit_model(
+    moments: Moments | dict[int, Moments],
+    z_cols: list[str],
+    series: list[str],
+    p: int,
+    alpha,
+    lam,
+    intercept: bool,
+    last_rows: np.ndarray,
+    nlambda: int = 100,
+    lambda_rule: str = "min",
+    varz: VarZ | None = None,
+) -> EnetVARModel:
+    """The λ step both fits share, on moments whose response columns
+    are ``series``: blocked-fold CV (``moments`` per fold, λ.min or
+    λ.1se) when ``lam`` is None, else the reference's fixed path
+    ``seq(2λ, λ/2, len 10)`` per equation (enetVAR.R:24-35)."""
+    K = len(series)
+    alphas = np.full(K, alpha, dtype=float)
+    if lam is None:
+        fits = cv_enet(moments, z_cols, series, alphas, intercept, nlambda)
+        lambda_used = {
+            s: float(f.extras["lambda_1se"] if lambda_rule == "1se" else f.lambda_min)
+            for s, f in fits.items()
+        }
+        moments = moments_total(moments)
+    else:
+        lams = np.full(K, lam, dtype=float)
+        fits = enet_path(
+            moments, z_cols, series, alphas,
+            np.linspace(2 * lams, lams / 2, 10), intercept,
+        )
+        lambda_used = {s: float(v) for s, v in zip(series, lams)}
+    return EnetVARModel(
+        series=list(series),
+        p=p,
+        intercept=intercept,
+        alpha=alphas,
+        fits=fits,
+        lambda_used=lambda_used,
+        moments=moments,
+        z_cols=z_cols,
+        t_rows=moments.n,
+        last_rows=last_rows,
+        varz=varz,
+    )
+
+
 def fit_enet_var(
     wide_df,
     series: list[str],
@@ -173,45 +215,16 @@ def fit_enet_var(
     nlambda: int = 100,
 ) -> EnetVARModel:
     """Fit from a WIDE Spark DataFrame. One distributed moment pass
-    (per CV fold when λ is cross-validated); one driver-side path fit
-    over all K equations.
-
-    Rows with any NULL among the model columns are dropped
-    (na.omit, Main.R:196) — by embedding first and dropping
-    incomplete rows, ragged starts behave like the reference.
-    """
+    (per CV fold when λ is cross-validated; the fixed-λ path skips
+    the fold assignment) through ``gram.var_moments``, which embeds
+    first and then drops incomplete rows (na.omit, Main.R:196), so
+    ragged starts behave like the reference; one driver-side path fit
+    over all K equations."""
     from pyspark.sql import functions as F
 
-    K = len(series)
-    alphas = np.full(K, alpha, dtype=float) if np.isscalar(alpha) else np.asarray(alpha, dtype=float)
-    lams = None
-    if lam is not None:
-        lams = np.full(K, lam, dtype=float) if np.isscalar(lam) else np.asarray(lam, dtype=float)
-
-    vz = var_z(wide_df.select(date_col, *series), series, p, intercept=False, date_col=date_col)
-    z_cols = [lag_col_name(s, i) for i in range(1, p + 1) for s in series]
-    cond = None
-    for c in [*z_cols, *series]:  # na.omit; backticks for dotted lag names
-        pred = F.col(f"`{c}`").isNotNull()
-        cond = pred if cond is None else (cond & pred)
-    cols = z_cols + series
-    if lams is None:
-        frame = blocked_fold_column(vz.df.filter(cond), date_col, cv_block)
-        fold_moments = compute_moments(frame, cols, fold_col="__fold")
-        total = moments_total(fold_moments)
-        fits = cv_enet(fold_moments, z_cols, series, alphas, intercept, nlambda)
-        lambda_used = {s: float(fits[s].lambda_min) for s in series}
-    else:
-        # fixed-λ path needs no CV folds — skip the fold-assignment
-        # window pass entirely
-        total = compute_moments(vz.df.filter(cond), cols)
-        # the reference's fixed-λ path seq(2λ, λ/2, len 10) per equation
-        fits = enet_path(
-            total, z_cols, series, alphas,
-            np.linspace(2 * lams, lams / 2, 10), intercept,
-        )
-        lambda_used = {s: float(lam_s) for s, lam_s in zip(series, lams)}
-
+    vz, moments = var_moments(
+        wide_df, series, p, date_col, cv_block if lam is None else None
+    )
     # last p observation rows for recursive forecasting (tiny collect)
     tail = (
         wide_df.select(date_col, *series)
@@ -222,19 +235,38 @@ def fit_enet_var(
         .collect()
     )
     last_rows = np.array([[r[s] for s in series] for r in tail], dtype=float)
+    return _fit_model(
+        moments, vz.z_names, series, p, alpha, lam, intercept, last_rows,
+        nlambda, varz=vz,
+    )
 
-    return EnetVARModel(
-        series=list(series),
-        p=p,
-        intercept=intercept,
-        alpha=alphas,
-        fits=fits,
-        lambda_used=lambda_used,
-        moments=total,
-        z_cols=z_cols,
-        t_rows=total.n,
-        last_rows=last_rows,
-        varz=vz,
+
+def fit_enet_var_local(
+    y: np.ndarray,
+    series: list[str],
+    p: int,
+    alpha: float | list[float] = 0.4,
+    lam: float | list[float] | None = None,
+    intercept: bool = False,
+    cv_block: int = 10,
+    lambda_rule: str = "min",
+) -> EnetVARModel:
+    """``fit_enet_var`` on a numpy (T, K) matrix (rows = time points,
+    NaN = missing): the same design, λ step and model, from
+    ``local.var_design`` instead of a Spark pass. ``lambda_rule="1se"``
+    picks glmnet's λ.1se instead of λ.min in the CV."""
+    data, z_cols = var_design(y, series, p)
+    names = [*z_cols, *series]
+    if lam is None:
+        moments = fold_moments_from_numpy(
+            data, names, blocked_fold_ids(len(data), cv_block)
+        )
+    else:
+        moments = moments_from_numpy(data, names)
+    hist = y[~np.isnan(y).any(axis=1)]
+    return _fit_model(
+        moments, z_cols, series, p, alpha, lam, intercept, hist[-p:],
+        lambda_rule=lambda_rule,
     )
 
 
@@ -246,9 +278,7 @@ def residual_frame(model: EnetVARModel):
 
     assert model.varz is not None, "fit with fit_enet_var to keep the frame"
     B = model.coef_matrix()
-    df = model.varz.df
-    for c in [*model.z_cols, *model.series]:
-        df = df.filter(F.col(f"`{c}`").isNotNull())
+    df = model.varz.complete
     rows = model.row_names
     out_cols = [F.col(model.varz.date_col)]
     for j, s in enumerate(model.series):

@@ -65,6 +65,17 @@ class VarZ:
         (enetVAR.R:289-291)."""
         return t_rows - self.p - self.k
 
+    @property
+    def complete(self) -> DataFrame:
+        """``df`` with every design and response column non-NULL — the
+        reference's ``na.omit`` just before estimation (Main.R:196).
+        Ragged series starts and interior gaps drop here."""
+        cond = None
+        for c in [*self.z_names, *self.series]:  # backticks: dotted lag names
+            pred = F.col(f"`{c}`").isNotNull()
+            cond = pred if cond is None else (cond & pred)
+        return self.df.filter(cond)
+
 
 def var_z(
     df: DataFrame,
@@ -84,9 +95,9 @@ def var_z(
 
     ``drop_incomplete=True`` drops the first p rows (rows whose lags
     reach before the sample), matching ``y[(1+p):T, ]``. Rows where a
-    lag is NULL because the underlying series is ragged are KEPT —
-    NA handling is the caller's concern (``na.omit`` ≡ dropna happens
-    just before estimation, Main.R:196).
+    lag is NULL because the underlying series is ragged are KEPT in
+    ``df``; ``VarZ.complete`` is the ``na.omit`` frame estimation
+    reads (Main.R:196).
     """
     w = (
         Window.partitionBy(*partition_cols) if partition_cols else Window.partitionBy()

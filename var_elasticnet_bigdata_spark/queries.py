@@ -4379,20 +4379,14 @@ def ml_group_ridge_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
     α>0)."""
     import numpy as np
 
-    from .ml.gram import compute_moments
+    from .ml.gram import var_moments
     from .ml.group_enet import group_enet_path
-    from .operators.lag_embed import lag_col_name, var_z
 
     wide = _quarterly_pair(spark, sf_dir)
     series = ["revenue", "quantity"]
     p, lam = 2, 0.05
-    vz = var_z(wide.select("obs_date", *series), series, p, date_col="obs_date")
-    z_cols = [lag_col_name(s, i) for i in range(1, p + 1) for s in series]
-    cond = None
-    for c in [*z_cols, *series]:
-        pred = F.col(f"`{c}`").isNotNull()
-        cond = pred if cond is None else (cond & pred)
-    m = compute_moments(vz.df.filter(cond), z_cols + series)
+    vz, m = var_moments(wide, series, p)
+    z_cols = vz.z_names
     fit = group_enet_path(
         m, z_cols, series, alpha=0.0,
         lambdas=np.linspace(2 * lam, lam / 2, 10), intercept=True, tol=1e-16,
@@ -5200,23 +5194,13 @@ def ml_cv_lambda_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     equations, every path point fit (truncate=False);
     oracle: every stage replayed in SQL with exact 3² KKT
     sign-pattern solves per cell."""
-    from pyspark.sql import functions as _F
-
     from .ml.elastic_net import cv_enet
-    from .ml.gram import blocked_fold_column, compute_moments
-    from .operators.lag_embed import lag_col_name, var_z
+    from .ml.gram import var_moments
 
     wide = _quarterly_pair(spark, sf_dir)
     series = ["revenue", "quantity"]
-    vz = var_z(wide.select("obs_date", *series), series, 1,
-               date_col="obs_date")
-    z_cols = [lag_col_name(s, 1) for s in series]
-    cond = None
-    for c in [*z_cols, *series]:
-        pred = _F.col(f"`{c}`").isNotNull()
-        cond = pred if cond is None else (cond & pred)
-    frame = blocked_fold_column(vz.df.filter(cond), "obs_date", 10)
-    fm = compute_moments(frame, z_cols + series, fold_col="__fold")
+    vz, fm = var_moments(wide, series, 1, cv_block=10)
+    z_cols = vz.z_names
     rows = []
     fits = cv_enet(fm, z_cols, series, 0.5, intercept=True, truncate=False)
     for s, fit in fits.items():
