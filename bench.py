@@ -43,47 +43,32 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warmups to exclude cold-start from the numbers: JVM/codegen
-    # (flagship) and the Python/Arrow worker pool (a no-op
-    # mapInPandas — otherwise the first ML query pays ~3 s of daemon
-    # startup that has nothing to do with its plan)
-    Q.flagship_quarterly_revenue_growth(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.createDataFrame([(1,)], "x int").mapInPandas(
-        lambda it: it, "x int"
-    ).write.format("noop").mode("overwrite").save()
-    # cogroup/groupby Arrow paths initialize separately from
-    # mapInPandas — without these the first IVF (cogroup) and
-    # modeltrain (applyInPandas) queries carry the init cost
-    tiny = spark.createDataFrame([(1, 1.0)], "k int, v double")
-    tiny.groupBy("k").applyInPandas(
-        lambda pdf: pdf, "k int, v double"
-    ).write.format("noop").mode("overwrite").save()
+    # warmups to exclude cold-start from the numbers: the shared
+    # session warmup (JVM/codegen via the flagship, the mapInPandas
+    # and applyInPandas worker pools, the big tables' page cache, the
+    # window/lag-embed plan shape), then bench's extras
+    from tools.retime import warmup_session
+    from var_elasticnet_bigdata_spark.sources import load_table, local_frame
+
+    warmup_session(spark, sf_dir)
+    # the cogroup Arrow path initializes separately from mapInPandas
+    # and applyInPandas — without this the first IVF (cogroup) query
+    # carries the init cost
+    tiny = local_frame(spark, [(1, 1.0)], "k int, v double")
     tiny.groupBy("k").cogroup(tiny.groupBy("k")).applyInPandas(
         lambda a, b: a, "k int, v double"
     ).write.format("noop").mode("overwrite").save()
     # first scan of each table pays parquet footer reads + page-cache
-    # fill; warm them untimed so per-query numbers measure plans, not
-    # which query happens to touch a table first (the registry's
-    # priority reorder moved that cost onto the ML/text head queries)
-    from var_elasticnet_bigdata_spark.sources import load_table
-
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
+    # fill; warm the tables warmup_session leaves cold, untimed, so
+    # per-query numbers measure plans, not which query happens to
+    # touch a table first
+    for t in ("region", "nation", "customer", "supplier", "part"):
         load_table(spark, sf_dir, t).write.format("noop").mode(
             "overwrite"
         ).save()
-    # representative plan-shape warmups: window/lag-embed and
-    # rollup+join exercise the WindowExec/aggregate/join JIT the ML
-    # head queries hit first under the priority ordering — C2
-    # compilation of that shared infrastructure is not any one
-    # query's cost
-    Q.QUERIES["w4_lag_embed"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    # rollup+join exercises the aggregate/join JIT the ML head queries
+    # hit first under the priority ordering — C2 compilation of that
+    # shared infrastructure is not any one query's cost
     Q.QUERIES["a1_quarterly_rollup"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()

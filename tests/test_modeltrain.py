@@ -6,6 +6,7 @@ including the faithful Q3/Q4 quirks."""
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 import math
 
 import numpy as np
@@ -123,7 +124,21 @@ def test_forecast_table_shape_and_alignment(spark):
     assert res.n_aligned == n_origins - 8 + 1
 
 
-def test_broadcast_and_join_distribution_paths_agree(spark):
+def _modeltrain_module():
+    # the harness package re-exports the modeltrain FUNCTION, which
+    # shadows the module attribute — resolve the module directly
+    import importlib
+
+    return importlib.import_module(
+        "var_elasticnet_bigdata_spark.harness.modeltrain"
+    )
+
+
+def test_broadcast_and_join_distribution_paths_agree(spark, monkeypatch):
+    """The date axis picks the path: within the driver ceiling the
+    matrix is broadcast (``_matrix`` runs), above it the range join
+    runs (``_matrix`` never does); both give the same forecasts."""
+    mt = _modeltrain_module()
     rng = np.random.default_rng(7)
     T = 55
     y = np.zeros((T, 2))
@@ -132,8 +147,20 @@ def test_broadcast_and_join_distribution_paths_agree(spark):
         y[t, 1] = 0.4 * y[t - 1, 1] + rng.normal(scale=0.3)
     wide, dates = make_wide(spark, y, ["a", "b"])
     kw = dict(start_pred=dates[40], lam=0.05, alpha=0.4, lag=1, with_ar1=False)
-    a = modeltrain(spark, wide, ["a", "b"], distribute="broadcast", **kw)
-    b = modeltrain(spark, wide, ["a", "b"], distribute="join", **kw)
+    calls = []
+    real_matrix = mt._matrix
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real_matrix(*a, **k)
+
+    monkeypatch.setattr(mt, "_matrix", spy)
+    monkeypatch.setenv("SPARK_GRAFT_MAX_DRIVER_ROWS", str(T))
+    a = modeltrain(spark, wide, ["a", "b"], **kw)
+    assert calls == [1]  # T dates == ceiling: the broadcast path ran
+    monkeypatch.setenv("SPARK_GRAFT_MAX_DRIVER_ROWS", str(T - 1))
+    b = modeltrain(spark, wide, ["a", "b"], **kw)
+    assert calls == [1]  # one date over: the range join ran
     fa = a.forecasts.toPandas().sort_values(["origin_idx", "horizon"]).reset_index(drop=True)
     fb = b.forecasts.toPandas().sort_values(["origin_idx", "horizon"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(fa, fb)
@@ -143,16 +170,11 @@ def test_broadcast_and_join_distribution_paths_agree(spark):
 
 
 def test_join_path_never_collects_matrix(spark, monkeypatch):
-    """distribute='join' is the too-big-to-broadcast mode: the driver
-    may collect the date axis but must NEVER materialize the value
-    matrix (VERDICT r1 'What's wrong' #4)."""
-    import importlib
-
-    # the harness package re-exports the modeltrain FUNCTION, which
-    # shadows the module attribute — resolve the module directly
-    mt = importlib.import_module(
-        "var_elasticnet_bigdata_spark.harness.modeltrain"
-    )
+    """A date axis over the driver ceiling takes the range-join path:
+    the driver may collect the date axis but must NEVER materialize
+    the value matrix (VERDICT r1 'What's wrong' #4), for the model
+    run and for its nested AR(1) benchmark alike."""
+    mt = _modeltrain_module()
 
     rng = np.random.default_rng(9)
     T = 50
@@ -163,12 +185,14 @@ def test_join_path_never_collects_matrix(spark, monkeypatch):
         raise AssertionError("join path collected the estimation matrix")
 
     monkeypatch.setattr(mt, "_matrix", boom)
+    monkeypatch.setenv("SPARK_GRAFT_MAX_DRIVER_ROWS", "10")
     res = mt.modeltrain(
         spark, wide, ["a", "b"], start_pred=dates[35], lam=0.05,
-        alpha=0.4, lag=1, with_ar1=False, distribute="join",
+        alpha=0.4, lag=1, with_ar1=True,
     )
     assert set(res.msfe) == {1, 2, 4, 8}
     assert all(np.isfinite(v) for v in res.theils_u_rw.values())
+    assert set(res.theils_u_ar1) == {1, 2, 4, 8}
 
 
 def test_theils_u_rw_faithful_vs_fixed(spark):
@@ -253,15 +277,15 @@ def test_ar1_relational_matches_generic_fanout(spark):
     y = np.abs(rng.normal(size=(48, 1))).cumsum(axis=0)
     wide, dates = make_wide(spark, y, ["a"])
     start = dates[30]
-    for h in (4, 8):
+    for h, rw_mode in itertools.product((4, 8), ("fixed", "faithful")):
         res = modeltrain(
             spark, wide, ["a"], start_pred=start, h=h, method="ar1",
-            const=False, with_ar1=False,
+            const=False, with_ar1=False, rw_mode=rw_mode,
         )
         rel = {
             int(r["horizon"]): (float(r["msfe"]), float(r["theils_u_rw"]))
             for r in ar1_rolling_relational(
-                spark, wide, "a", start_pred=start, h=h
+                spark, wide, "a", start_pred=start, h=h, rw_mode=rw_mode
             ).collect()
         }
         assert set(rel) == set(res.msfe)
@@ -300,3 +324,36 @@ def test_theils_u_table_matches_scalar_m23(spark):
             spark, wide, ["a"], start_pred=start, mse_pred=msfe_m, horizon=hh
         )
         assert u == pytest.approx(round(u_scalar, 6), abs=2e-6)
+
+
+def test_entry_points_share_the_origin_grid_errors(spark):
+    """``modeltrain`` and both relational AR(1) tables reject the same
+    two bad grids with the same messages: a ``start_pred`` outside
+    the date index, and fewer than h pre-sample rows before it."""
+    from var_elasticnet_bigdata_spark.harness.modeltrain import (
+        ar1_rolling_relational,
+        theils_u_ar1_relational,
+    )
+
+    rng = np.random.default_rng(13)
+    y = rng.normal(size=(30, 1)).cumsum(axis=0)
+    wide, dates = make_wide(spark, y, ["a"])
+    entry_points = [
+        lambda start: modeltrain(
+            spark, wide, ["a"], start_pred=start, h=4, method="ar1",
+            with_ar1=False,
+        ),
+        lambda start: ar1_rolling_relational(
+            spark, wide, "a", start_pred=start, h=4
+        ),
+        lambda start: theils_u_ar1_relational(
+            spark, wide, "a", start_pred=start, h=4
+        ),
+    ]
+    for run in entry_points:
+        with pytest.raises(ValueError, match="not in date index"):
+            run(dt.date(1999, 1, 1))
+        # index 4 leaves origin 0: fewer than h=4 pre-sample rows
+        with pytest.raises(ValueError, match="not enough pre-sample"):
+            run(dates[4])
+        run(dates[5])  # the first start with a full pre-sample builds

@@ -102,3 +102,26 @@ def test_daemon_resolves_from_pythonpath_outside_repo(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert out.stdout.strip().splitlines()[-1] == "[0, 2, 4]"
+
+
+def test_local_var_import_leaves_other_operators_unloaded():
+    """A worker running a local VAR fit imports ``ml.local``, which needs
+    only ``operators.lag_embed``: the operators package must not pull
+    in the text, dedup and similarity stacks with it."""
+    script = (
+        "import sys\n"
+        "import var_elasticnet_bigdata_spark.ml.local\n"
+        "print('LOADED', sorted(m for m in sys.modules\n"
+        "      if m.startswith('var_elasticnet_bigdata_spark.operators.')))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("LOADED ")]
+    assert lines, out.stderr[-2000:]
+    assert "var_elasticnet_bigdata_spark.operators.lag_embed" in lines[-1]
+    assert "var_elasticnet_bigdata_spark.operators.text" not in lines[-1]

@@ -3,16 +3,23 @@ flagship pipeline (reference ``modeltrain``/``modeltrain.slim``/
 ``ar1_train``, enetVAR.R:427-530, 568-609; SURVEY §2.8b E1/E2, M9).
 
 Spark shape (SURVEY §3.2): the origin loop is embarrassingly
-parallel. An origins DataFrame is range-joined to the observation
-rows (every origin sees rows ≤ its date), and ``applyInPandas`` over
-origin groups runs the per-origin fit + recursive forecast with the
-local coordinate-descent solver. The result is a relational forecast
-table
+parallel. ``_origin_grid`` is the one place the origin sequence and
+the aligned target window are decided; every entry point calls it.
+The input size picks the physical path of the generic fan-out
+(``modeltrain``): when the date axis fits the driver ceiling
+(``plans.guards.max_driver_rows``) the matrix is broadcast and each
+task fits one origin; otherwise an origins DataFrame is range-joined
+to the observation rows (every origin sees rows ≤ its date) and
+``applyInPandas`` over origin groups runs the per-origin fit +
+recursive forecast. The result is a relational forecast table
 
-    (origin_idx, origin_date, horizon, target_idx, target_date,
-     yhat, y_true, err)
+    (origin_idx, horizon, yhat, target_idx, target_date, y_true, err)
 
-on which every metric is a plain aggregation.
+on which every metric is a plain aggregation. The closed-form AR(1)
+benchmark needs no fan-out at all: ``_ar1_aligned`` builds its whole
+forecast grid from one cumulative prefix-moment frame, and
+``ar1_rolling_relational``/``theils_u_ar1_relational`` differ only
+in their final aggregate.
 
 Semantics replicated from the reference:
 - origin sequence: ``window.size = which(dates==start.pred) − h``,
@@ -55,6 +62,7 @@ from pyspark.sql.types import (
 )
 
 from ..plans.cachereg import swap_cache
+from ..plans.guards import max_driver_rows
 from ..sources.tables import local_frame
 
 PRED_IND = (1, 2, 4, 8)  # recorded horizons for h=8 (enetVAR.R:437)
@@ -77,15 +85,15 @@ def _pred_ind(h: int) -> list[int]:
 
 
 def _dates(wide_df: DataFrame, date_col: str) -> list:
-    """Only the (small) time axis comes to the driver — the join
-    distribute mode never materializes the value matrix."""
+    """Only the (small) time axis comes to the driver — the range-join
+    path never materializes the value matrix."""
     return [
         r[0] for r in wide_df.select(date_col).orderBy(date_col).collect()
     ]
 
 
 def _matrix(wide_df: DataFrame, series: list[str], date_col: str) -> np.ndarray:
-    """Full estimation matrix — broadcast distribute mode only."""
+    """Full estimation matrix — broadcast path only."""
     pdf = wide_df.select(date_col, *series).orderBy(date_col).toPandas()
     return pdf[series].to_numpy(dtype=float)
 
@@ -125,17 +133,17 @@ def _forecast_table(
 ) -> DataFrame:
     """Distribute per-origin fits → (origin_idx, horizon, yhat).
 
-    Two physical strategies:
+    Two physical strategies, picked by the caller from the size of
+    the date axis:
 
-    - **broadcast** (default; right whenever the estimation frontier
-      fits driver memory, which post-aggregation it almost always
-      does): broadcast ``y`` once and fan out the ORIGIN LIST,
-      ``repartitionByRange`` so every task gets exactly one
-      contiguous origin. No observation row ever shuffles, and the
-      scheduler sees one task per origin — no hash-collision
-      stragglers (75 keys into 96 hash partitions stack 2-3 heavy
-      late origins in one task; range partitioning of the
-      1-row-per-origin frame is collision-free).
+    - **broadcast** (the frontier fits the driver ceiling, which
+      post-aggregation it almost always does): broadcast ``y`` once
+      and fan out the ORIGIN LIST, ``repartitionByRange`` so every
+      task gets exactly one contiguous origin. No observation row
+      ever shuffles, and the scheduler sees one task per origin — no
+      hash-collision stragglers (75 keys into 96 hash partitions
+      stack 2-3 heavy late origins in one task; range partitioning
+      of the 1-row-per-origin frame is collision-free).
     - **range-join** (``y=None``): origins × rows range join +
       ``applyInPandas`` per origin group — for estimation frames too
       large to broadcast; all slicing stays distributed and the
@@ -238,12 +246,12 @@ def _rw_denominators_local(
     h: int,
     rw_mode: str,
 ) -> dict[int, float]:
-    """Broadcast-mode twin of ``_rw_denominators``: the target series
-    is already on the driver, so the denominators are a numpy fold —
-    no Spark jobs (the relational path re-evaluates the upstream
-    wide-frame aggregation once per broadcast side). Cell semantics
-    identical: out-of-range truths coalesce to the reference's
-    literal 0 padding."""
+    """Driver-side twin of ``_rw_denominator_frame`` for the broadcast
+    path: the target series is already on the driver, so the
+    denominators are a numpy fold — no Spark jobs (the relational
+    frame re-evaluates the upstream wide-frame aggregation once per
+    broadcast side). Cell semantics identical: out-of-range truths
+    coalesce to the reference's literal 0 padding."""
     n = len(y0)
     out: dict[int, float] = {}
     for hh, t in _rw_cells(origin_rows, pred_ind, h, rw_mode):
@@ -253,20 +261,21 @@ def _rw_denominators_local(
     return out
 
 
-def _rw_denominators(
+def _rw_denominator_frame(
     spark: SparkSession,
     truth: DataFrame,
     origin_rows: list[int],
     pred_ind: list[int],
     h: int,
     rw_mode: str,
-) -> dict[int, float]:
+) -> DataFrame:
     """Theil's-U random-walk denominators Σ(y_t − y_{t−1})² over the
-    reference's h*.ind origin windows (quirks Q2/Q3/Q4), computed
-    RELATIONALLY from the truth table: the (horizon, target_idx)
-    cells are a tiny driver-built list (4·n_origins rows), joined
-    twice against the broadcast truth; out-of-sample cells coalesce
-    to the reference's literal 0 padding."""
+    reference's h*.ind origin windows (quirks Q2/Q3/Q4), as a lazy
+    ``(horizon, denom)`` frame built RELATIONALLY from the truth
+    table: the (horizon, target_idx) cells are a tiny driver-built
+    list (4·n_origins rows), joined twice against the broadcast
+    truth; out-of-sample cells coalesce to the reference's literal 0
+    padding."""
     cells = _rw_cells(origin_rows, pred_ind, h, rw_mode)
     cdf = local_frame(spark, cells, "horizon int, target_idx int")
     tr = truth.select("target_idx", F.col("y_true").alias("y_tr"))
@@ -274,7 +283,7 @@ def _rw_denominators(
         (F.col("target_idx") + 1).alias("target_idx"),
         F.col("y_true").alias("y_lag"),
     )
-    joined = (
+    return (
         cdf.join(F.broadcast(tr), "target_idx", "left")
         .join(F.broadcast(yt), "target_idx", "left")
         .withColumn(
@@ -282,16 +291,29 @@ def _rw_denominators(
             (F.coalesce("y_tr", F.lit(0.0)) - F.coalesce("y_lag", F.lit(0.0)))
             ** 2,
         )
+        .groupBy("horizon")
+        .agg(F.sum("term").alias("denom"))
     )
-    rows = joined.groupBy("horizon").agg(F.sum("term").alias("denom")).collect()
-    return {int(r["horizon"]): float(r["denom"]) for r in rows}
 
 
-def _aligned_window(n_dates: int, start_pred_idx: int) -> tuple[int, int]:
-    """Aligned target range = [start_pred .. last date] (0-based
-    index bounds, inclusive) — equivalent to the reference's h*.ind
-    column windows (see module docstring)."""
-    return start_pred_idx, n_dates - 1
+def _origin_grid(
+    dates: list, start_pred, h: int, step: int = 1
+) -> tuple[int, list[int]]:
+    """The reference's rolling-origin grid over the date axis:
+    ``(start_idx, origin_rows)``. ``start_idx`` is the 0-based
+    position of ``start_pred``; the aligned target window is
+    ``start_idx .. n−1``, equivalent to the reference's h*.ind column
+    windows (see module docstring). ``origin_rows`` is
+    ``which(dates==start.pred) − h .. n−2`` (0-based), every
+    ``step``-th origin."""
+    try:
+        start_idx = dates.index(start_pred)
+    except ValueError as e:
+        raise ValueError(f"start_pred {start_pred!r} not in date index") from e
+    ws = start_idx - h  # 0-based first origin (R: which(...) − h, 1-based)
+    if ws < 1:
+        raise ValueError("not enough pre-sample for the first origin")
+    return start_idx, list(range(ws, len(dates) - 1, step))
 
 
 def modeltrain(
@@ -310,7 +332,6 @@ def modeltrain(
     rw_mode: str = "fixed",
     with_ar1: bool = True,
     with_residuals: bool = False,
-    distribute: str = "broadcast",
 ) -> ModeltrainResult:
     """The OOS experiment (E1). ``method``: 'enet'
     (``ml.var_model.fit_enet_var_local``), 'genet'
@@ -322,27 +343,20 @@ def modeltrain(
     contiguous h*.ind column windows, which assume step=1 — Theil's U
     is exact for step=1 and approximate otherwise.
 
-    ``distribute``: 'broadcast' (origin fan-out over a broadcast
-    matrix, one task per origin) | 'join' (range-join path for
-    estimation frames too large to broadcast)."""
+    Physical path: the date axis (collected anyway) sizes the
+    estimation matrix. Up to ``plans.guards.max_driver_rows()`` dates
+    the matrix is broadcast and each task fits one origin; above it
+    the range-join path ships observation rows to origin groups and
+    the driver touches nothing wider than the date axis."""
     from ..ml.local import LocalAR1
     from ..ml.var_model import fit_enet_var_local
 
     dates = _dates(wide_df, date_col)
-    # only the broadcast fan-out materializes the estimation matrix on
-    # the driver; distribute="join" ships observation rows to origin
-    # groups and the driver touches nothing wider than the date axis
-    y = _matrix(wide_df, series, date_col) if distribute == "broadcast" else None
+    start_idx, origin_rows = _origin_grid(dates, start_pred, h, step)
     n = len(dates)
-    try:
-        start_idx = dates.index(start_pred)
-    except ValueError as e:
-        raise ValueError(f"start_pred {start_pred!r} not in date index") from e
-    ws = start_idx - h  # 0-based first origin (R: which(...) − h, 1-based)
-    if ws < 1:
-        raise ValueError("not enough pre-sample for the first origin")
-    # reference sequence: window.size..(len−1) 1-based → ws..n−2 0-based
-    origin_rows = list(range(ws, n - 1, step))
+    # only the broadcast fan-out materializes the estimation matrix on
+    # the driver, and only when its row count is within the ceiling
+    y = _matrix(wide_df, series, date_col) if n <= max_driver_rows() else None
 
     ser = list(series)
     p_, a_, l_, c_ = lag, alpha, lam, const
@@ -394,9 +408,8 @@ def modeltrain(
     # not evict these forecasts
     fc = swap_cache(f"modeltrain.forecasts.{method}", _attach_truth(fc, truth))
 
-    lo, hi = _aligned_window(n, start_idx)
     aligned = fc.filter(
-        (F.col("target_idx") >= lo) & (F.col("target_idx") <= hi)
+        (F.col("target_idx") >= start_idx) & (F.col("target_idx") <= n - 1)
     )
     agg = (
         aligned.groupBy("horizon")
@@ -418,9 +431,12 @@ def modeltrain(
             y[:, 0], origin_rows, pred_ind, h, rw_mode
         )
     else:
-        denoms = _rw_denominators(
-            spark, truth, origin_rows, pred_ind, h, rw_mode
-        )
+        denoms = {
+            int(r["horizon"]): float(r["denom"])
+            for r in _rw_denominator_frame(
+                spark, truth, origin_rows, pred_ind, h, rw_mode
+            ).collect()
+        }
     for hh in pred_ind:
         denom = denoms.get(hh, 0.0)
         theils_rw[hh] = (
@@ -432,13 +448,10 @@ def modeltrain(
     # ---- AR(1) benchmark + Theil's U vs AR(1) (M9, M23) ----
     tu_ar1 = None
     if with_ar1 and method != "ar1":
-        # propagate distribute: a 'join'-mode run (frames too big to
-        # broadcast) must not silently collect the full matrix for
-        # the nested benchmark
         ar1 = modeltrain(
             spark, wide_df, ser, start_pred, step=step, h=h, method="ar1",
             alpha=alpha, lag=lag, const=False, date_col=date_col,
-            with_ar1=False, rw_mode=rw_mode, distribute=distribute,
+            with_ar1=False, rw_mode=rw_mode,
         )
         tu_ar1 = {
             hh: math.sqrt(msfe[hh]) / math.sqrt(ar1.msfe[hh])
@@ -466,6 +479,71 @@ def modeltrain(
     )
 
 
+def _ar1_aligned(
+    spark: SparkSession,
+    wide_df: DataFrame,
+    target: str,
+    start_pred,
+    h: int,
+    date_col: str,
+    dates: list | None,
+) -> tuple[DataFrame, DataFrame, list[int]]:
+    """The rolling-origin AR(1) forecast grid as ONE relational DAG
+    — no Python boundary, no broadcast matrix, no per-origin tasks.
+
+    The CSS AR(1) estimate is a ratio of PREFIX moments
+    (φ_o = Σ_{t≤o} y_{t−1}y_t / Σ_{t≤o} y_{t−1}²), so every origin's
+    fit is a cumulative window over the series. One cumulative-moment
+    frame yields φ, the origins of ``_origin_grid``, a broadcast
+    horizon fan-out carrying both forecasts (AR(1) ``yhat = φ^h·y_o``
+    and random walk ``y_o``) and the target-index truth join.
+
+    Returns ``(aligned, truth, origin_rows)``: the lazy
+    ``(target_idx, origin_idx, horizon, yhat, y_o, y_true)`` grid
+    filtered to the aligned target window, the ``(target_idx,
+    y_true)`` truth table and the origin indices."""
+    from pyspark.sql import Window
+
+    if dates is None:
+        dates = _dates(wide_df, date_col)
+    start_idx, origin_rows = _origin_grid(dates, start_pred, h)
+    n = len(dates)
+    wo = Window.orderBy(date_col)
+    wc = Window.orderBy(date_col).rowsBetween(Window.unboundedPreceding, 0)
+    d = (
+        wide_df.select(date_col, F.col(f"`{target}`").cast("double").alias("y"))
+        .withColumn("rn", F.row_number().over(wo) - F.lit(1))
+        .withColumn("ylag", F.lag("y").over(wo))
+        .withColumn("num", F.sum(F.col("ylag") * F.col("y")).over(wc))
+        .withColumn("den", F.sum(F.col("ylag") * F.col("ylag")).over(wc))
+    )
+    # The cumulative-moment frame feeds every consumer (origins,
+    # truth, the RW denominators) — stage it ONCE (VERDICT r7 item 4:
+    # the unshared frame re-ran the upstream wide-frame aggregation
+    # per consumer). It is the post-aggregation time axis: tiny at
+    # any input scale.
+    d = swap_cache("modeltrain.ar1_moments", d)
+    phi = F.when(F.col("den") > 0, F.col("num") / F.col("den")).otherwise(F.lit(0.0))
+    origins = d.filter(
+        (F.col("rn") >= origin_rows[0]) & (F.col("rn") <= origin_rows[-1])
+    ).select(
+        F.col("rn").alias("origin_idx"), F.col("y").alias("y_o"), phi.alias("phi")
+    )
+    hz = local_frame(spark, [(int(p),) for p in _pred_ind(h)], "horizon int")
+    fc = origins.join(F.broadcast(hz)).select(
+        "origin_idx",
+        "horizon",
+        (F.pow("phi", F.col("horizon")) * F.col("y_o")).alias("yhat"),
+        "y_o",
+        (F.col("origin_idx") + F.col("horizon")).alias("target_idx"),
+    )
+    truth = d.select(F.col("rn").alias("target_idx"), F.col("y").alias("y_true"))
+    aligned = fc.join(F.broadcast(truth), "target_idx", "left").filter(
+        (F.col("target_idx") >= start_idx) & (F.col("target_idx") <= n - 1)
+    )
+    return aligned, truth, origin_rows
+
+
 def ar1_rolling_relational(
     spark: SparkSession,
     wide_df: DataFrame,
@@ -477,18 +555,12 @@ def ar1_rolling_relational(
     dates: list | None = None,
 ) -> DataFrame:
     """The rolling-origin AR(1) experiment (M9/M23 benchmark arm of
-    E1) as ONE relational DAG — no Python boundary, no broadcast
-    matrix, no per-origin tasks.
-
-    The CSS AR(1) estimate is a ratio of PREFIX moments
-    (φ_o = Σ_{t≤o} y_{t−1}y_t / Σ_{t≤o} y_{t−1}²), so every origin's
-    fit is a cumulative window over the series — the idiomatic Spark
-    expression of a closed-form per-origin estimator, and the 100 TB
-    path for closed-form benchmarks (the generic ``modeltrain``
-    fan-out is for estimators that need an iterative solver).
-    Recursive prediction is ``φ^h·y_o`` (const=False), alignment and
-    both metrics are the same joins/aggregations as ``modeltrain``;
-    results are identical (asserted in tests/test_modeltrain.py).
+    E1) over the ``_ar1_aligned`` grid: MSFE and Theil's U vs the
+    random walk (the ``_rw_denominator_frame`` join). The closed-form
+    prefix-moment fits make this the 100 TB path for closed-form
+    benchmarks (the generic ``modeltrain`` fan-out is for estimators
+    that need an iterative solver); results are identical (asserted
+    in tests/test_modeltrain.py).
 
     Returns a lazy ``(horizon, msfe, theils_u_rw)`` DataFrame.
 
@@ -499,77 +571,15 @@ def ar1_rolling_relational(
     batch runs, partition the same windows by series_id (the
     operators in ``operators/timeseries.py`` show the pattern).
     """
-    from pyspark.sql import Window
-
-    pred_ind = _pred_ind(h)
-    if dates is None:
-        dates = _dates(wide_df, date_col)
-    n = len(dates)
-    try:
-        start_idx = dates.index(start_pred)
-    except ValueError as e:
-        raise ValueError(f"start_pred {start_pred!r} not in date index") from e
-    ws = start_idx - h
-    if ws < 1:
-        raise ValueError("not enough pre-sample for the first origin")
-    origin_rows = list(range(ws, n - 1))
-
-    wo = Window.orderBy(date_col)
-    wc = Window.orderBy(date_col).rowsBetween(Window.unboundedPreceding, 0)
-    d = (
-        wide_df.select(date_col, F.col(f"`{target}`").cast("double").alias("y"))
-        .withColumn("rn", F.row_number().over(wo) - F.lit(1))
-        .withColumn("ylag", F.lag("y").over(wo))
-        .withColumn("num", F.sum(F.col("ylag") * F.col("y")).over(wc))
-        .withColumn("den", F.sum(F.col("ylag") * F.col("ylag")).over(wc))
+    aligned, truth, origin_rows = _ar1_aligned(
+        spark, wide_df, target, start_pred, h, date_col, dates
     )
-    # The cumulative-moment frame feeds THREE consumers (origins,
-    # truth, the RW denominators) — stage it ONCE (VERDICT r7 item 4:
-    # the unshared frame re-ran the upstream wide-frame aggregation
-    # per consumer). It is the post-aggregation time axis: tiny at
-    # any input scale.
-    d = swap_cache("modeltrain.ar1_moments", d)
-    phi = F.when(F.col("den") > 0, F.col("num") / F.col("den")).otherwise(F.lit(0.0))
-    origins = d.filter((F.col("rn") >= ws) & (F.col("rn") <= n - 2)).select(
-        F.col("rn").alias("origin_idx"), F.col("y").alias("y_o"), phi.alias("phi")
-    )
-    hz = local_frame(spark, [(int(p),) for p in pred_ind], "horizon int")
-    fc = origins.join(F.broadcast(hz)).select(
-        "origin_idx",
-        "horizon",
-        (F.pow("phi", F.col("horizon")) * F.col("y_o")).alias("yhat"),
-        (F.col("origin_idx") + F.col("horizon")).alias("target_idx"),
-    )
-    truth = d.select(F.col("rn").alias("target_idx"), F.col("y").alias("y_true"))
-    joined = fc.join(F.broadcast(truth), "target_idx", "left").withColumn(
-        "err", F.col("yhat") - F.col("y_true")
-    )
-    aligned = joined.filter(
-        (F.col("target_idx") >= start_idx) & (F.col("target_idx") <= n - 1)
-    )
+    err = F.col("yhat") - F.col("y_true")
     msfe = aligned.groupBy("horizon").agg(
-        F.sum(F.col("err") * F.col("err")).alias("sse"),
-        F.count("err").alias("cnt"),
+        F.sum(err * err).alias("sse"), F.count(err).alias("cnt")
     )
-    # RW denominators over the reference's h*.ind windows: the cell
-    # list is O(h·n_origins) driver-built ints, values stay relational
-    cells = _rw_cells(origin_rows, pred_ind, h, rw_mode)
-    cdf = local_frame(spark, cells, "horizon int, target_idx int")
-    tr = truth.select("target_idx", F.col("y_true").alias("y_tr"))
-    yt = truth.select(
-        (F.col("target_idx") + 1).alias("target_idx"),
-        F.col("y_true").alias("y_lag"),
-    )
-    denom = (
-        cdf.join(F.broadcast(tr), "target_idx", "left")
-        .join(F.broadcast(yt), "target_idx", "left")
-        .withColumn(
-            "term",
-            (F.coalesce("y_tr", F.lit(0.0)) - F.coalesce("y_lag", F.lit(0.0)))
-            ** 2,
-        )
-        .groupBy("horizon")
-        .agg(F.sum("term").alias("denom"))
+    denom = _rw_denominator_frame(
+        spark, truth, origin_rows, _pred_ind(h), h, rw_mode
     )
     return (
         msfe.join(denom, "horizon")
@@ -630,83 +640,23 @@ def theils_u_ar1_relational(
     `theils_u_ar1`, with the random-walk forecast ``ŷ_{o+h} = y_o``
     (the W10 naive arm) standing in as the scored model so the WHOLE
     statistic, numerator and denominator, replays in ANSI SQL. Both
-    models score the SAME aligned rolling-origin grid as
-    `ar1_rolling_relational` (same origins, same h*.ind alignment),
-    and both forecasts derive from the one cumulative-moment frame,
-    so the experiment stays a single pass: per-origin prefix moments
-    → φ_o, a broadcast horizon fan-out carrying BOTH ŷ columns, one
-    target-date join, one aggregate.
+    models score the SAME ``_ar1_aligned`` grid as
+    `ar1_rolling_relational` (same origins, same h*.ind alignment);
+    only the final aggregate differs.
 
     Returns a lazy ``(horizon, u_ar1, msfe_model, msfe_ar1)``
     DataFrame. Float discipline: U = ROUND(SQRT(sse_m/cnt) /
     SQRT(sse_a/cnt), 6) with identical op order in the DuckDB twin.
-
-    Scale note: same bounded time-axis frontier as
-    `ar1_rolling_relational` — the windows order over ONE
-    post-aggregation series (thousands of rows at 100 TB of raw
-    input), everything else is broadcast joins over that axis.
     """
-    from pyspark.sql import Window
-
-    pred_ind = _pred_ind(h)
-    if dates is None:
-        dates = _dates(wide_df, date_col)
-    n = len(dates)
-    try:
-        start_idx = dates.index(start_pred)
-    except ValueError as e:
-        raise ValueError(f"start_pred {start_pred!r} not in date index") from e
-    ws = start_idx - h
-    if ws < 1:
-        raise ValueError("not enough pre-sample for the first origin")
-
-    wo = Window.orderBy(date_col)
-    wc = Window.orderBy(date_col).rowsBetween(Window.unboundedPreceding, 0)
-    d = (
-        wide_df.select(
-            date_col, F.col(f"`{target}`").cast("double").alias("y")
-        )
-        .withColumn("rn", F.row_number().over(wo) - F.lit(1))
-        .withColumn("ylag", F.lag("y").over(wo))
-        .withColumn("num", F.sum(F.col("ylag") * F.col("y")).over(wc))
-        .withColumn("den", F.sum(F.col("ylag") * F.col("ylag")).over(wc))
+    aligned, _, _ = _ar1_aligned(
+        spark, wide_df, target, start_pred, h, date_col, dates
     )
-    # ONE cumulative-moment frame shared by both window consumers
-    # (origins + truth) — VERDICT r7 item 4: unshared, each consumer
-    # re-ran the upstream wide-frame aggregation. Tiny (time axis).
-    d = swap_cache("modeltrain.theils_moments", d)
-    phi = F.when(F.col("den") > 0, F.col("num") / F.col("den")).otherwise(
-        F.lit(0.0)
-    )
-    origins = d.filter((F.col("rn") >= ws) & (F.col("rn") <= n - 2)).select(
-        F.col("rn").alias("origin_idx"),
-        F.col("y").alias("y_o"),
-        phi.alias("phi"),
-    )
-    hz = local_frame(spark, [(int(p),) for p in pred_ind], "horizon int")
-    fc = origins.join(F.broadcast(hz)).select(
-        "origin_idx",
-        "horizon",
-        (F.pow("phi", F.col("horizon")) * F.col("y_o")).alias("yhat_ar1"),
-        F.col("y_o").alias("yhat_rw"),
-        (F.col("origin_idx") + F.col("horizon")).alias("target_idx"),
-    )
-    truth = d.select(
-        F.col("rn").alias("target_idx"), F.col("y").alias("y_true")
-    )
-    aligned = (
-        fc.join(F.broadcast(truth), "target_idx", "left")
-        .filter(
-            (F.col("target_idx") >= start_idx)
-            & (F.col("target_idx") <= n - 1)
-        )
-        .withColumn("err_a", F.col("yhat_ar1") - F.col("y_true"))
-        .withColumn("err_m", F.col("yhat_rw") - F.col("y_true"))
-    )
+    err_a = F.col("yhat") - F.col("y_true")
+    err_m = F.col("y_o") - F.col("y_true")
     agg = aligned.groupBy("horizon").agg(
-        F.sum(F.col("err_m") * F.col("err_m")).alias("sse_m"),
-        F.sum(F.col("err_a") * F.col("err_a")).alias("sse_a"),
-        F.count("err_a").alias("cnt"),
+        F.sum(err_m * err_m).alias("sse_m"),
+        F.sum(err_a * err_a).alias("sse_a"),
+        F.count(err_a).alias("cnt"),
     )
     return agg.select(
         "horizon",

@@ -17,7 +17,7 @@ flag).
 Spark shape (SURVEY §3.3): the resample×grid matrix is embarrassingly
 parallel. The embedded frame is tiny (it is the post-aggregation
 estimation frontier), so it is broadcast once; the (equation, α)
-cells fan out via ``applyInPandas`` over a cell table — each cell
+cells fan out via ``mapInPandas`` over a cell table — each cell
 fits ONE λ-path per origin with warm starts (pathwise coordinate
 descent ≡ glmnet's strategy, so one path serves all 200 λs) and
 returns the per-λ mean RMSE. The driver then argmins. Fit count:
@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 
 from .elastic_net import enet_path
 from .local import moments_from_numpy
+from ..plans.guards import max_driver_rows
 from ..sources.tables import local_frame
 
 DEFAULT_ALPHA_GRID = np.round(np.arange(0.05, 0.951, 0.05), 2)  # 19 values
@@ -102,26 +103,26 @@ def rolling_origin_tune(
     lambda_grid: np.ndarray | None = None,
     intercept: bool = False,
     date_col: str = "obs_date",
-    distribute: str = "broadcast",
     init_window_from_end: tuple[int, int] | None = None,
 ) -> pd.DataFrame:
     """enetVARtune: per-equation bestTune (α, λ) over the rolling-
     origin grid. Returns a pandas frame (equation, alpha, lambda,
     rmse).
 
-    ``distribute="broadcast"`` (default): the embedded frame (a
-    post-aggregation time-axis frontier) is guarded, collected once
-    and broadcast; cells fan out as (equation, α) Spark tasks.
+    The embedded frame's size picks the physical path, from ONE
+    bounded collect of at most ``plans.guards.max_driver_rows() + 1``
+    rows:
 
-    ``distribute="join"``: the scale path the guard advertises
-    (VERDICT r2 item 4) — the estimation frame is NEVER collected.
-    Per-origin Gram matrices come from ONE cumulative-window pass
-    (prefix moments, the ``ar1_rolling_relational`` pattern); test
-    rows attach to their origins by a range join; each
-    (origin, α) cell solves its λ path from its moment row inside
-    ``mapInPandas``; only the (equation, α, λ) score frame reaches
-    the driver. Equality with the broadcast path is pinned in
-    tests/test_tuning.py.
+    - within the ceiling (a post-aggregation time-axis frontier, the
+      usual case): the collected frame is broadcast and the cells
+      fan out as (equation, α) Spark tasks;
+    - over it: ``_tune_cells_distributed`` — per-origin Gram
+      matrices from ONE cumulative-window pass (prefix moments),
+      test rows attached by a range join, each (origin, α) cell
+      solving its λ path from its moment row inside ``mapInPandas``;
+      only the (equation, α, λ) score frame reaches the driver.
+      Equality with the broadcast path is pinned in
+      tests/test_tuning.py.
 
     ``init_window_from_end=(offset, floor)``: sets
     ``init_window = max(n_wide − offset, floor)`` WITHOUT a separate
@@ -129,8 +130,8 @@ def rolling_origin_tune(
     collects the embedded frame, so ``n_wide = len(pdf) + lag`` is
     free (r10: the tuner queries' extra count job was one of the
     small driver-coordinated jobs amplifying session noise, VERDICT
-    r9 item 1). Pass ``init_window=None`` with it; the join path
-    computes the same anchor with a scalar agg on the embedded
+    r9 item 1). Pass ``init_window=None`` with it; the distributed
+    path computes the same anchor with a count of the embedded
     frame.
 
     COMPLETE-SERIES ASSUMPTION (ADVICE r10): ``len(embedded) + lag``
@@ -158,7 +159,15 @@ def rolling_origin_tune(
 
     vz = var_z(wide_df.select(date_col, *series), series, lag, date_col=date_col)
     z_cols = vz.z_names
-    if distribute == "join":
+    ceiling = max_driver_rows()
+    pdf = (
+        vz.complete
+        .orderBy(date_col)
+        .select(*[F.col(f"`{c}`") for c in [*z_cols, *series]])
+        .limit(ceiling + 1)
+        .toPandas()
+    )
+    if len(pdf) > ceiling:
         if init_window is None:
             off, floor = init_window_from_end
             n_emb = vz.complete.count()
@@ -168,16 +177,6 @@ def rolling_origin_tune(
             horizon, alpha_grid, lambda_sorted, intercept, date_col,
         )
         return _best_from_scores(series, alpha_grid, lambda_sorted, scores)
-    from ..plans.guards import guarded_topandas
-
-    pdf = guarded_topandas(
-        vz.complete
-        .orderBy(date_col)
-        .select(*[F.col(f"`{c}`") for c in [*z_cols, *series]]),
-        "rolling_origin_tune's embedded estimation frame",
-        "rolling_origin_tune(distribute='join') — the per-origin "
-        "prefix-moment path",
-    )
     X = pdf[z_cols].to_numpy(dtype=float)
     Y = pdf[series].to_numpy(dtype=float)
     if init_window is None:
@@ -259,7 +258,7 @@ def _tune_cells_distributed(
     intercept: bool,
     date_col: str,
 ) -> list[dict]:
-    """The ``distribute='join'`` cell engine: per-origin prefix
+    """The over-the-ceiling cell engine: per-origin prefix
     moments by ONE cumulative window over the (post-aggregation)
     time axis, test rows attached by range join, λ-path solves on
     executors from moment rows only. Returns the same
@@ -332,14 +331,6 @@ def _tune_cells_distributed(
         .crossJoin(F.broadcast(grid))
         .repartition(max(len(alpha_grid) * 8, 8), "rn", "alpha")
     )
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
     out_schema = StructType(
         [
             StructField("eq", IntegerType()),

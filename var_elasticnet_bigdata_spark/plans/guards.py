@@ -1,12 +1,15 @@
 """Driver-materialization guards.
 
 A handful of operators deliberately collect a DataFrame to the driver
-— the rolling-origin tuner's embedded estimation frame (post-
-aggregation, ~hundreds of rows), ezlasso's frame, and the EXACT
-cosine paths that broadcast the whole corpus. Those docstrings claim
-"the frontier is small"; these guards make the claim enforced: a
-mis-use at 100 TB scale fails fast with a pointer to the scale path
-instead of OOMing the driver (VERDICT r1 item 7).
+— ezlasso's estimation frame (post-aggregation, ~hundreds of rows)
+and the EXACT cosine paths that broadcast the whole corpus. Those
+docstrings claim "the frontier is small"; these guards make the claim
+enforced: a mis-use at 100 TB scale fails fast with a pointer to the
+scale path instead of OOMing the driver (VERDICT r1 item 7). The
+rolling-origin entry points read the same ceiling
+(``max_driver_rows``) to pick their path instead of failing:
+``modeltrain`` from its date axis, ``rolling_origin_tune`` from one
+bounded collect.
 
 The ceiling is configurable per call or globally via the
 ``SPARK_GRAFT_MAX_DRIVER_ROWS`` environment variable.
