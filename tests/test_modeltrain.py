@@ -137,7 +137,9 @@ def _modeltrain_module():
 def test_broadcast_and_join_distribution_paths_agree(spark, monkeypatch):
     """The date axis picks the path: within the driver ceiling the
     matrix is broadcast (``_matrix`` runs), above it the range join
-    runs (``_matrix`` never does); both give the same forecasts."""
+    runs (``_matrix`` never does); both give the same forecasts. The
+    AR(1) benchmark arm reuses the call's date axis and matrix:
+    ``_dates`` and ``_matrix`` each run at most once per call."""
     mt = _modeltrain_module()
     rng = np.random.default_rng(7)
     T = 55
@@ -146,27 +148,35 @@ def test_broadcast_and_join_distribution_paths_agree(spark, monkeypatch):
         y[t, 0] = 0.5 * y[t - 1, 0] + 0.2 * y[t - 1, 1] + rng.normal(scale=0.3)
         y[t, 1] = 0.4 * y[t - 1, 1] + rng.normal(scale=0.3)
     wide, dates = make_wide(spark, y, ["a", "b"])
-    kw = dict(start_pred=dates[40], lam=0.05, alpha=0.4, lag=1, with_ar1=False)
+    kw = dict(start_pred=dates[40], lam=0.05, alpha=0.4, lag=1, with_ar1=True)
     calls = []
-    real_matrix = mt._matrix
 
-    def spy(*a, **k):
-        calls.append(1)
-        return real_matrix(*a, **k)
+    def spy(name):
+        real = getattr(mt, name)
 
-    monkeypatch.setattr(mt, "_matrix", spy)
+        def wrapped(*a, **k):
+            calls.append(name)
+            return real(*a, **k)
+
+        monkeypatch.setattr(mt, name, wrapped)
+
+    spy("_dates")
+    spy("_matrix")
     monkeypatch.setenv("SPARK_GRAFT_MAX_DRIVER_ROWS", str(T))
     a = modeltrain(spark, wide, ["a", "b"], **kw)
-    assert calls == [1]  # T dates == ceiling: the broadcast path ran
+    # T dates == ceiling: the broadcast path ran, one collect of each
+    assert calls == ["_dates", "_matrix"]
+    calls.clear()
     monkeypatch.setenv("SPARK_GRAFT_MAX_DRIVER_ROWS", str(T - 1))
     b = modeltrain(spark, wide, ["a", "b"], **kw)
-    assert calls == [1]  # one date over: the range join ran
+    assert calls == ["_dates"]  # one date over: the range join ran
     fa = a.forecasts.toPandas().sort_values(["origin_idx", "horizon"]).reset_index(drop=True)
     fb = b.forecasts.toPandas().sort_values(["origin_idx", "horizon"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(fa, fb)
     # msfe only approx: partition-order float addition in the SSE agg
     for p in a.msfe:
         assert a.msfe[p] == pytest.approx(b.msfe[p], rel=1e-12)
+        assert a.theils_u_ar1[p] == pytest.approx(b.theils_u_ar1[p], rel=1e-12)
 
 
 def test_join_path_never_collects_matrix(spark, monkeypatch):

@@ -781,16 +781,17 @@ def test_bpe_encode_matches_local_reference(spark):
 
 
 def test_kn_perplexity_hand_computed(spark):
-    """Kneser-Ney bigram perplexity against a fully hand-computed
-    2-doc corpus: pairs (a,b):2 (b,a):1 (a,c):1, B=3, D=0.75 ->
-    P(b|a)=(1.25+0.75*2/3)/3, P(a|b)=0.5, P(c|a)=0.25; doc 2's
-    single bigram gives perplexity exactly 1/0.25 = 4."""
+    """Kneser-Ney bigram perplexity (the order-N operator at order 2)
+    against a fully hand-computed 2-doc corpus: pairs (a,b):2 (b,a):1
+    (a,c):1, B=3, D=0.75 -> P(b|a)=(1.25+0.75*2/3)/3, P(a|b)=0.5,
+    P(c|a)=0.25; doc 2's single bigram gives perplexity exactly
+    1/0.25 = 4."""
     import math
 
     import pytest as _pytest
 
     from var_elasticnet_bigdata_spark.operators.text import (
-        kn_bigram_perplexity,
+        kn_ngram_perplexity,
     )
 
     docs = spark.createDataFrame(
@@ -798,8 +799,8 @@ def test_kn_perplexity_hand_computed(spark):
         "doc_id long, text string",
     )
     got = {
-        r["doc_id"]: (r["n_bigrams"], r["perplexity"])
-        for r in kn_bigram_perplexity(docs, discount=0.75).collect()
+        r["doc_id"]: (r["n_ngrams"], r["perplexity"])
+        for r in kn_ngram_perplexity(docs, order=2, discount=0.75).collect()
     }
     assert set(got) == {1, 2}  # <2-token doc omitted
     p_ba = (max(2 - 0.75, 0.0) + 0.75 * 2 * (1 / 3)) / 3
@@ -814,32 +815,38 @@ def test_kn_perplexity_hand_computed(spark):
 
 
 def test_kn_perplexity_twin_parity(spark, duck):
-    """Spark and the DuckDB twin agree row-for-row on a small mixed
-    corpus (model build, P_KN arithmetic, 6-dp round)."""
+    """Spark and the DuckDB twin agree row-for-row at orders 2, 3 and
+    5 on a small mixed corpus (model build, P_KN arithmetic, 6-dp
+    round); the 3-token docs have no 5-gram and drop out at order 5."""
     from var_elasticnet_bigdata_spark.operators.text import (
-        duck_kn_perplexity_sql,
-        kn_bigram_perplexity,
+        duck_kn_ngram_perplexity_sql,
+        kn_ngram_perplexity,
     )
 
     rows = [
-        (i, f"tok{i % 5} tok{(i + 1) % 5} tok{(i * 3) % 7} tok{i % 5}")
+        (
+            i,
+            f"tok{i % 5} tok{(i + 1) % 5} tok{(i * 3) % 7}"
+            + ("" if i % 4 == 0 else f" tok{i % 5} tok{(i * 2) % 3} tok{i % 5}"),
+        )
         for i in range(30)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["perplexity"])
-        for r in kn_bigram_perplexity(docs).collect()
-    }
     duck.execute("CREATE OR REPLACE TABLE kn_docs AS SELECT * FROM (VALUES "
                  + ", ".join(f"({i}, '{t}')" for i, t in rows)
                  + ") t(doc_id, text)")
-    want = {
-        r[0]: (r[1], r[2])
-        for r in duck.execute(
-            duck_kn_perplexity_sql(table="kn_docs")
-        ).fetchall()
-    }
-    assert got == want
+    for order in (2, 3, 5):
+        got = {
+            r["doc_id"]: (r["n_ngrams"], r["perplexity"])
+            for r in kn_ngram_perplexity(docs, order=order).collect()
+        }
+        want = {
+            r[0]: (r[1], r[2])
+            for r in duck.execute(
+                duck_kn_ngram_perplexity_sql(order=order, table="kn_docs")
+            ).fetchall()
+        }
+        assert got == want and got, order
 
 
 def test_sample_domain_cap_properties(spark):
@@ -926,11 +933,11 @@ def test_kn_perplexity_no_bigrams_friendly_error(spark):
     import pytest as _pytest
 
     from var_elasticnet_bigdata_spark.operators.text import (
-        kn_bigram_perplexity,
+        kn_ngram_perplexity,
     )
 
     docs = spark.createDataFrame(
         [(1, "solo"), (2, "")], "doc_id long, text string"
     )
-    with _pytest.raises(ValueError, match="no bigrams"):
-        kn_bigram_perplexity(docs).collect()
+    with _pytest.raises(ValueError, match="no 2-grams"):
+        kn_ngram_perplexity(docs, order=2).collect()

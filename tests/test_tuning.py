@@ -232,11 +232,21 @@ def test_tune_distribute_join_equals_broadcast(spark, monkeypatch):
     assert list(bs.equation) == list(ds.equation)
     assert np.allclose(bs[["alpha", "lambda"]], ds[["alpha", "lambda"]])
     assert np.allclose(bs.rmse, ds.rmse, rtol=1e-9)
-    # far over the ceiling, with the anchor taken from the end
+    # far over the ceiling, with the anchor taken from the end: the
+    # embedded frame is counted once, for the anchor and the origins
+    counts = []
+    real_count = type(wide).count
+
+    def count_spy(self):
+        counts.append(1)
+        return real_count(self)
+
+    monkeypatch.setattr(type(wide), "count", count_spy)
     monkeypatch.setenv("SPARK_GRAFT_MAX_DRIVER_ROWS", "10")
     kw_end = {**kw, "init_window": None, "init_window_from_end": (T - 50, 5)}
     dist2 = rolling_origin_tune(spark, wide, ["a", "b"], **kw_end)
     assert calls == [1, 1]
+    assert counts == [1]
     assert np.allclose(
         dist2.sort_values("equation").rmse.to_numpy(), ds.rmse.to_numpy()
     )

@@ -316,6 +316,37 @@ def _origin_grid(
     return start_idx, list(range(ws, len(dates) - 1, step))
 
 
+def _fit_predict(
+    method: str, series: list[str], h: int, alpha: float,
+    lam: float | None, lag: int, const: bool,
+):
+    """``(y_matrix) -> (h, K) or (h,)`` forecasts for one origin:
+    'enet' (``ml.var_model.fit_enet_var_local``), 'genet'
+    (``ml.group_enet.LocalGroupEnetVAR``) or 'ar1' (``ml.local.LocalAR1``)."""
+    if method == "enet":
+        from ..ml.var_model import fit_enet_var_local
+
+        def fit_predict(mat: np.ndarray) -> np.ndarray:
+            m = fit_enet_var_local(
+                mat, series, p=lag, alpha=alpha, lam=lam, intercept=const
+            )
+            return m.predict(h)
+    elif method == "genet":
+        from ..ml.group_enet import LocalGroupEnetVAR
+
+        def fit_predict(mat: np.ndarray) -> np.ndarray:
+            m = LocalGroupEnetVAR(mat, series, p=lag, alpha=alpha, intercept=const)
+            return m.predict(h)
+    elif method == "ar1":
+        from ..ml.local import LocalAR1
+
+        def fit_predict(mat: np.ndarray) -> np.ndarray:
+            return LocalAR1(mat[:, 0], const=const).predict(h)
+    else:
+        raise ValueError(f"unknown method {method!r}")
+    return fit_predict
+
+
 def modeltrain(
     spark: SparkSession,
     wide_df: DataFrame,
@@ -348,40 +379,14 @@ def modeltrain(
     the matrix is broadcast and each task fits one origin; above it
     the range-join path ships observation rows to origin groups and
     the driver touches nothing wider than the date axis."""
-    from ..ml.local import LocalAR1
-    from ..ml.var_model import fit_enet_var_local
-
     dates = _dates(wide_df, date_col)
     start_idx, origin_rows = _origin_grid(dates, start_pred, h, step)
     n = len(dates)
     # only the broadcast fan-out materializes the estimation matrix on
     # the driver, and only when its row count is within the ceiling
     y = _matrix(wide_df, series, date_col) if n <= max_driver_rows() else None
-
     ser = list(series)
-    p_, a_, l_, c_ = lag, alpha, lam, const
 
-    if method == "enet":
-        def fit_predict(mat: np.ndarray) -> np.ndarray:
-            m = fit_enet_var_local(mat, ser, p=p_, alpha=a_, lam=l_, intercept=c_)
-            return m.predict(h)
-    elif method == "genet":
-        from ..ml.group_enet import LocalGroupEnetVAR
-
-        def fit_predict(mat: np.ndarray) -> np.ndarray:
-            m = LocalGroupEnetVAR(mat, ser, p=p_, alpha=a_, intercept=c_)
-            return m.predict(h)
-    elif method == "ar1":
-        def fit_predict(mat: np.ndarray) -> np.ndarray:
-            m = LocalAR1(mat[:, 0], const=c_)
-            return m.predict(h)
-    else:
-        raise ValueError(f"unknown method {method!r}")
-
-    fc = _forecast_table(
-        spark, wide_df, ser, dates, origin_rows, h, date_col, fit_predict,
-        y=y,
-    )
     if y is not None:
         # broadcast mode: the frontier is already on the driver —
         # build the (tiny) truth table from it instead of
@@ -404,28 +409,38 @@ def modeltrain(
         )
     else:
         truth = _truth_table(wide_df, ser[0], date_col)
-    # one slot per method: the nested AR(1) benchmark run below must
-    # not evict these forecasts
-    fc = swap_cache(f"modeltrain.forecasts.{method}", _attach_truth(fc, truth))
 
-    aligned = fc.filter(
-        (F.col("target_idx") >= start_idx) & (F.col("target_idx") <= n - 1)
-    )
-    agg = (
-        aligned.groupBy("horizon")
-        .agg(
+    def forecast_sse(meth: str, c_: bool) -> tuple[DataFrame, dict]:
+        """One method's forecasts over the shared grid, matrix and
+        truth, and its aligned ``{horizon: (sse, n)}``."""
+        fit_predict = _fit_predict(meth, ser, h, alpha, lam, lag, c_)
+        fc = _forecast_table(
+            spark, wide_df, ser, dates, origin_rows, h, date_col,
+            fit_predict, y=y,
+        )
+        # one slot per method: the AR(1) benchmark run below must not
+        # evict these forecasts
+        fc = swap_cache(f"modeltrain.forecasts.{meth}", _attach_truth(fc, truth))
+        aligned = fc.filter(
+            (F.col("target_idx") >= start_idx) & (F.col("target_idx") <= n - 1)
+        )
+        agg = aligned.groupBy("horizon").agg(
             F.sum(F.col("err") * F.col("err")).alias("sse"),
             F.count("err").alias("n"),
         )
-        .collect()
-    )
-    msfe = {int(r["horizon"]): float(r["sse"]) / int(r["n"]) for r in agg}
-    n_aligned = min(int(r["n"]) for r in agg) if agg else 0
+        return fc, {
+            int(r["horizon"]): (float(r["sse"]), int(r["n"]))
+            for r in agg.collect()
+        }
+
+    fc, sse_n = forecast_sse(method, const)
+    msfe = {hh: sse / cnt for hh, (sse, cnt) in sse_n.items()}
+    n_aligned = min(cnt for _, cnt in sse_n.values()) if sse_n else 0
 
     # ---- Theil's U vs the "random walk" (Q3/Q4) — relational ----
     theils_rw: dict[int, float] = {}
     pred_ind = _pred_ind(h)
-    model_sse = {int(r["horizon"]): float(r["sse"]) for r in agg}
+    model_sse = {hh: sse for hh, (sse, _) in sse_n.items()}
     if y is not None:
         denoms = _rw_denominators_local(
             y[:, 0], origin_rows, pred_ind, h, rw_mode
@@ -446,17 +461,17 @@ def modeltrain(
         )
 
     # ---- AR(1) benchmark + Theil's U vs AR(1) (M9, M23) ----
+    # the same dates, matrix and truth: only the fits differ
     tu_ar1 = None
     if with_ar1 and method != "ar1":
-        ar1 = modeltrain(
-            spark, wide_df, ser, start_pred, step=step, h=h, method="ar1",
-            alpha=alpha, lag=lag, const=False, date_col=date_col,
-            with_ar1=False, rw_mode=rw_mode,
-        )
+        ar1_msfe = {
+            hh: sse / cnt
+            for hh, (sse, cnt) in forecast_sse("ar1", False)[1].items()
+        }
         tu_ar1 = {
-            hh: math.sqrt(msfe[hh]) / math.sqrt(ar1.msfe[hh])
+            hh: math.sqrt(msfe[hh]) / math.sqrt(ar1_msfe[hh])
             for hh in msfe
-            if hh in ar1.msfe and ar1.msfe[hh] > 0
+            if hh in ar1_msfe and ar1_msfe[hh] > 0
         }
 
     residuals = None

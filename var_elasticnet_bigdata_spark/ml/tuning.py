@@ -131,7 +131,7 @@ def rolling_origin_tune(
     free (r10: the tuner queries' extra count job was one of the
     small driver-coordinated jobs amplifying session noise, VERDICT
     r9 item 1). Pass ``init_window=None`` with it; the distributed
-    path computes the same anchor with a count of the embedded
+    path computes the same anchor from its one count of the embedded
     frame.
 
     COMPLETE-SERIES ASSUMPTION (ADVICE r10): ``len(embedded) + lag``
@@ -168,12 +168,12 @@ def rolling_origin_tune(
         .toPandas()
     )
     if len(pdf) > ceiling:
+        n_emb = vz.complete.count()
         if init_window is None:
             off, floor = init_window_from_end
-            n_emb = vz.complete.count()
             init_window = max(n_emb + lag - off, floor)
         scores = _tune_cells_distributed(
-            spark, vz.complete, z_cols, series, init_window,
+            spark, vz.complete, n_emb, z_cols, series, init_window,
             horizon, alpha_grid, lambda_sorted, intercept, date_col,
         )
         return _best_from_scores(series, alpha_grid, lambda_sorted, scores)
@@ -249,6 +249,7 @@ def _best_from_scores(series, alpha_grid, lams, res) -> pd.DataFrame:
 def _tune_cells_distributed(
     spark: SparkSession,
     embedded: DataFrame,
+    n_emb: int,
     z_cols: list[str],
     series: list[str],
     init_window: int,
@@ -264,7 +265,8 @@ def _tune_cells_distributed(
     executors from moment rows only. Returns the same
     ``{eq, alpha, rmse[λ]}`` rows as the broadcast path's collect —
     origins × grid RMSEs are averaged in Spark, so the driver only
-    ever sees (equation × α) rows."""
+    ever sees (equation × α) rows. ``n_emb`` is ``embedded``'s row
+    count, counted once by the caller."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -299,7 +301,6 @@ def _tune_cells_distributed(
     ]
     emb = base
     prefix = base.select("rn", *mom_cols)
-    n_emb = emb.count()
     origins = prefix.filter(
         (F.col("rn") >= init_window) & (F.col("rn") <= n_emb - horizon)
     )

@@ -855,312 +855,6 @@ def duck_perplexity_curriculum_sql(
     """
 
 
-def kn_bigram_perplexity(
-    df: DataFrame,
-    discount: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-document perplexity under an interpolated KNESER-NEY
-    bigram model — the smoothing KenLM actually ships (vs
-    `bigram_perplexity`'s fixed-λ interpolation): absolute discount
-    ``D`` on the bigram count, mass redistributed through the
-    CONTINUATION probability (how many distinct contexts a word
-    follows, not how often it occurs — the "San Francisco" fix):
-
-        P_KN(w|u) = (max(c₂(u,w) − D, 0) + D·N1+(u·)·P_cont(w)) / c(u·)
-        P_cont(w) = N1+(·w) / B
-
-    with N1+(u·) = distinct continuations of u, N1+(·w) = distinct
-    left-contexts of w, B = distinct bigram types. Trained on the
-    corpus being scored, so every scored position has c₂ ≥ 1 and the
-    probability is strictly positive; docs with fewer than two tokens
-    have no scored positions and are omitted (the model's domain).
-
-    Scale shape (deliberately DIFFERENT from `bigram_logprob`'s four
-    corpus-sized count windows): the model is aggregated FIRST —
-    bigram types via one map-side-combined groupBy, then the
-    context/continuation stats as groupBys over the TYPES frame
-    (model-sized, Heaps-law-sublinear in the corpus, never
-    corpus-sized) — and the token stream joins the finished model
-    once on (prev, tok). A windowed COUNT(DISTINCT ...) over hot
-    contexts (what the naive form needs, and Spark's WindowExec
-    doesn't even support) would concentrate every "the"-position in
-    one task; the groupBy form partial-aggregates it away.
-
-    Float discipline: P_KN is computed from integer counts in one
-    fixed parenthesization on both engines; the per-doc
-    ``AVG(LN p)`` accumulates in engine order and the final 6-dp
-    round absorbs it (the `bigram_perplexity` contract). Returns
-    ``(id_col, n_bigrams, perplexity)``."""
-    if not 0.0 < discount < 1.0:
-        raise ValueError(f"discount must be in (0, 1), got {discount}")
-    from .dedup import norm_sql_spark
-
-    words = f"filter(split({norm_sql_spark(text_col)}, ' '), w -> w <> '')"
-    toks = swap_cache(
-        "text.kn_tokens",
-        df.withColumn("__w", F.expr(words)).select(
-            F.col(id_col),
-            F.posexplode(F.expr("transform(__w, w -> w)")).alias("pos", "tok"),
-        ),
-    )
-    w_doc = Window.partitionBy(id_col).orderBy("pos")
-    big = swap_cache(
-        "text.kn_bigrams",
-        toks.withColumn("prev", F.lag("tok").over(w_doc))
-        .filter(F.col("prev").isNotNull())
-        .select(id_col, "prev", "tok"),
-    )
-    pairs = swap_cache(
-        "text.kn_pairs",
-        big.groupBy("prev", "tok").agg(F.count(F.lit(1)).alias("c2")),
-    )
-    B = pairs.count()
-    if B == 0:
-        raise ValueError(
-            "kn_bigram_perplexity: no bigrams in the corpus (every doc "
-            "has < 2 tokens) — the continuation distribution is undefined"
-        )
-    ctx = pairs.groupBy("prev").agg(
-        F.sum("c2").alias("cctx"), F.count(F.lit(1)).alias("n1f")
-    )
-    back = pairs.groupBy("tok").agg(F.count(F.lit(1)).alias("n1b"))
-    D = float(discount)
-    model = (
-        pairs.join(ctx, "prev")
-        .join(back, "tok")
-        .select(
-            "prev",
-            "tok",
-            (
-                (
-                    F.greatest(F.col("c2") - F.lit(D), F.lit(0.0))
-                    + F.lit(D)
-                    * F.col("n1f")
-                    * (F.col("n1b") / F.lit(float(B)))
-                )
-                / F.col("cctx")
-            ).alias("__p"),
-        )
-    )
-    return (
-        big.join(model, ["prev", "tok"])
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(F.exp(-F.avg(F.log("__p"))), 6).alias("perplexity"),
-        )
-    )
-
-
-def duck_kn_perplexity_sql(
-    discount: float = 0.75, id_col: str = "doc_id", table: str = "documents"
-) -> str:
-    """DuckDB twin of ``kn_bigram_perplexity`` — same aggregate-first
-    model build, same fixed P_KN parenthesization, same 6-dp round."""
-    from .dedup import NORM_SQL_DUCK
-
-    D = float(discount)
-    return f"""
-        WITH wl AS (
-          SELECT {id_col},
-                 list_filter(string_split({NORM_SQL_DUCK}, ' '),
-                             x -> x <> '') AS l
-          FROM {table}),
-        toks AS (
-          SELECT {id_col}, CAST(p.pos AS INT) AS pos, l[p.pos] AS tok
-          FROM wl, UNNEST(range(1, len(l) + 1)) AS p(pos)),
-        big AS (
-          SELECT {id_col}, prev, tok FROM (
-            SELECT {id_col}, tok,
-                   LAG(tok) OVER (PARTITION BY {id_col} ORDER BY pos) AS prev
-            FROM toks) WHERE prev IS NOT NULL),
-        pairs AS (SELECT prev, tok, COUNT(*) AS c2 FROM big GROUP BY 1, 2),
-        bt AS (SELECT COUNT(*) AS b FROM pairs),
-        ctx AS (SELECT prev, SUM(c2) AS cctx, COUNT(*) AS n1f
-                FROM pairs GROUP BY 1),
-        back AS (SELECT tok, COUNT(*) AS n1b FROM pairs GROUP BY 1),
-        model AS (
-          SELECT p.prev, p.tok,
-                 (GREATEST(p.c2 - {D!r}, 0.0)
-                  + {D!r} * ctx.n1f * (back.n1b / CAST(bt.b AS DOUBLE)))
-                 / ctx.cctx AS p
-          FROM pairs p
-          JOIN ctx ON ctx.prev = p.prev
-          JOIN back ON back.tok = p.tok
-          CROSS JOIN bt)
-        SELECT b.{id_col}, COUNT(*) AS n_bigrams,
-               ROUND(EXP(-AVG(LN(m.p))), 6) AS perplexity
-        FROM big b JOIN model m ON m.prev = b.prev AND m.tok = b.tok
-        GROUP BY 1
-    """
-
-
-def kn_trigram_perplexity(
-    df: DataFrame,
-    discount: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-document perplexity under an INTERPOLATED TRIGRAM
-    Kneser-Ney model (r11, VERDICT r10 item 6 — the 5-gram-KN
-    direction modern perplexity filters use, one order up from
-    `kn_bigram_perplexity`). Chen & Goodman's continuation-count
-    formulation, all lower orders derived from the TRIGRAM types:
-
-        P₃(w|u,v) = (max(c₃(u,v,w)−D, 0) + D·N1+(uv·)·P₂(w|v)) / c(uv·)
-        P₂(w|v)   = (max(t₂(v,w)−D, 0) + D·N1+(v·)·P₁(w)) / t(v·)
-        P₁(w)     = t₁(w) / T
-
-    with t₂(v,w) = N1+(·vw) (distinct left contexts of the bigram —
-    the continuation count, NOT the raw bigram count: the "San
-    Francisco" fix applied at the middle order), t(v·) = Σ_w t₂,
-    N1+(v·) = |{w : t₂(v,w)>0}|, t₁(w) = |{v : t₂(v,w)>0}|, and
-    T = |t₂ types|. Trained on the corpus being scored, so every
-    scored position has c₃ ≥ 1 and strictly positive probability;
-    docs with fewer than three tokens have no scored positions and
-    are omitted.
-
-    Scale shape: the `kn_bigram_perplexity` aggregate-first pattern
-    one order up — the corpus pays ONE (u,v,w) shuffle into the
-    trigram TYPES frame; every other statistic (context sums, the
-    continuation table, its margins, T) is a groupBy over types or
-    over the continuation table (model-sized, Heaps-sublinear);
-    the token stream then joins the finished model once on
-    (u,v,tok). No corpus-sized COUNT(DISTINCT) window anywhere.
-
-    Float discipline: fixed parenthesization of the two-level
-    interpolation from integer counts on both engines; per-doc
-    AVG(LN p) engine-order accumulation absorbed by the 6-dp round.
-    Returns ``(id_col, n_trigrams, perplexity)``."""
-    if not 0.0 < discount < 1.0:
-        raise ValueError(f"discount must be in (0, 1), got {discount}")
-    from .dedup import norm_sql_spark
-
-    words = f"filter(split({norm_sql_spark(text_col)}, ' '), w -> w <> '')"
-    toks = swap_cache(
-        "text.kn_tokens",
-        df.withColumn("__w", F.expr(words)).select(
-            F.col(id_col),
-            F.posexplode(F.expr("transform(__w, w -> w)")).alias("pos", "tok"),
-        ),
-    )
-    w_doc = Window.partitionBy(id_col).orderBy("pos")
-    tri_stream = swap_cache(
-        "text.kn3_stream",
-        toks.withColumn("v", F.lag("tok", 1).over(w_doc))
-        .withColumn("u", F.lag("tok", 2).over(w_doc))
-        .filter(F.col("u").isNotNull())
-        .select(id_col, "u", "v", "tok"),
-    )
-    # pinned, not cached, and T deferred into the save DAG — the same
-    # plan-size/latency treatment as kn_ngram_perplexity (see there)
-    tri = pin_frame(
-        tri_stream.groupBy("u", "v", "tok").agg(
-            F.count(F.lit(1)).alias("c3")
-        )
-    )
-    if tri.isEmpty():
-        raise ValueError(
-            "kn_trigram_perplexity: no trigrams in the corpus (every "
-            "doc has < 3 tokens) — the continuation table is undefined"
-        )
-    t2 = tri.groupBy("v", "tok").agg(F.count(F.lit(1)).alias("t2"))
-    tcnt = t2.agg(F.count(F.lit(1)).cast("double").alias("__T"))
-    ctx3 = tri.groupBy("u", "v").agg(
-        F.sum("c3").alias("cctx"), F.count(F.lit(1)).alias("n1f3")
-    )
-    tv = t2.groupBy("v").agg(
-        F.sum("t2").alias("tv"), F.count(F.lit(1)).alias("nfol")
-    )
-    t1 = t2.groupBy("tok").agg(F.count(F.lit(1)).alias("t1"))
-    D = float(discount)
-    p1 = F.col("t1") / F.col("__T")
-    p2 = (
-        F.greatest(F.col("t2") - F.lit(D), F.lit(0.0))
-        + F.lit(D) * F.col("nfol") * p1
-    ) / F.col("tv")
-    p3 = (
-        F.greatest(F.col("c3") - F.lit(D), F.lit(0.0))
-        + F.lit(D) * F.col("n1f3") * p2
-    ) / F.col("cctx")
-    model = (
-        tri.join(ctx3, ["u", "v"])
-        .join(t2, ["v", "tok"])
-        .join(tv, "v")
-        .join(t1, "tok")
-        .crossJoin(F.broadcast(tcnt))
-        .select("u", "v", "tok", p3.alias("__p"))
-    )
-    return (
-        tri_stream.join(model, ["u", "v", "tok"])
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_trigrams"),
-            F.round(F.exp(-F.avg(F.log("__p"))), 6).alias("perplexity"),
-        )
-    )
-
-
-def duck_kn3_perplexity_sql(
-    discount: float = 0.75, id_col: str = "doc_id", table: str = "documents"
-) -> str:
-    """DuckDB twin of ``kn_trigram_perplexity`` — same trigram-types
-    model build, same continuation-count lower orders, same fixed
-    parenthesization, same 6-dp round."""
-    from .dedup import NORM_SQL_DUCK
-
-    D = float(discount)
-    return f"""
-        WITH wl AS (
-          SELECT {id_col},
-                 list_filter(string_split({NORM_SQL_DUCK}, ' '),
-                             x -> x <> '') AS l
-          FROM {table}),
-        toks AS (
-          SELECT {id_col}, CAST(p.pos AS INT) AS pos, l[p.pos] AS tok
-          FROM wl, UNNEST(range(1, len(l) + 1)) AS p(pos)),
-        tstream AS (
-          SELECT {id_col}, u, v, tok FROM (
-            SELECT {id_col}, tok,
-                   LAG(tok, 1) OVER (PARTITION BY {id_col} ORDER BY pos)
-                     AS v,
-                   LAG(tok, 2) OVER (PARTITION BY {id_col} ORDER BY pos)
-                     AS u
-            FROM toks) WHERE u IS NOT NULL),
-        tri AS (SELECT u, v, tok, COUNT(*) AS c3
-                FROM tstream GROUP BY 1, 2, 3),
-        t2 AS (SELECT v, tok, COUNT(*) AS t2 FROM tri GROUP BY 1, 2),
-        tt AS (SELECT COUNT(*) AS t FROM t2),
-        ctx3 AS (SELECT u, v, SUM(c3) AS cctx, COUNT(*) AS n1f3
-                 FROM tri GROUP BY 1, 2),
-        tv AS (SELECT v, SUM(t2) AS tv, COUNT(*) AS nfol
-               FROM t2 GROUP BY 1),
-        t1 AS (SELECT tok, COUNT(*) AS t1 FROM t2 GROUP BY 1),
-        model AS (
-          SELECT tri.u, tri.v, tri.tok,
-                 (GREATEST(tri.c3 - {D!r}, 0.0)
-                  + {D!r} * ctx3.n1f3
-                    * ((GREATEST(t2.t2 - {D!r}, 0.0)
-                        + {D!r} * tv.nfol
-                          * (t1.t1 / CAST(tt.t AS DOUBLE)))
-                       / tv.tv))
-                 / ctx3.cctx AS p
-          FROM tri
-          JOIN ctx3 ON ctx3.u = tri.u AND ctx3.v = tri.v
-          JOIN t2 ON t2.v = tri.v AND t2.tok = tri.tok
-          JOIN tv ON tv.v = tri.v
-          JOIN t1 ON t1.tok = tri.tok
-          CROSS JOIN tt)
-        SELECT s.{id_col}, COUNT(*) AS n_trigrams,
-               ROUND(EXP(-AVG(LN(m.p))), 6) AS perplexity
-        FROM tstream s
-        JOIN model m ON m.u = s.u AND m.v = s.v AND m.tok = s.tok
-        GROUP BY 1
-    """
-
-
 def kn_ngram_perplexity(
     df: DataFrame,
     order: int = 5,
@@ -1168,25 +862,35 @@ def kn_ngram_perplexity(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Per-document perplexity under interpolated Kneser-Ney of
-    ARBITRARY order (r11 — the 5-gram-KN form modern data-quality
-    perplexity filters actually run; `kn_trigram_perplexity` is the
-    order=3 special case and the two are pinned equal in
-    tests/test_kn3.py). Chen & Goodman continuation counts all the
-    way down: the top level uses raw n-gram counts; every level
-    n < N uses t_n = the number of distinct left-extensions among
-    the level-(n+1) TYPES (t_N ≡ c_N types), so
+    """Per-document perplexity under interpolated Kneser-Ney of any
+    ``order`` ≥ 2 — the one KN operator: order 2 is the bigram model
+    KenLM ships, order 5 the form modern data-quality perplexity
+    filters run. Chen & Goodman continuation counts all the way
+    down: the top level uses raw n-gram counts; every level n < N
+    uses t_n = the number of distinct left-extensions among the
+    level-(n+1) TYPES (t_N ≡ c_N types) — how many distinct contexts
+    a word follows, not how often it occurs (the "San Francisco"
+    fix) — so
 
         P_n(w|ctx) = (max(cnt_n−D, 0) + D·N1+(ctx·)·P_{n−1}(w|ctx'))
                      / denom_n,   P_1(w) = t_1(w) / T.
 
+    Trained on the corpus being scored, so every scored position has
+    cnt_N ≥ 1 and a strictly positive probability; docs with fewer
+    than ``order`` tokens have no scored positions and are omitted.
+
     Scale shape: ONE corpus shuffle into the order-N TYPES frame;
     each lower level is a groupBy of the level above (strictly
-    shrinking, model-sided); the model is assembled by 2N−1
-    model-sized joins on the types frame and the token stream joins
-    it once on all N token columns. Docs with fewer than ``order``
-    tokens are omitted. Returns ``(id_col, n_ngrams, perplexity)``
-    with the 6-dp round."""
+    shrinking, model-sized — never a corpus-sized COUNT(DISTINCT)
+    window, which would put every "the"-position in one task); the
+    model is assembled level by level and the token stream joins it
+    once on all N token columns, broadcasting the model when its
+    measured size fits the session's broadcast threshold.
+
+    Float discipline: P_n is folded from integer counts in one fixed
+    parenthesization on both engines; the per-doc ``AVG(LN p)``
+    accumulates in engine order and the final 6-dp round absorbs it.
+    Returns ``(id_col, n_ngrams, perplexity)``."""
     if not 0.0 < discount < 1.0:
         raise ValueError(f"discount must be in (0, 1), got {discount}")
     if order < 2:
@@ -1227,7 +931,8 @@ def kn_ngram_perplexity(
     tab[N] = pin_frame(
         stream.groupBy(*gcols).agg(F.count(F.lit(1)).alias(f"cnt{N}"))
     )
-    if tab[N].isEmpty():  # cheap on the pinned frame
+    n_types = tab[N].count()  # cheap on the pinned frame
+    if n_types == 0:
         raise ValueError(
             f"kn_ngram_perplexity(order={order}): no {order}-grams in "
             "the corpus (every doc has < order tokens)"
@@ -1288,6 +993,17 @@ def kn_ngram_perplexity(
             )
         )
     model = model.select(*gcols, F.col("__p"))
+    # The pinned frame's plan leaf carries the optimizer's ESTIMATE of
+    # the plan it replaced, which is corpus-sized, so the final join
+    # would shuffle the token stream even for a model of a few KB
+    # (measured: 45 MB of stream shuffle for 23 KB of bigram types on
+    # a 10x replica of sf0.1). The model has at most n_types rows;
+    # sized at Spark's own row width (16 B + 20 B per string column)
+    # against the session's broadcast threshold, it is broadcast when
+    # it fits. A disabled threshold (-1) never fits.
+    sql_conf = df.sparkSession._jsparkSession.sessionState().conf()
+    if n_types * (16 + 20 * N) <= sql_conf.autoBroadcastJoinThreshold():
+        model = F.broadcast(model)
     return (
         stream.join(model, gcols)
         .groupBy(id_col)

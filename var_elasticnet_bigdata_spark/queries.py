@@ -438,73 +438,75 @@ def _register_perplexity_curriculum_oracle() -> None:
 _register_perplexity_curriculum_oracle()
 
 
+def _kn_query(
+    spark: SparkSession, sf_dir: str, order: int, n_col: str
+) -> DataFrame:
+    """The order-N KN operator with ``n_ngrams`` named as the query's
+    count column; ``_kn_oracle`` renames it the same way."""
+    from .operators.text import kn_ngram_perplexity
+
+    docs = load_table(spark, sf_dir, "documents")
+    return kn_ngram_perplexity(
+        docs, order=order, discount=0.75
+    ).withColumnRenamed("n_ngrams", n_col)
+
+
+def _kn_oracle(order: int, n_col: str) -> str:
+    from .operators.text import duck_kn_ngram_perplexity_sql
+
+    inner = duck_kn_ngram_perplexity_sql(order=order, discount=0.75)
+    return (
+        f"SELECT doc_id, n_ngrams AS {n_col}, perplexity FROM ({inner})"
+    )
+
+
 @query("text_kn_perplexity", None)  # oracle registered below
 def text_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated KNESER-NEY bigram perplexity
-    (`text.kn_bigram_perplexity`) — the smoothing KenLM ships, one
-    step past `text_bigram_perplexity`'s fixed-λ interpolation:
-    absolute discount with the redistributed mass weighted by
-    CONTINUATION counts (distinct contexts, not raw frequency). The
-    model is aggregated FIRST (bigram types, then context /
-    continuation stats over the model-sized types frame — never a
-    corpus-sized distinct-count window), and the token stream joins
-    the finished model once on (prev, tok). The twin replays the
-    identical aggregate-first build and P_KN parenthesization."""
-    from .operators.text import kn_bigram_perplexity
-
-    docs = load_table(spark, sf_dir, "documents")
-    return kn_bigram_perplexity(docs, discount=0.75)
+    (`text.kn_ngram_perplexity` at order 2) — the smoothing KenLM
+    ships, one step past `text_bigram_perplexity`'s fixed-λ
+    interpolation: absolute discount with the redistributed mass
+    weighted by CONTINUATION counts (distinct contexts, not raw
+    frequency). The model is aggregated FIRST (bigram types, then
+    context / continuation stats over the model-sized types frame —
+    never a corpus-sized distinct-count window), and the token
+    stream joins the finished model once on both token columns. The
+    twin is the same order's generated SQL; a hand-derived
+    micro-corpus pin lives in tests/test_text_sampling.py."""
+    return _kn_query(spark, sf_dir, 2, "n_bigrams")
 
 
-def _register_kn_perplexity_oracle() -> None:
-    from .operators.text import duck_kn_perplexity_sql
-
-    ORACLE["text_kn_perplexity"] = duck_kn_perplexity_sql(discount=0.75)
-
-
-_register_kn_perplexity_oracle()
+ORACLE["text_kn_perplexity"] = _kn_oracle(2, "n_bigrams")
 
 
 @query("text_kn3_perplexity", None)  # oracle registered below
 def text_kn3_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document perplexity under INTERPOLATED TRIGRAM Kneser-Ney
-    (`text.kn_trigram_perplexity`, r11 VERDICT r10 item 6): the
-    aggregate-first KN shape one order up — corpus pays ONE (u,v,w)
-    shuffle into the trigram TYPES frame, all lower-order statistics
-    are continuation counts derived from it (t2 = N1+(.vw), its
-    margins, T), and the token stream joins the finished model once;
-    no corpus-sized COUNT(DISTINCT) window anywhere. The twin replays
-    the full two-level interpolation with identical parenthesization;
-    a hand-derived micro-corpus pin lives in tests/test_kn3.py."""
-    from .operators.text import kn_trigram_perplexity
-
-    docs = load_table(spark, sf_dir, "documents")
-    return kn_trigram_perplexity(docs, discount=0.75)
+    (`text.kn_ngram_perplexity` at order 3): the aggregate-first KN
+    shape one order up — corpus pays ONE (u,v,w) shuffle into the
+    trigram TYPES frame, all lower-order statistics are continuation
+    counts derived from it (t2 = N1+(.vw), its margins, T), and the
+    token stream joins the finished model once; no corpus-sized
+    COUNT(DISTINCT) window anywhere. The twin is the same order's
+    generated SQL with identical parenthesization; a hand-derived
+    micro-corpus pin lives in tests/test_kn3.py."""
+    return _kn_query(spark, sf_dir, 3, "n_trigrams")
 
 
-def _register_kn3_perplexity_oracle() -> None:
-    from .operators.text import duck_kn3_perplexity_sql
-
-    ORACLE["text_kn3_perplexity"] = duck_kn3_perplexity_sql(discount=0.75)
-
-
-_register_kn3_perplexity_oracle()
+ORACLE["text_kn3_perplexity"] = _kn_oracle(3, "n_trigrams")
 
 
 @query("text_kn5_perplexity", None)  # oracle registered below
 def text_kn5_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document perplexity under 5-GRAM interpolated Kneser-Ney
-    (`text.kn_ngram_perplexity`, r11) — the order modern
+    (`text.kn_ngram_perplexity` at order 5) — the order modern
     data-quality perplexity filters actually run (CCNet/KenLM
-    lineage). Arbitrary-order generalization of the trigram build:
-    ONE corpus shuffle into the order-5 TYPES frame, each lower
-    level a strictly-shrinking groupBy of the level above
-    (continuation counts all the way down), the model assembled by
-    nine model-sized joins, the token stream joining it once on all
-    five token columns. The twin is generated programmatically for
-    the same order with the identical nested parenthesization; the
-    order=3 instance is pinned equal to the hand-written trigram
-    operator in tests/test_kn3.py."""
+    lineage): ONE corpus shuffle into the order-5 TYPES frame, each
+    lower level a strictly-shrinking groupBy of the level above
+    (continuation counts all the way down), the model assembled
+    level by level, the token stream joining it once on all five
+    token columns. The twin is generated programmatically for the
+    same order with the identical nested parenthesization."""
     from .operators.text import kn_ngram_perplexity
 
     docs = load_table(spark, sf_dir, "documents")
