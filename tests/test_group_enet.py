@@ -1,6 +1,8 @@
 """Group elastic net oracles: K=1 equivalence with the univariate
 path, group-KKT optimality, ridge closed form, row-sparsity
-structure, and the Spark fit path."""
+structure, and the Spark fit path. The path and the CV return
+``{y_col: EnetFit}`` and the VAR fits return ``EnetVARModel``, the
+elastic-net VAR's own types."""
 
 from __future__ import annotations
 
@@ -9,17 +11,18 @@ import pytest
 
 from var_elasticnet_bigdata_spark.ml.elastic_net import enet_path
 from var_elasticnet_bigdata_spark.ml.group_enet import (
-    LocalGroupEnetVAR,
     _block_cd,
     _standardize_group,
     cv_group_enet,
     fit_group_enet_var,
+    fit_group_enet_var_local,
     group_enet_path,
 )
 from var_elasticnet_bigdata_spark.ml.local import (
     fold_moments_from_numpy,
     moments_from_numpy,
 )
+from var_elasticnet_bigdata_spark.ml.var_model import EnetVARModel
 
 
 def make_problem(seed=0, n=200, k=6, K=3, group_sparse=True):
@@ -49,9 +52,9 @@ def test_k1_reduces_to_univariate_enet():
         g = group_enet_path(
             m, xc, yc, alpha=alpha, standardize_response=False, nlambda=30,
             tol=1e-14,
-        )
+        )[yc[0]]
         u = enet_path(m, xc, yc, alpha=alpha, lambdas=g.lambdas)[yc[0]]
-        assert g.coefs[:, 0, :] == pytest.approx(u.coefs, abs=1e-8)
+        assert g.coefs == pytest.approx(u.coefs, abs=1e-8)
 
 
 def test_group_ridge_closed_form():
@@ -86,8 +89,8 @@ def test_group_kkt_conditions():
 def test_row_group_sparsity():
     X, Y, Btrue = make_problem(seed=3)
     m, names = _moments(X, Y)
-    fit = group_enet_path(m, names[:6], names[6:], alpha=0.9, nlambda=50)
-    mid = fit.coefs[:, :, 20]
+    fits = group_enet_path(m, names[:6], names[6:], alpha=0.9, nlambda=50)
+    mid = np.column_stack([fits[yc].coefs[:, 20] for yc in names[6:]])
     row_norms = np.linalg.norm(mid, axis=1)
     # sparsity is row-structured: a zero row is zero across ALL responses
     zero_rows = row_norms == 0
@@ -101,10 +104,17 @@ def test_cv_recovers_signal_and_predict():
     data = np.column_stack([X, Y])
     names = [f"x{i}" for i in range(6)] + [f"y{i}" for i in range(3)]
     fm = fold_moments_from_numpy(data, names, np.arange(300) // 30)
-    fit = cv_group_enet(fm, names[:6], names[6:], alpha=0.5)
-    B, a0 = fit.coef_at(fit.lambda_min)
+    fits = cv_group_enet(fm, names[:6], names[6:], alpha=0.5)
+    # one shared λ sequence and one λ.min for every response
+    lam = fits["y0"].lambda_min
+    for fit in fits.values():
+        assert fit.lambda_min == lam
+        assert np.array_equal(fit.lambdas, fits["y0"].lambdas)
+    B = np.column_stack([fits[yc].coef_at(lam)[0] for yc in names[6:]])
     assert B == pytest.approx(Btrue, abs=0.1)
-    assert fit.cv_mean is not None and np.isfinite(fit.cv_mean).all()
+    cv_mean = fits["y0"].cv_mean
+    assert cv_mean is not None and np.isfinite(cv_mean).all()
+    assert lam == fits["y0"].lambdas[int(np.argmin(cv_mean))]
 
 
 def test_local_group_var_recursive_predict():
@@ -114,7 +124,9 @@ def test_local_group_var_recursive_predict():
     for t in range(1, T):
         y[t, 0] = 0.5 * y[t - 1, 0] + 0.3 * y[t - 1, 1] + rng.normal(scale=0.2)
         y[t, 1] = 0.4 * y[t - 1, 1] + rng.normal(scale=0.2)
-    m = LocalGroupEnetVAR(y, ["a", "b"], p=1, alpha=0.4)
+    m = fit_group_enet_var_local(y, ["a", "b"], p=1, alpha=0.4)
+    assert isinstance(m, EnetVARModel)
+    assert m.lambda_used["a"] == m.lambda_used["b"] == m.fits["a"].lambda_min
     B = m.coef_matrix()
     got = m.predict(3)
     hist = y.copy()
@@ -143,11 +155,12 @@ def test_spark_group_fit_matches_local(spark):
             "obs_date date, a double, b double",
         )
         dist = fit_group_enet_var(wide, ["a", "b"], p=1, alpha=0.4)
-        local = LocalGroupEnetVAR(mat, ["a", "b"], p=1, alpha=0.4)
-        assert dist.lambda_min == pytest.approx(local.fit.lambda_min, rel=1e-9)
-        Bd, _ = dist.coef_at(dist.lambda_min)
-        Bl, _ = local.fit.coef_at(local.fit.lambda_min)
-        assert Bd == pytest.approx(Bl, abs=1e-8)
+        local = fit_group_enet_var_local(mat, ["a", "b"], p=1, alpha=0.4)
+        assert isinstance(dist, EnetVARModel) and isinstance(local, EnetVARModel)
+        assert dist.t_rows == local.t_rows == (T - 1 if mat is y else T - 4)
+        assert dist.lambda_used == pytest.approx(local.lambda_used, rel=1e-9)
+        assert dist.coef_matrix() == pytest.approx(local.coef_matrix(), abs=1e-8)
+        assert dist.predict(3) == pytest.approx(local.predict(3), abs=1e-8)
 
 
 def test_block_cd_fixed_converges_to_block_cd():

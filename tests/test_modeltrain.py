@@ -19,6 +19,7 @@ from var_elasticnet_bigdata_spark.harness.modeltrain import (
     modeltrain,
     theils_u_ar1,
 )
+from var_elasticnet_bigdata_spark.ml.group_enet import fit_group_enet_var_local
 from var_elasticnet_bigdata_spark.ml.local import LocalAR1
 from var_elasticnet_bigdata_spark.ml.var_model import fit_enet_var_local
 
@@ -107,6 +108,32 @@ def test_enet_harness_matches_numpy_replication(spark):
     for r, p in enumerate([1, 2, 4, 8]):
         e = err[r, list(ind[p])]
         assert res.msfe[p] == pytest.approx(float(np.mean(e**2)), rel=1e-8)
+
+
+def test_genet_harness_forecasts_equal_direct_group_fits(spark):
+    """``modeltrain(method="genet")``: every origin's forecasts are a
+    direct ``fit_group_enet_var_local(...).predict(h)`` on that
+    origin's training slice (target series, the h*.ind horizons)."""
+    rng = np.random.default_rng(11)
+    T = 50
+    y = np.zeros((T, 2))
+    for t in range(1, T):
+        y[t, 0] = 0.5 * y[t - 1, 0] + 0.2 * y[t - 1, 1] + rng.normal(scale=0.3)
+        y[t, 1] = 0.4 * y[t - 1, 1] + rng.normal(scale=0.3)
+    wide, dates = make_wide(spark, y, ["a", "b"])
+    h = 8
+    res = modeltrain(
+        spark, wide, ["a", "b"], start_pred=dates[40], h=h, method="genet",
+        alpha=0.4, lag=1, with_ar1=False,
+    )
+    fc = res.forecasts.select("origin_idx", "horizon", "yhat").toPandas()
+    assert sorted(set(fc.origin_idx)) == list(range(40 - h, T - 1))
+    for o, g in fc.groupby("origin_idx"):
+        want = fit_group_enet_var_local(
+            y[: o + 1], ["a", "b"], p=1, alpha=0.4
+        ).predict(h)[:, 0]
+        for hz, yhat in zip(g.horizon, g.yhat):
+            assert yhat == pytest.approx(want[hz - 1], rel=1e-12, abs=1e-12)
 
 
 def test_forecast_table_shape_and_alignment(spark):

@@ -214,3 +214,69 @@ def test_spark_fit_matches_numpy_fit(spark):
             assert d.coef_matrix() == pytest.approx(n.coef_matrix(), rel=0, abs=1e-10)
             assert d.predict(4) == pytest.approx(n.predict(4), rel=0, abs=1e-10)
             assert d.inf_crit() == pytest.approx(n.inf_crit(), rel=1e-10, abs=1e-10)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under Spark job group ``group``; return its result
+    and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cv_fit_folds_cost_no_spark_job(spark):
+    """A cross-validated ``fit_enet_var`` runs the moments pass and the
+    tail collect and nothing else: the blocked folds are a window over
+    the lag embedding's own single sorted partition, so the CV fit
+    runs as many Spark jobs as the fixed-λ fit (3; a date-axis collect
+    for the folds made it 6)."""
+    y, _ = simulate_var1(T=80, seed=9)
+    wide = to_wide(spark, y)
+    series = ["y1", "y2", "y3"]
+    _, cv_jobs = _jobs_in_group(
+        spark, "cv-fit", lambda: fit_enet_var(wide, series, p=2)
+    )
+    _, fixed_jobs = _jobs_in_group(
+        spark, "fixed-fit", lambda: fit_enet_var(wide, series, p=2, lam=0.05)
+    )
+    assert cv_jobs == fixed_jobs == 3
+
+
+def test_spark_folds_equal_blocked_fold_ids(spark):
+    """``gram.blocked_fold_column`` on the ``na.omit`` frame numbers
+    the i-th remaining date ``i // block`` — ``blocked_fold_ids`` on
+    the numpy design — when a series starts late; a row with a NULL
+    date takes no rank and drops."""
+    from var_elasticnet_bigdata_spark.ml.elastic_net import blocked_fold_ids
+    from var_elasticnet_bigdata_spark.ml.gram import blocked_fold_column
+    from var_elasticnet_bigdata_spark.ml.local import var_design
+    from var_elasticnet_bigdata_spark.operators.lag_embed import var_z
+
+    y, _ = simulate_var1(T=47, seed=10)
+    y[:5, 2] = np.nan
+    series = ["y1", "y2", "y3"]
+    wide = spark.createDataFrame(
+        [
+            (dt.date(2000, 1, 1) + dt.timedelta(days=7 * i),
+             *(None if np.isnan(v) else float(v) for v in row))
+            for i, row in enumerate(y)
+        ],
+        "obs_date date, y1 double, y2 double, y3 double",
+    )
+    complete = var_z(wide, series, 2).complete
+    null_date = spark.createDataFrame(
+        [(None, *([1.0] * 9))], complete.schema
+    )
+    got = (
+        blocked_fold_column(complete.unionByName(null_date), block=10)
+        .select("obs_date", "__fold")
+        .toPandas()
+        .sort_values("obs_date")
+    )
+    data, _ = var_design(y, series, 2)
+    assert len(got) == len(data) == 47 - 2 - 5
+    assert got["__fold"].tolist() == blocked_fold_ids(len(data), 10).tolist()

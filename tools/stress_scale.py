@@ -8,6 +8,10 @@ ids — deliberately a heavy-duplication stress: each doc gains K−1
 exact copies, so near-dup operators see a quadratic-in-K pair load on
 top of the K× scan load. Dimension/fact tables are copied unchanged.
 
+Each scale starts with ``tools.retime.warmup_session``; each query then
+runs once untimed before its timed run, and its shuffle-bytes window
+opens after that warm run.
+
     python tools/stress_scale.py            # K=10, family below
     python tools/stress_scale.py 4          # K=4
     python tools/stress_scale.py 10 text_lang_id dedup_simhash
@@ -108,39 +112,35 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from tools.retime import warmup_session
     from tools.spark_metrics import shuffle_totals
 
     bytes_at: dict[str, dict[str, dict[str, int]]] = {}
 
+    def sink(name: str, sf_dir: str) -> None:
+        Q.QUERIES[name](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        spark.catalog.clearCache()
+
     def run(sf_dir: str) -> dict[str, float]:
-        # warm Arrow worker pools + table page cache, untimed
-        spark.createDataFrame([(1,)], "x int").mapInPandas(
-            lambda it: it, "x int"
-        ).count()
-        tiny = spark.createDataFrame([(1, 1.0)], "k int, v double")
-        tiny.groupBy("k").cogroup(tiny.groupBy("k")).applyInPandas(
-            lambda a, b: a, "k int, v double"
-        ).count()
-        for t in ("documents", "embeddings"):
-            load_table(spark, sf_dir, t).write.format("noop").mode(
-                "overwrite"
-            ).save()
+        warmup_session(spark, sf_dir)
         out: dict[str, float] = {}
         by: dict[str, dict[str, int]] = {}
         bytes_at[sf_dir] = by
-        cur = shuffle_totals(spark)
-        last_stage = cur["max_stage_id"] if cur else -1
         for name in family:
+            # one untimed run per query, so no query is timed cold
+            # (JIT/codegen and Python workers for THIS plan shape) and
+            # the order of the family does not move its figures
+            sink(name, sf_dir)
+            cur = shuffle_totals(spark)
+            last_stage = cur["max_stage_id"] if cur else -1
             t0 = time.time()
-            Q.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            sink(name, sf_dir)
             out[name] = round(time.time() - t0, 2)
             tot = shuffle_totals(spark, after_stage_id=last_stage)
             if tot is not None:
                 by[name] = {"read": tot["read"], "write": tot["write"]}
-                last_stage = tot["max_stage_id"]
-            spark.catalog.clearCache()
         return out
 
     base = run(SRC)

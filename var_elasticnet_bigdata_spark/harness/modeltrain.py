@@ -47,6 +47,7 @@ Semantics replicated from the reference:
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import dataclass
 
@@ -322,21 +323,19 @@ def _fit_predict(
 ):
     """``(y_matrix) -> (h, K) or (h,)`` forecasts for one origin:
     'enet' (``ml.var_model.fit_enet_var_local``), 'genet'
-    (``ml.group_enet.LocalGroupEnetVAR``) or 'ar1' (``ml.local.LocalAR1``)."""
-    if method == "enet":
+    (``ml.group_enet.fit_group_enet_var_local``, CV only: ``lam`` is
+    not used) or 'ar1' (``ml.local.LocalAR1``)."""
+    if method in ("enet", "genet"):
+        from ..ml.group_enet import fit_group_enet_var_local
         from ..ml.var_model import fit_enet_var_local
 
-        def fit_predict(mat: np.ndarray) -> np.ndarray:
-            m = fit_enet_var_local(
-                mat, series, p=lag, alpha=alpha, lam=lam, intercept=const
-            )
-            return m.predict(h)
-    elif method == "genet":
-        from ..ml.group_enet import LocalGroupEnetVAR
+        fit = (
+            functools.partial(fit_enet_var_local, lam=lam)
+            if method == "enet" else fit_group_enet_var_local
+        )
 
         def fit_predict(mat: np.ndarray) -> np.ndarray:
-            m = LocalGroupEnetVAR(mat, series, p=lag, alpha=alpha, intercept=const)
-            return m.predict(h)
+            return fit(mat, series, p=lag, alpha=alpha, intercept=const).predict(h)
     elif method == "ar1":
         from ..ml.local import LocalAR1
 
@@ -366,7 +365,8 @@ def modeltrain(
 ) -> ModeltrainResult:
     """The OOS experiment (E1). ``method``: 'enet'
     (``ml.var_model.fit_enet_var_local``), 'genet'
-    (``ml.group_enet.LocalGroupEnetVAR``) or 'ar1' (``ml.local.LocalAR1``).
+    (``ml.group_enet.fit_group_enet_var_local``) or 'ar1'
+    (``ml.local.LocalAR1``).
     ``rw_mode``: 'fixed' | 'faithful' (quirk Q3).
     ``step`` > 1 is an engine extension (the reference always steps
     by one origin): the MSFE numerator runs over the aligned target

@@ -429,6 +429,50 @@ def enet_path(
     }
 
 
+def _heldout_mse(
+    fold_moments: dict[int, Moments],
+    total: Moments,
+    x_cols: list[str],
+    y_cols: list[str],
+    fit_train,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The CV fold loop both penalties share: for each fold (in fold
+    order) ``fit_train(total − fold)`` returns ``{y_col: EnetFit}`` on
+    the full fit's λ sequence, and every equation's held-out MSE at
+    every λ is computed exactly from the fold's own moment matrix:
+
+        MSE_f(b) = (1/n_f)·(y'y − 2·b'X'y + b'X'X b) over fold f
+
+    (with the intercept folded in via the constant column). Returns
+    ``errs`` (nfolds, nlambda, K) and the fold sizes."""
+    errs, w = [], []  # per-fold MSE (nlambda, K), fold sizes
+    for _, fm in sorted(fold_moments.items()):
+        folds = fit_train(total.minus(fm))
+        fc = np.stack([folds[yc].coefs for yc in y_cols], axis=1)
+        fi0 = np.stack([folds[yc].intercepts for yc in y_cols])
+        n_f = fm.n
+        w.append(n_f)
+        Sxx = fm.cross(x_cols, x_cols)
+        Sxy = fm.cross(x_cols, y_cols)
+        syy = fm.cross(y_cols, y_cols).diagonal()
+        sx = fm.sums(x_cols)
+        sy = fm.sums(y_cols)
+        e = np.zeros((fc.shape[2], len(y_cols)))
+        for li in range(len(e)):
+            Bl = fc[:, :, li]  # (k, K)
+            a0 = fi0[:, li]
+            sse = (
+                syy
+                - 2.0 * np.sum(Bl * Sxy, axis=0)
+                + np.sum(Bl * (Sxx @ Bl), axis=0)
+                + n_f * a0**2
+                + 2.0 * a0 * (Bl.T @ sx - sy)
+            )
+            e[li] = sse / n_f
+        errs.append(e)
+    return np.stack(errs), np.array(w, dtype=float)
+
+
 def cv_enet(
     fold_moments: dict[int, Moments],
     x_cols: list[str],
@@ -440,11 +484,8 @@ def cv_enet(
 ) -> dict[str, EnetFit]:
     """cv.glmnet for every equation from per-fold moments: ONE
     distributed pass gave {fold → moments}; each fold's held-out MSE
-    is computed exactly from its own moment matrix:
-
-        MSE_f(b) = (1/n_f)·(y'y − 2·b'X'y + b'X'X b) over fold f
-
-    (with the intercept folded in via the constant column). Mirrors
+    is computed exactly from its own moment matrix
+    (``_heldout_mse``). Mirrors
     the reference's blocked-fold cv.glmnet (enetVAR.R:27-35) with
     ``lambda.min`` selection (and glmnet's ``lambda.1se`` in
     ``extras``).
@@ -463,35 +504,12 @@ def cv_enet(
         truncate=truncate,
     )
     lams = np.column_stack([fits[yc].lambdas for yc in y_cols])
-    nl, K = lams.shape
-    nfolds = len(fold_moments)
-    errs = np.zeros((nfolds, nl, K))  # per-fold MSE
-    w = np.zeros(nfolds)  # fold sizes
-    for fi, (_, fm) in enumerate(sorted(fold_moments.items())):
-        folds = enet_path(
-            total.minus(fm), x_cols, y_cols, alpha, lams, intercept,
-            truncate=truncate,
-        )
-        fc = np.stack([folds[yc].coefs for yc in y_cols], axis=1)
-        fi0 = np.stack([folds[yc].intercepts for yc in y_cols])
-        n_f = fm.n
-        w[fi] = n_f
-        Sxx = fm.cross(x_cols, x_cols)
-        Sxy = fm.cross(x_cols, y_cols)
-        syy = fm.cross(y_cols, y_cols).diagonal()
-        sx = fm.sums(x_cols)
-        sy = fm.sums(y_cols)
-        for li in range(nl):
-            Bl = fc[:, :, li]  # (k, K)
-            a0 = fi0[:, li]
-            sse = (
-                syy
-                - 2.0 * np.sum(Bl * Sxy, axis=0)
-                + np.sum(Bl * (Sxx @ Bl), axis=0)
-                + n_f * a0**2
-                + 2.0 * a0 * (Bl.T @ sx - sy)
-            )
-            errs[fi, li] = sse / n_f
+    errs, w = _heldout_mse(
+        fold_moments, total, x_cols, y_cols,
+        lambda train: enet_path(
+            train, x_cols, y_cols, alpha, lams, intercept, truncate=truncate,
+        ),
+    )
     # cv.glmnet (grouped=TRUE): cvm = fold-size-weighted mean of the
     # per-fold MSEs — the pooled per-observation mean, NOT the
     # unweighted mean of fold means (which over-weights the short
@@ -501,7 +519,7 @@ def cv_enet(
     # cvsd (glmnet cvstats): weighted sd of fold MSEs over nfolds−1
     cv_sd = np.sqrt(
         np.tensordot(wn, (errs - cv_mean[None, :, :]) ** 2, axes=1)
-        / max(nfolds - 1, 1)
+        / max(len(w) - 1, 1)
     )
     for j, yc in enumerate(y_cols):
         fit = fits[yc]

@@ -22,7 +22,8 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
 from ..operators.lag_embed import VarZ, var_z
 
@@ -71,7 +72,6 @@ def compute_moments(
     (Main.R:196): any row with a NULL in ``cols`` is excluded, pushed
     down as IsNotNull filters before the scan.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -150,38 +150,25 @@ def blocked_fold_column(
     block: int = 10,
     col_name: str = "__fold",
 ) -> DataFrame:
-    """Attach contiguous time-blocked fold ids (M3, enetVAR.R:27-35)
-    WITHOUT collapsing the frame to one partition.
+    """Attach contiguous time-blocked fold ids (M3, enetVAR.R:27-35):
+    ``fold = (dense_rank() OVER (ORDER BY date) − 1) div block``, so
+    the i-th distinct date (0-based) is in fold ``i // block`` — the
+    twin of ``elastic_net.blocked_fold_ids``. Rows with a NULL date
+    drop and take no rank.
 
-    A global ``row_number().over(Window.orderBy(date))`` would move
-    every row to a single partition — serializing the distributed
-    moment pass that follows. The time axis itself is small (it never
-    grows with data volume, only with history length), so: collect the
-    distinct dates, assign ``fold = rank // block`` on the driver, and
-    broadcast-join the date→fold map back. The frame keeps its
-    partitioning; the join is a broadcast hash join, no shuffle.
+    The window is global, but ``var_moments`` applies it to
+    ``VarZ.complete``, whose lag window (``var_z``: no partition key,
+    ordered by date) has already put the frame on one partition,
+    sorted by date. The fold window reuses that partitioning and
+    order, so it adds no Exchange, no Sort and no Spark job; a
+    date-axis collect joined back to the frame would cost an extra
+    aggregation round per fit. On a frame not yet ordered by date the
+    window moves every row to one partition.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    dates = [
-        r[0] for r in frame.select(date_col).distinct().orderBy(date_col).collect()
-    ]
-    date_type = frame.schema[date_col].dataType
-    spark = frame.sparkSession
-    from ..sources.tables import local_frame
-
-    map_df = local_frame(
-        spark,
-        [(d, i // block) for i, d in enumerate(dates)],
-        StructType(
-            [
-                StructField(date_col, date_type),
-                StructField(col_name, IntegerType()),
-            ]
-        ),
+    rank = F.dense_rank().over(Window.orderBy(date_col))
+    return frame.filter(F.col(date_col).isNotNull()).withColumn(
+        col_name, ((rank - 1) / block).cast("int")
     )
-    return frame.join(F.broadcast(map_df), on=date_col, how="inner")
 
 
 def var_moments(

@@ -23,43 +23,22 @@ Everything runs on the same one-pass Gram aggregation as the
 univariate path (ml/gram.py) — exact at any data scale. For K=1 the
 group penalty degenerates to the univariate elastic net, which the
 tests exploit as an equivalence oracle.
+
+Only the penalty is the group model's own (SURVEY M8): the path
+returns ``{y_col: EnetFit}`` like ``elastic_net.enet_path``, the CV
+scores its folds with ``cv_enet``'s loop, and the VAR fits
+(``fit_group_enet_var`` on Spark, ``fit_group_enet_var_local`` on
+numpy) return the same ``EnetVARModel`` through the same design,
+λ step, ``coef_matrix`` and ``predict`` as the elastic-net VAR.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 
-from .elastic_net import blocked_fold_ids, standardize
+from .elastic_net import EnetFit, _heldout_mse, standardize
 from .gram import Moments, moments_total, var_moments
-from .local import fold_moments_from_numpy, recursive_forecast, var_design
-
-
-@dataclass
-class GroupEnetFit:
-    x_cols: list[str]
-    y_cols: list[str]
-    alpha: float
-    lambdas: np.ndarray
-    coefs: np.ndarray  # (k, K, nlambda) original scale
-    intercepts: np.ndarray  # (K, nlambda)
-    cv_mean: np.ndarray | None = None
-    lambda_min: float | None = None
-
-    def coef_at(self, lam: float) -> tuple[np.ndarray, np.ndarray]:
-        ls = self.lambdas
-        if lam >= ls[0]:
-            i0, i1, w = 0, 0, 1.0
-        elif lam <= ls[-1]:
-            i0, i1, w = len(ls) - 1, len(ls) - 1, 1.0
-        else:
-            i = int(np.searchsorted(-ls, -lam, side="left"))
-            i0, i1 = i - 1, i
-            w = (lam - ls[i1]) / (ls[i0] - ls[i1])
-        B = w * self.coefs[:, :, i0] + (1 - w) * self.coefs[:, :, i1]
-        a0 = w * self.intercepts[:, i0] + (1 - w) * self.intercepts[:, i1]
-        return B, a0
+from .var_model import EnetVARModel, fit_enet_var, fit_enet_var_local
 
 
 def _standardize_group(moments: Moments, x_cols, y_cols, intercept,
@@ -76,17 +55,6 @@ def _standardize_group(moments: Moments, x_cols, y_cols, intercept,
     )
     yscale = np.where(yscale <= 0, 1.0, yscale)
     return xtx_n, xty_n / yscale[None, :], mx, my, xscale, yscale
-
-
-def group_lambda_path(xty_n: np.ndarray, alpha: float, nlambda: int,
-                      lambda_min_ratio: float) -> np.ndarray:
-    a = max(alpha, 1e-3)
-    lmax = float(np.max(np.linalg.norm(xty_n, axis=1))) / a
-    if lmax <= 0:
-        lmax = 1.0
-    return np.exp(
-        np.linspace(np.log(lmax), np.log(lmax * lambda_min_ratio), nlambda)
-    )
 
 
 def _block_cd(xtx_n, xty_n, alpha, lam, B0=None, tol=1e-7, max_iter=10_000):
@@ -149,14 +117,21 @@ def group_enet_path(
     standardize_response: bool = True,
     nlambda: int = 100,
     tol: float = 1e-7,
-) -> GroupEnetFit:
+) -> dict[str, EnetFit]:
+    """Warm-started mgaussian λ path; returns ``{y_col: EnetFit}``,
+    one view per response over the ONE shared λ sequence (the group
+    penalty couples the responses, so every view is cut from the same
+    block-CD solution at each λ)."""
     xtx_n, xty_n, mx, my, xscale, yscale = _standardize_group(
         moments, x_cols, y_cols, intercept, standardize_response
     )
     k, K = xty_n.shape
     if lambdas is None:
+        # glmnet's mgaussian path: λ_max zeroes every row of B
         ratio = 1e-2 if moments.n < k else 1e-4
-        lambdas = group_lambda_path(xty_n, alpha, nlambda, ratio)
+        lmax = float(np.max(np.linalg.norm(xty_n, axis=1))) / max(alpha, 1e-3)
+        lmax = lmax if lmax > 0 else 1.0
+        lambdas = np.exp(np.linspace(np.log(lmax), np.log(lmax * ratio), nlambda))
     lambdas = np.asarray(sorted(lambdas, reverse=True), dtype=float)
     coefs = np.zeros((k, K, len(lambdas)))
     intercepts = np.zeros((K, len(lambdas)))
@@ -168,14 +143,18 @@ def group_enet_path(
         coefs[:, :, i] = Borig
         if intercept:
             intercepts[:, i] = my - Borig.T @ mx
-    return GroupEnetFit(
-        x_cols=list(x_cols),
-        y_cols=list(y_cols),
-        alpha=alpha,
-        lambdas=lambdas,
-        coefs=coefs,
-        intercepts=intercepts,
-    )
+    return {
+        yc: EnetFit(
+            x_cols=list(x_cols),
+            y_col=yc,
+            alpha=float(alpha),
+            lambdas=lambdas,
+            coefs=coefs[:, j, :],
+            intercepts=intercepts[j],
+            n_fit=len(lambdas),
+        )
+        for j, yc in enumerate(y_cols)
+    }
 
 
 def cv_group_enet(
@@ -186,85 +165,33 @@ def cv_group_enet(
     intercept: bool = False,
     nlambda: int = 100,
     tol: float = 1e-7,
-) -> GroupEnetFit:
-    """cv.glmnet mgaussian: held-out total MSE (summed over the K
-    responses, original scale) from per-fold moments; λ.min."""
+) -> dict[str, EnetFit]:
+    """cv.glmnet mgaussian from per-fold moments: the held-out MSE of
+    every response (original scale) comes from ``cv_enet``'s fold
+    loop (``elastic_net._heldout_mse``) and is summed over the K
+    responses; the one λ.min of that total is every view's
+    ``lambda_min``, and ``cv_mean`` is the summed curve."""
     total = moments_total(fold_moments)
-    full = group_enet_path(
+    fits = group_enet_path(
         total, x_cols, y_cols, alpha=alpha, intercept=intercept,
         nlambda=nlambda, tol=tol,
     )
-    nfolds = len(fold_moments)
-    errs = np.zeros((nfolds, len(full.lambdas)))
-    w = np.zeros(nfolds)
-    for fi, (fold, fm) in enumerate(sorted(fold_moments.items())):
-        train = total.minus(fm)
-        fit = group_enet_path(
-            train, x_cols, y_cols, alpha=alpha, lambdas=full.lambdas,
+    lambdas = fits[y_cols[0]].lambdas
+    errs, w = _heldout_mse(
+        fold_moments, total, x_cols, y_cols,
+        lambda train: group_enet_path(
+            train, x_cols, y_cols, alpha=alpha, lambdas=lambdas,
             intercept=intercept, tol=tol,
-        )
-        n_f = fm.n
-        w[fi] = n_f
-        Sxx = fm.cross(x_cols, x_cols)
-        Sxy = fm.cross(x_cols, y_cols)
-        Syy = fm.cross(y_cols, y_cols)
-        sx = fm.sums(x_cols)
-        sy = fm.sums(y_cols)
-        for li in range(len(full.lambdas)):
-            B = fit.coefs[:, :, li]
-            a0 = fit.intercepts[:, li]
-            sse = (
-                np.trace(Syy)
-                - 2.0 * np.sum(B * Sxy)
-                + np.trace(B.T @ Sxx @ B)
-                + n_f * float(a0 @ a0)
-                + 2.0 * float(a0 @ (B.T @ sx - sy))
-            )
-            errs[fi, li] = sse / n_f
+        ),
+    )
     # cv.glmnet (grouped=TRUE): pooled per-observation mean — fold-
     # size-weighted, not the unweighted mean of fold means.
-    full.cv_mean = (w / w.sum()) @ errs
-    full.lambda_min = float(full.lambdas[int(np.argmin(full.cv_mean))])
-    return full
-
-
-class LocalGroupEnetVAR:
-    """GroupEnetVAR on a numpy matrix (harness worker / driver use):
-    blocked folds, λ.min, recursive prediction — mirrors
-    enetVAR.R:344-421."""
-
-    def __init__(
-        self,
-        y: np.ndarray,
-        series: list[str],
-        p: int,
-        alpha: float = 0.4,
-        intercept: bool = False,
-        cv_block: int = 10,
-    ) -> None:
-        self.series = list(series)
-        self.p = p
-        self.intercept = intercept
-        self.y = y
-        data, self.z_names = var_design(y, series, p)
-        fm = fold_moments_from_numpy(
-            data, self.z_names + self.series, blocked_fold_ids(len(data), cv_block)
-        )
-        self.fit = cv_group_enet(
-            fm, self.z_names, self.series, alpha=alpha, intercept=intercept
-        )
-
-    def coef_matrix(self) -> np.ndarray:
-        B, a0 = self.fit.coef_at(self.fit.lambda_min)
-        if self.intercept:
-            return np.vstack([a0[None, :], B])
-        return B
-
-    def predict(self, n_ahead: int = 1) -> np.ndarray:
-        hist = self.y[~np.isnan(self.y).any(axis=1)]
-        return recursive_forecast(
-            self.coef_matrix(), hist, self.p, self.intercept, n_ahead
-        )
+    cv_mean = (w / w.sum()) @ errs.sum(axis=2)
+    lambda_min = float(lambdas[int(np.argmin(cv_mean))])
+    for fit in fits.values():
+        fit.cv_mean = cv_mean
+        fit.lambda_min = lambda_min
+    return fits
 
 
 def fit_group_enet_var(
@@ -275,11 +202,31 @@ def fit_group_enet_var(
     intercept: bool = False,
     date_col: str = "obs_date",
     cv_block: int = 10,
-):
-    """Spark entry: distributed per-fold Gram pass → driver-side
-    group coordinate descent (same shape as fit_enet_var)."""
-    vz, fm = var_moments(wide_df, series, p, date_col, cv_block)
-    return cv_group_enet(fm, vz.z_names, series, alpha=alpha, intercept=intercept)
+) -> EnetVARModel:
+    """The reference's ``GroupEnetVAR`` (enetVAR.R:344-421) from a
+    WIDE Spark DataFrame: ``fit_enet_var``'s Spark body (one
+    distributed per-fold Gram pass, tail collect) and λ step with
+    ``cv_group_enet`` as the CV."""
+    return fit_enet_var(
+        wide_df, series, p, alpha, None, intercept, date_col, cv_block,
+        _cv=cv_group_enet,
+    )
+
+
+def fit_group_enet_var_local(
+    y: np.ndarray,
+    series: list[str],
+    p: int,
+    alpha: float = 0.4,
+    intercept: bool = False,
+    cv_block: int = 10,
+) -> EnetVARModel:
+    """``fit_group_enet_var`` on a numpy (T, K) matrix (NaN =
+    missing): ``fit_enet_var_local``'s body with ``cv_group_enet`` as
+    the CV."""
+    return fit_enet_var_local(
+        y, series, p, alpha, None, intercept, cv_block, _cv=cv_group_enet,
+    )
 
 
 def block_cd_fixed(

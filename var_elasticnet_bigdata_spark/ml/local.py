@@ -10,10 +10,9 @@ it's post-aggregation), so the fit runs locally.
   ``compute_moments``;
 - ``recursive_forecast``: the one h-step VAR forecast loop.
 
-The elastic-net VAR fit on a matrix is
-``ml.var_model.fit_enet_var_local``, which returns the same
-``EnetVARModel`` as the Spark fit; the group fit is
-``ml.group_enet.LocalGroupEnetVAR``. One code path, two data sources
+The VAR fits on a matrix are ``ml.var_model.fit_enet_var_local`` and
+``ml.group_enet.fit_group_enet_var_local``; both return the same
+``EnetVARModel`` as the Spark fits. One code path, two data sources
 (SURVEY §3.2 Plan B).
 """
 

@@ -70,7 +70,10 @@ def heuristic_lag_bounds(k_series: int) -> tuple[int, int]:
 
 @dataclass
 class EnetVARModel:
-    """Fitted multi-equation elastic-net VAR."""
+    """Fitted multi-equation VAR, for both penalties: the
+    elastic-net fits (``fit_enet_var``, ``fit_enet_var_local``) and
+    the group fits (``group_enet.fit_group_enet_var``,
+    ``fit_group_enet_var_local``) return it."""
 
     series: list[str]
     p: int
@@ -167,15 +170,18 @@ def _fit_model(
     nlambda: int = 100,
     lambda_rule: str = "min",
     varz: VarZ | None = None,
+    _cv=cv_enet,
 ) -> EnetVARModel:
-    """The λ step both fits share, on moments whose response columns
-    are ``series``: blocked-fold CV (``moments`` per fold, λ.min or
-    λ.1se) when ``lam`` is None, else the reference's fixed path
-    ``seq(2λ, λ/2, len 10)`` per equation (enetVAR.R:24-35)."""
+    """The λ step every VAR fit shares, on moments whose response
+    columns are ``series``: blocked-fold CV (``moments`` per fold,
+    λ.min or λ.1se) when ``lam`` is None, else the reference's fixed
+    path ``seq(2λ, λ/2, len 10)`` per equation (enetVAR.R:24-35).
+    ``_cv`` is the CV: ``cv_enet``, or ``group_enet.cv_group_enet``
+    for the group model (one shared λ.min)."""
     K = len(series)
     alphas = np.full(K, alpha, dtype=float)
     if lam is None:
-        fits = cv_enet(moments, z_cols, series, alphas, intercept, nlambda)
+        fits = _cv(moments, z_cols, series, alpha, intercept, nlambda)
         lambda_used = {
             s: float(f.extras["lambda_1se"] if lambda_rule == "1se" else f.lambda_min)
             for s, f in fits.items()
@@ -213,6 +219,7 @@ def fit_enet_var(
     date_col: str = "obs_date",
     cv_block: int = 10,
     nlambda: int = 100,
+    _cv=cv_enet,
 ) -> EnetVARModel:
     """Fit from a WIDE Spark DataFrame. One distributed moment pass
     (per CV fold when λ is cross-validated; the fixed-λ path skips
@@ -237,7 +244,7 @@ def fit_enet_var(
     last_rows = np.array([[r[s] for s in series] for r in tail], dtype=float)
     return _fit_model(
         moments, vz.z_names, series, p, alpha, lam, intercept, last_rows,
-        nlambda, varz=vz,
+        nlambda, varz=vz, _cv=_cv,
     )
 
 
@@ -250,6 +257,7 @@ def fit_enet_var_local(
     intercept: bool = False,
     cv_block: int = 10,
     lambda_rule: str = "min",
+    _cv=cv_enet,
 ) -> EnetVARModel:
     """``fit_enet_var`` on a numpy (T, K) matrix (rows = time points,
     NaN = missing): the same design, λ step and model, from
@@ -266,7 +274,7 @@ def fit_enet_var_local(
     hist = y[~np.isnan(y).any(axis=1)]
     return _fit_model(
         moments, z_cols, series, p, alpha, lam, intercept, hist[-p:],
-        lambda_rule=lambda_rule,
+        lambda_rule=lambda_rule, _cv=_cv,
     )
 
 

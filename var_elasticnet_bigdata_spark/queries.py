@@ -4389,19 +4389,15 @@ def ml_group_ridge_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
     p, lam = 2, 0.05
     vz, m = var_moments(wide, series, p)
     z_cols = vz.z_names
-    fit = group_enet_path(
+    fits = group_enet_path(
         m, z_cols, series, alpha=0.0,
         lambdas=np.linspace(2 * lam, lam / 2, 10), intercept=True, tol=1e-16,
     )
-    B, a0 = fit.coef_at(lam)
-    rows = [
-        ("intercept", eq, round(float(a0[j]), 4))
-        for j, eq in enumerate(series)
-    ] + [
-        (zn, eq, round(float(B[i, j]), 4))
-        for i, zn in enumerate(z_cols)
-        for j, eq in enumerate(series)
-    ]
+    rows = []
+    for eq in series:
+        b, a0 = fits[eq].coef_at(lam)
+        rows.append(("intercept", eq, round(a0, 4)))
+        rows += [(zn, eq, round(float(b[i]), 4)) for i, zn in enumerate(z_cols)]
     return local_frame(
         spark, rows, "z_name string, equation string, coef double",
         order_by=("equation", "z_name"),
