@@ -136,6 +136,19 @@ def test_genet_harness_forecasts_equal_direct_group_fits(spark):
             assert yhat == pytest.approx(want[hz - 1], rel=1e-12, abs=1e-12)
 
 
+def test_genet_rejects_lam(spark):
+    """The group fit picks λ by CV only: ``modeltrain(method="genet",
+    lam=...)`` raises instead of silently forecasting as if
+    ``lam=None``."""
+    rng = np.random.default_rng(12)
+    wide, dates = make_wide(spark, rng.normal(size=(30, 2)), ["a", "b"])
+    with pytest.raises(ValueError, match="cross-validation only"):
+        modeltrain(
+            spark, wide, ["a", "b"], start_pred=dates[20], h=4,
+            method="genet", lam=0.05, with_ar1=False,
+        )
+
+
 def test_forecast_table_shape_and_alignment(spark):
     rng = np.random.default_rng(2)
     y = rng.normal(size=(50, 1)).cumsum(axis=0)

@@ -9,8 +9,10 @@ exact copies, so near-dup operators see a quadratic-in-K pair load on
 top of the K× scan load. Dimension/fact tables are copied unchanged.
 
 Each scale starts with ``tools.retime.warmup_session``; each query then
-runs once untimed before its timed run, and its shuffle-bytes window
-opens after that warm run.
+runs once untimed and ``RUNS`` times timed, and its reported wall is
+the median of the timed runs (one sample read the same code's ×10
+ratio 2.1× or 3.2× by family order). Its shuffle-bytes window spans
+the first timed run only.
 
     python tools/stress_scale.py            # K=10, family below
     python tools/stress_scale.py 4          # K=4
@@ -22,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -30,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SCRATCH = "/tmp/spark_graft_stress"
 ID_STRIDE = 100_000_000  # far above any testdata id
+RUNS = 3  # timed runs per query per scale; the median is reported
 
 FAMILY = [
     "dedup_exact", "dedup_minhash_signature", "dedup_ngram_jaccard",
@@ -116,6 +120,7 @@ def main() -> None:
     from tools.spark_metrics import shuffle_totals
 
     bytes_at: dict[str, dict[str, dict[str, int]]] = {}
+    walls_at: dict[str, dict[str, list[float]]] = {}
 
     def sink(name: str, sf_dir: str) -> None:
         Q.QUERIES[name](spark, sf_dir).write.format("noop").mode(
@@ -128,6 +133,7 @@ def main() -> None:
         out: dict[str, float] = {}
         by: dict[str, dict[str, int]] = {}
         bytes_at[sf_dir] = by
+        walls_at[sf_dir] = walls = {}
         for name in family:
             # one untimed run per query, so no query is timed cold
             # (JIT/codegen and Python workers for THIS plan shape) and
@@ -135,12 +141,17 @@ def main() -> None:
             sink(name, sf_dir)
             cur = shuffle_totals(spark)
             last_stage = cur["max_stage_id"] if cur else -1
-            t0 = time.time()
-            sink(name, sf_dir)
-            out[name] = round(time.time() - t0, 2)
-            tot = shuffle_totals(spark, after_stage_id=last_stage)
-            if tot is not None:
-                by[name] = {"read": tot["read"], "write": tot["write"]}
+            ts = []
+            for i in range(RUNS):
+                t0 = time.time()
+                sink(name, sf_dir)
+                ts.append(round(time.time() - t0, 2))
+                if i == 0:
+                    tot = shuffle_totals(spark, after_stage_id=last_stage)
+                    if tot is not None:
+                        by[name] = {"read": tot["read"], "write": tot["write"]}
+            walls[name] = ts
+            out[name] = statistics.median(ts)
         return out
 
     base = run(SRC)
@@ -182,7 +193,7 @@ def main() -> None:
 
     print(json.dumps(
         {"k": k, "base": base, f"x{k}": big, "recall_at_1": recall,
-         "shuffle_bytes": bytes_at}
+         "walls": walls_at, "shuffle_bytes": bytes_at}
     ))
     for name in family:
         g = big[name] / max(base[name], 0.01)

@@ -284,39 +284,3 @@ def aug_dick_fuller(
     t = adf_table(df, value_col, series_col, date_col)
     rows = t.collect()
     return sorted(r[series_col] for r in rows if not (r["p_value"] <= crit))
-
-
-def ljung_box_table(
-    df,
-    lags: int,
-    fitdf: int = 0,
-    value_col: str = "value",
-    series_col: str = "series_id",
-    date_col: str = "obs_date",
-):
-    """Per-series Ljung–Box in one grouped pass."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField(series_col, StringType()),
-            StructField("statistic", DoubleType()),
-            StructField("p_value", DoubleType()),
-        ]
-    )
-    vc, dc, sc = value_col, date_col, series_col
-
-    def run(key, pdf):
-        x = pdf.sort_values(dc)[vc].to_numpy(dtype=float)
-        r = ljung_box(x, lags=lags, fitdf=fitdf)
-        return pd.DataFrame(
-            [{sc: key[0], "statistic": r["statistic"], "p_value": r["p_value"]}]
-        )
-
-    return df.groupBy(series_col).applyInPandas(run, schema)

@@ -323,8 +323,13 @@ def _fit_predict(
 ):
     """``(y_matrix) -> (h, K) or (h,)`` forecasts for one origin:
     'enet' (``ml.var_model.fit_enet_var_local``), 'genet'
-    (``ml.group_enet.fit_group_enet_var_local``, CV only: ``lam`` is
-    not used) or 'ar1' (``ml.local.LocalAR1``)."""
+    (``ml.group_enet.fit_group_enet_var_local``, CV only, so a
+    ``lam`` is rejected) or 'ar1' (``ml.local.LocalAR1``)."""
+    if method == "genet" and lam is not None:
+        raise ValueError(
+            "method='genet' picks λ by cross-validation only "
+            "(fit_group_enet_var_local takes no lam); pass lam=None"
+        )
     if method in ("enet", "genet"):
         from ..ml.group_enet import fit_group_enet_var_local
         from ..ml.var_model import fit_enet_var_local
@@ -365,8 +370,8 @@ def modeltrain(
 ) -> ModeltrainResult:
     """The OOS experiment (E1). ``method``: 'enet'
     (``ml.var_model.fit_enet_var_local``), 'genet'
-    (``ml.group_enet.fit_group_enet_var_local``) or 'ar1'
-    (``ml.local.LocalAR1``).
+    (``ml.group_enet.fit_group_enet_var_local``; λ by CV only, so
+    ``lam`` must be None) or 'ar1' (``ml.local.LocalAR1``).
     ``rw_mode``: 'fixed' | 'faithful' (quirk Q3).
     ``step`` > 1 is an engine extension (the reference always steps
     by one origin): the MSFE numerator runs over the aligned target

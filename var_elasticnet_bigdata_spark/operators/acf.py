@@ -222,24 +222,3 @@ def multivariate_pacf(X: np.ndarray, lag_max: int) -> np.ndarray:
         A, B = A_new, B_new
         out[k - 1] = Akk
     return out
-
-
-def pacf_table(
-    df: DataFrame,
-    max_lag: int,
-    value_col: str = VALUE,
-    series_col: str = SERIES,
-    date_col: str = DATE,
-) -> list[tuple[str, np.ndarray]]:
-    """Per-series PACF profile (W9): Spark computes the ACF table in
-    one pass; Durbin–Levinson runs on the collected K×L matrix."""
-    acfs = acf_table(df, max_lag, value_col, series_col, date_col, method="r")
-    rows = acfs.collect()
-    by_series: dict[str, dict[int, float]] = {}
-    for row in rows:
-        by_series.setdefault(row[series_col], {})[row["lag"]] = row["acf"]
-    out = []
-    for sid in sorted(by_series):
-        r = np.array([by_series[sid][k] for k in sorted(by_series[sid])])
-        out.append((sid, pacf_from_acf(r)))
-    return out

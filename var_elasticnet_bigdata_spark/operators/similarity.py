@@ -16,6 +16,18 @@ Scale notes:
 - All arithmetic in float64 after an explicit cast — float32 parquet
   values upcast identically in Spark and DuckDB, keeping the oracle
   hash stable for id-only outputs.
+
+Quantized search (PQ, SQ8, exact-L2 and IVF-PQ) shares one probe
+contract, and each search adds only its own reconstruction (PQ LUT
+gather, SQ8 decode, raw floats, IVF residual LUT). The probe block
+(`_probe_block`) is the explicit ``probe_rows`` or one bounded
+collect of the ``id % probe_mod`` set (`_probe_filter`), sorted by id,
+as a float64 matrix. Every squared distance is the ascending-component
+left fold of ``diff * diff`` (`_sq_fold`), the order the DuckDB twins'
+``list_reduce`` adds in. Distances snap to 6 dp (`snap_half_away`,
+engine ``ROUND``) before any ranking, and ties go to (dist, id)
+ascending: the lowest probe id in the top-1 scorer (`_top1_pass`),
+the lowest vector id in the per-query rankings (`_rank_per_qid`).
 """
 
 from __future__ import annotations
@@ -1581,6 +1593,126 @@ def pq_encode(
     )
 
 
+def _probe_filter(
+    df: DataFrame, id_col: str, probe_mod: int, sample_mod: int = 1
+) -> DataFrame:
+    """The deterministic, SQL-replayable probe set: ``id % probe_mod
+    == 0``, thinned to the salted-md5 bucket ``0 mod sample_mod`` when
+    ``sample_mod > 1`` (the split-family rule: engine-agnostic,
+    replica-stable, independent of the ``% probe_mod`` rule so the
+    sample is unbiased across probe ids)."""
+    pf = df.filter((F.col(id_col) % probe_mod) == 0)
+    if sample_mod > 1:
+        pf = pf.filter(
+            F.expr(
+                f"cast(conv(substring(md5(cast({id_col} as string)), 1, 8),"
+                f" 16, 10) as bigint) % {int(sample_mod)} = 0"
+            )
+        )
+    return pf
+
+
+def _probe_block(
+    frame: DataFrame,
+    caller: str,
+    scale_path: str,
+    max_probes: int,
+    id_col: str,
+    vec_col: str,
+    probe_rows: list | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The bounded probe block every quantized search serves: the
+    explicit ``probe_rows`` (capped at ``max_probes``; the streaming
+    contract, no Spark action) or else ONE `guarded_collect` of
+    ``frame``, sorted by id. Returns the int64 ids and the float64
+    ``(P, d)`` vectors; an empty set raises."""
+    from ..plans.guards import guarded_collect
+
+    if probe_rows is not None:
+        if len(probe_rows) > max_probes:
+            raise ValueError(
+                f"{caller}: {len(probe_rows)} probe_rows exceed "
+                f"max_probes={max_probes}"
+            )
+        rows = probe_rows
+    else:
+        rows = guarded_collect(
+            frame.select(id_col, vec_col),
+            f"{caller}'s probe set",
+            scale_path,
+            max_rows=max_probes,
+        )
+    rows = sorted(rows, key=lambda r: r[id_col])
+    if not rows:
+        raise ValueError(f"{caller}: empty probe set")
+    return (
+        np.array([int(r[id_col]) for r in rows], dtype=np.int64),
+        np.array(
+            [[float(x) for x in r[vec_col]] for r in rows], dtype=np.float64
+        ),
+    )
+
+
+def _sq_fold(A, B) -> np.ndarray:
+    """Squared L2 between every row of ``A`` (P, c) and every row of
+    ``B`` (n, c) as a (P, n) matrix, added as the ascending-component
+    LEFT fold the DuckDB twins' ``list_reduce`` runs. ``diff * diff``,
+    never ``pow`` (libm pow(z, 2) can differ from z*z in the last
+    ulp), and never ``np.sum``, whose pairwise tree adds in another
+    order."""
+    A = np.asarray(A, dtype=np.float64)
+    B = np.asarray(B, dtype=np.float64)
+    out = None
+    for i in range(A.shape[1]):
+        t = A[:, i, None] - B[None, :, i]
+        t *= t
+        if out is None:
+            out = t
+        else:
+            out += t
+    return out
+
+
+def _unit_rows(X: np.ndarray) -> np.ndarray:
+    """Normalize each row by the corpus side's sequential norm fold
+    (`_sq_fold` against the origin); zero rows stay zero."""
+    s = _sq_fold(X, np.zeros((1, X.shape[1])))[:, 0]
+    return X / np.where(s != 0, np.sqrt(s), 1.0)[:, None]
+
+
+def _top1_pass(
+    frame: DataFrame,
+    dist,
+    pids: np.ndarray,
+    id_col: str,
+    dist_col: str,
+    round_dp: int,
+) -> DataFrame:
+    """The batched top-1 scorer: one narrow Arrow pass over ``frame``
+    where ``dist(pdf)`` returns the batch's (P, n) probe × row
+    distances; each row keeps its nearest probe after the ``round_dp``
+    snap (first min = lowest probe id, the block is id-sorted).
+    Returns ``(id_col, nearest_probe, dist_col)``."""
+
+    def score(it):
+        for pdf in it:
+            if not len(pdf):
+                continue
+            D = snap_half_away(dist(pdf), round_dp)
+            best = np.argmin(D, axis=0)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col].to_numpy(),
+                    "nearest_probe": pids[best],
+                    dist_col: D[best, np.arange(D.shape[1])],
+                }
+            )
+
+    return frame.mapInPandas(
+        score, schema=f"{id_col} long, nearest_probe long, {dist_col} double"
+    )
+
+
 def pq_adc_top1(
     df: DataFrame,
     m: int = 4,
@@ -1630,8 +1762,7 @@ def pq_adc_top1(
       gathers — still ZERO corpus shuffle, one narrow pass. Float
       parity holds because both arms add the same LUT float64s in the
       same s-ascending left-associated order and snap to the same
-      6-dp grid before the argmin (ADC is a sum of squares, ≥ 0, so
-      half-up == ROUND's half-away-from-zero).
+      6-dp grid before the argmin.
 
     ``max_probes`` is the HARD cap on the probe set itself (bounds
     the driver/closure LUT); beyond it, batch probes through repeated
@@ -1640,22 +1771,22 @@ def pq_adc_top1(
     # Validate the probe_rows contract BEFORE resolving the codebook
     # (ADVICE r7 — pq_seed_codebook collects, so seeding first turned
     # a missing-codebook streaming call into a raw streaming-collect
-    # AnalysisException instead of this friendly error).
-    if probe_rows is not None:
-        # explicit bounded probe set — REQUIRED for streaming serving
-        # (a readStream frame cannot be collected; the caller passes
-        # the query batch and the trained codebook, and the scoring
-        # expression/Arrow pass composes onto the stream unchanged)
-        if codebook is None:
-            raise ValueError(
-                "pq_adc_top1: probe_rows requires an explicit codebook "
-                "(a streaming frame cannot seed one)"
-            )
-        if len(probe_rows) > max_probes:
-            raise ValueError(
-                f"pq_adc_top1: {len(probe_rows)} probe_rows exceed "
-                f"max_probes={max_probes}"
-            )
+    # AnalysisException instead of this friendly error). probe_rows is
+    # the explicit bounded probe set REQUIRED for streaming serving: a
+    # readStream frame cannot be collected, so the caller passes the
+    # query batch and the trained codebook.
+    if probe_rows is not None and codebook is None:
+        raise ValueError(
+            "pq_adc_top1: probe_rows requires an explicit codebook "
+            "(a streaming frame cannot seed one)"
+        )
+    pids, X = _probe_block(
+        _probe_filter(df, id_col, probe_mod),
+        "pq_adc_top1",
+        "a larger probe_mod or batched calls (the probe LUT must stay "
+        "bounded driver-side)",
+        max_probes, id_col, vec_col, probe_rows,
+    )
     C = (
         codebook
         if codebook is not None
@@ -1665,81 +1796,30 @@ def pq_adc_top1(
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
     sub = d // m
-    from ..plans.guards import guarded_collect
-
-    if probe_rows is not None:
-        probes = list(probe_rows)
-    else:
-        probes = guarded_collect(
-            df.filter((F.col(id_col) % probe_mod) == 0).select(
-                id_col, vec_col
-            ),
-            "pq_adc_top1's probe set",
-            "a larger probe_mod or batched calls (the probe LUT must stay "
-            "bounded driver-side)",
-            max_rows=max_probes,
-        )
-    probes = sorted(probes, key=lambda r: r[id_col])
-    if not probes:
-        raise ValueError("pq_adc_top1: empty probe set")
-    pids = [int(r[id_col]) for r in probes]
-    # LUT[p][s][c]: sequential fold identical to the twin's
-    # list_reduce (init = first term; left association)
-    lut = []
-    for r in probes:
-        pv = [float(x) for x in r[vec_col]]
-        per_s = []
-        for s in range(m):
-            row = []
-            for c in range(k):
-                total = None
-                for i in range(sub):
-                    diff = pv[s * sub + i] - float(C[c, s * sub + i])
-                    t = diff * diff  # never pow(): libm pow(z,2) can
-                    # differ from z*z in the last ulp
-                    total = t if total is None else total + t
-                row.append(total)
-            per_s.append(row)
-        lut.append(per_s)
+    # LUT[p, s, c]: one fold-kernel call per subspace
+    cols = [slice(s * sub, (s + 1) * sub) for s in range(m)]
+    L = np.stack([_sq_fold(X[:, c], C[:, c]) for c in cols], axis=1)
 
     coded = pq_encode(df, m=m, k=k, id_col=id_col, vec_col=vec_col, codebook=C)
     if len(pids) > expr_probes:
         # Arrow LUT-broadcast arm: too many probes for a constant-
         # folded projection — gather LUT entries per code with numpy,
-        # same s-ascending left-associated adds, same 6-dp snap.
-        L = np.array(lut, dtype=np.float64)  # (P, m, k)
-        pid_arr = np.array(pids, dtype=np.int64)
-        scale = float(10**round_dp)
-        mm = m
+        # same s-ascending left-associated adds
+        def adc(pdf):
+            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
+            D = L[:, 0, codes[:, 0]]  # (P, n)
+            for s in range(1, m):
+                D = D + L[:, s, codes[:, s]]
+            return D
 
-        def score(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
-                adc = L[:, 0, codes[:, 0]]  # (P, n)
-                for s in range(1, mm):
-                    adc = adc + L[:, s, codes[:, s]]
-                adc = np.floor(adc * scale + 0.5) / scale
-                best = np.argmin(adc, axis=0)  # first min = lowest pid
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy(),
-                        "nearest_probe": pid_arr[best],
-                        "adc": adc[best, np.arange(len(codes))],
-                    }
-                )
-
-        return coded.mapInPandas(
-            score, schema=f"{id_col} long, nearest_probe long, adc double"
-        )
+        return _top1_pass(coded, adc, pids, id_col, "adc", round_dp)
     dist_exprs = []
     for p in range(len(pids)):
         terms = " + ".join(
             "element_at("
             + "array("
             + ", ".join(
-                f"CAST('{float(lut[p][s][c])!r}' AS DOUBLE)" for c in range(k)
+                f"CAST('{float(L[p, s, c])!r}' AS DOUBLE)" for c in range(k)
             )
             + f"), element_at(codes, {s + 1}) + 1)"
             for s in range(m)
@@ -1846,84 +1926,44 @@ def sq8_adc_top1(
 
     Float discipline: recon and diff² are elementwise IEEE ops in the
     twin's exact parenthesization; the d accumulation terms add in
-    one ascending-i loop (left-associated — never np.sum's pairwise
-    tree), then snap to ``round_dp`` before the argmin (ADC ≥ 0, so
-    numpy's floor(x·s + 0.5)/s == ROUND's half-away-from-zero)."""
-    from ..plans.guards import guarded_collect
-
+    the `_sq_fold` ascending left fold, then snap to ``round_dp``
+    before the argmin."""
     # STREAMING serving contract (the `pq_adc_top1` probe_rows rule):
     # a readStream frame can neither train bounds nor be collected,
     # so the caller passes both; validate BEFORE any train/collect so
     # a streaming misuse gets this error, not a raw streaming-collect
     # AnalysisException (the ADVICE-r7 ordering lesson).
-    if probe_rows is not None:
-        if bounds is None:
-            raise ValueError(
-                "sq8_adc_top1: probe_rows requires explicit bounds "
-                "(a streaming frame cannot train min/max)"
-            )
-        if len(probe_rows) > max_probes:
-            raise ValueError(
-                f"sq8_adc_top1: {len(probe_rows)} probe_rows exceed "
-                f"max_probes={max_probes}"
-            )
+    if probe_rows is not None and bounds is None:
+        raise ValueError(
+            "sq8_adc_top1: probe_rows requires explicit bounds "
+            "(a streaming frame cannot train min/max)"
+        )
+    pids, X = _probe_block(
+        _probe_filter(df, id_col, probe_mod),
+        "sq8_adc_top1",
+        "a larger probe_mod or batched calls (the probe block must stay "
+        "bounded driver-side)",
+        max_probes, id_col, vec_col, probe_rows,
+    )
     mn, mx = (
         bounds
         if bounds is not None
         else sq8_minmax(df, d=d, id_col=id_col, vec_col=vec_col)
     )
-    if probe_rows is not None:
-        probes = list(probe_rows)
-    else:
-        probes = guarded_collect(
-            df.filter((F.col(id_col) % probe_mod) == 0).select(
-                id_col, vec_col
-            ),
-            "sq8_adc_top1's probe set",
-            "a larger probe_mod or batched calls (the probe block must stay "
-            "bounded driver-side)",
-            max_rows=max_probes,
-        )
-    probes = sorted(probes, key=lambda r: r[id_col])
-    if not probes:
-        raise ValueError("sq8_adc_top1: empty probe set")
-    pid_arr = np.array([int(r[id_col]) for r in probes], dtype=np.int64)
-    Q = np.array(
-        [[float(x) for x in r[vec_col]] for r in probes], dtype=np.float64
-    )  # (P, d)
+    Q = X[:, :d]
     mn_a = np.array(mn, dtype=np.float64)
     rng_a = np.array(mx, dtype=np.float64) - mn_a
     live = rng_a != 0.0
-    scale = float(10**round_dp)
+
+    def adc(pdf):
+        codes = np.array(pdf["codes"].tolist(), dtype=np.float64)  # (n, d)
+        recon = np.where(
+            live, mn_a + (((codes + 0.5) * rng_a) / 256.0), mn_a
+        )
+        return _sq_fold(Q, recon[:, :d])
 
     coded = sq8_encode(df, mn, mx, id_col=id_col, vec_col=vec_col)
-
-    def score(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            codes = np.array(pdf["codes"].tolist(), dtype=np.float64)  # (n, d)
-            recon = np.where(
-                live, mn_a + (((codes + 0.5) * rng_a) / 256.0), mn_a
-            )
-            adc = None  # (P, n) accumulated d-ascending, left-assoc
-            for i in range(d):
-                diff = Q[:, i][:, None] - recon[None, :, i]
-                t = diff * diff
-                adc = t if adc is None else adc + t
-            adc = np.floor(adc * scale + 0.5) / scale
-            best = np.argmin(adc, axis=0)  # first min = lowest pid
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "nearest_probe": pid_arr[best],
-                    "adc": adc[best, np.arange(codes.shape[0])],
-                }
-            )
-
-    return coded.mapInPandas(
-        score, schema=f"{id_col} long, nearest_probe long, adc double"
-    )
+    return _top1_pass(coded, adc, pids, id_col, "adc", round_dp)
 
 
 def l2_exact_top1(
@@ -1943,48 +1983,23 @@ def l2_exact_top1(
     the quantized arm is QUANTIZATION, not harness skew. One narrow
     Arrow pass, probe block in the closure, zero corpus shuffle.
     Returns ``(id_col, nearest_probe, dist)``."""
-    from ..plans.guards import guarded_collect
-
-    probes = guarded_collect(
-        df.filter((F.col(id_col) % probe_mod) == 0).select(id_col, vec_col),
-        "l2_exact_top1's probe set",
+    pids, X = _probe_block(
+        _probe_filter(df, id_col, probe_mod),
+        "l2_exact_top1",
         "a larger probe_mod or batched calls",
-        max_rows=max_probes,
+        max_probes, id_col, vec_col,
     )
-    probes = sorted(probes, key=lambda r: r[id_col])
-    if not probes:
-        raise ValueError("l2_exact_top1: empty probe set")
-    pid_arr = np.array([int(r[id_col]) for r in probes], dtype=np.int64)
-    Q = np.array(
-        [[float(x) for x in r[vec_col]] for r in probes], dtype=np.float64
-    )
-    scale = float(10**round_dp)
-    idc, vc = id_col, vec_col
+    Q = X[:, :d]
 
-    def score(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            M = np.array(pdf[vc].tolist(), dtype=np.float64)  # (n, d)
-            dist = None
-            for i in range(d):
-                diff = Q[:, i][:, None] - M[None, :, i]
-                t = diff * diff
-                dist = t if dist is None else dist + t
-            dist = np.floor(dist * scale + 0.5) / scale
-            best = np.argmin(dist, axis=0)
-            yield pd.DataFrame(
-                {
-                    idc: pdf[idc].to_numpy(),
-                    "nearest_probe": pid_arr[best],
-                    "dist": dist[best, np.arange(M.shape[0])],
-                }
-            )
+    def dist(pdf):
+        M = np.array(pdf[vec_col].tolist(), dtype=np.float64)  # (n, d)
+        return _sq_fold(Q, M[:, :d])
 
-    return df.select(idc, vc).select(
-        F.col(idc), F.col(vc).cast("array<double>").alias(vc)
-    ).mapInPandas(
-        score, schema=f"{idc} long, nearest_probe long, dist double"
+    return _top1_pass(
+        df.select(id_col, vec_col).select(
+            F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
+        ),
+        dist, pids, id_col, "dist", round_dp,
     )
 
 
@@ -2168,6 +2183,62 @@ def ivfpq_postings_append(
     return True
 
 
+def _postings_topn(
+    spark: SparkSession,
+    store_name: str,
+    probes: DataFrame,
+    C: np.ndarray,
+    cb: np.ndarray,
+    m: int,
+    k: int,
+    nprobe: int,
+    n: int,
+    id_col: str,
+    vec_col: str,
+    max_probes: int,
+    round_dp: int,
+    exclude_self: bool,
+    caller: str,
+) -> tuple[DataFrame, np.ndarray, np.ndarray, DataFrame]:
+    """The postings serving chain both postings searches run: one
+    probe collect → `_ivfpq_route` → broadcast semi of the probed
+    cell set into ``{store_name}__pq`` → replay distinct →
+    `_ivfpq_score` → per-qid top-``n`` (`_rank_per_qid`). Returns
+    ``(ranked, pids, Q, cells_df)``."""
+    from ..sources.bucketing import read_bucketed
+
+    C = np.asarray(C, dtype=np.float64)
+    cb = np.asarray(cb, dtype=np.float64)
+    pids, X = _probe_block(
+        probes,
+        caller,
+        "a smaller probe frame or batched calls (the probe LUT must "
+        "stay bounded driver-side)",
+        max_probes, id_col, vec_col,
+    )
+    Q, probed = _ivfpq_route(X, C, nprobe, round_dp)
+    cells = sorted({int(c) for c in probed.ravel()})
+    cells_df = local_frame(spark, [(c,) for c in cells], "cell int")
+    # distinct on (cell, id, codes): a crash-window replay (ledger row
+    # lost after a committed sink) re-appends bit-identical postings;
+    # without this a double-appended neighbor occupies multiple
+    # row_number ranks and displaces the genuine k-th result (ADVICE
+    # r10). Exchange-free: the table is bucketed on cell, and hash
+    # partitioning on a subset of the grouping keys satisfies the
+    # aggregation's clustered distribution — scoped to probed cells
+    # only after the broadcast semi.
+    coded = (
+        read_bucketed(spark, f"{store_name}__pq")
+        .join(F.broadcast(cells_df), "cell")
+        .dropDuplicates(["cell", id_col, "codes"])
+    )
+    scored = _ivfpq_score(
+        coded, pids, Q, probed, C, cb, m, k, n, round_dp, exclude_self,
+        id_col,
+    )
+    return _rank_per_qid(scored, n, id_col), pids, Q, cells_df
+
+
 def ivfpq_postings_search(
     spark: SparkSession,
     store_name: str,
@@ -2195,51 +2266,12 @@ def ivfpq_postings_search(
     the corpus is neither re-encoded nor re-scanned per query batch.
 
     Returns ``(qid, rank, id_col, adc)`` like `ivfpq_search`."""
-    from ..plans.guards import guarded_collect
-    from ..sources.bucketing import read_bucketed
-
-    C = np.asarray(centroids, dtype=np.float64)
-    cb = np.asarray(codebook, dtype=np.float64)
-    rows = guarded_collect(
-        probes.select(id_col, vec_col),
-        "ivfpq_postings_search's probe set",
-        "a smaller probe frame or batched calls (the probe LUT must "
-        "stay bounded driver-side)",
-        max_rows=max_probes,
-    )
-    pids, Q, probed = _ivfpq_route(
-        rows, C, nprobe, round_dp, id_col, vec_col,
+    ranked, *_ = _postings_topn(
+        spark, store_name, probes, centroids, codebook, m, k, nprobe,
+        topk, id_col, vec_col, max_probes, round_dp, exclude_self,
         "ivfpq_postings_search",
     )
-    cells = sorted({int(c) for row in probed for c in row})
-    cells_df = local_frame(spark, [(c,) for c in cells], "cell int")
-    # distinct on (cell, id, codes): a crash-window replay (ledger row
-    # lost after a committed sink) re-appends bit-identical postings;
-    # without this a double-appended neighbor occupies multiple
-    # row_number ranks and displaces the genuine k-th result (ADVICE
-    # r10). Exchange-free: the table is bucketed on cell, and hash
-    # partitioning on a subset of the grouping keys satisfies the
-    # aggregation's clustered distribution — scoped to probed cells
-    # only after the broadcast semi.
-    coded = (
-        read_bucketed(spark, f"{store_name}__pq")
-        .join(F.broadcast(cells_df), "cell")
-        .dropDuplicates(["cell", id_col, "codes"])
-    )
-    scored = _ivfpq_score(
-        coded, pids, Q, probed, C, cb, m, k, topk, round_dp,
-        exclude_self, id_col,
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.col("adc").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("qid", "rank", id_col, "adc")
-    )
+    return ranked.select("qid", "rank", id_col, "adc")
 
 
 def ivfpq_postings_refine_search(
@@ -2266,11 +2298,9 @@ def ivfpq_postings_refine_search(
     stores over-fetch by a refine factor r and re-rank the r·k ADC
     survivors against their ORIGINAL vectors before answering.
 
-    Pipeline: route probes driver-side (shared `_ivfpq_route`) → ADC
-    top-(topk·refine_factor) per query from the probed cells'
-    postings only (the `ivfpq_postings_search` arm: broadcast semi on
-    the cell set, zero store-side Exchange, replay-dup distinct) →
-    fetch ONLY the survivors' true vectors from the ``__vec`` sidecar
+    Pipeline: the `ivfpq_postings_search` chain (`_postings_topn`) at
+    top-(topk·refine_factor) per query → fetch ONLY the survivors'
+    true vectors from the ``__vec`` sidecar
     (`ivfpq_postings_append(store_vectors=True)`): the sidecar is
     bucketed on ``cell`` and pruned to probed cells by the same
     broadcast semi, then the survivor-id set (≤ n_q·topk·r rows — a
@@ -2278,7 +2308,8 @@ def ivfpq_postings_refine_search(
     bucket-pruned broadcast join — never a corpus scan, and the
     corpus is never re-encoded. Exact distances are then recomputed
     over the bounded survivor set with the twin's sequential
-    ascending fold and ``round_dp`` snap, re-ranked (d ASC, id ASC).
+    ascending fold (`_sq_fold`) and ``round_dp`` snap, re-ranked
+    (d ASC, id ASC).
 
     At 100 TB: serving cost stays ∝ probed-cell postings + r·k
     vector fetches per query; the refine stage adds one broadcast
@@ -2290,47 +2321,19 @@ def ivfpq_postings_refine_search(
     from ..plans.guards import guarded_collect
     from ..sources.bucketing import read_bucketed
 
-    C = np.asarray(centroids, dtype=np.float64)
-    cb = np.asarray(codebook, dtype=np.float64)
-    rows = guarded_collect(
-        probes.select(id_col, vec_col),
-        "ivfpq_postings_refine_search's probe set",
-        "a smaller probe frame or batched calls (the probe LUT must "
-        "stay bounded driver-side)",
-        max_rows=max_probes,
-    )
-    pids, Q, probed = _ivfpq_route(
-        rows, C, nprobe, round_dp, id_col, vec_col,
+    n_fetch = topk * refine_factor
+    ranked, pids, Q, cells_df = _postings_topn(
+        spark, store_name, probes, centroids, codebook, m, k, nprobe,
+        n_fetch, id_col, vec_col, max_probes, round_dp, exclude_self,
         "ivfpq_postings_refine_search",
     )
-    cells = sorted({int(c) for row in probed for c in row})
-    cells_df = local_frame(spark, [(c,) for c in cells], "cell int")
-    coded = (
-        read_bucketed(spark, f"{store_name}__pq")
-        .join(F.broadcast(cells_df), "cell")
-        .dropDuplicates(["cell", id_col, "codes"])
-    )
-    n_fetch = topk * refine_factor
-    scored = _ivfpq_score(
-        coded, pids, Q, probed, C, cb, m, k, n_fetch, round_dp,
-        exclude_self, id_col,
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.col("adc").asc(), F.col(id_col).asc()
-    )
     survivors = guarded_collect(
-        scored.withColumn("arank", F.row_number().over(w)).filter(
-            F.col("arank") <= n_fetch
-        ),
+        ranked,
         "ivfpq_postings_refine_search's ADC survivor set",
         "a smaller topk*refine_factor or batched probes (survivors "
         "are n_q * topk * refine_factor rows by construction)",
         max_rows=max_probes * n_fetch,
     )
-    surv_adc = {(int(r["qid"]), int(r[id_col])): float(r["adc"])
-                for r in survivors}
     surv_ids = sorted({int(r[id_col]) for r in survivors})
     ids_df = local_frame(spark, [(i,) for i in surv_ids], f"{id_col} long")
     # sidecar fetch: bucket-pruned to probed cells, survivor ids
@@ -2345,7 +2348,7 @@ def ivfpq_postings_refine_search(
         "a smaller topk*refine_factor (one vector per ADC survivor)",
         max_rows=max_probes * n_fetch,
     )
-    evec = {int(r[id_col]): [float(x) for x in r["e"]] for r in vrows}
+    evec = {int(r[id_col]): r["e"] for r in vrows}
     missing = [i for i in surv_ids if i not in evec]
     if missing:
         raise ValueError(
@@ -2354,27 +2357,22 @@ def ivfpq_postings_refine_search(
             "— was the store appended with store_vectors=True for "
             "every batch?"
         )
-    d = C.shape[1]
-    scale = float(10**round_dp)
-    qvec = {pids[qi]: Q[qi] for qi in range(len(pids))}
-
-    def true_d(qid: int, vid: int) -> float:
-        q, e = qvec[qid], evec[vid]
-        t = None  # sequential ascending fold, the twin's list_reduce
-        for i in range(d):
-            diff = q[i] - e[i]
-            dd = diff * diff
-            t = dd if t is None else t + dd
-        return math.floor(t * scale + 0.5) / scale
-
+    surv_adc = {(int(r["qid"]), int(r[id_col])): float(r["adc"])
+                for r in survivors}
     by_q: dict[int, list] = {}
     for (qid, vid), adc in surv_adc.items():
-        by_q.setdefault(qid, []).append((true_d(qid, vid), vid, adc))
+        by_q.setdefault(qid, []).append((vid, adc))
+    qrow = {int(p): qi for qi, p in enumerate(pids)}
     out = []
     for qid in sorted(by_q):
-        ranked = sorted(by_q[qid], key=lambda t: (t[0], t[1]))[:topk]
-        for rk, (dx, vid, adc) in enumerate(ranked, start=1):
-            out.append((qid, rk, vid, dx, adc))
+        vids, adcs = zip(*by_q[qid])
+        dx = snap_half_away(
+            _sq_fold(Q[qrow[qid], None], [evec[v] for v in vids]), round_dp
+        )[0]
+        # (d, id) ascending; ids are unique per query
+        ranked_q = sorted(zip(dx.tolist(), vids, adcs))[:topk]
+        for rk, (dd, vid, adc) in enumerate(ranked_q, start=1):
+            out.append((qid, rk, vid, dd, adc))
     return local_frame(
         spark,
         out,
@@ -2383,54 +2381,21 @@ def ivfpq_postings_refine_search(
 
 
 def _ivfpq_route(
-    probes: list,
-    C: np.ndarray,
-    nprobe: int,
-    round_dp: int,
-    id_col: str,
-    vec_col: str,
-    caller: str,
-) -> tuple[list[int], np.ndarray, np.ndarray]:
+    X: np.ndarray, C: np.ndarray, nprobe: int, round_dp: int
+) -> tuple[np.ndarray, np.ndarray]:
     """Driver-side probe routing shared by `ivfpq_search` and the
-    postings store: sort probes by id, normalize with the SAME
-    sequential fold as the corpus side, pick each probe's ``nprobe``
-    nearest cells by snapped sequential-fold distance. Returns
-    ``(pids, Q, probed)``."""
-    probes = sorted(probes, key=lambda r: r[id_col])
-    if not probes:
-        raise ValueError(f"{caller}: empty probe set")
-    d = C.shape[1]
-    ncells = C.shape[0]
-    pids = [int(r[id_col]) for r in probes]
-    nq = len(pids)
-    Q = np.zeros((nq, d), dtype=np.float64)
-    for qi, r in enumerate(probes):
-        x = [float(t) for t in r[vec_col]]
-        s = 0.0
-        for t in x:  # sequential fold, exactly the corpus-side norm
-            s = s + t * t
-        n = math.sqrt(s) if s != 0 else 1.0
-        for i in range(d):
-            Q[qi, i] = x[i] / n
-    scale = float(10**round_dp)
-    probed = np.zeros((nq, nprobe), dtype=np.int64)
-    for qi in range(nq):
-        dists = []
-        for c in range(ncells):
-            t = None  # sequential ascending-component left fold
-            for i in range(d):
-                diff = Q[qi, i] - C[c, i]
-                dd = diff * diff
-                t = dd if t is None else t + dd
-            dists.append((math.floor(t * scale + 0.5) / scale, c))
-        dists.sort()
-        probed[qi] = [c for _, c in dists[:nprobe]]
-    return pids, Q, probed
+    postings store: normalize the probe block with the corpus side's
+    sequential fold (`_unit_rows`), then pick each probe's ``nprobe``
+    nearest cells by snapped `_sq_fold` distance (ties: lowest cell).
+    Returns ``(Q, probed)``."""
+    Q = _unit_rows(X)
+    D = snap_half_away(_sq_fold(Q, C), round_dp)
+    return Q, np.argsort(D, axis=1, kind="stable")[:, :nprobe]
 
 
 def _ivfpq_score(
     coded: DataFrame,
-    pids: list[int],
+    pids: np.ndarray,
     Q: np.ndarray,
     probed: np.ndarray,
     C: np.ndarray,
@@ -2447,30 +2412,19 @@ def _ivfpq_score(
     emitting per-batch local candidates — identical arithmetic and
     snap/tie discipline wherever the coded rows come from (an inline
     encode pass or the persisted postings table)."""
-    d = C.shape[1]
+    nq, d = Q.shape
     sub = d // m
-    ncells = C.shape[0]
-    nq = len(pids)
-    scale = float(10**round_dp)
-    # LUT[q, cell, s, code]: the residual-target distance table
-    L = np.zeros((nq, ncells, m, k), dtype=np.float64)
-    for qi in range(nq):
-        for c in map(int, probed[qi]):
-            for s in range(m):
-                for code in range(k):
-                    t = None
-                    for i in range(sub):
-                        gi = s * sub + i
-                        diff = Q[qi, gi] - C[c, gi] - float(cb[code, gi])
-                        dd = diff * diff
-                        t = dd if t is None else t + dd
-                    L[qi, c, s, code] = t
+    # LUT[q, cell, s, code]: the residual-target distance table, one
+    # fold-kernel call per subspace over every (probe, probed cell)
+    # target q − C[cell]
+    T = (Q[:, None, :] - C[probed]).reshape(-1, d)
+    rows = np.repeat(np.arange(nq), probed.shape[1])
+    L = np.zeros((nq, C.shape[0], m, k), dtype=np.float64)
+    for s in range(m):
+        cols = slice(s * sub, (s + 1) * sub)
+        L[rows, probed.ravel(), s] = _sq_fold(T[:, cols], cb[:k, cols])
 
     # --- Arrow serving pass: per-batch local top-k per query -------
-    pid_arr = np.array(pids, dtype=np.int64)
-    probed_sets = [probed[qi] for qi in range(nq)]
-    kk, mm = topk, m
-
     def score(it):
         for pdf in it:
             if not len(pdf):
@@ -2480,18 +2434,18 @@ def _ivfpq_score(
             vv = pdf[id_col].to_numpy(dtype=np.int64)
             out_q, out_v, out_a = [], [], []
             for qi in range(nq):
-                mask = np.isin(cc, probed_sets[qi])
+                mask = np.isin(cc, probed[qi])
                 if exclude_self:
-                    mask &= vv != pid_arr[qi]
+                    mask &= vv != pids[qi]
                 if not mask.any():
                     continue
                 mc, md, mv = cc[mask], codes[mask], vv[mask]
                 adc = L[qi, mc, 0, md[:, 0]]
-                for s in range(1, mm):
+                for s in range(1, m):
                     adc = adc + L[qi, mc, s, md[:, s]]
-                adc = np.floor(adc * scale + 0.5) / scale
-                order = np.lexsort((mv, adc))[:kk]
-                out_q.extend([pid_arr[qi]] * len(order))
+                adc = snap_half_away(adc, round_dp)
+                order = np.lexsort((mv, adc))[:topk]
+                out_q.extend([pids[qi]] * len(order))
                 out_v.extend(mv[order])
                 out_a.extend(adc[order])
             yield pd.DataFrame(
@@ -2504,6 +2458,19 @@ def _ivfpq_score(
 
     return coded.mapInPandas(
         score, schema=f"qid long, {id_col} long, adc double"
+    )
+
+
+def _rank_per_qid(scored: DataFrame, n: int, id_col: str) -> DataFrame:
+    """Global top-``n`` per query from the batches' local candidates:
+    ``rank`` = row_number over (adc ASC, id ASC) within each qid."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("qid").orderBy(
+        F.col("adc").asc(), F.col(id_col).asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= n
     )
 
 
@@ -2556,8 +2523,6 @@ def ivfpq_search(
     (value ASC, id ASC) rankings; every distance is a sequential
     ascending-component left fold; LUT adds run s-ascending.
     """
-    from ..plans.guards import guarded_collect
-
     # staged normalize: the self-training call makes FOUR passes over
     # the corpus (centroid seed, Lloyd assign, codebook seed, encode/
     # serve) that all start from the same normalized projection —
@@ -2580,8 +2545,6 @@ def ivfpq_search(
     d = C.shape[1]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
-    sub = d // m
-    ncells = C.shape[0]
 
     # --- one narrow pass: assign -> residual ------------------------
     resid = with_assigned_cell(normed, C, vec_expr="e").withColumn(
@@ -2616,41 +2579,24 @@ def ivfpq_search(
     )
 
     # --- bounded probe set, driver-side cell routing + LUT ---------
-    pf = df.filter((F.col(id_col) % probe_mod) == 0)
-    if sample_mod > 1:
-        # same deterministic md5-bucket probe sample as the recall
-        # audit (r9): the index arm's per-probe ADC cost is also
-        # corpus-proportional, so a sampled audit must sample BOTH
-        # arms or the unsampled arm masks the saving
-        pf = pf.filter(
-            F.expr(
-                f"cast(conv(substring(md5(cast({id_col} as string)), 1, 8),"
-                f" 16, 10) as bigint) % {int(sample_mod)} = 0"
-            )
-        )
-    probes = guarded_collect(
-        pf.select(id_col, vec_col),
-        "ivfpq_search's probe set",
+    # sample_mod: the recall audit's md5-bucket probe sample — the
+    # index arm's per-probe ADC cost is also corpus-proportional, so a
+    # sampled audit must sample BOTH arms or the unsampled arm masks
+    # the saving
+    pids, X = _probe_block(
+        _probe_filter(df, id_col, probe_mod, sample_mod),
+        "ivfpq_search",
         "a larger probe_mod or batched calls (the probe LUT must stay "
         "bounded driver-side)",
-        max_rows=max_probes,
+        max_probes, id_col, vec_col,
     )
-    pids, Q, probed = _ivfpq_route(
-        probes, C, nprobe, round_dp, id_col, vec_col, "ivfpq_search"
-    )
+    Q, probed = _ivfpq_route(X, C, nprobe, round_dp)
     scored = _ivfpq_score(
-        coded, pids, Q, probed, C, cb, m, k, topk, round_dp,
-        exclude_self, id_col,
+        coded, pids, Q, probed, C, cb, m, k, topk, round_dp, exclude_self,
+        id_col,
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.col("adc").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("qid", "rank", id_col, "adc")
+    return _rank_per_qid(scored, topk, id_col).select(
+        "qid", "rank", id_col, "adc"
     )
 
 
@@ -2894,12 +2840,13 @@ def ivfpq_recall_top1(
     ``sample_mod`` (VERDICT r8 item 4) keeps the audit AFFORDABLE at
     scale: the exact arm's CPU is corpus × n_probes, so at 100× the
     full audit outgrows its budget. ``sample_mod > 1`` keeps only
-    probes whose salted md5 bucket (the same deterministic rule the
-    split family uses — id-order-free, replica-stable) is 0 mod
-    ``sample_mod``, estimating the same recall from a 1/sample_mod
-    probe sample; the default 1 preserves the gated query's exact
-    contract. Sampling bounds the exact arm BEFORE the scan (the
-    per-batch winner loop runs over the sampled probe block only).
+    probes whose salted md5 bucket (`_probe_filter`, the same
+    deterministic rule the split family uses — id-order-free,
+    replica-stable) is 0 mod ``sample_mod``, estimating the same
+    recall from a 1/sample_mod probe sample; the default 1 preserves
+    the gated query's exact contract. Sampling bounds the exact arm
+    BEFORE the scan (the per-batch winner loop runs over the sampled
+    probe block only).
 
     Honest expectation on the synthetic fixture: the embeddings are
     near-uniform in 64-d, so pairwise distances CONCENTRATE — even a
@@ -2913,12 +2860,12 @@ def ivfpq_recall_top1(
 
     The exact arm is the honest brute-force baseline, kept
     scale-sane: ONE Arrow scan computes each batch's per-query top-1
-    (vectorized numpy; selection is associative), then a bounded
-    Window(qid) merges batch winners — n_q × n_batches rows, never
-    the corpus. Same 6-dp snap + (d ASC, id ASC) tie rule on both
-    engines and both arms; the two winners' true distances are then
-    recomputed driver-side over the bounded winner set with the same
-    sequential fold.
+    (the `_sq_fold` kernel over the batch; selection is associative),
+    then a bounded Window(qid) merges batch winners — n_q × n_batches
+    rows, never the corpus. Same 6-dp snap + (d ASC, id ASC) tie rule
+    on both engines and both arms; the two winners' true distances
+    are then recomputed driver-side over the bounded winner set with
+    the same sequential fold.
     """
     # ``centroids``/``codebook`` passthrough (r9): audit the SERVING
     # index from pre-trained artifacts — no in-query Lloyd/codebook
@@ -2941,61 +2888,33 @@ def ivfpq_recall_top1(
 
     from ..plans.guards import guarded_collect
 
-    pf = df.filter((F.col(id_col) % probe_mod) == 0)
-    if sample_mod > 1:
-        # deterministic md5-bucket probe sample (the split-family rule:
-        # engine-agnostic, replica-stable, independent of the % probe_mod
-        # rule so the sample is unbiased across probe ids)
-        pf = pf.filter(
-            F.expr(
-                f"cast(conv(substring(md5(cast({id_col} as string)), 1, 8),"
-                f" 16, 10) as bigint) % {int(sample_mod)} = 0"
-            )
-        )
-    probes = guarded_collect(
-        pf.select(id_col, vec_col),
-        "ivfpq_recall_top1's probe set",
+    pids, X = _probe_block(
+        _probe_filter(df, id_col, probe_mod, sample_mod),
+        "ivfpq_recall_top1",
         "a larger probe_mod (the probe block must stay bounded)",
-        max_rows=max_probes,
+        max_probes, id_col, vec_col,
     )
-    probes = sorted(probes, key=lambda r: r[id_col])
-    if not probes:
-        raise ValueError(
-            f"no probes survive probe_mod={probe_mod}, "
-            f"sample_mod={sample_mod}: lower one of them"
-        )
-    pids = [int(r[id_col]) for r in probes]
-    nq = len(pids)
-    dim = len(probes[0][vec_col])
-    Q = np.zeros((nq, dim), dtype=np.float64)
-    for qi, r in enumerate(probes):
-        x = [float(t) for t in r[vec_col]]
-        s = 0.0
-        for t in x:
-            s = s + t * t
-        n = math.sqrt(s) if s != 0 else 1.0
-        Q[qi] = [t / n for t in x]
-    pid_arr = np.array(pids, dtype=np.int64)
-    scale = float(10**round_dp)
+    Q = _unit_rows(X)
 
     def exact_top1(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            E = np.array(pdf["e"].tolist(), dtype=np.float64)
             vv = pdf[id_col].to_numpy(dtype=np.int64)
+            D = snap_half_away(
+                _sq_fold(Q, np.array(pdf["e"].tolist(), dtype=np.float64)),
+                round_dp,
+            )  # (P, n)
             out_q, out_v, out_d = [], [], []
-            for qi in range(nq):
-                mask = vv != pid_arr[qi]
+            for qi in range(len(pids)):
+                mask = vv != pids[qi]
                 if not mask.any():
                     continue
-                D = ((E[mask] - Q[qi]) ** 2).sum(axis=1)
-                D = np.floor(D * scale + 0.5) / scale
-                mv = vv[mask]
-                j = np.lexsort((mv, D))[0]
-                out_q.append(pid_arr[qi])
+                mv, dq = vv[mask], D[qi, mask]
+                j = np.lexsort((mv, dq))[0]
+                out_q.append(pids[qi])
                 out_v.append(mv[j])
-                out_d.append(D[j])
+                out_d.append(dq[j])
             yield pd.DataFrame(
                 {
                     "qid": np.array(out_q, dtype=np.int64),
@@ -3035,29 +2954,17 @@ def ivfpq_recall_top1(
         "a larger probe_mod (at most 2 vectors per probe query)",
         max_rows=2 * max_probes,
     )
-    evec = {int(r[id_col]): [float(x) for x in r["e"]] for r in wrows}
-    qvec = {pids[qi]: Q[qi] for qi in range(nq)}
-
-    def true_d(qid: int, vid: int) -> float:
-        q, e = qvec[qid], evec[vid]
-        t = None  # sequential ascending fold, the twin's list_reduce
-        for i in range(dim):
-            diff = q[i] - e[i]
-            dd = diff * diff
-            t = dd if t is None else t + dd
-        return math.floor(t * scale + 0.5) / scale
-
-    out = [
-        (
-            int(r["qid"]),
-            int(r["ivfpq_id"]),
-            int(r["exact_id"]),
-            int(r["ivfpq_id"] == r["exact_id"]),
-            true_d(int(r["qid"]), int(r["ivfpq_id"])),
-            true_d(int(r["qid"]), int(r["exact_id"])),
+    evec = {int(r[id_col]): r["e"] for r in wrows}
+    qrow = {int(p): qi for qi, p in enumerate(pids)}
+    out = []
+    for r in sorted(pairs, key=lambda r: r["qid"]):
+        qid, iv, ex_id = int(r["qid"]), int(r["ivfpq_id"]), int(r["exact_id"])
+        d_iv, d_ex = snap_half_away(
+            _sq_fold(Q[qrow[qid], None], [evec[iv], evec[ex_id]]), round_dp
+        )[0]
+        out.append(
+            (qid, iv, ex_id, int(iv == ex_id), float(d_iv), float(d_ex))
         )
-        for r in sorted(pairs, key=lambda r: r["qid"])
-    ]
     return local_frame(
         spark,
         out,

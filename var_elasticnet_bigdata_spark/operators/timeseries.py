@@ -191,23 +191,6 @@ def naive_forecast(
     return df.withColumn(out_col, F.lag(value_col, 1).over(_w(series_col, date_col)))
 
 
-def time_slice(
-    df: DataFrame,
-    start=None,
-    end=None,
-    date_col: str = DATE,
-) -> DataFrame:
-    """P3 time-window slice ≡ zoo ``window(data, start, end)``. A plain
-    range predicate so it pushes into the scan (partition pruning on a
-    date-partitioned table)."""
-    res = df
-    if start is not None:
-        res = res.filter(F.col(date_col) >= F.lit(start))
-    if end is not None:
-        res = res.filter(F.col(date_col) <= F.lit(end))
-    return res
-
-
 def long_to_wide(
     df: DataFrame,
     series_ids: list[str] | None = None,
