@@ -268,7 +268,7 @@ def test_ivf_assign_clamps_nprobe_to_cells(spark):
 
 def test_pacf_faithful_blocked_collect_guarded(spark, monkeypatch):
     """VERDICT r2 item 3: the faithful_blocked pivot→toPandas is now
-    behind guard_driver_collect, pointing at the distributed path."""
+    behind the driver-row ceiling, pointing at the distributed path."""
     import datetime as dt
 
     import numpy as np

@@ -15,6 +15,7 @@ from var_elasticnet_bigdata_spark.ml.local import moments_from_numpy
 from var_elasticnet_bigdata_spark.ml.tuning import (
     _cell_rmse,
     ezlasso,
+    ezlasso_frame,
     rolling_origin_tune,
 )
 
@@ -139,16 +140,14 @@ def test_ezlasso_selects_signal_and_q6(spark):
         {"y": y, "xp": x_pos, "xn": x_neg, "n1": noise[:, 0], "n2": noise[:, 1]},
     )
     preds = ["xp", "xn", "n1", "n2"]
-    faithful = ezlasso(
-        spark, wide, "y", preds, alpha=0.5, maxnrvar=2, init_window=150
-    )
+    pdf = ezlasso_frame(wide, "y", preds)
+    faithful = ezlasso(pdf, "y", preds, alpha=0.5, maxnrvar=2, init_window=150)
     # Q6: signed ranking — the strong NEGATIVE predictor ranks last
     assert faithful[0] == "y"
     assert "xp" in faithful[1:]
     assert "xn" not in faithful[1:]
     fixed = ezlasso(
-        spark, wide, "y", preds, alpha=0.5, maxnrvar=2, init_window=150,
-        rank_abs=True,
+        pdf, "y", preds, alpha=0.5, maxnrvar=2, init_window=150, rank_abs=True
     )
     assert set(fixed[1:]) == {"xp", "xn"}
 
@@ -163,8 +162,6 @@ def test_ezlasso_q13_intercept_occupies_rank_slot(spark):
     import numpy as np
     import pandas as pd
 
-    from var_elasticnet_bigdata_spark.ml.tuning import ezlasso
-
     rng = np.random.default_rng(5)
     n = 220
     xp = rng.normal(size=n)
@@ -178,15 +175,15 @@ def test_ezlasso_q13_intercept_occupies_rank_slot(spark):
             "xn": xn,
         }
     )
-    df = spark.createDataFrame(pdf)
+    frame = ezlasso_frame(spark.createDataFrame(pdf), "y", ["xp", "xn"])
     faithful = ezlasso(
-        spark, df, "y", ["xp", "xn"], alpha=0.0, maxnrvar=2,
+        frame, "y", ["xp", "xn"], alpha=0.0, maxnrvar=2,
         init_window=180, horizon=1,
     )
     # top-2 of [intercept=0, xp>0, xn<0] = [xp, intercept] → xn dropped
     assert faithful == ["y", "xp"]
     fixed = ezlasso(
-        spark, df, "y", ["xp", "xn"], alpha=0.0, maxnrvar=2,
+        frame, "y", ["xp", "xn"], alpha=0.0, maxnrvar=2,
         init_window=180, horizon=1, rank_abs=True,
     )
     assert set(fixed) == {"y", "xp", "xn"}
@@ -219,10 +216,17 @@ def test_tune_distribute_join_equals_broadcast(spark, monkeypatch):
         alpha_grid=np.array([0.3, 0.7]),
         lambda_grid=10 ** np.linspace(0, -3, 8),
     )
-    # T − lag = 69 embedded rows: exactly at the ceiling → broadcast
+    # T − lag = 69 embedded rows: exactly at the ceiling → broadcast,
+    # 5 Spark jobs in all
     monkeypatch.setenv("SPARK_GRAFT_MAX_DRIVER_ROWS", str(T - 1))
-    base = rolling_origin_tune(spark, wide, ["a", "b"], **kw)
+    sc = spark.sparkContext
+    sc.setJobGroup("tune-broadcast", "tune-broadcast")
+    try:
+        base = rolling_origin_tune(spark, wide, ["a", "b"], **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert calls == []
+    assert len(sc.statusTracker().getJobIdsForGroup("tune-broadcast")) == 5
     # one row over the ceiling → the distributed path, no error
     monkeypatch.setenv("SPARK_GRAFT_MAX_DRIVER_ROWS", str(T - 2))
     dist = rolling_origin_tune(spark, wide, ["a", "b"], **kw)
@@ -233,20 +237,29 @@ def test_tune_distribute_join_equals_broadcast(spark, monkeypatch):
     assert np.allclose(bs[["alpha", "lambda"]], ds[["alpha", "lambda"]])
     assert np.allclose(bs.rmse, ds.rmse, rtol=1e-9)
     # far over the ceiling, with the anchor taken from the end: the
-    # embedded frame is counted once, for the anchor and the origins
-    counts = []
-    real_count = type(wide).count
+    # sizing collect brings ONE row (carrying the row count, which
+    # serves the anchor and the origins) and the embedded frame is
+    # never counted
+    counts, sizes = [], []
+    real_count, real_topandas = type(wide).count, type(wide).toPandas
 
     def count_spy(self):
         counts.append(1)
         return real_count(self)
 
+    def topandas_spy(self):
+        out = real_topandas(self)
+        sizes.append(len(out))
+        return out
+
     monkeypatch.setattr(type(wide), "count", count_spy)
+    monkeypatch.setattr(type(wide), "toPandas", topandas_spy)
     monkeypatch.setenv("SPARK_GRAFT_MAX_DRIVER_ROWS", "10")
     kw_end = {**kw, "init_window": None, "init_window_from_end": (T - 50, 5)}
     dist2 = rolling_origin_tune(spark, wide, ["a", "b"], **kw_end)
     assert calls == [1, 1]
-    assert counts == [1]
+    assert counts == [] and sizes == [1]
     assert np.allclose(
         dist2.sort_values("equation").rmse.to_numpy(), ds.rmse.to_numpy()
     )
+

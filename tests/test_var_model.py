@@ -229,11 +229,13 @@ def _jobs_in_group(spark, group, fn):
 
 
 def test_cv_fit_folds_cost_no_spark_job(spark):
-    """A cross-validated ``fit_enet_var`` runs the moments pass and the
-    tail collect and nothing else: the blocked folds are a window over
-    the lag embedding's own single sorted partition, so the CV fit
-    runs as many Spark jobs as the fixed-λ fit (3; a date-axis collect
-    for the folds made it 6)."""
+    """A cross-validated ``fit_enet_var`` runs the moments pass and
+    nothing else: the blocked folds are a window over the lag
+    embedding's own single sorted partition, and the forecast origin
+    rides the moments collect, so the CV fit runs as many Spark jobs
+    as the fixed-λ fit (2: the lag window's shuffle and the collect; a
+    date-axis collect for the folds made it 6, a separate tail collect
+    3)."""
     y, _ = simulate_var1(T=80, seed=9)
     wide = to_wide(spark, y)
     series = ["y1", "y2", "y3"]
@@ -243,7 +245,44 @@ def test_cv_fit_folds_cost_no_spark_job(spark):
     _, fixed_jobs = _jobs_in_group(
         spark, "fixed-fit", lambda: fit_enet_var(wide, series, p=2, lam=0.05)
     )
-    assert cv_jobs == fixed_jobs == 3
+    assert cv_jobs == fixed_jobs == 2
+
+
+def _wide_with_nulls(spark, y, series):
+    return spark.createDataFrame(
+        [
+            (dt.date(2000, 1, 1) + dt.timedelta(days=7 * i),
+             *(None if np.isnan(v) else float(v) for v in row))
+            for i, row in enumerate(y)
+        ],
+        f"obs_date date, {', '.join(f'{s} double' for s in series)}",
+    )
+
+
+def test_forecast_origin_is_last_complete_rows(spark):
+    """The forecast origin that rides the moments collect is the last p
+    rows with every series non-NULL, oldest first — also when a series
+    starts late, when a gap sits inside the last p rows (the last
+    complete embedded row then predates them), and when it reaches
+    back into the first p rows, which the lag embedding alone drops."""
+    from var_elasticnet_bigdata_spark.ml.gram import var_moments
+
+    series = ["y1", "y2", "y3"]
+    y, _ = simulate_var1(T=40, seed=13)
+    y[:4, 1] = np.nan
+    y[-2, 0] = np.nan
+    y[-5, 2] = np.nan
+    wide = _wide_with_nulls(spark, y, series)
+    complete = y[~np.isnan(y).any(axis=1)]
+    for p in (1, 2, 4):
+        for lam in (None, 0.05):
+            m = fit_enet_var(wide, series, p=p, alpha=0.4, lam=lam)
+            assert m.last_rows.tolist() == complete[-p:].tolist()
+    short, _ = simulate_var1(T=10, seed=14)
+    short[4:9, 0] = np.nan
+    _, mom, last = var_moments(_wide_with_nulls(spark, short, series), series, 3)
+    assert mom.n == 1
+    assert last.tolist() == short[[2, 3, 9]].tolist()
 
 
 def test_spark_folds_equal_blocked_fold_ids(spark):

@@ -65,21 +65,18 @@ def compute_moments(
     cols: list[str],
     fold_col: str | None = None,
     dropna: bool = True,
-) -> Moments | dict[int, Moments]:
+    carry: DataFrame | None = None,
+):
     """One distributed pass → moment matrix (optionally per fold).
 
     ``dropna=True`` applies the reference's ``na.omit`` semantics
     (Main.R:196): any row with a NULL in ``cols`` is excluded, pushed
     down as IsNotNull filters before the scan.
-    """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
 
+    ``carry`` — a frame with one ``array<double>`` column ``partial``
+    — rides the same collect as a union branch; given, the return is
+    ``(moments, carried partials)``.
+    """
     k1 = len(cols) + 1
     # Rename to positional-safe names: lag columns carry the
     # reference's dotted ``<var>.l<i>`` names, which both bare-string
@@ -95,13 +92,6 @@ def compute_moments(
             p = F.col(s).isNotNull()
             cond = p if cond is None else (cond & p)
         data = data.filter(cond)
-
-    schema = StructType(
-        [
-            StructField("fold", IntegerType()),
-            StructField("partial", ArrayType(DoubleType())),
-        ]
-    )
 
     has_fold = fold_col is not None
 
@@ -130,9 +120,17 @@ def compute_moments(
         ]
         yield pd.DataFrame(rows, columns=["fold", "partial"])
 
-    collected = data.mapInPandas(partials, schema).collect()
+    out = data.mapInPandas(partials, "fold int, partial array<double>")
+    if carry is not None:
+        out = out.unionByName(
+            carry.select(F.lit(None).cast("int").alias("fold"), "partial")
+        )
     totals: dict[int, np.ndarray] = {}
-    for row in collected:
+    carried = []
+    for row in out.collect():
+        if row["fold"] is None:
+            carried.append(row["partial"])
+            continue
         p = np.array(row["partial"]).reshape(k1, k1)
         if row["fold"] in totals:
             totals[row["fold"]] += p
@@ -140,8 +138,10 @@ def compute_moments(
             totals[row["fold"]] = p
     if fold_col is None:
         m = sum(totals.values()) if totals else np.zeros((k1, k1))
-        return Moments(cols=list(cols), m=m)
-    return {fold: Moments(cols=list(cols), m=m) for fold, m in totals.items()}
+        moments = Moments(cols=list(cols), m=m)
+    else:
+        moments = {fold: Moments(cols=list(cols), m=m) for fold, m in totals.items()}
+    return moments if carry is None else (moments, carried)
 
 
 def blocked_fold_column(
@@ -162,8 +162,11 @@ def blocked_fold_column(
     sorted by date. The fold window reuses that partitioning and
     order, so it adds no Exchange, no Sort and no Spark job; a
     date-axis collect joined back to the frame would cost an extra
-    aggregation round per fit. On a frame not yet ordered by date the
-    window moves every row to one partition.
+    aggregation round per fit. The shared quarterly pair
+    (``queries._quarterly_pair``) is staged as one partition sorted by
+    date, so over it neither window plans an Exchange or a Sort. On a
+    frame not yet ordered by date the lag window moves every row to
+    one partition.
     """
     rank = F.dense_rank().over(Window.orderBy(date_col))
     return frame.filter(F.col(date_col).isNotNull()).withColumn(
@@ -177,19 +180,36 @@ def var_moments(
     p: int,
     date_col: str = "obs_date",
     cv_block: int | None = None,
-) -> tuple[VarZ, Moments | dict[int, Moments]]:
+) -> tuple[VarZ, Moments | dict[int, Moments], np.ndarray]:
     """The VAR design chain every Spark fit runs: select the series,
     lag-embed at order p (``VAR.Z``), ``na.omit`` (``VarZ.complete``),
     blocked CV folds when ``cv_block`` is given, then ONE
     ``compute_moments`` pass over the lag columns and the responses
-    (response columns keep the series names). Returns the embedding
-    and the moments — per fold when ``cv_block`` is given."""
-    vz = var_z(wide_df.select(date_col, *series), series, p, date_col=date_col)
+    (response columns keep the series names). Returns the embedding,
+    the moments — per fold when ``cv_block`` is given — and the
+    forecast origin: the last p rows with every series non-NULL,
+    oldest first (p, K).
+
+    The origin rides the moments collect as ``compute_moments``'
+    ``carry`` (partial = [newness rank, values]); its ``row_number``
+    filter plans as a top-p (``TakeOrderedAndProject``, Spark 4.1),
+    so a fit runs no tail collect and sorts no whole frame."""
+    wide = wide_df.select(date_col, *series)
+    vz = var_z(wide, series, p, date_col=date_col)
     cols = [*vz.z_names, *series]
-    if cv_block is None:
-        return vz, compute_moments(vz.complete, cols)
-    frame = blocked_fold_column(vz.complete, date_col, cv_block)
-    return vz, compute_moments(frame, cols, fold_col="__fold")
+    frame, fold_col = vz.complete, None
+    if cv_block is not None:
+        frame, fold_col = blocked_fold_column(frame, date_col, cv_block), "__fold"
+    newest = F.row_number().over(Window.orderBy(F.col(date_col).desc()))
+    origin = (
+        wide.dropna(subset=series)
+        .withColumn("__rn", newest)
+        .filter(F.col("__rn") <= p)
+        .select(F.array("__rn", *series).cast("array<double>").alias("partial"))
+    )
+    moments, carried = compute_moments(frame, cols, fold_col, carry=origin)
+    last = sorted(carried, reverse=True)
+    return vz, moments, np.array([r[1:] for r in last]).reshape(-1, len(series))
 
 
 def moments_total(per_fold: dict[int, Moments]) -> Moments:

@@ -205,8 +205,8 @@ def fit_group_enet_var(
 ) -> EnetVARModel:
     """The reference's ``GroupEnetVAR`` (enetVAR.R:344-421) from a
     WIDE Spark DataFrame: ``fit_enet_var``'s Spark body (one
-    distributed per-fold Gram pass, tail collect) and λ step with
-    ``cv_group_enet`` as the CV."""
+    distributed per-fold Gram pass that also brings the tail rows)
+    and λ step with ``cv_group_enet`` as the CV."""
     return fit_enet_var(
         wide_df, series, p, alpha, None, intercept, date_col, cv_block,
         _cv=cv_group_enet,
@@ -278,7 +278,7 @@ def fit_group_enet_var_fixed(
     B_orig, a0)`` on the original data scale. The CV λ.min flavor
     stays pinned in tests/test_group_enet.py (reference
     enetVAR.R:344-366)."""
-    vz, fm = var_moments(wide_df, series, p, date_col)
+    vz, fm, _ = var_moments(wide_df, series, p, date_col)
     z_cols = vz.z_names
     xtx_n, xty_n, mx, my, xscale, yscale = _standardize_group(
         fm, z_cols, series, intercept, True

@@ -42,6 +42,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -211,47 +212,18 @@ def pacf_var_selection(
     if faithful_blocked:
         from ..plans.guards import guarded_topandas
 
-        pivoted = (
+        wide = guarded_topandas(
             df.groupBy(date_col)
             .pivot(series_col)
             .agg(F.first(value_col))
-        )
-        wide = guarded_topandas(
-            pivoted.orderBy(date_col),
+            .orderBy(date_col),
             "pacf_var_selection(faithful_blocked=True) wide frame",
             "pacf_var_selection(faithful_blocked=False) — the "
             "distributed one-pass acf_table path",
         )
-        names = column_order or [
-            target,
-            *sorted(c for c in wide.columns if c not in (date_col, target)),
-        ]
-        X = wide[names].dropna().to_numpy(dtype=float)
-        T, K = X.shape
-        t_idx = names.index(target)
-        if t_idx != 0:
-            raise ValueError("faithful_blocked requires target as column 0")
-        lag_max = lag + 1
-        ti = 0
-        prof_cols: list[np.ndarray] = []
-        # block 0: columns 0..3 (target included in the profile)
-        P = multivariate_pacf(X[:, 0:4], lag_max)
-        prof_cols.extend(P[1:, ti, j] for j in range(min(4, K)))
-        for i in range(1, math.ceil(K / 4)):
-            end = (i + 1) * 4
-            if K < end:
-                end = end - 1  # the reference's ind <- (i+1)*4-1
-                if end > K:
-                    raise IndexError(
-                        f"reference blocked pacf indexes column {end} of a "
-                        f"{K}-column frame (NCOL %% 4 must be 0 or 3, as in "
-                        "the 147-column SW frame; enetVAR.R:714-717)"
-                    )
-            cols = [0, *range(4 * i, end)]
-            Pb = multivariate_pacf(X[:, cols], lag_max)
-            prof_cols.extend(Pb[1:, 0, j] for j in range(1, len(cols)))
-        prof = np.column_stack(prof_cols)
-        return _greedy_diverse(names, prof, target, maxnrvar, faithful_q11)
+        return pacf_blocked_selection(
+            wide, target, lag, maxnrvar, faithful_q11, column_order, date_col
+        )[0]
 
     acfs = acf_table(
         df, lag, value_col, series_col, date_col, method="r"
@@ -269,3 +241,42 @@ def pacf_var_selection(
         ]
     )
     return _greedy_diverse(names, prof, target, maxnrvar, faithful_q11)
+
+
+def pacf_blocked_selection(
+    wide: pd.DataFrame, target: str, lag: int, maxnrvar: int,
+    faithful_q11: bool = False, column_order: list[str] | None = None,
+    date_col: str = "obs_date",
+) -> tuple[list[str], np.ndarray]:
+    """``pacf_var_selection(faithful_blocked=True)`` on a collected wide
+    frame (a column per series, rows in date order; no Spark job).
+    Returns the selection and the (lag × K) target-row profile it
+    ranks, columns in ``column_order`` (default: target, then sorted)."""
+    names = column_order or [
+        target,
+        *sorted(c for c in wide.columns if c not in (date_col, target)),
+    ]
+    if names[0] != target:
+        raise ValueError("faithful_blocked requires target as column 0")
+    X = wide[names].dropna().to_numpy(dtype=float)
+    K = X.shape[1]
+    lag_max = lag + 1
+    prof_cols: list[np.ndarray] = []
+    # block 0: columns 0..3 (target included in the profile)
+    P = multivariate_pacf(X[:, 0:4], lag_max)
+    prof_cols.extend(P[1:, 0, j] for j in range(min(4, K)))
+    for i in range(1, math.ceil(K / 4)):
+        end = (i + 1) * 4
+        if K < end:
+            end = end - 1  # the reference's ind <- (i+1)*4-1
+            if end > K:
+                raise IndexError(
+                    f"reference blocked pacf indexes column {end} of a "
+                    f"{K}-column frame (NCOL %% 4 must be 0 or 3, as in "
+                    "the 147-column SW frame; enetVAR.R:714-717)"
+                )
+        cols = [0, *range(4 * i, end)]
+        Pb = multivariate_pacf(X[:, cols], lag_max)
+        prof_cols.extend(Pb[1:, 0, j] for j in range(1, len(cols)))
+    prof = np.column_stack(prof_cols)
+    return _greedy_diverse(names, prof, target, maxnrvar, faithful_q11), prof

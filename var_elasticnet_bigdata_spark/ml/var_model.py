@@ -226,22 +226,11 @@ def fit_enet_var(
     the fold assignment) through ``gram.var_moments``, which embeds
     first and then drops incomplete rows (na.omit, Main.R:196), so
     ragged starts behave like the reference; one driver-side path fit
-    over all K equations."""
-    from pyspark.sql import functions as F
-
-    vz, moments = var_moments(
+    over all K equations; the last p observation rows for forecasting
+    ride the same collect."""
+    vz, moments, last_rows = var_moments(
         wide_df, series, p, date_col, cv_block if lam is None else None
     )
-    # last p observation rows for recursive forecasting (tiny collect)
-    tail = (
-        wide_df.select(date_col, *series)
-        .dropna(subset=series)
-        .orderBy(F.col(date_col).desc())
-        .limit(p)
-        .orderBy(date_col)
-        .collect()
-    )
-    last_rows = np.array([[r[s] for s in series] for r in tail], dtype=float)
     return _fit_model(
         moments, vz.z_names, series, p, alpha, lam, intercept, last_rows,
         nlambda, varz=vz, _cv=_cv,

@@ -1610,7 +1610,7 @@ def connected_components(
     relative to the corpus (LSH-verified pairs). When the exact edge
     count (already known from the convergence signature) is at or
     under ``local_finish_rows`` (default: the
-    ``guard_driver_collect`` ceiling), the edges are collected and
+    ``plans.guards.max_driver_rows`` ceiling), the edges are collected and
     resolved by driver-side union-find — one job instead of
     per-round shuffle cascades. This is the same bounded-frontier
     rule every other guarded collect in the engine follows.

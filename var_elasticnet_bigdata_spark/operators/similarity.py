@@ -2490,7 +2490,6 @@ def ivfpq_search(
     round_dp: int = 6,
     exclude_self: bool = False,
     sample_mod: int = 1,
-    normed: DataFrame | None = None,
 ) -> DataFrame:
     """The FULL IVF-PQ vector-index chain as one composition
     (VERDICT r6 item 7) — what a production 100 TB vector store
@@ -2525,15 +2524,30 @@ def ivfpq_search(
     """
     # staged normalize: the self-training call makes FOUR passes over
     # the corpus (centroid seed, Lloyd assign, codebook seed, encode/
-    # serve) that all start from the same normalized projection —
-    # stage it once (callers like the recall audit pass their own so
-    # the exact arm shares it too)
-    if normed is None:
-        normed = swap_cache(
-            "similarity.ivfpq_normed",
-            _normalized_vectors(df, id_col, vec_col),
-        )
+    # serve) that all start from the same normalized projection
+    normed = swap_cache(
+        "similarity.ivfpq_normed", _normalized_vectors(df, id_col, vec_col)
+    )
+    pids, X = _probe_block(
+        _probe_filter(df, id_col, probe_mod, sample_mod),
+        "ivfpq_search",
+        "a larger probe_mod or batched calls (the probe LUT must stay "
+        "bounded driver-side)",
+        max_probes, id_col, vec_col,
+    )
+    return _ivfpq_serve(
+        df, normed, pids, X, nlist, m, k, nprobe, topk, id_col, vec_col,
+        centroids, codebook, round_dp, exclude_self,
+    )
 
+
+def _ivfpq_serve(
+    df, normed, pids, X, nlist, m, k, nprobe, topk, id_col, vec_col,
+    centroids, codebook, round_dp, exclude_self,
+) -> DataFrame:
+    """`ivfpq_search` past its probe block: train (or accept) the
+    index over the staged ``normed`` corpus, encode, then route and
+    score the probe block ``(pids, X)``."""
     # --- train (or accept) the coarse quantizer --------------------
     if centroids is None:
         rows = kmeans_refine(
@@ -2578,18 +2592,7 @@ def ivfpq_search(
         extra_cols=("cell",),
     )
 
-    # --- bounded probe set, driver-side cell routing + LUT ---------
-    # sample_mod: the recall audit's md5-bucket probe sample — the
-    # index arm's per-probe ADC cost is also corpus-proportional, so a
-    # sampled audit must sample BOTH arms or the unsampled arm masks
-    # the saving
-    pids, X = _probe_block(
-        _probe_filter(df, id_col, probe_mod, sample_mod),
-        "ivfpq_search",
-        "a larger probe_mod or batched calls (the probe LUT must stay "
-        "bounded driver-side)",
-        max_probes, id_col, vec_col,
-    )
+    # --- driver-side cell routing + LUT over the probe block -------
     Q, probed = _ivfpq_route(X, C, nprobe, round_dp)
     scored = _ivfpq_score(
         coded, pids, Q, probed, C, cb, m, k, topk, round_dp, exclude_self,
@@ -2878,22 +2881,20 @@ def ivfpq_recall_top1(
     normed = swap_cache(
         "similarity.ivfpq_normed", _normalized_vectors(df, id_col, vec_col)
     )
-    idx = ivfpq_search(
-        df, nlist=nlist, m=m, k=k, nprobe=nprobe, topk=1,
-        id_col=id_col, vec_col=vec_col, probe_mod=probe_mod,
-        centroids=centroids, codebook=codebook,
-        max_probes=max_probes, round_dp=round_dp, exclude_self=True,
-        sample_mod=sample_mod, normed=normed,
-    ).select(F.col("qid"), F.col(id_col).alias("ivfpq_id"))
-
-    from ..plans.guards import guarded_collect
-
+    # ONE probe block serves both arms
     pids, X = _probe_block(
         _probe_filter(df, id_col, probe_mod, sample_mod),
         "ivfpq_recall_top1",
         "a larger probe_mod (the probe block must stay bounded)",
         max_probes, id_col, vec_col,
     )
+    idx = _ivfpq_serve(
+        df, normed, pids, X, nlist, m, k, nprobe, 1, id_col, vec_col,
+        centroids, codebook, round_dp, True,
+    ).select(F.col("qid"), F.col(id_col).alias("ivfpq_id"))
+
+    from ..plans.guards import guarded_collect
+
     Q = _unit_rows(X)
 
     def exact_top1(it):

@@ -9,7 +9,7 @@ scale path instead of OOMing the driver (VERDICT r1 item 7). The
 rolling-origin entry points read the same ceiling
 (``max_driver_rows``) to pick their path instead of failing:
 ``modeltrain`` from its date axis, ``rolling_origin_tune`` from one
-bounded collect.
+sizing collect.
 
 The ceiling is configurable per call or globally via the
 ``SPARK_GRAFT_MAX_DRIVER_ROWS`` environment variable.
@@ -42,28 +42,6 @@ def _ceiling_error(
         f"frontiers; at this size use {scale_path}, or raise "
         f"SPARK_GRAFT_MAX_DRIVER_ROWS explicitly."
     )
-
-
-def guard_driver_collect(
-    df: DataFrame,
-    what: str,
-    scale_path: str,
-    max_rows: int | None = None,
-) -> None:
-    """Fail fast if ``df`` has more than ``max_rows`` rows.
-
-    Uses ``limit(n+1).count()`` so the check never scans past the
-    ceiling. ``what`` names the collect site; ``scale_path`` tells
-    the caller which distributed alternative to use instead.
-
-    Prefer ``guarded_topandas``/``guarded_collect`` when the very next
-    step is the materialization itself — they fuse the check into the
-    collect (one Spark job instead of two).
-    """
-    limit = max_rows if max_rows is not None else max_driver_rows()
-    n = df.limit(limit + 1).count()
-    if n > limit:
-        raise _ceiling_error(what, scale_path, limit)
 
 
 def guarded_topandas(

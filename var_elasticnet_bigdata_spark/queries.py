@@ -861,14 +861,20 @@ def _daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Staged once per session and ``sf_dir`` in a cache-registry slot
     (``shared_frame``): a dozen queries derive from the daily event
     series / quarterly pair, and re-running the upstream aggregation
-    per query dominates their wall-clock at bench scale."""
+    per query dominates their wall-clock at bench scale. It is staged
+    as ONE partition sorted by (series_id, obs_date), small for a
+    date-axis roll-up at any scale: one partition satisfies every
+    consumer's distribution (``groupBy("obs_date")`` pivots,
+    ``applyInPandas`` by ``series_id``, per-series windows), so none
+    plans an Exchange above the cached scan."""
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "events")
-        return e.groupBy(
+        daily = e.groupBy(
             F.col("event_type").alias("series_id"),
             F.date_trunc("day", "ts").cast("date").alias("obs_date"),
         ).agg(r6(F.sum("value")).alias("value"))
+        return daily.repartition(1).sortWithinPartitions("series_id", "obs_date")
 
     return shared_frame(spark, f"shared.daily_events:{sf_dir}", build)
 
@@ -3430,7 +3436,9 @@ _QUARTERLY_PAIR_CTE = """
 
 def _quarterly_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-series quarterly wide frame from orders/lineitem, staged
-    like ``_daily_events``."""
+    like ``_daily_events`` as one partition sorted by obs_date: the
+    unpartitioned date windows of ``var_z`` and ``blocked_fold_column``
+    read the cached scan with no Exchange and no Sort."""
 
     def build() -> DataFrame:
         o = (
@@ -3447,7 +3455,8 @@ def _quarterly_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg((F.sum("l_quantity") / 1e5).alias("quantity"))
         )
-        return o.join(li, "obs_date", "inner").orderBy("obs_date")
+        pair = o.join(li, "obs_date", "inner")
+        return pair.repartition(1).sortWithinPartitions("obs_date")
 
     return shared_frame(spark, f"shared.quarterly_pair:{sf_dir}", build)
 
@@ -4387,7 +4396,7 @@ def ml_group_ridge_coefs(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = _quarterly_pair(spark, sf_dir)
     series = ["revenue", "quantity"]
     p, lam = 2, 0.05
-    vz, m = var_moments(wide, series, p)
+    vz, m, _ = var_moments(wide, series, p)
     z_cols = vz.z_names
     fits = group_enet_path(
         m, z_cols, series, alpha=0.0,
@@ -4925,7 +4934,15 @@ def ml_ezlasso_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed in SQL. Output carries the tuned λ and refit coefficients
     so the hash covers the numbers, not just the selection order.
     The α>0 path stays pinned in tests/test_tuning.py."""
-    from .ml.tuning import ezlasso
+    return _ezlasso_query(spark, sf_dir, alpha=0.0, rank_abs=False)
+
+
+def _ezlasso_query(
+    spark: SparkSession, sf_dir: str, alpha: float, rank_abs: bool
+) -> DataFrame:
+    """Both ezlasso queries: click ~ purchase + view, collected once,
+    initial window half the complete rows (at least 8)."""
+    from .ml.tuning import ezlasso, ezlasso_frame
 
     daily = _daily_events(spark, sf_dir)
     wide = (
@@ -4933,17 +4950,18 @@ def ml_ezlasso_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .pivot("series_id", ["click", "purchase", "view"])
         .agg(F.first("value"))
     )
-    n = wide.dropna().count()
+    pdf = ezlasso_frame(wide, "click", ["purchase", "view"])
     sel, best_lam, coefs = ezlasso(
-        spark, wide, "click", ["purchase", "view"],
-        alpha=0.0, maxnrvar=2, init_window=max(n // 2, 8), horizon=1,
-        return_details=True,
+        pdf, "click", ["purchase", "view"],
+        alpha=alpha, maxnrvar=2, init_window=max(len(pdf) // 2, 8), horizon=1,
+        rank_abs=rank_abs, return_details=True,
     )
     rows = [(0, "click", 0.0, round(best_lam, 6))]
     for i, s in enumerate(sel[1:], start=1):
         rows.append((i, s, round(coefs[s], 6), round(best_lam, 6)))
     return local_frame(
-        spark, rows, "rank int, series string, coef double, best_lambda double"
+        spark, rows, "rank int, series string, coef double, best_lambda double",
+        order_by=("rank",),
     )
 
 
@@ -5039,27 +5057,7 @@ def ml_ezlasso_enet(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact 3² KKT sign-pattern enumeration; engine and oracle
     both land on the unique strictly-convex minimizer, so no
     iteration appears on either side. Reference: enetVAR.R:617-641."""
-    from .ml.tuning import ezlasso
-
-    daily = _daily_events(spark, sf_dir)
-    wide = (
-        daily.groupBy("obs_date")
-        .pivot("series_id", ["click", "purchase", "view"])
-        .agg(F.first("value"))
-    )
-    n = wide.dropna().count()
-    sel, best_lam, coefs = ezlasso(
-        spark, wide, "click", ["purchase", "view"],
-        alpha=0.5, maxnrvar=2, init_window=max(n // 2, 8), horizon=1,
-        rank_abs=True, return_details=True,
-    )
-    rows = [(0, "click", 0.0, round(best_lam, 6))]
-    for i, s in enumerate(sel[1:], start=1):
-        rows.append((i, s, round(coefs[s], 6), round(best_lam, 6)))
-    return local_frame(
-        spark, rows, "rank int, series string, coef double, best_lambda double",
-        order_by=("rank",),
-    )
+    return _ezlasso_query(spark, sf_dir, alpha=0.5, rank_abs=True)
 
 
 def _register_ezlasso_enet_oracle(alpha: float = 0.5) -> None:
@@ -5197,7 +5195,7 @@ def ml_cv_lambda_min(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wide = _quarterly_pair(spark, sf_dir)
     series = ["revenue", "quantity"]
-    vz, fm = var_moments(wide, series, 1, cv_block=10)
+    vz, fm, _ = var_moments(wide, series, 1, cv_block=10)
     z_cols = vz.z_names
     rows = []
     fits = cv_enet(fm, z_cols, series, 0.5, intercept=True, truncate=False)
@@ -5987,30 +5985,24 @@ def ml_pacf_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin unrolls the ENTIRE matrix recursion (5 steps of 3×3
     multiplies + adjugate inverses as chained named-column CTEs) —
     previously the recursion was pytest-only."""
-    import numpy as np
+    from .ml.selection import pacf_blocked_selection
+    from .plans.guards import guarded_topandas
 
-    from .ml.selection import pacf_var_selection
-    from .operators.acf import multivariate_pacf
-
-    daily = _daily_events(spark, sf_dir).filter(
-        F.col("series_id").isin("click", "purchase", "view")
-    )
-    sel = pacf_var_selection(
-        daily, "click", lag=4, maxnrvar=3, faithful_blocked=True
-    )
     names = ["click", "purchase", "view"]
-    wide = (
-        daily.groupBy("obs_date")
+    wide = guarded_topandas(
+        _daily_events(spark, sf_dir)
+        .groupBy("obs_date")
         .pivot("series_id", names)
         .agg(F.first("value"))
-        .orderBy("obs_date")
-        .toPandas()
+        .orderBy("obs_date"),
+        "ml_pacf_blocked wide frame", "pacf_var_selection(faithful_blocked=False)",
     )
-    X = wide[names].dropna().to_numpy(dtype=float)
-    P = multivariate_pacf(X, 5)
+    # K=3 is one block, so the profile is the whole recursion's
+    # target row at lags 2..5
+    sel, prof = pacf_blocked_selection(wide, "click", lag=4, maxnrvar=3)
     rows = [
-        ("profile", k + 1, names[j], round(float(P[k, 0, j]), 6))
-        for k in range(1, 5)
+        ("profile", k + 2, names[j], round(float(prof[k, j]), 6))
+        for k in range(4)
         for j in range(3)
     ]
     rows += [("sel", i, s, 0.0) for i, s in enumerate(sel)]
