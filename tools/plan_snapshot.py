@@ -13,10 +13,11 @@ operator names in its plan and diffing future plans against it.
 plan-construction-cheap queries are locked (building an ML query's
 plan executes its driver-side fit); the EXCLUDE set lists the rest.
 
-Node-name extraction keeps exchange/join/generate/window/scan-level
+Node-name extraction keeps exchange/join/generate/window-level
 operators and drops cosmetic nodes (Project/Filter counts shift with
 harmless expression refactors; WholeStageCodegen spans shift with
-codegen id allocation).
+codegen id allocation). File scans are counted as ``FileScan`` on the
+JVM plan tree, not from the printed plan.
 """
 
 from __future__ import annotations
@@ -56,19 +57,37 @@ KEEP = re.compile(
     # (queries._daily_events, queries._quarterly_pair) make its
     # presence depend on clearCache timing relative to their
     # registration, not on the query's structure
-    r"FileScan|Union|Intersect|Except)"
+    r"Union|Intersect|Except)"
 )
 
 
+def _file_scans(plan) -> int:
+    """``FileSourceScanExec`` nodes of a physical plan, counted on the
+    JVM tree (AQE's input plan and subquery plans included). Spark 4
+    prints such a node as ``Scan parquet``, which the node-name regex
+    reads as ``Scan``; ``Scan ExistingRDD`` and ``LocalTableScan`` are
+    other node classes and stay uncounted."""
+    def seq(s):
+        return [s.apply(i) for i in range(s.length())]
+
+    kids = seq(plan.children()) + seq(plan.subqueries())
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids.append(plan.inputPlan())
+    return (name == "FileSourceScanExec") + sum(_file_scans(k) for k in kids)
+
+
 def plan_signature(df) -> dict[str, int]:
-    plan = df._jdf.queryExecution().explainString(
+    qe = df._jdf.queryExecution()
+    plan = qe.explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
     )
     nodes = re.findall(r"^\s*[*+:\-\s]*\(\d+\)\s+([A-Za-z]+)", plan, re.M)
     c = Counter(n for n in nodes if KEEP.match(n))
-    return dict(sorted(c.items()))
+    c["FileScan"] = _file_scans(qe.executedPlan())
+    return dict(sorted((k, v) for k, v in c.items() if v))
 
 
 def lockable(name: str) -> bool:

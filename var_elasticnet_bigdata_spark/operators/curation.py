@@ -30,25 +30,55 @@ from pyspark.sql import functions as F
 from ..plans.cachereg import swap_cache
 
 from .dedup import (
-    MINHASH_A,
-    MINHASH_B,
-    MINHASH_P,
+    _band_expr,
+    _banded,
+    _bucket_pairs,
+    _sig_expr,
+    _verify,
     normalized_text,
     shingle_hashes_from_words,
 )
 from .text import lang_id_from, quality_sql_spark
 
 
-def _sig_from_shingles(num_hashes: int) -> Column:
-    # one zip_with loop over literal coefficient arrays instead of
-    # num_hashes unrolled array_min terms — identical values, ~1/16th
-    # the generated code (cold codegen compile is the cost at bench
-    # scale)
-    a = ", ".join(f"{MINHASH_A[i]}L" for i in range(num_hashes))
-    b = ", ".join(f"{MINHASH_B[i]}L" for i in range(num_hashes))
-    return F.expr(
-        f"zip_with(array({a}), array({b}),"
-        f" (a, b) -> array_min(transform(__sh, h -> ((a * h + b) % {MINHASH_P}L))))"
+def _exact_survivors(
+    docs: DataFrame, min_quality: float, min_tokens: int, *cols: Column | str
+) -> DataFrame:
+    """The shared prelude of the curation compositions: normalize ONCE,
+    split ONCE, score quality and length, keep rows passing both, then
+    keep the min-``doc_id`` row per md5 of the normalized text.
+
+    ``cols`` are evaluated beside ``n_tokens`` and ``quality`` over the
+    staged ``__norm``, ``__words`` and ``__uw`` (distinct words)
+    columns; a staged column no caller reads is pruned from the plan.
+    Staging matters: the self-contained per-column expressions
+    re-derive the normalization inside every marker/shingle term,
+    which blows the codegen tree up ~20× and dominates cold
+    wall-clock (9.6 s vs 1.8 s warm at sf0.1 — compile, not compute).
+
+    Exact dedup is ONE shuffle: a min-id window over the content key
+    (high-cardinality md5 ⇒ skew-free) instead of groupBy+self-join —
+    measured 12.5 s → 4.3 s for the whole curation at sf0.1."""
+    staged = (
+        docs.withColumn("__norm", normalized_text())
+        .withColumn("__words", F.split(F.col("__norm"), " "))
+        .withColumn("__uw", F.array_distinct("__words"))
+    )
+    scored = staged.select(
+        "doc_id",
+        *cols,
+        F.size("__words").alias("n_tokens"),
+        F.expr(quality_sql_spark("__norm", "__words")).alias("quality"),
+        F.md5(F.col("__norm")).alias("ck"),
+    )
+    filt = scored.filter(
+        (F.col("quality") >= min_quality) & (F.col("n_tokens") >= min_tokens)
+    )
+    w = Window.partitionBy("ck")
+    return (
+        filt.withColumn("__min_id", F.min("doc_id").over(w))
+        .filter(F.col("doc_id") == F.col("__min_id"))
+        .drop("__min_id", "ck")
     )
 
 
@@ -65,80 +95,24 @@ def curate_corpus(
     """Full curation pass over a ``(doc_id, text, ...)`` frame.
     Returns the KEPT documents with their scores:
     ``(doc_id, n_tokens, lang_guess, quality)``."""
-    # staged scoring: normalize ONCE, split ONCE, distinct ONCE —
-    # the self-contained per-column expressions re-derive the
-    # normalization inside every marker/shingle term, which blows the
-    # codegen tree up ~20× and dominates cold wall-clock (9.6 s vs
-    # 1.8 s warm at sf0.1 — compile, not compute)
-    staged = (
-        docs.withColumn("__norm", normalized_text())
-        .withColumn("__words", F.split(F.col("__norm"), " "))
-        .withColumn("__uw", F.array_distinct("__words"))
-    )
-    scored = staged.select(
-        "doc_id",
-        F.size("__words").alias("n_tokens"),
-        lang_id_from("__uw").alias("lang_guess"),
-        F.expr(quality_sql_spark("__norm", "__words")).alias("quality"),
-        F.md5(F.col("__norm")).alias("ck"),
-        F.expr(shingle_hashes_from_words("__words", ngram)).alias("__sh"),
-    )
-    filt = scored.filter(
-        (F.col("quality") >= min_quality) & (F.col("n_tokens") >= min_tokens)
-    )
-    # exact dedup as ONE shuffle: min-id window over the content key
-    # (high-cardinality md5 ⇒ skew-free) instead of groupBy+self-join
-    # — measured 12.5 s → 4.3 s for the whole pipeline at sf0.1
-    w = Window.partitionBy("ck")
+    band = _band_expr(num_hashes, bands, rows_per_band)
     surv = swap_cache(
         "curation.curate_survivors",
-        filt.withColumn("__min_id", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") == F.col("__min_id"))
-        .drop("__min_id"),
+        _exact_survivors(
+            docs,
+            min_quality,
+            min_tokens,
+            lang_id_from("__uw").alias("lang_guess"),
+            F.expr(shingle_hashes_from_words("__words", ngram)).alias("__sh"),
+        ),
     )
-
-    sigs = surv.select("doc_id", _sig_from_shingles(num_hashes).alias("sig"))
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}),"
-                f" b -> md5(concat_ws(',', slice(sig, b*{rows_per_band}+1, {rows_per_band}))))"
-            )
-        ).alias("band_idx", "band_hash"),
-    )
-    # candidates via ONE bucket groupBy + sorted in-bucket pair
-    # expansion (same shape as dedup.lsh_candidate_pairs r3): a
-    # banded⋈banded self-join shuffles every band row twice and, on
-    # an unpersisted lineage, would evaluate the signature pipeline
-    # once per side
-    buckets = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
+    sigs = surv.select("doc_id", F.expr(_sig_expr(num_hashes)).alias("sig"))
     # shared hot-bucket guard: post-exact-dedup buckets are usually
     # tiny, but boilerplate-heavy corpora can still form huge near-dup
     # families — star-cap the expansion like lsh_candidate_pairs
-    from .dedup import bucket_pair_expr
-
-    cand = (
-        buckets.select(F.explode(F.expr(bucket_pair_expr(1024))).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    cand = _bucket_pairs(_banded(sigs, "doc_id", band), "doc_id", 1024).distinct()
     sh = surv.select("doc_id", F.col("__sh").alias("sh"))
-    pairs = cand.join(
-        sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-    ).join(sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-    near = pairs.filter(
-        F.round(
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-            6,
-        )
-        >= jaccard_threshold
-    )
+    near = _verify(cand, sh, sh, "doc_id", jaccard_threshold)
     drops = near.select(F.col("id_b").alias("doc_id")).distinct()
     return surv.join(drops, "doc_id", "left_anti").select(
         "doc_id", "n_tokens", "lang_guess", "quality"
@@ -189,26 +163,8 @@ def training_pipeline(
     from .split import stratified_sample
 
     rates = sample_rates or {"en": 0.8, "de": 0.8}
-    staged = (
-        docs.withColumn("__norm", normalized_text())
-        .withColumn("__words", F.split(F.col("__norm"), " "))
-    )
-    scored = staged.select(
-        "doc_id",
-        "lang",
-        "__norm",
-        "__words",
-        F.size("__words").alias("n_tokens"),
-        F.expr(quality_sql_spark("__norm", "__words")).alias("quality"),
-    )
-    filt = scored.filter(
-        (F.col("quality") >= min_quality) & (F.col("n_tokens") >= min_tokens)
-    )
-    w = Window.partitionBy(F.md5("__norm"))
-    surv = (
-        filt.withColumn("__min_id", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") == F.col("__min_id"))
-        .drop("__min_id")
+    surv = _exact_survivors(
+        docs, min_quality, min_tokens, "lang", "__norm", "__words"
     )
     from .split import hash_split
 
@@ -279,30 +235,13 @@ def clean_corpus(
     """
     from .text import line_dedup
 
-    staged = (
-        docs.withColumn("__norm", normalized_text())
-        .withColumn("__words", F.split(F.col("__norm"), " "))
-    )
-    scored = staged.select(
-        "doc_id",
-        "lang",
-        "__words",
-        F.size("__words").alias("n_tokens"),
-        F.expr(quality_sql_spark("__norm", "__words")).alias("quality"),
-        F.md5(F.col("__norm")).alias("ck"),
-    )
-    filt = scored.filter(
-        (F.col("quality") >= min_quality) & (F.col("n_tokens") >= min_tokens)
-    )
-    w = Window.partitionBy("ck")
     # consumed by line_dedup AND the final lang join: persist so
     # the score/filter/dedup prelude runs once (the curate_corpus
     # survivor-checkpoint pattern); registry-bounded like every other
     # staged frame
     surv = swap_cache(
         "curation.clean_corpus_survivors",
-        filt.withColumn("__min_id", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") == F.col("__min_id"))
+        _exact_survivors(docs, min_quality, min_tokens, "lang", "__words")
         .select("doc_id", "lang", "__words"),
     )
     # hand the staged word arrays straight to line_dedup — re-deriving

@@ -23,6 +23,20 @@ Scale notes:
   the standard near-dup layout (bucket sizes bounded ≪ corpus).
 - pairwise Jaccard runs on candidates only; the brute-force variant
   exists for oracle checking at small sf.
+
+The near-dup chain is written once, as private helpers that
+``minhash_signatures``, ``lsh_candidate_pairs``, ``jaccard_pairs``,
+``curation.curate_corpus``, ``incremental_near_dup`` and
+``incremental_near_dup_bucketed`` all call: ``_sig_expr`` (the
+zip_with signature over a staged ``__sh``), ``_band_expr`` (per-band
+md5 of the signature slices; ``keyed`` gives the bucketed store's
+``band_idx:md5`` key), ``_banded`` (one row per band),
+``_bucket_pairs`` (the in-bucket candidate expansion, star-capped by
+``bucket_pair_expr``) and ``_verify`` (the exact 6-dp shingle
+Jaccard). ``_check_layout``, which the signature and band builders
+call, rejects a hash count past the fixed coefficients and a band
+layout that overruns the signature. ``duck_minhash_terms`` is the
+signature's DuckDB twin.
 """
 
 from __future__ import annotations
@@ -66,13 +80,7 @@ def shingle_hashes(text_sql: str, n: int = 3) -> str:
     """SQL expression (usable in Spark `expr` — DuckDB twin differs
     only in hex-cast syntax) producing the distinct shingle hash
     array of a normalized-text expression."""
-    shing = (
-        f"array_distinct(transform(sequence(1, greatest(size(split({text_sql},' '))-{n}+1, 1)),"
-        f" i -> concat_ws(' ', slice(split({text_sql},' '), i, {n}))))"
-    )
-    return (
-        f"transform({shing}, s -> cast(conv(substring(md5(s),1,8),16,10) as bigint))"
-    )
+    return shingle_hashes_from_words(f"split({text_sql},' ')", n)
 
 
 def with_shingle_hashes(
@@ -173,6 +181,15 @@ def duck_shingle_hashes(n: int = 3) -> str:
         f" i -> array_to_string(list_slice(string_split({NORM_SQL_DUCK},' '), i, i+{n}-1), ' ')))"
     )
     return f"list_transform({shing}, s -> ('0x'||substr(md5(s),1,8))::BIGINT)"
+
+
+def duck_minhash_terms(k: int) -> list[str]:
+    """DuckDB twin of ``_sig_expr``: the first ``k`` permutation
+    minima over a shingle-hash list ``sh``, one SQL term each."""
+    return [
+        f"list_min(list_transform(sh, h -> ({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {MINHASH_P}))"
+        for i in range(k)
+    ]
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -954,17 +971,8 @@ def minhash_signatures(
     num_hashes: int = 16,
 ) -> DataFrame:
     """(id, sig: array<bigint>[num_hashes]) — narrow, shuffle-free."""
-    if not 1 <= num_hashes <= len(MINHASH_A):
-        raise ValueError(
-            f"num_hashes must be in [1, {len(MINHASH_A)}] (fixed seeded "
-            f"permutation coefficients), got {num_hashes}"
-        )
-    sig_terms = ", ".join(
-        f"array_min(transform(__sh, h -> (({MINHASH_A[i]}L * h + {MINHASH_B[i]}L) % {MINHASH_P}L)))"
-        for i in range(num_hashes)
-    )
     return with_shingle_hashes(df, n, text_col=text_col).select(
-        F.col(id_col), F.expr(f"array({sig_terms})").alias("sig")
+        F.col(id_col), F.expr(_sig_expr(num_hashes)).alias("sig")
     )
 
 
@@ -981,10 +989,8 @@ def lsh_candidate_pairs(
     (id_a, id_b) with id_a < id_b.
 
     ``num_hashes`` must state the signature length: a band layout
-    that overruns it makes ``slice`` return an EMPTY array for the
-    overflow bands, so every document shares band_hash md5('') and
-    the bucket join degenerates into an all-pairs cross product with
-    100% false candidates.
+    that overruns it is rejected (``_check_layout``), since every
+    overflow band would bucket all documents together.
 
     ``star_over``: buckets larger than this emit STAR pairs (every
     member against the bucket minimum) instead of all pairs. In-bucket
@@ -999,45 +1005,15 @@ def lsh_candidate_pairs(
     the unconditional all-pairs behavior (the bench/oracle queries
     pin caps far above their data so the candidate set is unchanged).
     """
-    if bands * rows_per_band > num_hashes:
-        raise ValueError(
-            f"bands*rows_per_band = {bands * rows_per_band} overruns the "
-            f"{num_hashes}-hash signature: overflow bands would hash an "
-            "empty slice and bucket the whole corpus together"
-        )
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}),"
-                f" b -> md5(concat_ws(',', slice(sig, b*{rows_per_band}+1, {rows_per_band}))))"
-            )
-        ).alias("band_idx", "band_hash"),
-    )
-    # pairs via ONE bucket groupBy, not a banded⋈banded self-join:
-    # the self-join evaluates the signature pipeline TWICE (Spark
-    # can't share an uncached subtree across join sides — measured
-    # 5.6 s vs 1.6 s on the sf0.1 documents table), and shuffles a
-    # band row per side; this shape shuffles each (band, id) once
-    # and expands sorted in-bucket combinations with id_a < id_b —
-    # the same candidate set, bucket-bounded exactly as before.
-    buckets = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    return (
-        buckets.select(F.explode(F.expr(bucket_pair_expr(star_over))).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    band = _band_expr(num_hashes, bands, rows_per_band)
+    return _bucket_pairs(_banded(sigs, id_col, band), id_col, star_over).distinct()
 
 
 def bucket_pair_expr(star_over: int | None) -> str:
     """In-bucket candidate expansion over a sorted ``ids`` array
     column: all-pairs below ``star_over``, star pairs (each member vs
     the bucket minimum) above it — the mega-duplicate-cluster guard
-    shared by ``lsh_candidate_pairs`` and ``curation.curate_corpus``."""
+    of ``_bucket_pairs``."""
     all_pairs = (
         "flatten(transform(ids, (x, i) ->"
         " transform(slice(ids, i + 2, size(ids)),"
@@ -1052,6 +1028,112 @@ def bucket_pair_expr(star_over: int | None) -> str:
     return (
         f"CASE WHEN size(ids) > {int(star_over)}"
         f" THEN {star} ELSE {all_pairs} END"
+    )
+
+
+def _check_layout(num_hashes: int, bands: int = 1, rows_per_band: int = 1) -> None:
+    """Reject a hash count beyond the fixed coefficients and a band
+    layout that overruns the signature: ``slice`` returns an EMPTY
+    array for every overflow band, so each document would hash
+    md5('') there and the whole batch would share one bucket."""
+    if not 1 <= num_hashes <= len(MINHASH_A):
+        raise ValueError(
+            f"num_hashes must be in [1, {len(MINHASH_A)}] (fixed seeded "
+            f"permutation coefficients), got {num_hashes}"
+        )
+    if bands < 1 or rows_per_band < 1 or bands * rows_per_band > num_hashes:
+        raise ValueError(
+            f"bands={bands} x rows_per_band={rows_per_band} does not fit "
+            f"the {num_hashes}-hash signature: overflow bands would hash "
+            "an empty slice and bucket the whole corpus together"
+        )
+
+
+def _sig_expr(num_hashes: int) -> str:
+    """MinHash signature over a staged ``__sh`` column as one zip_with
+    loop over the coefficient arrays: the same values as num_hashes
+    unrolled ``array_min`` terms, a fraction of the generated code.
+
+    ``__sh`` enters as the argument of a one-element ``transform``
+    (``flatten`` unwraps it), never inside the zip_with lambda:
+    CollapseProject inlines a staged column its consumer reads once,
+    and inside the lambda the whole shingle pipeline would then run
+    once per hash (measured 2.8 s vs 0.6 s for 16 hashes over the
+    sf0.1 documents)."""
+    _check_layout(num_hashes)
+    a = ", ".join(f"{MINHASH_A[i]}L" for i in range(num_hashes))
+    b = ", ".join(f"{MINHASH_B[i]}L" for i in range(num_hashes))
+    return (
+        f"flatten(transform(array(__sh), s -> zip_with(array({a}), array({b}),"
+        f" (a, b) -> array_min(transform(s, h -> ((a * h + b) % {MINHASH_P}L))))))"
+    )
+
+
+def _band_expr(
+    num_hashes: int, bands: int, rows_per_band: int, keyed: bool = False
+) -> str:
+    """Per-band md5 of the ``sig`` column's ``rows_per_band``-wide
+    slices; ``keyed`` prefixes each with its band index as
+    ``band_idx:md5``, the key format the bucketed store persists."""
+    _check_layout(num_hashes, bands, rows_per_band)
+    h = f"md5(concat_ws(',', slice(sig, b*{rows_per_band}+1, {rows_per_band})))"
+    if keyed:
+        h = f"concat_ws(':', b, {h})"
+    return f"transform(sequence(0, {bands - 1}), b -> {h})"
+
+
+def _banded(frame: DataFrame, id_col: str, band: str) -> DataFrame:
+    """One ``(id_col, band_idx, band_hash)`` row per band of ``band``."""
+    return frame.select(
+        F.col(id_col),
+        F.posexplode(F.expr(band)).alias("band_idx", "band_hash"),
+    )
+
+
+def _bucket_pairs(
+    banded: DataFrame, id_col: str, star_over: int | None
+) -> DataFrame:
+    """``(id_a, id_b)`` candidates inside each bucket of ``banded``
+    (keyed by every column but ``id_col``), id_a < id_b, NOT distinct.
+
+    One bucket groupBy, not a banded⋈banded self-join: the self-join
+    evaluates the signature pipeline once per side (Spark can't share
+    an uncached subtree across join sides — measured 5.6 s vs 1.6 s
+    on the sf0.1 documents table) and shuffles a band row per side;
+    this shape shuffles each (band, id) once and expands the sorted
+    bucket with ``bucket_pair_expr``."""
+    keys = [c for c in banded.columns if c != id_col]
+    return (
+        banded.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .filter(F.size("ids") > 1)
+        .select(F.explode(F.expr(bucket_pair_expr(star_over))).alias("p"))
+        .select("p.id_a", "p.id_b")
+    )
+
+
+def _verify(
+    cand: DataFrame | None,
+    a_frame: DataFrame,
+    b_frame: DataFrame,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """The exact verify step: candidate ``(id_a, id_b)`` pairs whose
+    ``sh`` shingle sets (looked up in ``a_frame`` / ``b_frame`` by
+    ``id_col``) reach ``threshold`` Jaccard on the 6-dp grid, with
+    that ``jaccard``. ``cand=None`` verifies every id_a < id_b pair
+    (brute force: the oracle path, small inputs only)."""
+    a = a_frame.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    b = b_frame.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    if cand is None:
+        pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+    else:
+        pairs = cand.join(a, "id_a").join(b, "id_b")
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size(F.array_union("sh_a", "sh_b"))
+    return pairs.withColumn("jaccard", F.round(inter / union, 6)).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -1552,18 +1634,8 @@ def jaccard_pairs(
         # session-keyed registry instead releases the PREVIOUS call's
         # cache (ADVICE r3; plans/cachereg.py).
         sh = swap_cache("dedup.jaccard_shingles", sh)
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    if candidates is not None:
-        pairs = candidates.join(a, "id_a").join(b, "id_b")
-    else:
-        pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        pairs.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _verify(candidates, sh, sh, id_col, threshold).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
@@ -1891,6 +1963,7 @@ def incremental_near_dup(
     candidate id only. The store is append-only — no old-corpus
     recompute, no doc×doc anywhere.
     """
+    band = _band_expr(num_hashes, bands, rows_per_band)
     # one live cache per (session, slot) via the registry — the
     # PREVIOUS batch's cache is deliberately ALSO evicted when this
     # call's store derives from it: lineage recomputes the store
@@ -1906,31 +1979,13 @@ def incremental_near_dup(
             F.col("__sh").alias("sh"),
         ),
     )
-
-    def banded(frame: DataFrame) -> DataFrame:
-        return frame.select(
-            F.col(id_col),
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, {bands - 1}),"
-                    f" b -> md5(concat_ws(',', slice(sig, b*{rows_per_band}+1, {rows_per_band}))))"
-                )
-            ).alias("band_idx", "band_hash"),
-        )
-
-    new_bands = banded(sigged)
+    new_bands = _banded(sigged, id_col, band)
     # in-batch candidates: bucket expansion with the hot-bucket cap
-    in_batch = (
-        new_bands.groupBy("band_idx", "band_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(F.explode(F.expr(bucket_pair_expr(star_over))).alias("p"))
-        .select("p.id_a", "p.id_b")
-    )
-    pair_sources = [in_batch]
+    cand = _bucket_pairs(new_bands, id_col, star_over)
+    sh_all = sigged.select(id_col, "sh")
     if store is not None:
         vs_store = (
-            banded(store.select(id_col, "sig"))
+            _banded(store.select(id_col, "sig"), id_col, band)
             .select(
                 F.col(id_col).alias("id_a"),
                 "band_idx",
@@ -1944,32 +1999,9 @@ def incremental_near_dup(
             )
             .select("id_a", "id_b")
         )
-        pair_sources.append(vs_store)
-    cand = pair_sources[0]
-    for extra in pair_sources[1:]:
-        cand = cand.unionByName(extra)
-    cand = cand.distinct()
-    sh_all = (
-        sigged.select(id_col, "sh")
-        if store is None
-        else sigged.select(id_col, "sh").unionByName(
-            store.select(id_col, "sh")
-        )
-    )
-    a = sh_all.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sigged.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    verified = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .filter(
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            )
-            >= threshold
-        )
-    )
+        cand = cand.unionByName(vs_store)
+        sh_all = sh_all.unionByName(store.select(id_col, "sh"))
+    verified = _verify(cand.distinct(), sh_all, sigged, id_col, threshold)
     drops = verified.select(F.col("id_b").alias(id_col)).distinct()
     survivors = batch.join(drops, id_col, "left_anti")
     surv_rows = sigged.join(drops, id_col, "left_anti")
@@ -2028,6 +2060,7 @@ def incremental_near_dup_bucketed(
     past them; duplicate sig/band rows only fan out candidate pairs,
     which the verify stage's ``distinct`` collapses.
     """
+    bk = _band_expr(num_hashes, bands, rows_per_band, keyed=True)
     store = BucketedStore(
         batch.sparkSession, store_name, {"sigs": id_col, "bands": "bk"},
         buckets=buckets, path=path,
@@ -2041,43 +2074,13 @@ def incremental_near_dup_bucketed(
             F.col("__sh").alias("sh"),
         ),
     )
-    bk = (
-        f"transform(sequence(0, {bands - 1}), b -> concat_ws(':', b,"
-        f" md5(concat_ws(',', slice(sig, b*{rows_per_band}+1, {rows_per_band})))))"
-    )
     new_bands = sigged.select(
         F.col(id_col), F.explode(F.expr(bk)).alias("bk")
     )
-    in_batch = (
-        new_bands.groupBy("bk")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(F.explode(F.expr(bucket_pair_expr(star_over))).alias("p"))
-        .select("p.id_a", "p.id_b")
-    )
-    b_side = sigged.select(
-        F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")
-    )
-
-    def _verify(cand: DataFrame, a_side: DataFrame) -> DataFrame:
-        return (
-            cand.join(a_side, "id_a")
-            .join(b_side, "id_b")
-            .filter(
-                F.round(
-                    F.size(F.array_intersect("sh_a", "sh_b"))
-                    / F.size(F.array_union("sh_a", "sh_b")),
-                    6,
-                )
-                >= threshold
-            )
-            .select("id_b")
-        )
-
-    a_batch = sigged.select(
-        F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")
-    )
-    dropped = _verify(in_batch.distinct(), a_batch)
+    in_batch = _bucket_pairs(new_bands, id_col, star_over)
+    dropped = _verify(
+        in_batch.distinct(), sigged, sigged, id_col, threshold
+    ).select("id_b")
     if store.exists:
         # store side of BOTH joins is bucketed on the join key: the
         # band join clusters on bk, the shingle lookup on id — no
@@ -2089,10 +2092,11 @@ def incremental_near_dup_bucketed(
             .select("id_a", "id_b")
             .distinct()
         )
-        a_store = store.table("sigs").select(
-            F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")
+        dropped = dropped.unionByName(
+            _verify(
+                vs_store, store.table("sigs"), sigged, id_col, threshold
+            ).select("id_b")
         )
-        dropped = dropped.unionByName(_verify(vs_store, a_store))
 
     def rows(drops: DataFrame) -> dict[str, DataFrame]:
         surv_rows = sigged.join(drops, id_col, "left_anti")
@@ -2106,18 +2110,6 @@ def incremental_near_dup_bucketed(
     return store.commit(
         batch, dropped.select(F.col("id_b").alias(id_col)), id_col,
         on_survivors, rows,
-    )
-
-
-def _sig_expr(num_hashes: int) -> str:
-    """MinHash signature over a staged ``__sh`` column as one
-    zip_with loop (see curation._sig_from_shingles — identical
-    values, fraction of the codegen)."""
-    a = ", ".join(f"{MINHASH_A[i]}L" for i in range(num_hashes))
-    b = ", ".join(f"{MINHASH_B[i]}L" for i in range(num_hashes))
-    return (
-        f"zip_with(array({a}), array({b}),"
-        f" (a, b) -> array_min(transform(__sh, h -> ((a * h + b) % {MINHASH_P}L))))"
     )
 
 

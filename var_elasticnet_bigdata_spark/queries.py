@@ -1891,11 +1891,10 @@ def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _register_minhash_oracle() -> None:
-    from .operators.dedup import MINHASH_A, MINHASH_B, MINHASH_P, duck_shingle_hashes
+    from .operators.dedup import duck_minhash_terms, duck_shingle_hashes
 
     terms = ", ".join(
-        f"list_min(list_transform(sh, h -> ({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {MINHASH_P})) AS mh{i}"
-        for i in range(4)
+        f"{t} AS mh{i}" for i, t in enumerate(duck_minhash_terms(4))
     )
     ORACLE["dedup_minhash_signature"] = f"""
         WITH s AS (SELECT doc_id, {duck_shingle_hashes(3)} AS sh FROM documents)
@@ -1930,17 +1929,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _register_jaccard_oracle() -> None:
-    from .operators.dedup import (
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_P,
-        duck_shingle_hashes,
-    )
+    from .operators.dedup import duck_minhash_terms, duck_shingle_hashes
 
-    sig_terms = ", ".join(
-        f"list_min(list_transform(sh, h -> ({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {MINHASH_P}))"
-        for i in range(16)
-    )
+    sig_terms = ", ".join(duck_minhash_terms(16))
     ORACLE["dedup_ngram_jaccard"] = f"""
         WITH s AS (SELECT doc_id, {duck_shingle_hashes(3)} AS sh FROM documents),
         sig AS (SELECT doc_id, sh, [{sig_terms}] AS sig FROM s),
@@ -1995,17 +1986,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _register_components_oracle() -> None:
-    from .operators.dedup import (
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_P,
-        duck_shingle_hashes,
-    )
+    from .operators.dedup import duck_minhash_terms, duck_shingle_hashes
 
-    sig_terms = ", ".join(
-        f"list_min(list_transform(sh, h -> ({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {MINHASH_P}))"
-        for i in range(16)
-    )
+    sig_terms = ", ".join(duck_minhash_terms(16))
     ORACLE["dedup_components"] = f"""
         WITH RECURSIVE
         s AS (SELECT doc_id, {duck_shingle_hashes(3)} AS sh FROM documents),
@@ -2727,18 +2710,13 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _register_curation_oracle() -> None:
     from .operators.dedup import (
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_P,
         NORM_SQL_DUCK,
+        duck_minhash_terms,
         duck_shingle_hashes,
     )
     from .operators.text import QUALITY_SQL_DUCK, duck_lang_id_sql
 
-    sig_terms = ", ".join(
-        f"list_min(list_transform(sh, h -> ({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {MINHASH_P}))"
-        for i in range(16)
-    )
+    sig_terms = ", ".join(duck_minhash_terms(16))
     ORACLE["pipeline_corpus_curation"] = f"""
         WITH scored AS (
           SELECT doc_id, text,
@@ -7245,17 +7223,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _register_dedup_incremental_oracle() -> None:
-    from .operators.dedup import (
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_P,
-        duck_shingle_hashes,
-    )
+    from .operators.dedup import duck_minhash_terms, duck_shingle_hashes
 
-    sig_terms = ", ".join(
-        f"list_min(list_transform(sh, h -> ({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {MINHASH_P}))"
-        for i in range(16)
-    )
+    sig_terms = ", ".join(duck_minhash_terms(16))
     ORACLE["dedup_incremental"] = f"""
         WITH s AS (SELECT doc_id, {duck_shingle_hashes(3)} AS sh FROM documents),
         sig AS (SELECT doc_id, sh, [{sig_terms}] AS sig FROM s),
